@@ -20,10 +20,22 @@ object JsCompat {
     "\\t\\n\\x0B\\f\\r \\u00a0\\u1680\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000\\ufeff"
 
   private val jsWsRun = java.util.regex.Pattern.compile(s"[$JsWsChars]+")
-  private val jsTrimRe = java.util.regex.Pattern.compile(s"^[$JsWsChars]+|[$JsWsChars]+$$")
+
+  /** `JsWsChars` as a lookup table over every UTF-16 code unit, built
+    * once from the same class so the set keeps a single definition. */
+  private val isJsWs: Array[Boolean] = {
+    val one = java.util.regex.Pattern.compile(s"[$JsWsChars]")
+    Array.tabulate(65536)(c => one.matcher(String.valueOf(c.toChar)).matches())
+  }
 
   /** JS `String#trim` (Unicode whitespace + BOM, unlike Java trim). */
-  def jsTrim(s: String): String = jsTrimRe.matcher(s).replaceAll("")
+  def jsTrim(s: String): String = {
+    var b = 0
+    var e = s.length
+    while (b < e && isJsWs(s.charAt(b))) b += 1
+    while (e > b && isJsWs(s.charAt(e - 1))) e -= 1
+    s.substring(b, e)
+  }
 
   /** JS `split(/\s+/)` — Unicode whitespace runs, precompiled. */
   def jsWsSplit(s: String): Array[String] = jsWsRun.split(s, -1)
@@ -31,19 +43,45 @@ object JsCompat {
   /** JS `replace(/\s/g, '')` / `replaceAll(re, "")` over JS-\s. */
   def jsWsRemove(s: String): String = jsWsRun.matcher(s).replaceAll("")
 
-  private val floatPrefix = """^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?""".r
+  private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  /** End of the run of ASCII digits in `t` starting at `i`. */
+  private def digitsEnd(t: String, i: Int): Int = {
+    var j = i
+    while (j < t.length && isDigit(t.charAt(j))) j += 1
+    j
+  }
 
   /** JS `parseFloat`: longest valid numeric prefix, NaN if none.
     * (`task.ts:287-288`, `327-330` rely on this — "1.5abc" parses to 1.5.)
     * Optionally-signed `Infinity` is a valid JS prefix too — the
-    * reference accepts a circle radius of Infinity (`task.ts:327-336`). */
+    * reference accepts a circle radius of Infinity (`task.ts:327-336`).
+    * The prefix is the longest match of
+    * `[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?` (ASCII digits), found by
+    * one forward scan and handed to `Double.parseDouble`. */
   def jsParseFloat(s: String): Double = {
     val t = jsTrim(s)
     if (t.startsWith("Infinity") || t.startsWith("+Infinity")) Double.PositiveInfinity
     else if (t.startsWith("-Infinity")) Double.NegativeInfinity
-    else floatPrefix.findFirstIn(t) match {
-      case Some(m) => m.toDouble
-      case None    => Double.NaN
+    else {
+      val n = t.length
+      val start = if (n > 0 && (t.charAt(0) == '+' || t.charAt(0) == '-')) 1 else 0
+      val intEnd = digitsEnd(t, start)
+      var end = intEnd
+      if (end < n && t.charAt(end) == '.') {
+        val fracEnd = digitsEnd(t, end + 1)
+        if (intEnd > start || fracEnd > end + 1) end = fracEnd
+      }
+      if (end == start) Double.NaN // no mantissa digits
+      else {
+        if (end < n && (t.charAt(end) == 'e' || t.charAt(end) == 'E')) {
+          val signed = end + 1 < n && (t.charAt(end + 1) == '+' || t.charAt(end + 1) == '-')
+          val expStart = if (signed) end + 2 else end + 1
+          val expEnd = digitsEnd(t, expStart)
+          if (expEnd > expStart) end = expEnd
+        }
+        java.lang.Double.parseDouble(t.substring(0, end))
+      }
     }
   }
 

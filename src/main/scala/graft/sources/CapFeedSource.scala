@@ -25,7 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Options: `url` (required), `headers` ("K=V;K=V"), `timeout` (ms,
   * default 30000), `retries` (default 2), `numPartitions` (default 4) —
   * timeout/retries defaults mirror the reference env schema
-  * (task.ts:15-22).
+  * (task.ts:15-22). Engine-only, parsed by [[EtlConfig.fromOptions]]:
+  * `fetchConcurrency` (default 1, in-flight alert fetches per partition)
+  * and `failFast` (default false: a failed alert is logged and skipped
+  * like the reference; true fails the read).
   */
 class CapFeedDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "capfeed"

@@ -1,10 +1,69 @@
 package graft.functions
 
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import java.time.Instant
 
 class JsCompatSpec extends AnyFunSuite {
   import JsCompat._
+
+  // Regex definitions of jsTrim and jsParseFloat: the oracle the
+  // hand-written scanners are checked against.
+  private val trimRe = java.util.regex.Pattern.compile(s"^[$JsWsChars]+|[$JsWsChars]+$$")
+  private val floatPrefixRe = """^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?""".r
+
+  private def regexTrim(s: String): String = trimRe.matcher(s).replaceAll("")
+
+  private def regexParseFloat(s: String): Double = {
+    val t = regexTrim(s)
+    if (t.startsWith("Infinity") || t.startsWith("+Infinity")) Double.PositiveInfinity
+    else if (t.startsWith("-Infinity")) Double.NegativeInfinity
+    else floatPrefixRe.findFirstIn(t).fold(Double.NaN)(_.toDouble)
+  }
+
+  /** Same double, NaN included, -0.0 told apart from 0.0. */
+  private def same(a: Double, b: Double): Boolean = java.lang.Double.compare(a, b) == 0
+
+  private val jsWhitespace: Seq[String] =
+    (Seq('\t', '\n', '\u000b', '\f', '\r', ' ', '\u00a0', '\u1680', '\u2028', '\u2029',
+      '\u202f', '\u205f', '\u3000', '\ufeff') ++ ('\u2000' to '\u200a')).map(_.toString)
+
+  /** Strings of numeric characters, JS whitespace, near-miss spaces that
+    * JS does not trim, letters and `Infinity`. */
+  private val jsyStrings: Gen[String] = Gen.listOf(Gen.frequency(
+    6 -> Gen.oneOf("0123456789+-.eE".map(_.toString)),
+    3 -> Gen.oneOf(jsWhitespace),
+    1 -> Gen.oneOf("\u200b", "\u180e", "x", "a", "e", "I", "n"),
+    1 -> Gen.const("Infinity"))).map(_.mkString)
+
+  private def checkProp(p: Prop): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20000), p)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("jsTrim agrees with its regex definition on random strings") {
+    checkProp(Prop.forAll(jsyStrings)(s => jsTrim(s) == regexTrim(s)))
+  }
+
+  test("jsParseFloat agrees with its regex definition on random strings") {
+    checkProp(Prop.forAll(jsyStrings)(s => same(jsParseFloat(s), regexParseFloat(s))))
+  }
+
+  test("jsParseFloat / jsTrim: prefix edge cases") {
+    val cases = Seq(
+      "5." -> 5.0, "." -> Double.NaN, "+.5" -> 0.5, "1e" -> 1.0, "1e+" -> 1.0,
+      "-.e1" -> Double.NaN, "\u2000 1.5\u3000" -> 1.5, "-0" -> -0.0, "1.e2x" -> 100.0)
+    cases.foreach { case (s, v) =>
+      assert(same(jsParseFloat(s), v), s)
+      assert(same(regexParseFloat(s), v), s)
+    }
+    assert(jsTrim("\u2000 1.5\u3000") == "1.5")
+    assert(jsTrim(" \t\ufeff ").isEmpty)
+    // U+0085 is not JS whitespace. The regex's `$` also matches before a
+    // final line terminator, so it wrongly trimmed " " in "x \u0085";
+    // JS "x \u0085".trim() keeps all three characters, as the scanner does.
+    assert(jsTrim("x \u0085") == "x \u0085")
+  }
 
   test("jsParseFloat: prefix parsing like JS") {
     assert(jsParseFloat("1.5") == 1.5)
