@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * full `collect()` so projections are actually computed (a bare
   * `count()` lets Catalyst prune the work). Protocols: headline B1–B12
@@ -96,50 +94,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val boxPre = boxState()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split multi-row-group files across cores: the probe tables are
-      // single 50-400 MB files, and the 128 MB default put their whole
-      // scan-side work on one task (8 MB ~ the probes' row-group size)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.adaptive.enabled", "true")
-      // decouple shuffle width from core count: AQE fans every exchange
-      // out to 8×cores map-output partitions and coalesces back to the
-      // 64 MB advisory target at runtime, so per-task sort/agg volume
-      // stays bounded as data grows (at the ×100 probe, 32-wide SMJ
-      // sorts meant ~500 MB/task whose spill-merge read-ahead buffers
-      // alone exceeded the 250 MB/core heap share) while small stages
-      // still coalesce to a handful of tasks. Streaming state width is
-      // pinned separately (StateBackend.withStatePartitions) and does
-      // not inherit this.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      // typed-Aggregator (ObjectHashAggregate) ops fall back to
-      // SORT-based aggregation after 128 distinct groups per partition
-      // by default — for the nearest-centroid argmax that re-creates
-      // the |n|·K-row sort the aggregator exists to avoid. Group
-      // buffers are ~16 bytes; 16M of them is ~1 GB worst-case and the
-      // real count per task is the scan slice's distinct keys (~10^4).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "16000000")
-      // let AQE re-plan reads of persisted relations: a cached plan
-      // otherwise pins its final exchange's full initialPartitionNum
-      // fan-out (8×cores), so every read of the 256-row shared d2 pair
-      // cache launched 256 near-empty tasks (~760 ms of pure task
-      // overhead; ~100 ms with the conf, which AQE-coalesces to the
-      // 64 MB advisory target — a corpus-sized cache keeps its width)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // full engine extensions: native functions, DotRewrite, and the
-      // graft_asof whole-operator rule/strategy (AsOfJoin.scala)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.localCores
+    val spark = GraftSession(cpus)
 
     // SPARK_GRAFT_ONLY: optional regex narrowing the sweep to matching
     // query names — for probing one query's wall/stream cost at a big
@@ -407,7 +363,7 @@ object Bench {
 
     // Session-width stamp (r17 verdict item 2): the bench HONORS
     // $SPARK_GRAFT_CPUS (master/local, shuffle partitions, AQE initial
-    // fan-out all derive from it — lines 84-102), but at sf0.1 most
+    // fan-out all derive from it — GraftSession.confs), but at sf0.1 most
     // headline queries are task-overhead-bound, so an 8-vs-32-core
     // comparison over them reads ≈1 and looks like the env var is
     // ignored. Stamping the requested width AND the session's effective

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Regenerates the golden expected-output parquet files backing the
   * cap1/cap2 DuckDB oracles (under fixtures/golden). Run ONLY after
@@ -16,14 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-golden-gen")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     /** Single-file parquet at `out` (Spark writes a directory; the
       * oracle wants one file DuckDB can open by path). */

@@ -1,0 +1,73 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+import graft.plans.GraftExtensions
+
+/** The one session configuration. Every main and every spec gets its
+  * SparkSession here, so specs check the plans the bench runs. Callers
+  * pass only the confs they must change. A second call returns the
+  * running session (`getOrCreate`) with the runtime confs re-applied
+  * and the extensions not applied again.
+  *
+  * Usage: `GraftSession()` for a `local[localCores]` session,
+  * `GraftSession(4, Map(key -> value))` to pin the width and override.
+  */
+object GraftSession {
+
+  /** `SPARK_GRAFT_CPUS` if set, otherwise every available processor. */
+  def localCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The plan-affecting confs of a `local[cores]` session. */
+  private def confs(cores: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    // split multi-row-group files across cores: the probe tables are
+    // single 50-400 MB files, and the 128 MB default put their whole
+    // scan-side work on one task (8 MB ~ the probes' row-group size)
+    "spark.sql.files.maxPartitionBytes" -> "8m",
+    "spark.sql.adaptive.enabled" -> "true",
+    // decouple shuffle width from core count: AQE fans every exchange
+    // out to 8×cores map-output partitions and coalesces back to the
+    // 64 MB advisory target at runtime, so per-task sort/agg volume
+    // stays bounded as data grows (at the ×100 probe, 32-wide SMJ
+    // sorts meant ~500 MB/task whose spill-merge read-ahead buffers
+    // alone exceeded the 250 MB/core heap share) while small stages
+    // still coalesce to a handful of tasks. Streaming state width is
+    // pinned separately (StateBackend.withStatePartitions) and does
+    // not inherit this.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> (cores * 8).toString,
+    // typed-Aggregator (ObjectHashAggregate) ops fall back to
+    // SORT-based aggregation after 128 distinct groups per partition
+    // by default — for the nearest-centroid argmax that re-creates
+    // the |n|·K-row sort the aggregator exists to avoid. Group
+    // buffers are ~16 bytes; 16M of them is ~1 GB worst-case and the
+    // real count per task is the scan slice's distinct keys (~10^4).
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "16000000",
+    // let AQE re-plan reads of persisted relations: a cached plan
+    // otherwise pins its final exchange's full initialPartitionNum
+    // fan-out (8×cores), so every read of the 256-row shared d2 pair
+    // cache launched 256 near-empty tasks (~760 ms of pure task
+    // overhead; ~100 ms with the conf, which AQE-coalesces to the
+    // 64 MB advisory target — a corpus-sized cache keeps its width)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  def apply(cores: Int = localCores,
+      overrides: Map[String, String] = Map.empty): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft")
+      .config(confs(cores) ++ overrides)
+      // full engine extensions: native functions, DotRewrite, and the
+      // graft_asof whole-operator rule/strategy (AsOfJoin.scala). Set
+      // on the builder, not through the static `spark.sql.extensions`
+      // conf, which would stick to the SparkContext and extend every
+      // later session on it.
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

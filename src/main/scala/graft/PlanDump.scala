@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness: dump `.explain("formatted")`
   * for every SparkEntry query to `<outDir>/<name>_<tag>.txt` under
   * Bench-identical session confs, so plan-shape claims (Exchange count,
@@ -32,25 +30,7 @@ object PlanDump {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val only = if (args.length > 3) Some(args(3).r) else None
     val exec = sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      // Bench-identical confs — the plans must be the ones the bench runs
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "16000000")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     Files.createDirectories(Paths.get(outDir))
     def naturalKey(n: String): String =
       "\\d+".r.replaceAllIn(n, m => f"${m.matched.toInt}%06d")

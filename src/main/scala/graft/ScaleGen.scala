@@ -43,15 +43,7 @@ object ScaleGen {
     val out = if (args.length > 1) args(1) else "scaledata/sf1-synth"
     val tiles = if (args.length > 2) args(2).toInt else 10
     val tablesRe = if (args.length > 3) args(3) else ".*"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     generate(spark, src, out, tiles, tablesRe)
     spark.stop()
   }

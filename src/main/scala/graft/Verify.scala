@@ -1,40 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_SHUFFLE decouples the shuffle-partition count from
     // the thread count for hostile-parallelism invariance sweeps (r16
     // verdict task 2): the determinism recipe promises identical
     // results under ANY (threads, partitions) pairing, and the sweep
-    // measures that promise instead of assuming it
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.files.maxPartitionBytes", "8m") // see Bench
-      // AQE-coalesced wide shuffles — see the Bench scaladoc; results
-      // are partition-count independent (spec-pinned), so the gate
-      // hashes are unaffected
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      // keep typed-Aggregator ops on the hash path — see Bench
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "16000000")
-      // AQE-coalesced reads of persisted relations — see Bench
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // full engine extensions: native functions, DotRewrite, and the
-      // graft_asof whole-operator rule/strategy (AsOfJoin.scala)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // measures that promise instead of assuming it. Under AQE the
+    // exchanges start at initialPartitionNum, so both are set.
+    val spark = GraftSession(overrides = sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .map(n => Map("spark.sql.shuffle.partitions" -> n,
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> n))
+      .getOrElse(Map.empty))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY: optional regex narrowing the dump to matching
     // query names — scale probes over table-subset corpora (ScaleGen

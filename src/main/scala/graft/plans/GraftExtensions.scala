@@ -640,9 +640,9 @@ case class AlertToFeatures(child: Expression)
 }
 
 /** Session-extension entry point: registers the graft-native functions
-  * into the Catalyst function registry. Activate with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * into the Catalyst function registry. [[graft.GraftSession]] applies
+  * it to every session it creates; elsewhere activate it with
+  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

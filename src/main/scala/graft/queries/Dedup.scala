@@ -196,12 +196,6 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
-  /** Dev-probe accessor ([[D10SkewProbe]]): the (band, sig, bn)
-    * occupancy relation the d10/d2 candidate joins feed on — the exact
-    * quantity [[cappedBands]] caps. Not used by any declared query. */
-  private[queries] def testBandOccupancy(docs: DataFrame): DataFrame =
-    d2Bands(docs).groupBy("band", "sig").agg(count(lit(1)).as("bn"))
-
   /** Hot buckets dropped (see [[BandBucketCap]]). The bucket-stat side
     * has one row per distinct (band, sig) — corpus-scaled, so the
     * join-back is SMJ-pinned like everything else in this subtree. */
@@ -760,7 +754,7 @@ object Dedup {
   // differs), and held to the SAME DuckDB oracle, so hash-equality to
   // d10 is re-proven every round.
   //
-  // Measured design-point economics (D10bProbe over ds1000, r16 —
+  // Measured design-point economics (r16 probe over ds1000 —
   // BENCH_NOTES "d10b at its incremental design point"): the standing
   // base's dominant win is BUILD amortization — each delta joins a
   // materialized base in ~1-2 s instead of re-deriving its band

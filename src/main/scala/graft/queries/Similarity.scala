@@ -86,10 +86,6 @@ object Similarity {
     * 5.5B rows — >20 min and tens of GB of disk for what is a
     * per-row map (found-and-fixed at the r15 ×300 probe; this shape
     * is seconds). No join, no aggregate, no shuffle. */
-  /** Dev-probe window into [[bands]] (D5Probe). */
-  private[queries] def bandsProbe(s: SparkSession, emb: DataFrame,
-      nPlanes: Int, bandBits: Int): DataFrame = bands(s, emb, nPlanes, bandBits)
-
   private def bands(s: SparkSession, emb: DataFrame,
       nPlanes: Int, bandBits: Int): DataFrame = {
     graft.plans.GraftFunctions.ensureLshBands(s)
@@ -280,7 +276,7 @@ object Similarity {
   // a saturated sign-bucket means mass-duplicated embeddings, so
   // candidates stay ≤ nBuckets·C(64,2) under ANY adversarial corpus,
   // at the documented cost of dropping near-dups inside saturated
-  // buckets (measured in Stress: 10× mass duplication). All surviving
+  // buckets (measured under 10× mass duplication). All surviving
   // same-bucket pairs (da < db) are exact-verified; output is the
   // corpus near-dup profile at thresholds 0.95 / 0.5 / 0.45 plus max
   // similarity. On the driver corpora every bucket is far below the
@@ -300,8 +296,8 @@ object Similarity {
   private[queries] def d5WideFor(n: Long): Boolean =
     PlanGate.regime(n, D5WideCutoff) == 1
 
-  /** Capped candidate pairs (qid < vec_id), exposed for the Stress
-    * mass-duplication probe. Geometry picked by the shared plan-time
+  /** Capped candidate pairs (qid < vec_id), shared by
+    * [[d5EmbeddingNeardup]] and SimilaritySpec. Geometry picked by the shared plan-time
     * cardinality gate ([[PlanGate]] — one column-pruned count, same
     * trade as d8bAssign). */
   private[queries] def d5Candidates(s: SparkSession, emb: DataFrame): DataFrame =

@@ -172,20 +172,12 @@ object StreamSoak {
     val nSlices = args.lift(1).map(_.toInt).getOrElse(64)
     val work = args.lift(2).getOrElse(
       sys.props("java.io.tmpdir") + "/graft_soak")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep every batch's progress for the per-batch record (default
-      // retention is 100 — enough for 64 data batches + timer batches,
-      // but pin it explicitly so a larger nSlices doesn't silently
-      // truncate the evidence)
-      .config("spark.sql.streaming.numRecentProgressUpdates", "256")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // keep every batch's progress for the per-batch record (default
+    // retention is 100 — enough for 64 data batches + timer batches,
+    // but pin it explicitly so a larger nSlices doesn't silently
+    // truncate the evidence)
+    val spark = graft.GraftSession(
+      overrides = Map("spark.sql.streaming.numRecentProgressUpdates" -> "256"))
     import spark.implicits._
 
     val (arrivals, arrivalsDup, ev) =

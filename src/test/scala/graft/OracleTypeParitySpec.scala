@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.sys.process._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver containers have them); cancels otherwise so `sbt test`
   * stays green in minimal environments.
   */
-class OracleTypeParitySpec extends AnyFunSuite {
+class OracleTypeParitySpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -105,38 +104,13 @@ class OracleTypeParitySpec extends AnyFunSuite {
   test("every oracle resolves to the Spark rendering class per column") {
     assume(duckdbAvailable, "python3+duckdb not on PATH; parity gate skipped")
 
-    // fresh session WITH the engine extensions (b49's builder refuses
-    // an unextended session): suites share one forked JVM, so a bare
-    // getOrCreate would return whichever session an earlier suite
-    // built; withExtensions only applies at session creation, hence
-    // the clear-first dance (same pattern as AsOfJoinSpec). The
-    // previous default is restored below so this suite's session
-    // doesn't leak into later suites' getOrCreate.
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("oracle-type-parity")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-
     val entries =
-      try SparkEntry.oracleSql.toSeq.sortBy(_._1).map { case (name, sql) =>
+      SparkEntry.oracleSql.toSeq.sortBy(_._1).map { case (name, sql) =>
         val schema = SparkEntry.queries(name)(spark, sf).schema
         val cols = schema.fields
           .map(f => s"${jq(f.name)}: ${jq(cls(f.dataType))}")
           .mkString("{", ",", "}")
         s"""{"name": ${jq(name)}, "sql": ${jq(sql)}, "cols": $cols}"""
-      } finally {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        prevDefault.foreach(SparkSession.setDefaultSession)
-        prevActive.foreach(SparkSession.setActiveSession)
       }
     val payload = Files.createTempFile("oracle_parity", ".json")
     Files.writeString(payload, entries.mkString("[", ",", "]"))

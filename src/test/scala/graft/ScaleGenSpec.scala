@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * embedding rotation are what make the probe MEASURE corpus growth
   * instead of cluster-size growth.
   */
-class ScaleGenSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("scalegen-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScaleGenSpec extends AnyFunSuite with GraftTestSession {
 
   private val src = "/root/testdata/sf0.001"
   private val tiles = 3

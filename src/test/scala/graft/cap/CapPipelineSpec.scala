@@ -2,18 +2,11 @@ package graft.cap
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class CapPipelineSpec extends AnyFunSuite {
+import graft.GraftTestSession
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("cap-pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CapPipelineSpec extends AnyFunSuite with GraftTestSession {
 
   private val asOf = Instant.parse("2026-08-12T00:00:00Z")
   private val fixtureDir = "fixtures/cap"

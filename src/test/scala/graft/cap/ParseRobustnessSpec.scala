@@ -1,23 +1,16 @@
 package graft.cap
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** Fuzz the ingest path: arbitrary garbage through parseAlerts must
   * never throw — malformed XML becomes zero rows (P6 drop semantics,
   * matching the reference's per-alert error isolation), not a job
   * failure.
   */
-class ParseRobustnessSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("parse-robustness-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ParseRobustnessSpec extends AnyFunSuite with GraftTestSession {
 
   private def checkProp(p: Prop): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), p)

@@ -1,21 +1,14 @@
 package graft.cap
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** F2 quarantine semantics: throwing alerts surface as (id, error)
   * rows; healthy alerts quarantine nothing; features output is
   * unchanged from the plain path.
   */
-class QuarantineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("quarantine-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuarantineSpec extends AnyFunSuite with GraftTestSession {
 
   private def alert(id: String, sent: String): CapAlert =
     CapAlert(id, "sender@x", sent, "Actual", "Alert", "Public",

@@ -1,21 +1,14 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** The multimodal plumbing contract: BinaryType schema, shuffle-free
   * narrow transforms, deterministic stub decode, bounded frame fan-out.
   */
-class MultimodalSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("multimodal-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** ExactQuantile's whole claim is BIT-identity with the built-in
   * `percentile` aggregate (so swapping it into b18/b37 can never move
@@ -12,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ranks, duplicate-heavy values (degenerate buckets), single-element
   * and two-element groups, and partitioning changes.
   */
-class ExactQuantileSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("exact-quantile-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExactQuantileSpec extends AnyFunSuite with GraftTestSession {
 
   /** (group, value) rows → Map((g, q) -> builtin percentile). */
   private def builtin(df: org.apache.spark.sql.DataFrame,

@@ -1,18 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class PrefixScanSpec extends AnyFunSuite {
+import graft.GraftTestSession
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("prefix-scan-spec")
-    .config("spark.sql.shuffle.partitions", "7") // odd, to force group-spanning range boundaries
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PrefixScanSpec extends AnyFunSuite with GraftTestSession {
+
+  // odd, to force group-spanning range boundaries; under AQE coalescing
+  // the operator reads initialPartitionNum, so both are set
+  override protected def suiteConfs = Map(
+    "spark.sql.shuffle.partitions" -> "7",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "7")
 
   test("runningLongSum equals the window running sum on every row") {
     import spark.implicits._
@@ -59,11 +59,13 @@ class PrefixScanSpec extends AnyFunSuite {
 
   test("a high-cardinality group key trips the metadata-collect guard") {
     import spark.implicits._
-    // 7 range partitions over ~15×MaxGroupsPerPartition distinct groups:
-    // every partition exceeds the per-partition ceiling, so the contract
-    // violation must surface as a descriptive failure instead of a
-    // partitions×groups driver collect
-    val n = PrefixScan.MaxGroupsPerPartition * 15
+    // ~2×MaxGroupsPerPartition distinct groups per range partition, at
+    // the width the operator reads (7 here): every partition exceeds
+    // the per-partition ceiling, so the contract violation must surface
+    // as a descriptive failure instead of a partitions×groups driver
+    // collect
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val n = parts.toLong * PrefixScan.MaxGroupsPerPartition * 2
     val df = spark.range(0, n)
       .select(concat(lit("g"), col("id")).as("grp"), col("id"), lit(1L).as("v"))
     val e = intercept[Exception] {

@@ -3,56 +3,23 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
+import graft.GraftTestSession
 import graft.queries.Relational
 import graft.sources.Tables
 
 /** Gates for the native as-of join (AsOfJoin.scala): value parity with
   * a driver-side reference walk, physical-plan shape, the
   * unextended-session guard, and the rule's analysis-time rejections.
-  *
-  * Sessions: suites share one forked JVM, so `getOrCreate` alone would
-  * return whichever session an earlier suite built — with or without
-  * extensions. Each helper clears the active/default session and builds
-  * a FRESH one (same SparkContext) so extension presence is exactly
-  * what the test states; the suite restores the previous default in
-  * afterAll.
+  * Every test runs on the shared, extended session except the
+  * unextended-session guard, which builds its own.
   */
-class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private val prevDefault = SparkSession.getDefaultSession
-  private val prevActive = SparkSession.getActiveSession
-
-  override def afterAll(): Unit = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    prevDefault.foreach(SparkSession.setDefaultSession)
-    prevActive.foreach(SparkSession.setActiveSession)
-    super.afterAll()
-  }
-
-  private def freshSession(extended: Boolean): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"asof-spec-$extended")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // withExtensions (not the spark.sql.extensions conf): the conf is
-    // static — consulted from the SparkCONTEXT's conf, so on a reused
-    // context it reflects whichever suite created the JVM's context,
-    // not this builder. withExtensions applies unconditionally, making
-    // extension presence exactly what each test states.
-    (if (extended) b.withExtensions(new GraftExtensions) else b).getOrCreate()
-  }
+class AsOfJoinSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 
   test("b49 values equal a driver-side reference walk of the same semantics") {
-    val s = freshSession(extended = true)
+    val s = spark
     val ev = Tables.events(s, sf)
     val clicksByUser = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id"), unix_micros(col("ts")).as("tsu"))
@@ -77,7 +44,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("b49 plans through AsOfJoinExec — never the fallback cartesian") {
-    val s = freshSession(extended = true)
+    val s = spark
     val df = Relational.b49AsofNative(s, sf)
     df.collect() // finalize any adaptive plan
     val plan = df.queryExecution.executedPlan.toString
@@ -87,13 +54,24 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("an unextended session fails loudly instead of planning the cross join") {
-    val s = freshSession(extended = false)
-    val e = intercept[IllegalStateException](Relational.b49AsofNative(s, sf))
-    assert(e.getMessage.contains("graft_asof"))
+    // the one session built outside GraftSession: a fresh one on the
+    // shared SparkContext, without the extensions, after which the
+    // shared session is the default again
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = SparkSession.builder().master("local[4]").getOrCreate()
+      val e = intercept[IllegalStateException](Relational.b49AsofNative(s, sf))
+      assert(e.getMessage.contains("graft_asof"))
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
   }
 
   test("null keys and null times never match (inner semantics)") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val left = Seq(
       (Some(1L), Some(100L), "a"),
@@ -113,7 +91,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("left_outer keeps unmatched and null-key left rows with a null-filled right side") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val left = Seq(
       (Some(1L), Some(100L), "a"),  // matches r1 (tie, backward-inclusive)
@@ -140,7 +118,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("b55 values equal b49's on matched rows plus every unmatched error null-filled") {
-    val s = freshSession(extended = true)
+    val s = spark
     val inner = Relational.b49AsofNative(s, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val outer = Relational.b55AsofOuter(s, sf).collect()
@@ -168,7 +146,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     // candKey's bytes after the last "a" candidate is buffered and the
     // key guard drops the match; the fix re-evaluates candKey from the
     // copied candidate row.
-    val s = freshSession(extended = true)
+    val s = spark
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.types.{LongType, StringType}
     val lOut = Seq(
@@ -196,7 +174,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("forward direction matches the first right row at-or-after each left time") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val left = Seq(
       (1L, 100L, "tie"),     // tie at rt=100: forward-inclusive
@@ -225,7 +203,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("b58 forward values equal a driver-side reference walk") {
-    val s = freshSession(extended = true)
+    val s = spark
     val ev = Tables.events(s, sf)
     val clicksByUser = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id"), unix_micros(col("ts")).as("tsu"))
@@ -250,7 +228,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tolerance bounds the backward match gap; outer null-fills instead of post-filtering") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val left = Seq(
       (1L, 100L, "close"),   // nearest right is t=95: gap 5, within tol 10
@@ -279,7 +257,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tolerance bounds the forward match gap symmetrically") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val left = Seq(
       (1L, 100L, "close"),   // next right is t=105: gap 5, within
@@ -299,7 +277,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("b59 values equal a driver-side tolerance-bounded reference walk") {
-    val s = freshSession(extended = true)
+    val s = spark
     val tolUs = 43_200_000_000L
     val ev = Tables.events(s, sf)
     val clicksByUser = ev.filter(col("event_type") === "click")
@@ -328,7 +306,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL front door: SELECT /*+ graft_asof */ over CROSS JOIN plans the native operator") {
-    val s = freshSession(extended = true)
+    val s = spark
     val ev = Tables.events(s, sf)
     ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), col("ts"))
@@ -371,7 +349,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL front door left_outer under a spine honors right-side nullability (no garbage reads)") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     // NON-nullable inputs: primitive-tuple toDF gives nullable=false
     // columns, so any spine node that keeps a stale nullable=false on a
@@ -420,7 +398,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dim-sized right side plans the broadcast as-of variant, value-equal to sort-merge") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val left = Seq(
       (Some(1L), Some(100L), "a"), (Some(1L), Some(50L), "e"),
@@ -478,7 +456,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("broadcast as-of builds its index ONCE per executor, not per task") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     // many-partition fact side: without memoization every one of the
     // 64 tasks would rebuild the per-key sorted index from the
@@ -511,7 +489,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("b60: explicit broadcast hint forces the broadcast pick; fact side unshuffled and unsorted") {
-    val s = freshSession(extended = true)
+    val s = spark
     // plain (non-adaptive) plan tree so the left subtree is directly
     // inspectable; restore afterwards
     s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -560,7 +538,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("b49 under the broadcast-eligible threshold keeps its values (oracle unchanged)") {
-    val s = freshSession(extended = true)
+    val s = spark
     // the sf0.001 clicks aggregate is small; whatever the stats
     // estimate decides, the two physical plans must agree with the
     // reference values — run b49 with broadcast enabled wide open and
@@ -582,7 +560,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     // parity here is also a co-partitioning proof), and the planner's
     // pick (sort-merge vs broadcast) must be the same one the static
     // planner makes, with bit-identical output either way.
-    val s = freshSession(extended = true)
+    val s = spark
     def finalPlan(df: DataFrame): String = {
       df.collect() // finalize the adaptive plan
       df.queryExecution.executedPlan.toString
@@ -590,23 +568,20 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     def sortedRows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     // synthetic shape big enough that AQE genuinely re-plans: 16-wide
-    // shuffles on both sides, tiny per-partition bytes → coalescing fires
+    // shuffles on both sides (under AQE the width is initialPartitionNum),
+    // tiny per-partition bytes → coalescing fires
     def fact = s.range(0, 20000)
       .select((col("id") % 100).as("k"), (col("id") % 1009).as("t"), col("id").as("lv"))
     def dim = s.range(0, 15000)
       .select((col("id") % 100).as("rk"), ((col("id") * 7) % 1009).as("rt"),
         (col("id") + 900000).as("rv"))
     def asof = fact.crossJoin(dim).hint("graft_asof", "k", "t", "rk", "rt", "left_outer")
-
-    def withConf[A](pairs: (String, String)*)(body: => A): A = {
-      pairs.foreach { case (k, v) => s.conf.set(k, v) }
-      try body finally pairs.foreach { case (k, _) => s.conf.unset(k) }
-    }
     // 1) sort-merge exec under AQE (threshold -1 disables broadcast)
-    val (aqeSmjRows, aqeSmjPlan) = withConf(
+    val (aqeSmjRows, aqeSmjPlan) = withConfs(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.shuffle.partitions" -> "16") {
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "16") {
       val df = asof
       (sortedRows(df), finalPlan(df))
     }
@@ -614,7 +589,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(aqeSmjPlan.contains("isFinalPlan=true"), aqeSmjPlan)
     assert(aqeSmjPlan.contains("AsOfJoin") && !aqeSmjPlan.contains("BroadcastAsOfJoin"),
       s"AQE did not keep the sort-merge as-of pick:\n$aqeSmjPlan")
-    val offSmjRows = withConf(
+    val offSmjRows = withConfs(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.shuffle.partitions" -> "16")(sortedRows(asof))
@@ -624,7 +599,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val smallDim = dim.filter(col("rk") < 10).groupBy("rk")
       .agg(max(col("rt")).as("rt"), max(col("rv")).as("rv"))
     def basof = fact.crossJoin(smallDim).hint("graft_asof", "k", "t", "rk", "rt")
-    val (aqeBcRows, aqeBcPlan) = withConf(
+    val (aqeBcRows, aqeBcPlan) = withConfs(
       "spark.sql.adaptive.enabled" -> "true") {
       val df = basof
       (sortedRows(df), finalPlan(df))
@@ -632,7 +607,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(aqeBcPlan.contains("AdaptiveSparkPlan"), aqeBcPlan)
     assert(aqeBcPlan.contains("BroadcastAsOfJoin"),
       s"AQE did not keep the broadcast as-of pick:\n$aqeBcPlan")
-    val offBcRows = withConf(
+    val offBcRows = withConfs(
       "spark.sql.adaptive.enabled" -> "false")(sortedRows(basof))
     assert(aqeBcRows == offBcRows, "AQE on/off divergence through BroadcastAsOfJoinExec")
 
@@ -640,8 +615,8 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     for ((name, bld) <- Seq(
         "b49" -> (() => Relational.b49AsofNative(s, sf)),
         "b60" -> (() => Relational.b60AsofBroadcastDim(s, sf)))) {
-      val on = withConf("spark.sql.adaptive.enabled" -> "true")(sortedRows(bld()))
-      val off = withConf("spark.sql.adaptive.enabled" -> "false")(sortedRows(bld()))
+      val on = withConfs("spark.sql.adaptive.enabled" -> "true")(sortedRows(bld()))
+      val off = withConfs("spark.sql.adaptive.enabled" -> "false")(sortedRows(bld()))
       assert(on == off, s"$name: AQE on/off value divergence")
     }
   }
@@ -653,7 +628,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     // null, matching the per-component null rule), so every flag combo
     // must produce the same rows through: composite sort-merge,
     // composite broadcast, fused sort-merge.
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val left = Seq(
       (Some(1L), Some("x"), Some(100L), "a"), // matches (1,x,95)
@@ -719,7 +694,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("composite key lists are validated at analysis: length, empties, duplicates, types") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val l = Seq((1L, "x", 10L)).toDF("k1", "k2", "t")
     val r = Seq((1L, "x", 5L)).toDF("rk1", "rk2", "rt")
@@ -745,7 +720,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tolerance flag parse and type errors fail at analysis") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val l = Seq((1L, 10L)).toDF("k", "t")
     val r = Seq((1L, 5L)).toDF("rk", "rt")
@@ -776,7 +751,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a misplaced graft_asof hint fails at analysis instead of silently degrading") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val l = Seq((1L, 10L)).toDF("k", "t")
     val r = Seq((1L, 5L)).toDF("rk", "rt")
@@ -807,7 +782,7 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the rule rejects ambiguous and type-mismatched hint columns at analysis") {
-    val s = freshSession(extended = true)
+    val s = spark
     import s.implicits._
     val l = Seq((1L, 10L)).toDF("k", "t")
     val rStr = Seq(("1", 10L)).toDF("rk", "rt")

@@ -2,34 +2,17 @@ package graft.plans
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftTestSession
 import graft.cap.CapPipeline
 import graft.functions.Geo
 
 /** The custom-Catalyst surface: native codegen expression, generator
   * (UDTF), typed UDAF, and SparkSessionExtensions registration.
   */
-class GraftExtensionsSpec extends AnyFunSuite {
-
-  // built WITH the extension class; since an earlier suite's session may
-  // be reused by getOrCreate (ignoring new configs), the temp-function
-  // registration path is applied unconditionally as well — both paths
-  // install the same expressions.
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("plans-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    GraftFunctions.register(s)
-    s
-  }
+class GraftExtensionsSpec extends AnyFunSuite with GraftTestSession {
 
   test("extension class applies cleanly to a fresh SparkSessionExtensions") {
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)

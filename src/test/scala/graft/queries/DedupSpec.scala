@@ -1,25 +1,17 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
+import graft.GraftTestSession
 
 /** Dedup suite over the sf0.001 corpus. The DuckDB oracle (driver t2)
   * checks cross-engine hash parity; these specs check the *semantics*:
   * LSH recall against an in-Spark all-pairs ground truth, stat
   * consistency, and threshold invariants.
   */
-class DedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("dedup-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** The single harness for every cardinality-chosen plan switch
   * ([[PlanGate]]): boundary arithmetic for each switch's cutoffs,
@@ -14,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stays in its own spec (SimilaritySpec, TextStatsSpec) — this file
   * owns the SWITCH, so a future cap change has one place that fails.
   */
-class PlanGateSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-gate-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanGateSpec extends AnyFunSuite with GraftTestSession {
 
   test("regime arithmetic: inclusive upper bounds, first-match, ascending require") {
     assert(PlanGate.regime(0, 10) == 0)

@@ -1,22 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** Plan-shape contracts the docs claim — asserted so a regression in
   * filter pushdown, column pruning, broadcast selection, or top-k
   * planning fails the build rather than silently costing a full scan
   * at 100 TB.
   */
-class PlanShapeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-shape-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,24 +1,16 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
+import graft.GraftTestSession
 
 /** Invariants for the grouping-sets / semi-anti / as-of / approx
   * operators (B13–B16); cross-engine value parity for B13–B15 is the
   * DuckDB oracle's job.
   */
-class RelationalExtSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("relational-ext-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RelationalExtSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

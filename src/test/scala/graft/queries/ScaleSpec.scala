@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftTestSession
 import graft.sources.Tables
 
 /** Executable evidence for the 100 TB design points that small-SF
@@ -13,17 +14,7 @@ import graft.sources.Tables
   * exchange), salted skew-join equivalence, and partition-count
   * independence of every oracled result.
   */
-class ScaleSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("scale-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+class ScaleSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -386,13 +377,17 @@ class ScaleSpec extends AnyFunSuite {
       "m1_media_features", "b29_funnel", "d7_dup_clusters", "t8_mix_weights",
       "b32_corr_subquery", "t10_stratified_sample", "d8_semantic_dedup",
       "s8_kmeans", "t15_seq_pack", "d9_bloom_decontam")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      val wide = SampleRunner.run(spark, sf, names, "32")
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      val serial = SampleRunner.run(spark, sf, names, "1")
-      assert(wide == serial, "results must not depend on partitioning")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    // under AQE coalescing the exchanges start at initialPartitionNum,
+    // not shuffle.partitions, so each run sets both
+    def width[T](n: Int)(body: => T): T = withConfs(
+      "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> n.toString) {
+      assert(spark.sessionState.conf.numShufflePartitions == n)
+      body
+    }
+    val wide = width(32)(SampleRunner.run(spark, sf, names, "32"))
+    val serial = width(1)(SampleRunner.run(spark, sf, names, "1"))
+    assert(wide == serial, "results must not depend on partitioning")
   }
 }
 

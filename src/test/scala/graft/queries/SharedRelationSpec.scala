@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftTestSession
+
 /** Lifecycle gates for the one shared-cache idiom ([[SharedRelation]],
   * r16 verdict task 6): repeated evaluation must NOT grow the
   * registry (one entry per (family, key), same DataFrame instance
@@ -11,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * — both for the helper in isolation and through the three real
   * call sites (Dedup pairs, TextStats t1 relations, d5 bands).
   */
-class SharedRelationSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("shared-relation-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SharedRelationSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

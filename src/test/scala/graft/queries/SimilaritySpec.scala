@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
+import graft.GraftTestSession
 
 /** ANN semantics: LSH/IVF results must be exact cosines of real
   * candidates (no fabricated sims), ranked correctly, and achieve
@@ -15,15 +15,7 @@ import graft.sources.Tables
   * is that candidates are genuinely pruned yet the true neighbor list
   * is partially recovered, deterministically.
   */
-class SimilaritySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("similarity-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimilaritySpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftTestSession
 import graft.sources.Tables
 
 /** The engine's SQL front door: the same ANSI text shipped to the
@@ -10,20 +10,10 @@ import graft.sources.Tables
   * the DataFrame builders row for row — one query text, three engines
   * (Spark DataFrame, Spark SQL, DuckDB) agreeing.
   */
-class SqlSurfaceSpec extends AnyFunSuite {
+class SqlSurfaceSpec extends AnyFunSuite with GraftTestSession {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("sql-surface-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tables.all.foreach(t =>
-      Tables.table(s, sf, t).createOrReplaceTempView(t))
-    s
-  }
+  private lazy val views: Unit = Tables.all.foreach(t =>
+    Tables.table(spark, sf, t).createOrReplaceTempView(t))
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -40,6 +30,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
       val sql = graft.SparkEntry.oracleSql(name)
         // Spark's JSON accessor differs from DuckDB's by name only
         .replace("json_extract_string(props, '$.k')", "get_json_object(props, '$.k')")
+      views
       val viaSql = spark.sql(sql).collect().map(_.toString).sorted
       val viaDf = graft.SparkEntry.queries(name)(spark, sf)
         .collect().map(_.toString).sorted

@@ -1,23 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, countDistinct, explode, max, size, split}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
+import graft.GraftTestSession
 
 /** Semantic checks for the text-analysis surface (cross-engine hash
   * parity is the DuckDB oracle's job; these pin the invariants).
   */
-class TextStatsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("textstats-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextStatsSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -2,9 +2,10 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** Scan-layout compaction: a parquet row group is the unit of scan
   * parallelism, so a table file written as ONE giant row group caps
@@ -15,16 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * content-identical and actually scan-parallel, the cache is reused,
   * and the conf kill-switch works.
   */
-class CompactionSpec extends AnyFunSuite {
+class CompactionSpec extends AnyFunSuite with GraftTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("compaction-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.files.maxPartitionBytes", "64k")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConfs = Map("spark.sql.files.maxPartitionBytes" -> "64k")
 
   /** An sf-style dir holding a single-FILE, single-ROW-GROUP lineitem.
     * `priceFactor` varies the VALUES (not the row count), so two calls
@@ -47,18 +41,9 @@ class CompactionSpec extends AnyFunSuite {
     dir.getAbsolutePath
   }
 
-  private def withConf(key: String, value: String)(f: => Unit): Unit = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("a big single-row-group file is rewritten into a scan-parallel copy with identical content") {
     val dir = writeSingleRowGroup(60000) // ~700 KB, one row group
-    withConf("spark.graft.compact.minBytes", "100000") {
+    withConfs("spark.graft.compact.minBytes" -> "100000") {
       val src = s"$dir/lineitem.parquet"
       val resolved = Tables.maybeCompact(spark, src)
       assert(resolved != src, "above-threshold single-row-group file must compact")
@@ -82,14 +67,14 @@ class CompactionSpec extends AnyFunSuite {
     val mPath = new java.io.File(multi, "lineitem.parquet").getAbsolutePath
     spark.range(0, 1000).select(col("id").as("l_orderkey"))
       .repartition(3).write.mode("overwrite").parquet(mPath)
-    withConf("spark.graft.compact.minBytes", "10") {
+    withConfs("spark.graft.compact.minBytes" -> "10") {
       assert(Tables.maybeCompact(spark, mPath) == mPath)
     }
   }
 
   test("the compacted copy is cached by (path, size, mtime) and reused") {
     val dir = writeSingleRowGroup(60000)
-    withConf("spark.graft.compact.minBytes", "100000") {
+    withConfs("spark.graft.compact.minBytes" -> "100000") {
       val src = s"$dir/lineitem.parquet"
       val first = Tables.maybeCompact(spark, src)
       val marker = new java.io.File(first, "_SUCCESS")
@@ -105,7 +90,7 @@ class CompactionSpec extends AnyFunSuite {
     // uncompressed: plain-encoded doubles make the length a function of
     // the row count alone, so different values ⇒ same length
     val dir = writeSingleRowGroup(60000, compression = "none")
-    withConf("spark.graft.compact.minBytes", "100000") {
+    withConfs("spark.graft.compact.minBytes" -> "100000") {
       val src = new java.io.File(s"$dir/lineitem.parquet")
       val origMtime = src.lastModified()
       val origLen = src.length()
@@ -136,8 +121,8 @@ class CompactionSpec extends AnyFunSuite {
 
   test("eviction removes cache entries whose recorded source no longer exists") {
     val root = Files.createTempDirectory("compact-evict-root-").toFile
-    withConf("spark.graft.compact.dir", root.getAbsolutePath) {
-      withConf("spark.graft.compact.minBytes", "100000") {
+    withConfs("spark.graft.compact.dir" -> root.getAbsolutePath) {
+      withConfs("spark.graft.compact.minBytes" -> "100000") {
         val dir = writeSingleRowGroup(60000)
         val src = new java.io.File(s"$dir/lineitem.parquet")
         val entry = new java.io.File(Tables.maybeCompact(spark, src.getAbsolutePath))
@@ -159,7 +144,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("compacted table names are recorded for the bench artifact tag") {
     val dir = writeSingleRowGroup(60000)
-    withConf("spark.graft.compact.minBytes", "100000") {
+    withConfs("spark.graft.compact.minBytes" -> "100000") {
       Tables.maybeCompact(spark, s"$dir/lineitem.parquet")
       assert(Tables.compactedTables.contains("lineitem"))
     }
@@ -167,8 +152,8 @@ class CompactionSpec extends AnyFunSuite {
 
   test("spark.graft.compact.enabled=false serves the original path") {
     val dir = writeSingleRowGroup(60000)
-    withConf("spark.graft.compact.minBytes", "100000") {
-      withConf("spark.graft.compact.enabled", "false") {
+    withConfs("spark.graft.compact.minBytes" -> "100000") {
+      withConfs("spark.graft.compact.enabled" -> "false") {
         val src = s"$dir/lineitem.parquet"
         assert(Tables.maybeCompact(spark, src) == src)
       }

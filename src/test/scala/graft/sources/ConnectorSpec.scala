@@ -9,25 +9,17 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cap.CapPipeline
+import graft.GraftTestSession
 
 /** DSv2 connector tests against a real in-JVM HTTP server: feed
   * planning, partition-parallel alert fetch, retry/backoff parity, and
   * the FeatureCollection sink envelope.
   */
-class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("connector-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfterAll {
 
   private var server: HttpServer = _
   private var base: String = _

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStream
+import graft.GraftTestSession
 
 /** The events table's `ts` column has shipped with different parquet
   * footers across driver data generations (timestamp[ns] → raw longs
@@ -18,15 +19,7 @@ import graft.streaming.EventStream
   * the unconditional `ts div 1000` shim compressed us-footer event
   * time 1000×, collapsing 720 hourly windows to 2).
   */
-class TablesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("tables-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TablesSpec extends AnyFunSuite with GraftTestSession {
 
   /** Write the same logical events under a given ts writer expression,
     * as the single-file `events.parquet` layout the sf dirs use. */

@@ -2,26 +2,18 @@ package graft.streaming
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cap.{CapAlert, CapPipeline}
+import graft.GraftTestSession
 
 /** Streaming semantics: AvailableNow over the fixture directory must
   * reproduce the batch pipeline's output; watermarked window agg and
   * stateful lifecycle run on MemoryStream-driven micro-batches.
   */
-class CapStreamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CapStreamSpec extends AnyFunSuite with GraftTestSession {
 
   private val asOf = Instant.parse("2024-06-01T00:00:00Z")
 

@@ -1,24 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Relational
+import graft.GraftTestSession
 
 /** Batch/stream unification for the analytics surface: the streaming
   * hourly aggregation over events.parquet must produce exactly the
   * batch B11 result — same windows, same counts, same decimal sums.
   */
-class EventStreamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("event-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventStreamSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -8,6 +8,8 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftTestSession
+
 /** Checkpoint recovery for the STATEFUL event side — the crash-restart
   * half of the exactly-once story. ConnectorSpec proves the capfeed
   * source resumes from its offset checkpoint; this spec proves the
@@ -30,7 +32,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * mapGroupsWithState, the Spark-4 ValueState API, and symmetric join
   * buffers — has a kill→resume→equals-control gate.
   */
-class RecoverySpec extends AnyFunSuite {
+class RecoverySpec extends AnyFunSuite with GraftTestSession {
 
   /** Three-valued run outcome: the old Boolean helpers returned false
     * both when the injected crash fired AND when awaitTermination timed
@@ -46,14 +48,6 @@ class RecoverySpec extends AnyFunSuite {
     try { if (q.awaitTermination(180000)) Finished else TimedOut }
     catch { case _: StreamingQueryException => Failed }
     finally q.stop()
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("recovery-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
 

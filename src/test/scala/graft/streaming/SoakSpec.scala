@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** Gated (compact) version of the [[StreamSoak]] probe: the many-batch
   * drain path — 16 time-sliced micro-batches through RocksDB with a
@@ -12,16 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * next big-SF probe. The full-depth numbers (64 batches at sf0.1)
   * live in BENCH_NOTES §Round 16.
   */
-class SoakSpec extends AnyFunSuite {
+class SoakSpec extends AnyFunSuite with GraftTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("soak-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.streaming.numRecentProgressUpdates", "64")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def suiteConfs =
+    Map("spark.sql.streaming.numRecentProgressUpdates" -> "64")
 
   private val sf = "/root/testdata/sf0.001"
   private val nSlices = 16

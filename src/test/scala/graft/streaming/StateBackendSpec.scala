@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftTestSession
 
 /** Pins the RocksDB state-backend wiring itself: [[StateBackend]] must
   * route a stateful query to RocksDB (fingerprinted via the provider's
@@ -10,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * FAIL on a heap-provider run — i.e. a silent conf regression cannot
   * pass the oracle gate with the wrong backend.
   */
-class StateBackendSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("state-backend-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StateBackendSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
   private val key = "spark.sql.streaming.stateStore.providerClass"
