@@ -145,14 +145,13 @@ object Tables {
       .digest(buf).map("%02x".format(_)).mkString
   }
 
-  /** Local cache root for compacted copies (conf > env > default).
+  /** Local cache root for compacted copies (conf > default).
     * Deliberately NOT java.io.tmpdir by default: tmp reapers on long
     * benches can delete a resolved copy between path resolution and
     * scan execution. */
   private def cacheRootDir(spark: SparkSession): java.io.File =
     new java.io.File(conf(spark, "spark.graft.compact.dir",
-      sys.env.getOrElse("GRAFT_COMPACT_DIR",
-        s"${System.getProperty("user.home")}/.cache/graft-compact")))
+      s"${System.getProperty("user.home")}/.cache/graft-compact"))
 
   /** One sweep per JVM per cache root: drop entries whose recorded
     * source no longer exists (each driver data regeneration would

@@ -25,8 +25,8 @@ object StreamRunner {
   /** Opt-in per-phase wall attribution (SPARK_GRAFT_STREAM_PHASES=1):
     * one JSON line per run splitting the builder wall into cleanup /
     * query-planning+start / micro-batch execution / read-back, plus the
-    * engine's own per-batch durationMs. Exists because the driver-sweep
-    * `stream_wall` is a single opaque number — when it regresses, this
+    * engine's own per-batch durationMs. Exists because a stream builder's
+    * bench `build_s` is a single opaque number — when it regresses, this
     * is the breakdown that says which fixed cost (RocksDB open,
     * changelog commit, sink write, checkpoint delete) moved. */
   private val phasesOn = sys.env.contains("SPARK_GRAFT_STREAM_PHASES")

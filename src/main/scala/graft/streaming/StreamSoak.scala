@@ -50,9 +50,8 @@ object StreamSoak {
   /** One drained run: total wall plus per-batch
     * (batchId, inputRows, triggerMs, stateRowsTotal). `finished` is
     * true only for a full un-killed drain; `killed` reports whether
-    * the mid-soak watcher actually stopped the query (on a fast drain
-    * every batch can commit inside one watcher poll, so a kill REQUEST
-    * does not guarantee a kill — callers gate on this, not on timing). */
+    * the mid-soak kill fired (it does not when the drain ends before
+    * batch `killAfter`). */
   final case class SoakRun(wall: Double,
       progress: Seq[(Long, Long, Long, Long)], finished: Boolean,
       killed: Boolean = false)
@@ -103,9 +102,12 @@ object StreamSoak {
       .parquet(dir.getAbsolutePath)
 
   /** Drain `df` (AvailableNow, RocksDB, IdempotentSink at `out`,
-    * checkpoint at `ckpt`); with `killAfter > 0` a watcher stops the
-    * query once that many batches committed — modeling an executor
-    * loss / restart mid-drain — and `finished` reports false. */
+    * checkpoint at `ckpt`); with `killAfter > 0` the query dies once
+    * that many batches committed — modeling an executor loss / restart
+    * mid-drain — and `finished` reports false. The kill lands between
+    * batches: batch `killAfter` fails before it writes anything, so
+    * every batch before it is both committed and in `recentProgress`,
+    * and the resumed run re-plans it from the offset log. */
   def drive(spark: SparkSession, name: String, df: DataFrame, mode: String,
       ckpt: String, out: String, statePath: String,
       killAfter: Int = -1): SoakRun = {
@@ -117,28 +119,26 @@ object StreamSoak {
     // for the per-write GET it costs (see StateBackend.enableRocksDb)
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "true")
+    // set on the stream thread, read by this thread after
+    // awaitTermination — AtomicBoolean for the cross-thread visibility
+    // a plain var does not guarantee
+    val killed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sink = IdempotentSink.parquetSink(out)
     val t0 = System.nanoTime()
     val q = StateBackend.withStatePartitions(spark, statePath) {
       df.writeStream
         .queryName(name)
-        .foreachBatch(IdempotentSink.parquetSink(out))
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          if (killAfter > 0 && batchId >= killAfter) {
+            killed.set(true)
+            throw new IllegalStateException(s"$name: soak kill at batch $batchId")
+          }
+          sink(batch, batchId)
+        }
         .option("checkpointLocation", ckpt)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .start()
-    }
-    // written by the watcher thread, read by this thread after
-    // awaitTermination — AtomicBoolean for the cross-thread visibility
-    // a plain var does not guarantee
-    val killed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    if (killAfter > 0) {
-      val watcher = new Thread(() => {
-        while (q.isActive && Option(q.lastProgress).forall(_.batchId < killAfter))
-          Thread.sleep(50)
-        if (q.isActive) { killed.set(true); q.stop() }
-      }, s"soak-killer-$name")
-      watcher.setDaemon(true)
-      watcher.start()
     }
     val finished =
       try { q.awaitTermination(600000) }
