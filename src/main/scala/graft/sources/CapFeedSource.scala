@@ -17,18 +17,20 @@ import org.apache.spark.unsafe.types.UTF8String
 /** `spark.read.format("capfeed")` — DSv2 batch source for a CAP feed
   * (S1-S3). Planning (driver): fetch the RSS/Atom feed once, extract
   * alert links (P1-P3). Execution (executors): each partition fetches
-  * its slice of alert URLs with reference-parity retry/backoff and
-  * yields `(url, xml)` rows. The reference fetches the N alerts
-  * serially (task.ts:626) — here wall-clock ≈ ceil(N / parallelism) ×
-  * fetch, the engine's headline scalability win for the ETL path.
+  * its slice of alert URLs with reference-parity retry/backoff, up to
+  * `fetchConcurrency` at a time, and yields `(url, xml)` rows. The
+  * reference fetches the N alerts serially (task.ts:626) — here
+  * wall-clock ≈ ceil(N / (numPartitions × fetchConcurrency)) × fetch,
+  * the engine's headline scalability win for the ETL path.
   *
   * Options: `url` (required), `headers` ("K=V;K=V"), `timeout` (ms,
   * default 30000), `retries` (default 2), `numPartitions` (default 4) —
   * timeout/retries defaults mirror the reference env schema
   * (task.ts:15-22). Engine-only, parsed by [[EtlConfig.fromOptions]]:
-  * `fetchConcurrency` (default 1, in-flight alert fetches per partition)
-  * and `failFast` (default false: a failed alert is logged and skipped
-  * like the reference; true fails the read).
+  * `fetchConcurrency` (default 8, in-flight alert fetches per partition;
+  * 1 fetches one alert at a time like the reference) and `failFast`
+  * (default false: a failed alert is logged and skipped like the
+  * reference; true fails the read).
   */
 class CapFeedDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "capfeed"
@@ -97,52 +99,25 @@ private case class CapFeedPartition(urls: Seq[String], conf: EtlConfig)
     extends InputPartition
 
 private class CapFeedReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CapFeedPartition]
-    if (p.conf.fetchConcurrency > 1) new ConcurrentCapFeedReader(p)
-    else new SerialCapFeedReader(p)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new CapFeedReader(partition.asInstanceOf[CapFeedPartition])
 }
 
-/** Reference parity: each alert fetch sits inside the per-alert
+/** The one `capfeed` partition reader, batch and micro-batch: up to
+  * `fetchConcurrency` alert fetches of THIS partition's slice run
+  * simultaneously on a private pool — I/O-bound latency hiding on top
+  * of the partition-level parallelism, where the reference is strictly
+  * serial (task.ts:626). Rows surface in fetch-COMPLETION order;
+  * downstream CAP semantics are per-alert, so intra-partition order
+  * carries no meaning (the order-preserving link dedup already happened
+  * at planning). With `fetchConcurrency=1` one fetch is in flight at a
+  * time, so requests and rows follow the slice order exactly.
+  *
+  * Reference parity: each alert fetch sits inside the per-alert
   * try/catch (task.ts:626-878) — a dead link is logged and skipped
-  * after retries, it does not fail the run. failFast=true opts into
-  * strict propagation instead.
-  */
-private class SerialCapFeedReader(p: CapFeedPartition)
-    extends PartitionReader[InternalRow] {
-  private val it = p.urls.iterator
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    while (it.hasNext) {
-      val url = it.next()
-      try {
-        val xml = Http.fetchWithRetry(url, p.conf.headers, p.conf.timeoutMs, p.conf.retries)
-        current = new GenericInternalRow(Array[Any](
-          UTF8String.fromString(url), UTF8String.fromString(xml)))
-        return true
-      } catch {
-        // NonFatal only — cancellation interrupts and VM errors
-        // must fail the task, not read as "skipped URL"
-        case scala.util.control.NonFatal(e) if !p.conf.failFast =>
-          System.err.println(s"[capfeed] skipping $url: ${e.getMessage}")
-      }
-    }
-    false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** `fetchConcurrency > 1`: up to that many alert fetches of THIS
-  * partition's slice run simultaneously on a private pool — I/O-bound
-  * latency hiding on top of the partition-level parallelism, where the
-  * reference is strictly serial (task.ts:626). Rows surface in fetch-
-  * COMPLETION order; downstream CAP semantics are per-alert, so intra-
-  * partition order carries no meaning (the order-preserving link dedup
-  * already happened at planning). Error semantics match the serial
-  * reader: log-and-skip per URL, or first failure propagates under
-  * failFast.
+  * after retries, it does not fail the run. failFast=true propagates
+  * the first failure instead. Interrupts and fatal errors always
+  * propagate.
   *
   * Submission is throttled: at most `fetchConcurrency` URLs are ever
   * in the pool at once, and the next URL is submitted only when a
@@ -151,7 +126,7 @@ private class SerialCapFeedReader(p: CapFeedPartition)
   * drains slower than the pool fetches. Retained memory is bounded by
   * fetchConcurrency payloads, independent of the partition's URL count.
   */
-private class ConcurrentCapFeedReader(p: CapFeedPartition)
+private class CapFeedReader(p: CapFeedPartition)
     extends PartitionReader[InternalRow] {
   import java.util.concurrent.{Callable, ExecutorCompletionService, Executors, TimeUnit}
 
@@ -183,25 +158,23 @@ private class ConcurrentCapFeedReader(p: CapFeedPartition)
 
   override def next(): Boolean = {
     while (inFlight > 0) {
-      val f = completion.take(); inFlight -= 1
-      submitNext() // one consumed → one submitted: bounded retention
-      try {
-        f.get() match {
-          case Right((url, xml)) =>
-            current = new GenericInternalRow(Array[Any](
-              UTF8String.fromString(url), UTF8String.fromString(xml)))
-            return true
-          case Left((url, e)) if !p.conf.failFast =>
-            System.err.println(s"[capfeed] skipping $url: ${e.getMessage}")
-          case Left((_, e)) =>
-            close()
-            throw e
-        }
-      } catch {
+      val fetched = try completion.take().get() catch {
+        // only fatal (non-NonFatal) Callable errors reach here
         case e: java.util.concurrent.ExecutionException =>
-          // only fatal (non-NonFatal) Callable errors reach here
           close()
           throw e.getCause
+      }
+      inFlight -= 1
+      // failFast: nothing is submitted after the first failure
+      if (p.conf.failFast) fetched.left.foreach { case (_, e) => close(); throw e }
+      submitNext() // one consumed → one submitted: bounded retention
+      fetched match {
+        case Right((url, xml)) =>
+          current = new GenericInternalRow(Array[Any](
+            UTF8String.fromString(url), UTF8String.fromString(xml)))
+          return true
+        case Left((url, e)) =>
+          System.err.println(s"[capfeed] skipping $url: ${e.getMessage}")
       }
     }
     false
@@ -268,7 +241,14 @@ private class CapFeedMicroBatchStream(options: CaseInsensitiveStringMap)
 
   override def latestOffset():
       org.apache.spark.sql.connector.read.streaming.Offset = {
-    val feed = Http.fetchWithRetry(feedUrl, c.headers, c.timeoutMs, c.retries)
+    val feed = try Http.fetchWithRetry(feedUrl, c.headers, c.timeoutMs, c.retries)
+    catch {
+      // like a failed scheduled run of the reference (task.ts:66): no
+      // new batch this trigger, the next trigger polls again
+      case scala.util.control.NonFatal(e) if !c.failFast =>
+        System.err.println(s"[capfeed] feed poll failed, no new batch: $feedUrl: ${e.getMessage}")
+        return CapFeedOffset(known.toSeq)
+    }
     absorb(CapFeedOffset((known ++ FeedLinks.extract(feed)).toSeq))
   }
 

@@ -177,20 +177,27 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       ((System.nanoTime() - t0) / 1000000L, rows)
     }
 
-    val (_, serialRows) = run()
+    val (_, serialRows) = run("fetchConcurrency" -> "1")
     val serialMax = maxInFlight.get()
     maxInFlight.set(0)
     val (_, concRows) = run("fetchConcurrency" -> "7")
     val concMax = maxInFlight.get()
-    // same rows either way: 6 good, the dead link skipped
-    assert(serialRows.length == 6 && concRows.length == 6)
+    maxInFlight.set(0)
+    val (_, defaultRows) = run()
+    val defaultMax = maxInFlight.get()
+    // same rows every way: 6 good, the dead link skipped
+    assert(serialRows.length == 6 && concRows.length == 6 && defaultRows.length == 6)
     assert(concRows.map(_.getString(0)).toSet == serialRows.map(_.getString(0)).toSet)
-    // overlap, observed server-side: the serial reader never has more
-    // than one request open; the concurrent reader must genuinely
-    // overlap (≥3 of 7 in flight together — conservative so a slow
-    // submission ramp can't flake it)
+    assert(defaultRows.map(_.getString(0)).toSet == serialRows.map(_.getString(0)).toSet)
+    // overlap, observed server-side: a window of 1 never has more
+    // than one request open; a window of 7 must genuinely overlap
+    // (≥3 of 7 in flight together — conservative so a slow submission
+    // ramp can't flake it), and so must the default window, which can
+    // never exceed the partition's 7 links
     assert(serialMax == 1, s"serial reader overlapped requests: max in-flight $serialMax")
     assert(concMax >= 3, s"no intra-partition overlap: max in-flight $concMax")
+    assert(defaultMax >= 3 && defaultMax <= 7,
+      s"default window did not overlap within bounds: max in-flight $defaultMax")
 
     // failFast still propagates the first failure under concurrency
     val ex = intercept[Exception](run("fetchConcurrency" -> "4", "failFast" -> "true"))
@@ -233,6 +240,81 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     val second = runBatch()
     assert(second == Set(s"$base/cap/nema-nogeometry.xml"),
       s"restart must emit only the new alert, got $second")
+  }
+
+  /** One AvailableNow run of a `capfeed` stream over `feedUrl` on
+    * `ckpt`; returns the emitted URLs, or the query's failure. */
+  private def availableNow(feedUrl: String, ckpt: String,
+      extra: (String, String)*): Either[Throwable, Seq[String]] = {
+    val got = new ConcurrentLinkedQueue[String]()
+    var reader = spark.readStream.format("capfeed")
+      .option("url", feedUrl)
+      .option("timeout", 5000)
+    extra.foreach { case (k, v) => reader = reader.option(k, v) }
+    val q = reader.load()
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        df.collect().foreach(r => got.add(r.getString(0)))
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try {
+      assert(q.awaitTermination(60000), s"stream over $feedUrl did not finish")
+      Right(got.asScala.toSeq)
+    } catch {
+      case e: org.apache.spark.sql.streaming.StreamingQueryException => Left(e)
+    } finally q.stop()
+  }
+
+  test("capfeed streaming: a micro-batch overlaps its alert fetches at the default window") {
+    val inFlight = new AtomicInteger(0)
+    val maxInFlight = new AtomicInteger(0)
+    server.createContext("/slowstream-alerts/", (ex: HttpExchange) => {
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      try {
+        Thread.sleep(150)
+        respond(ex, 200, Files.readString(Paths.get("fixtures/cap/metservice-polygon.xml")))
+      } finally inFlight.decrementAndGet()
+    })
+    val urls = (1 to 5).map(i => s"$base/slowstream-alerts/a$i.xml")
+    server.createContext("/slowstreamfeed", (ex: HttpExchange) => respond(ex, 200,
+      urls.map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")))
+    val ckpt = Files.createTempDirectory("capfeed-overlap-ckpt").toString
+
+    val got = availableNow(s"$base/slowstreamfeed", ckpt, "numPartitions" -> "1")
+    assert(got.map(_.sorted) == Right(urls.sorted), s"one micro-batch must emit every link once, got $got")
+    assert(maxInFlight.get() > 1,
+      s"micro-batch fetched one alert at a time: max in-flight ${maxInFlight.get()}")
+  }
+
+  test("capfeed streaming: a failed feed poll plans no batch; the next run emits every link once") {
+    val feedUp = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val urls = Seq("metservice-polygon.xml", "geonet-circle.xml", "unknown-codes.xml")
+      .map(f => s"$base/cap/$f")
+    server.createContext("/outagefeed", (ex: HttpExchange) =>
+      if (!feedUp.get()) respond(ex, 500, "feed down")
+      else respond(ex, 200,
+        urls.map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")))
+    val ckpt = Files.createTempDirectory("capfeed-outage-ckpt").toString
+
+    // the feed is down for the whole first run: it ends cleanly, empty
+    val down = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
+    assert(down == Right(Nil), s"a failed poll must end the run quietly, got $down")
+
+    // the feed is back: a run from the same checkpoint emits each link once
+    feedUp.set(true)
+    val up = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
+    assert(up.map(_.sorted) == Right(urls.sorted), s"recovered run must emit every link once, got $up")
+
+    // failFast keeps the old behaviour: the failed poll fails the query
+    feedUp.set(false)
+    val strict = availableNow(s"$base/outagefeed",
+      Files.createTempDirectory("capfeed-outage-strict-ckpt").toString,
+      "retries" -> "0", "failFast" -> "true")
+    assert(strict.left.exists(e => Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
+      .exists(t => Option(t.getMessage).exists(_.contains("HTTP 500")))),
+      s"failFast must fail the query on a failed poll, got $strict")
   }
 
   test("streaming quarantine parity: a planted bad alert through the capfeed " +
@@ -384,6 +466,8 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     // defaults mirror the reference env schema (task.ts:15-22)
     val c = EtlConfig.fromOptions(opts(Map("url" -> "http://example/feed")), "capfeed")
     assert(c.timeoutMs == 30000L && c.retries == 2 && c.headers.isEmpty && !c.failFast)
+    assert(c.fetchConcurrency == EtlConfig.DefaultFetchConcurrency &&
+      EtlConfig("u").fetchConcurrency == EtlConfig.DefaultFetchConcurrency)
     val full = EtlConfig.fromOptions(opts(Map(
       "url" -> "http://example", "headers" -> "A=1;B=2",
       "timeout" -> "5000", "retries" -> "4", "failFast" -> "true")), "capfeed")
