@@ -30,7 +30,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `fetchConcurrency` (default 8, in-flight alert fetches per partition;
   * 1 fetches one alert at a time like the reference) and `failFast`
   * (default false: a failed alert is logged and skipped like the
-  * reference; true fails the read).
+  * reference; true fails the read). At the defaults a read sends up to
+  * numPartitions × 8 alert GETs to the feed host at once;
+  * `fetchConcurrency=1` brings that back to one per partition.
   */
 class CapFeedDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "capfeed"
@@ -244,10 +246,14 @@ private class CapFeedMicroBatchStream(options: CaseInsensitiveStringMap)
     val feed = try Http.fetchWithRetry(feedUrl, c.headers, c.timeoutMs, c.retries)
     catch {
       // like a failed scheduled run of the reference (task.ts:66): no
-      // new batch this trigger, the next trigger polls again
+      // new batch this trigger, the next trigger polls again. Null is
+      // Spark's "no new offset", which keeps the committed one; an
+      // offset built from `known` would not, because Spark polls
+      // before it deserializes the checkpoint, so after a restart
+      // `known` is still empty and the offset would move backwards.
       case scala.util.control.NonFatal(e) if !c.failFast =>
         System.err.println(s"[capfeed] feed poll failed, no new batch: $feedUrl: ${e.getMessage}")
-        return CapFeedOffset(known.toSeq)
+        return null
     }
     absorb(CapFeedOffset((known ++ FeedLinks.extract(feed)).toSeq))
   }

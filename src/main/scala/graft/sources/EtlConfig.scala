@@ -17,6 +17,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the per-partition window of alert fetches in flight: bounded async
   * fetch is the default ([[EtlConfig.DefaultFetchConcurrency]]) where
   * the reference's loop is strictly serial; 1 reproduces that loop.
+  * The default sends up to numPartitions × 8 concurrent alert GETs to
+  * the feed host; `fetchConcurrency=1` restores one per partition.
   */
 final case class EtlConfig(
     url: String,

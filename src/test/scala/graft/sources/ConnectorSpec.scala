@@ -205,43 +205,6 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       .exists(t => Option(t.getMessage).exists(_.contains("HTTP 404"))))
   }
 
-  test("capfeed streaming: AvailableNow polls once; checkpoint restart emits only new links") {
-    val streamAlerts = new java.util.concurrent.atomic.AtomicReference(
-      Seq("metservice-polygon.xml", "geonet-circle.xml"))
-    server.createContext("/streamfeed", (ex: HttpExchange) => respond(ex, 200,
-      streamAlerts.get().map(f => s"<item><link>$base/cap/$f</link></item>")
-        .mkString("<rss><channel>", "", "</channel></rss>")))
-    val ckpt = java.nio.file.Files.createTempDirectory("capfeed-ckpt").toString
-
-    def runBatch(): Set[String] = {
-      val got = new ConcurrentLinkedQueue[String]()
-      val q = spark.readStream.format("capfeed")
-        .option("url", s"$base/streamfeed")
-        .option("timeout", 5000)
-        .load()
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          df.collect().foreach(r => got.add(r.getString(0)))
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(60000)
-      q.stop()
-      got.asScala.toSet
-    }
-
-    val first = runBatch()
-    assert(first == streamAlerts.get().map(f => s"$base/cap/$f").toSet)
-
-    // feed gains one alert; a restarted stream on the same checkpoint
-    // must emit ONLY the new link (offset replay, no re-emission)
-    streamAlerts.set(streamAlerts.get() :+ "nema-nogeometry.xml")
-    val second = runBatch()
-    assert(second == Set(s"$base/cap/nema-nogeometry.xml"),
-      s"restart must emit only the new alert, got $second")
-  }
-
   /** One AvailableNow run of a `capfeed` stream over `feedUrl` on
     * `ckpt`; returns the emitted URLs, or the query's failure. */
   private def availableNow(feedUrl: String, ckpt: String,
@@ -265,6 +228,25 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     } catch {
       case e: org.apache.spark.sql.streaming.StreamingQueryException => Left(e)
     } finally q.stop()
+  }
+
+  test("capfeed streaming: AvailableNow polls once; checkpoint restart emits only new links") {
+    val streamAlerts = new java.util.concurrent.atomic.AtomicReference(
+      Seq("metservice-polygon.xml", "geonet-circle.xml"))
+    server.createContext("/streamfeed", (ex: HttpExchange) => respond(ex, 200,
+      streamAlerts.get().map(f => s"<item><link>$base/cap/$f</link></item>")
+        .mkString("<rss><channel>", "", "</channel></rss>")))
+    val ckpt = java.nio.file.Files.createTempDirectory("capfeed-ckpt").toString
+
+    val first = availableNow(s"$base/streamfeed", ckpt).toOption.get.toSet
+    assert(first == streamAlerts.get().map(f => s"$base/cap/$f").toSet)
+
+    // feed gains one alert; a restarted stream on the same checkpoint
+    // must emit ONLY the new link (offset replay, no re-emission)
+    streamAlerts.set(streamAlerts.get() :+ "nema-nogeometry.xml")
+    val second = availableNow(s"$base/streamfeed", ckpt).toOption.get.toSet
+    assert(second == Set(s"$base/cap/nema-nogeometry.xml"),
+      s"restart must emit only the new alert, got $second")
   }
 
   test("capfeed streaming: a micro-batch overlaps its alert fetches at the default window") {
@@ -292,10 +274,11 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     val feedUp = new java.util.concurrent.atomic.AtomicBoolean(false)
     val urls = Seq("metservice-polygon.xml", "geonet-circle.xml", "unknown-codes.xml")
       .map(f => s"$base/cap/$f")
+    val feedLinks = new java.util.concurrent.atomic.AtomicReference(urls)
     server.createContext("/outagefeed", (ex: HttpExchange) =>
       if (!feedUp.get()) respond(ex, 500, "feed down")
-      else respond(ex, 200,
-        urls.map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")))
+      else respond(ex, 200, feedLinks.get()
+        .map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")))
     val ckpt = Files.createTempDirectory("capfeed-outage-ckpt").toString
 
     // the feed is down for the whole first run: it ends cleanly, empty
@@ -306,6 +289,19 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     feedUp.set(true)
     val up = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
     assert(up.map(_.sorted) == Right(urls.sorted), s"recovered run must emit every link once, got $up")
+
+    // a restart whose first poll fails must keep the committed offset:
+    // that run emits nothing, and the next good poll emits only the
+    // link added since, not the checkpointed ones again
+    feedUp.set(false)
+    val downAgain = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
+    assert(downAgain == Right(Nil), s"a failed poll after a restart must emit nothing, got $downAgain")
+    val added = s"$base/cap/nema-nogeometry.xml"
+    feedLinks.set(urls :+ added)
+    feedUp.set(true)
+    val afterOutage = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
+    assert(afterOutage == Right(Seq(added)),
+      s"the run after a failed poll must emit only the new link, got $afterOutage")
 
     // failFast keeps the old behaviour: the failed poll fails the query
     feedUp.set(false)
