@@ -1,109 +1,12 @@
 package graft.plans
 
-import scala.util.Try
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Generator, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.udaf
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Encoder, Encoders}
-
-import graft.cap.{CapAlert, CotFeature, Features}
-import graft.functions.CentroidAgg
-
-/** JVM kernel for [[PolygonCentroid]] — one static entry point shared by
-  * interpreted eval and generated code, operating directly on Catalyst
-  * [[ArrayData]] (no row conversion, no boxing of the hot loop).
-  * Semantics = `Geo.polygonCentroid` (reference task.ts:340-378):
-  * shoelace centroid, arithmetic-mean fallback for |area| < 1e-10,
-  * [0,0] for rings with < 3 points.
-  */
-object PolygonCentroidKernel {
-  /** Returns null for malformed rings (null points, points with < 2
-    * coordinates) — the input type allows them (`containsNull`) and a
-    * SQL-surface function must not NPE the whole query on one row. */
-  def compute(ring: ArrayData): ArrayData = {
-    val n = ring.numElements()
-    var v = 0
-    while (v < n) {
-      if (ring.isNullAt(v) || ring.getArray(v).numElements() < 2) return null
-      v += 1
-    }
-    if (n < 3) return UnsafeArrayData.fromPrimitiveArray(Array(0.0, 0.0))
-    var area = 0.0
-    var cx = 0.0
-    var cy = 0.0
-    var i = 0
-    while (i < n - 1) {
-      val p0 = ring.getArray(i)
-      val p1 = ring.getArray(i + 1)
-      val x0 = p0.getDouble(0); val y0 = p0.getDouble(1)
-      val x1 = p1.getDouble(0); val y1 = p1.getDouble(1)
-      val a = x0 * y1 - x1 * y0
-      area += a
-      cx += (x0 + x1) * a
-      cy += (y0 + y1) * a
-      i += 1
-    }
-    area *= 0.5
-    if (math.abs(area) < 1e-10) {
-      var x = 0.0; var y = 0.0
-      var j = 0
-      while (j < n) {
-        val p = ring.getArray(j)
-        x += p.getDouble(0); y += p.getDouble(1)
-        j += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(Array(x / n, y / n))
-    } else {
-      UnsafeArrayData.fromPrimitiveArray(Array(cx / (6 * area), cy / (6 * area)))
-    }
-  }
-}
-
-/** `polygon_centroid(ring)` as a native Catalyst expression with code
-  * generation — the SURVEY §4 showcase expression. Unlike a Scala UDF,
-  * this stays inside the WholeStageCodegen span (no serialization
-  * boundary, no closure dispatch): the generated code calls the static
-  * kernel on Catalyst's own array representation.
-  */
-case class PolygonCentroid(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  // the kernel returns null for malformed rings even when the child is
-  // non-nullable
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(ArrayType(DoubleType, _), _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"polygon_centroid expects array<array<double>>, got ${other.catalogString}")
-    }
-
-  override protected def nullSafeEval(ring: Any): Any =
-    PolygonCentroidKernel.compute(ring.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.PolygonCentroidKernel.compute($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PolygonCentroid =
-    copy(child = newChild)
-}
 
 /** JVM kernel for [[WinnowFingerprints]] — winnowing document
   * fingerprints (poly-hash over char-K-grams, window-4 minimum,
@@ -335,7 +238,7 @@ object LshBandsKernel {
     * parsing `Double.toString`'s shortest round-trip representation
     * directly instead of routing it through a BigDecimal parse
     * (~3× the kernel throughput; differentially tested against the
-    * BigDecimal reference in GraftFunctionsSpec). Callers guarantee
+    * BigDecimal reference in GraftExtensionsSpec). Callers guarantee
     * |v| small enough that the scaled value fits a long (|v| ≤ ~3e6
     * here; terms are embedding components × integer weights ≤ 1000).
     */
@@ -584,61 +487,6 @@ object DotRewrite extends org.apache.spark.sql.catalyst.rules.Rule[
     }
 }
 
-/** `alert_to_features(struct(<CapAlert columns>))` — the X2 fan-out
-  * (task.ts:644-875) as a custom Catalyst [[Generator]] (UDTF analog,
-  * SURVEY §2.6): one alert row generates 0..2N feature rows directly in
-  * the plan, composable with any other operators, instead of the typed
-  * `flatMap` that forces a full Dataset boundary. Per-alert error
-  * isolation (F2) is preserved: a throwing alert yields zero rows.
-  */
-case class AlertToFeatures(child: Expression)
-    extends UnaryExpression with Generator with CodegenFallback {
-
-  @transient private lazy val deser =
-    ExpressionEncoder[CapAlert]().resolveAndBind().createDeserializer()
-  @transient private lazy val ser =
-    ExpressionEncoder[CotFeature]().resolveAndBind().createSerializer()
-
-  override def elementSchema: StructType =
-    ExpressionEncoder[CotFeature]().schema
-
-  /** The deserializer binds POSITIONALLY, so a struct whose fields are
-    * reordered (e.g. alphabetized) would silently swap values into the
-    * wrong CapAlert fields — reject any field-name/arity mismatch at
-    * analysis time; field TYPES must match too (a right-named,
-    * wrong-typed field would otherwise pass analysis and throw a
-    * ClassCastException per row at runtime). */
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val expected = ExpressionEncoder[CapAlert]().schema
-    child.dataType match {
-      case s: StructType if s.fieldNames.toSeq == expected.fieldNames.toSeq &&
-          s.fields.zip(expected.fields).forall { case (g, w) =>
-            org.apache.spark.sql.types.DataType.equalsIgnoreNullability(g.dataType, w.dataType) } =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case s: StructType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"alert_to_features expects struct ${expected.catalogString} " +
-            s"(field names, order, and types), got ${s.catalogString}")
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"alert_to_features expects a struct, got ${other.catalogString}")
-    }
-  }
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val row = child.eval(input).asInstanceOf[InternalRow]
-    if (row == null) Nil
-    // the deserializer sits INSIDE the per-alert Try: F2's isolation
-    // contract is "a throwing alert yields zero rows", and decode
-    // failures are alert failures too
-    else Try(Features.alertToFeatures(deser(row))).getOrElse(Seq.empty)
-      .map(f => ser(f).copy())
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AlertToFeatures =
-    copy(child = newChild)
-}
-
 /** Session-extension entry point: registers the graft-native functions
   * into the Catalyst function registry. [[graft.GraftSession]] applies
   * it to every session it creates; elsewhere activate it with
@@ -646,14 +494,6 @@ case class AlertToFeatures(child: Expression)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("polygon_centroid"),
-      new ExpressionInfo(classOf[PolygonCentroid].getName, "polygon_centroid"),
-      (exprs: Seq[Expression]) => PolygonCentroid(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("alert_to_features"),
-      new ExpressionInfo(classOf[AlertToFeatures].getName, "alert_to_features"),
-      (exprs: Seq[Expression]) => AlertToFeatures(exprs.head)))
     ext.injectFunction((
       FunctionIdentifier("winnow_fps"),
       new ExpressionInfo(classOf[WinnowFingerprints].getName, "winnow_fps"),
@@ -682,61 +522,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // graft_asof hint → AsOfJoinPlan rewrite and its physical strategy
     ext.injectResolutionRule(_ => ResolveAsOfJoin)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-  }
-}
-
-/** Registration for an already-built session (tests, REPL) plus the
-  * UDAF, which goes through the udf registry rather than extensions. */
-object GraftFunctions {
-
-  /** Idempotent, cheap registration of just `winnow_fps` — called from
-    * query builders, which must not re-derive the UDAF encoders or
-    * rebind every function on every DataFrame construction. */
-  def ensureWinnow(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("winnow_fps")))
-      registry.createOrReplaceTempFunction(
-        "winnow_fps", exprs => WinnowFingerprints(exprs.head), "scala_udf")
-  }
-
-  /** Same contract as [[ensureWinnow]], for `cosine_sim` (the ANN/dedup
-    * family's hot loop — see [[CosineKernel]]). */
-  def ensureCosine(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("cosine_sim")))
-      registry.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "scala_udf")
-  }
-
-  /** Same contract, for `lsh_bands(embedding, nPlanes, bandBits)` (the
-    * band-signature kernel behind the Similarity family's candidate
-    * generation — see [[LshBandsKernel]]). The plane/band geometry must
-    * be literal ints: the weight matrix is derived from them once per
-    * JVM, not per row. */
-  def ensureLshBands(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("lsh_bands")))
-      registry.createOrReplaceTempFunction(
-        "lsh_bands", exprs => {
-          def lit(e: Expression, what: String): Int = e match {
-            case Literal(v: Int, IntegerType) => v
-            case other => throw new IllegalArgumentException(
-              s"lsh_bands: $what must be an integer literal, got $other")
-          }
-          LshBands(exprs.head, lit(exprs(1), "nPlanes"), lit(exprs(2), "bandBits"))
-        }, "scala_udf")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "polygon_centroid", exprs => PolygonCentroid(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "alert_to_features", exprs => AlertToFeatures(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "winnow_fps", exprs => WinnowFingerprints(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "scala_udf")
-    spark.udf.register("centroid_agg", udaf(CentroidAgg))
   }
 }

@@ -86,9 +86,7 @@ object Similarity {
     * 5.5B rows — >20 min and tens of GB of disk for what is a
     * per-row map (found-and-fixed at the r15 ×300 probe; this shape
     * is seconds). No join, no aggregate, no shuffle. */
-  private def bands(s: SparkSession, emb: DataFrame,
-      nPlanes: Int, bandBits: Int): DataFrame = {
-    graft.plans.GraftFunctions.ensureLshBands(s)
+  private def bands(emb: DataFrame, nPlanes: Int, bandBits: Int): DataFrame = {
     emb.select(col("vec_id"),
         call_function("lsh_bands", col("embedding").cast("array<double>"),
           lit(nPlanes), lit(bandBits)).as("bvals"))
@@ -129,13 +127,9 @@ object Similarity {
   /** round-6 cosine via the native codegen kernel
     * ([[graft.plans.CosineKernel]] — bit-identical to the declarative
     * `dot/(sqrt·sqrt)` fold it replaced, but stays inside whole-stage
-    * codegen instead of three interpreted HigherOrderFunctions).
-    * Callers must [[ensureCosine]] their session first. */
+    * codegen instead of three interpreted HigherOrderFunctions). */
   private def cosine(a: Column, b: Column): Column =
     round(call_function("cosine_sim", a, b), 6)
-
-  private def ensureCosine(s: SparkSession): Unit =
-    graft.plans.GraftFunctions.ensureCosine(s)
 
   /** Exact re-rank of (qid, vec_id) candidates → top-k per query. */
   private def rerank(emb: DataFrame, cand: DataFrame, k: Int = 5): DataFrame = {
@@ -169,9 +163,8 @@ object Similarity {
   // (band, bval) generates candidates; exact cosine re-ranks them.
   // -------------------------------------------------------------------
   def s1AnnLsh(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val emb = Tables.embeddings(s, d)
-    val b = bands(s, emb, 16, 4)
+    val b = bands(emb, 16, 4)
     val qb = b.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("band"), col("bval"))
     val cand = qb.join(b, Seq("band", "bval"))
@@ -198,7 +191,6 @@ object Similarity {
   // k-means the seeds; the probe/assign machinery is identical.
   // -------------------------------------------------------------------
   def s2AnnIvf(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val emb = Tables.embeddings(s, d)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val cents = e.filter(col("vec_id") >= 100 && col("vec_id") < 132)
@@ -331,7 +323,7 @@ object Similarity {
     // hook the anonymous persist() lacked
     val b = SharedRelation(s, "d5.bands",
       (emb.queryExecution.logical.canonicalized, nPlanes))(
-      bands(s, emb, nPlanes, bits))
+      bands(emb, nPlanes, bits))
     val keep = b.groupBy("band", "bval").agg(count(lit(1)).as("bn"))
       .filter(col("bn") <= D5BucketCap && col("bn") >= 2)
       .select("band", "bval")
@@ -351,7 +343,6 @@ object Similarity {
     SharedRelation.release(s, "d5.bands")
 
   def d5EmbeddingNeardup(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val emb = Tables.embeddings(s, d)
     val cand = d5Candidates(s, emb)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
@@ -441,7 +432,6 @@ object Similarity {
   // the embeddings table.
   // -------------------------------------------------------------------
   def d6CrossModal(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val pairs = Dedup.d2MinhashLsh(s, d)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
@@ -482,9 +472,8 @@ object Similarity {
   private val S4BucketCap = 64
 
   def s4KnnGraph(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val emb = Tables.embeddings(s, d)
-    val b = bands(s, emb, 16, 8)
+    val b = bands(emb, 16, 8)
     val small = b.groupBy("band", "bval")
       .agg(count(lit(1)).as("bn")).filter(col("bn") <= S4BucketCap)
       .select("band", "bval")
@@ -519,7 +508,6 @@ object Similarity {
   // S1/S2/D8 replaces the scan.
   // -------------------------------------------------------------------
   def s5RangeSearch(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val q = e.filter(col("vec_id") < 5)
@@ -568,7 +556,6 @@ object Similarity {
     * and only |n| buffers shuffle; the oracle's `ORDER BY csim DESC,
     * cid ASC` tie-break is the aggregator's own total order. */
   private[queries] def flatAssign(emb: DataFrame, centPred: Column): DataFrame = {
-    ensureCosine(emb.sparkSession)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val cents = e.filter(centPred)
       .select(col("vec_id").as("cid"), col("e").as("cv"))
@@ -652,7 +639,6 @@ object Similarity {
     * so planted near-dup recall survives by construction. */
   private[queries] def twoLevelAssign(emb: DataFrame, centPred: Column,
       seedPred: Column): DataFrame = {
-    ensureCosine(emb.sparkSession)
     val nearest = org.apache.spark.sql.functions.udaf(graft.functions.ArgMaxAgg)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val seeds = e.filter(seedPred)
@@ -869,7 +855,6 @@ object Similarity {
     * stages inside [[twoLevelAssign]]. */
   private[queries] def seedCoarseAssign(emb: DataFrame, pred: Column,
       seedPred: Column): DataFrame = {
-    ensureCosine(emb.sparkSession)
     val nearest = org.apache.spark.sql.functions.udaf(graft.functions.ArgMaxAgg)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val seeds = e.filter(seedPred)
@@ -938,7 +923,6 @@ object Similarity {
 
   private def cellVerify(s: SparkSession, d: String,
       cand: DataFrame => DataFrame): DataFrame = {
-    ensureCosine(s)
     val emb = Tables.embeddings(s, d)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     cand(emb)
@@ -1294,7 +1278,6 @@ object Similarity {
   // judges the index, the spec only pins determinism and bounds.)
   // -------------------------------------------------------------------
   def s9RecallEval(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val emb = Tables.embeddings(s, d)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val q = e.filter(col("vec_id") < 10).select(col("vec_id").as("qid"), col("e").as("qv"))
@@ -1429,7 +1412,6 @@ object Similarity {
   // (adc, vec_id) ranking never wobbles across engines/partitionings.
   // -------------------------------------------------------------------
   def s11IvfPq(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val emb = Tables.embeddings(s, d)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     // coarse: s2's 32 seed centroids, cosine argmax, top-2 probe
@@ -1609,7 +1591,6 @@ object Similarity {
   }
 
   def s12SemanticDecontam(s: SparkSession, d: String): DataFrame = {
-    ensureCosine(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("e"))

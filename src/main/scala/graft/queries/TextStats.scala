@@ -368,7 +368,6 @@ object TextStats {
     * equivalence proof): one codegen pass per document, no
     * position×row explode through the shuffle. */
   private[queries] def winnowFps(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.ensureWinnow(docs.sparkSession)
     docs.filter(length(col("text")) >= 28)
       .select(col("doc_id"), explode(expr("winnow_fps(text)")).as("fp"))
   }

@@ -18,21 +18,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * (S1-S3). Planning (driver): fetch the RSS/Atom feed once, extract
   * alert links (P1-P3). Execution (executors): each partition fetches
   * its slice of alert URLs with reference-parity retry/backoff, up to
-  * `fetchConcurrency` at a time, and yields `(url, xml)` rows. The
-  * reference fetches the N alerts serially (task.ts:626) — here
-  * wall-clock ≈ ceil(N / (numPartitions × fetchConcurrency)) × fetch,
-  * the engine's headline scalability win for the ETL path.
+  * [[CapFeedDataSource.FetchWindow]] (8) at a time, and yields
+  * `(url, xml)` rows. The reference fetches the N alerts serially
+  * (task.ts:626) — here wall-clock ≈ ceil(N / (numPartitions × 8)) ×
+  * fetch, the engine's headline scalability win for the ETL path.
   *
   * Options: `url` (required), `headers` ("K=V;K=V"), `timeout` (ms,
   * default 30000), `retries` (default 2), `numPartitions` (default 4) —
   * timeout/retries defaults mirror the reference env schema
   * (task.ts:15-22). Engine-only, parsed by [[EtlConfig.fromOptions]]:
-  * `fetchConcurrency` (default 8, in-flight alert fetches per partition;
-  * 1 fetches one alert at a time like the reference) and `failFast`
-  * (default false: a failed alert is logged and skipped like the
-  * reference; true fails the read). At the defaults a read sends up to
-  * numPartitions × 8 alert GETs to the feed host at once;
-  * `fetchConcurrency=1` brings that back to one per partition.
+  * `failFast` (default false: a failed alert is logged and skipped like
+  * the reference; true fails the read). A read sends up to
+  * numPartitions × 8 alert GETs to the feed host at once; lower
+  * `numPartitions` to send fewer.
   */
 class CapFeedDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "capfeed"
@@ -46,6 +44,10 @@ class CapFeedDataSource extends TableProvider with DataSourceRegister {
 }
 
 object CapFeedDataSource {
+  /** Alert fetches in flight per partition. 8 covers a 20-alert
+    * micro-batch over 4 partitions in one round trip each. */
+  val FetchWindow: Int = 8
+
   val schema: StructType = StructType(Seq(
     StructField("url", StringType, nullable = false),
     StructField("xml", StringType, nullable = false)))
@@ -106,14 +108,13 @@ private class CapFeedReaderFactory extends PartitionReaderFactory {
 }
 
 /** The one `capfeed` partition reader, batch and micro-batch: up to
-  * `fetchConcurrency` alert fetches of THIS partition's slice run
-  * simultaneously on a private pool — I/O-bound latency hiding on top
-  * of the partition-level parallelism, where the reference is strictly
-  * serial (task.ts:626). Rows surface in fetch-COMPLETION order;
-  * downstream CAP semantics are per-alert, so intra-partition order
-  * carries no meaning (the order-preserving link dedup already happened
-  * at planning). With `fetchConcurrency=1` one fetch is in flight at a
-  * time, so requests and rows follow the slice order exactly.
+  * [[CapFeedDataSource.FetchWindow]] alert fetches of THIS partition's
+  * slice run simultaneously on a private pool — I/O-bound latency
+  * hiding on top of the partition-level parallelism, where the
+  * reference is strictly serial (task.ts:626). Rows surface in
+  * fetch-COMPLETION order; downstream CAP semantics are per-alert, so
+  * intra-partition order carries no meaning (the order-preserving link
+  * dedup already happened at planning).
   *
   * Reference parity: each alert fetch sits inside the per-alert
   * try/catch (task.ts:626-878) — a dead link is logged and skipped
@@ -121,12 +122,12 @@ private class CapFeedReaderFactory extends PartitionReaderFactory {
   * the first failure instead. Interrupts and fatal errors always
   * propagate.
   *
-  * Submission is throttled: at most `fetchConcurrency` URLs are ever
+  * Submission is throttled: at most `FetchWindow` URLs are ever
   * in the pool at once, and the next URL is submitted only when a
   * completed fetch is CONSUMED — so completed XML payloads never
   * accumulate unbounded in the completion queue when the consumer
   * drains slower than the pool fetches. Retained memory is bounded by
-  * fetchConcurrency payloads, independent of the partition's URL count.
+  * `FetchWindow` payloads, independent of the partition's URL count.
   */
 private class CapFeedReader(p: CapFeedPartition)
     extends PartitionReader[InternalRow] {
@@ -138,7 +139,7 @@ private class CapFeedReader(p: CapFeedPartition)
   private type Fetched = Either[(String, Throwable), (String, String)]
 
   private val pool = Executors.newFixedThreadPool(
-    math.min(p.conf.fetchConcurrency, math.max(1, p.urls.size)),
+    math.min(CapFeedDataSource.FetchWindow, math.max(1, p.urls.size)),
     r => { val t = new Thread(r, "capfeed-fetch"); t.setDaemon(true); t })
   private val completion = new ExecutorCompletionService[Fetched](pool)
   private val pending = p.urls.iterator
@@ -153,8 +154,8 @@ private class CapFeedReader(p: CapFeedPartition)
     })
     inFlight += 1
   }
-  // prime the pool: at most fetchConcurrency ahead of consumption
-  (1 to math.min(p.conf.fetchConcurrency, p.urls.size)).foreach(_ => submitNext())
+  // prime the pool: at most FetchWindow ahead of consumption
+  (1 to math.min(CapFeedDataSource.FetchWindow, p.urls.size)).foreach(_ => submitNext())
 
   private var current: InternalRow = _
 

@@ -49,7 +49,6 @@ private class CloudTakTable(writeSchema: StructType, options: CaseInsensitiveStr
       info.schema().fields(0).dataType.typeName == "string",
       s"cloudtak sink expects exactly one STRING column of Feature JSON, got ${info.schema()}")
     val c = EtlConfig.fromOptions(info.options(), "cloudtak")
-    val url = c.url
     // SupportsTruncate backs the advertised TRUNCATE capability:
     // truncate is a no-op because CloudTAK upserts by feature id, so
     // overwrite == append semantically. Without this, overwrite mode
@@ -57,29 +56,29 @@ private class CloudTakTable(writeSchema: StructType, options: CaseInsensitiveStr
     new WriteBuilder with org.apache.spark.sql.connector.write.SupportsTruncate {
       override def truncate(): WriteBuilder = this
       override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new CloudTakBatchWrite(url, c)
+        override def toBatch: BatchWrite = new CloudTakBatchWrite(c)
       }
     }
   }
 }
 
-private class CloudTakBatchWrite(url: String, conf: EtlConfig)
+private class CloudTakBatchWrite(conf: EtlConfig)
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new CloudTakWriterFactory(url, conf)
+    new CloudTakWriterFactory(conf)
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-private class CloudTakWriterFactory(url: String, conf: EtlConfig)
+private class CloudTakWriterFactory(conf: EtlConfig)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new CloudTakWriter(url, conf)
+    new CloudTakWriter(conf)
 }
 
 private case class CloudTakCommit(nFeatures: Int) extends WriterCommitMessage
 
-private class CloudTakWriter(url: String, conf: EtlConfig)
+private class CloudTakWriter(conf: EtlConfig)
     extends DataWriter[InternalRow] {
   private val features = ArrayBuffer.empty[String]
 
@@ -91,7 +90,7 @@ private class CloudTakWriter(url: String, conf: EtlConfig)
       // FeatureCollection envelope only materialized at the sink
       // (task.ts:615-623); empty partitions submit nothing.
       val fc = features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
-      Http.fetchWithRetry(url, conf.headers ++ Map("Content-Type" -> "application/json"),
+      Http.fetchWithRetry(conf.url, conf.headers ++ Map("Content-Type" -> "application/json"),
         conf.timeoutMs, conf.retries, method = "POST", body = Some(fc))
     }
     CloudTakCommit(features.size)

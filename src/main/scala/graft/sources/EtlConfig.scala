@@ -10,32 +10,22 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * defaults, validation, and the published JSON schema are one
   * definition that cannot drift apart.
   *
-  * `failFast` and `fetchConcurrency` are engine-only and deliberately
-  * absent from the published input schema, which mirrors the reference
-  * environment surface. `failFast` opts into strict error propagation
-  * instead of the reference's log-and-skip. `fetchConcurrency` sizes
-  * the per-partition window of alert fetches in flight: bounded async
-  * fetch is the default ([[EtlConfig.DefaultFetchConcurrency]]) where
-  * the reference's loop is strictly serial; 1 reproduces that loop.
-  * The default sends up to numPartitions × 8 concurrent alert GETs to
-  * the feed host; `fetchConcurrency=1` restores one per partition.
+  * `failFast` is engine-only and deliberately absent from the
+  * published input schema, which mirrors the reference environment
+  * surface: it opts into strict error propagation instead of the
+  * reference's log-and-skip.
   */
 final case class EtlConfig(
     url: String,
     headers: Map[String, String] = Map.empty,
     timeoutMs: Long = EtlConfig.DefaultTimeoutMs,
     retries: Int = EtlConfig.DefaultRetries,
-    failFast: Boolean = false,
-    fetchConcurrency: Int = EtlConfig.DefaultFetchConcurrency)
+    failFast: Boolean = false)
 
 object EtlConfig {
   /** Reference defaults (task.ts:15-22). */
   val DefaultTimeoutMs: Long = 30000L
   val DefaultRetries: Int = 2
-
-  /** Alert fetches in flight per `capfeed` partition. 8 covers a
-    * 20-alert micro-batch over 4 partitions in one round trip each. */
-  val DefaultFetchConcurrency: Int = 8
 
   /** Parse + validate connector options. `who` prefixes error messages
     * with the connector short name (capfeed / cloudtak). */
@@ -48,12 +38,8 @@ object EtlConfig {
     val retries = options.getInt("retries", DefaultRetries)
     if (retries < 0)
       throw new IllegalArgumentException(s"$who: 'retries' must be >= 0, got $retries")
-    val fetchConcurrency = options.getInt("fetchConcurrency", DefaultFetchConcurrency)
-    if (fetchConcurrency < 1)
-      throw new IllegalArgumentException(
-        s"$who: 'fetchConcurrency' must be >= 1, got $fetchConcurrency")
     EtlConfig(url, Http.parseHeaders(options.getOrDefault("headers", "")),
-      timeoutMs, retries, options.getBoolean("failFast", false), fetchConcurrency)
+      timeoutMs, retries, options.getBoolean("failFast", false))
   }
 
   /** JSON-schema rendering of the input configuration — the engine's

@@ -11,12 +11,27 @@ import graft.plans.AsOfJoinStrategy
 
 /** Guards the one-session rule: sessions come from [[GraftSession]],
   * and asking for one twice neither builds a second session nor
-  * registers the extensions twice.
+  * registers the extensions twice. Also guards the one-registration
+  * rule: graft functions reach a session only through
+  * [[graft.plans.GraftExtensions]].
   */
 class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
 
   // split so this file does not match itself
   private val builderCall = "SparkSession" + ".builder"
+  private val registerCalls = Seq("createOrReplace" + "TempFunction", "udf" + ".register")
+
+  private lazy val sources: Seq[(Path, String)] =
+    Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.map(p => p -> Files.readString(p))
+
+  /** Count of `needle` per Scala file under src/, files without it dropped. */
+  private def callSites(needle: String): Map[Path, Int] =
+    sources.map { case (p, text) => p -> text.sliding(needle.length).count(_ == needle) }
+      .filter(_._2 > 0).toMap
 
   /** Files allowed to build a session, with their number of call sites:
     * GraftSession, and AsOfJoinSpec's deliberately unextended session. */
@@ -25,13 +40,7 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
     Paths.get("src/test/scala/graft/plans/AsOfJoinSpec.scala") -> 1)
 
   test("only GraftSession and AsOfJoinSpec's unextended case build a SparkSession") {
-    val sites = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }.map { (p: Path) =>
-      p -> Files.readString(p).sliding(builderCall.length).count(_ == builderCall)
-    }.filter(_._2 > 0).toMap
+    val sites = callSites(builderCall)
     assert(sites.nonEmpty, "the scan found no call site at all; wrong working directory?")
     assert(sites == allowed, s"SparkSession built outside GraftSession: $sites")
   }
@@ -40,10 +49,15 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
     val again = GraftSession(cores = 4)
     assert(again eq spark)
     val registry = spark.sessionState.functionRegistry
-    assert(registry.listFunction().count(_ == FunctionIdentifier("polygon_centroid")) == 1)
+    for (name <- Seq("winnow_fps", "cosine_sim", "native_dot", "lsh_bands"))
+      assert(registry.listFunction().count(_ == FunctionIdentifier(name)) == 1,
+        s"$name is not registered exactly once")
     assert(spark.sessionState.planner.strategies.count(_ == AsOfJoinStrategy) == 1)
-    assert(spark.sql("SELECT polygon_centroid(array(array(0d, 0d), array(2d, 0d), " +
-      "array(2d, 2d), array(0d, 2d), array(0d, 0d)))").head().getSeq[Double](0) ==
-      Seq(1.0, 1.0))
+    assert(spark.sql("SELECT cosine_sim(array(1d, 0d), array(1d, 0d))").head().getDouble(0) == 1.0)
+  }
+
+  test("no code registers a function at runtime; GraftExtensions is the only path") {
+    for (call <- registerCalls)
+      assert(callSites(call).isEmpty, s"runtime function registration found: $call")
   }
 }

@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftTestSession
-import graft.queries.Relational
+import graft.queries.{Relational, Similarity, TextStats}
 import graft.sources.Tables
 
 /** Gates for the native as-of join (AsOfJoin.scala): value parity with
@@ -64,6 +64,12 @@ class AsOfJoinSpec extends AnyFunSuite with GraftTestSession {
       val s = SparkSession.builder().master("local[4]").getOrCreate()
       val e = intercept[IllegalStateException](Relational.b49AsofNative(s, sf))
       assert(e.getMessage.contains("graft_asof"))
+      // the native functions exist only through the extensions too: a
+      // query that calls one fails at DataFrame construction
+      val lsh = intercept[AnalysisException](Similarity.s1AnnLsh(s, sf))
+      assert(lsh.getMessage.contains("lsh_bands"), lsh.getMessage)
+      val winnow = intercept[AnalysisException](TextStats.t4Fingerprint(s, sf))
+      assert(winnow.getMessage.contains("winnow_fps"), winnow.getMessage)
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)

@@ -1,16 +1,13 @@
 package graft.plans
 
-import java.time.Instant
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftTestSession
-import graft.cap.CapPipeline
-import graft.functions.Geo
 
-/** The custom-Catalyst surface: native codegen expression, generator
-  * (UDTF), typed UDAF, and SparkSessionExtensions registration.
+/** The custom-Catalyst surface: the native codegen expressions
+  * (`winnow_fps`, `cosine_sim`, `native_dot`, `lsh_bands`), the
+  * `DotRewrite` optimizer rule, and SparkSessionExtensions registration.
   */
 class GraftExtensionsSpec extends AnyFunSuite with GraftTestSession {
 
@@ -116,7 +113,6 @@ class GraftExtensionsSpec extends AnyFunSuite with GraftTestSession {
       .agg(sum(col("bit") * element_at(weights, (col("p") % bandBits).cast("int") + 1)).as("bval"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // kernel form
-    GraftFunctions.ensureLshBands(spark)
     val got = emb.select(col("vec_id"),
         call_function("lsh_bands", col("embedding").cast("array<double>"),
           lit(nPlanes), lit(bandBits)).as("bvals"))
@@ -172,51 +168,6 @@ class GraftExtensionsSpec extends AnyFunSuite with GraftTestSession {
     }
   }
 
-  private def ringSql(pts: Seq[(Double, Double)]): String =
-    "array(" + pts.map { case (x, y) => s"array(${x}d, ${y}d)" }.mkString(", ") + ")"
-
-  test("polygon_centroid matches the reference kernel on a convex ring") {
-    val ring = Seq((174.0, -41.0), (175.0, -41.0), (175.0, -40.0), (174.0, -40.0), (174.0, -41.0))
-    val got = spark.sql(s"SELECT polygon_centroid(${ringSql(ring)}) AS c")
-      .collect()(0).getSeq[Double](0)
-    val want = Geo.polygonCentroid(ring.map(p => Array(p._1, p._2)).toArray)
-    assert(got(0) === want(0) && got(1) === want(1))
-    assert(math.abs(got(0) - 174.5) < 1e-9 && math.abs(got(1) + 40.5) < 1e-9)
-  }
-
-  test("polygon_centroid degenerate ring falls back to vertex mean; <3 points to [0,0]") {
-    val collinear = Seq((0.0, 0.0), (1.0, 1.0), (2.0, 2.0), (0.0, 0.0))
-    val got = spark.sql(s"SELECT polygon_centroid(${ringSql(collinear)}) AS c")
-      .collect()(0).getSeq[Double](0)
-    val want = Geo.polygonCentroid(collinear.map(p => Array(p._1, p._2)).toArray)
-    assert(got == want.toSeq)
-    val tiny = spark.sql(s"SELECT polygon_centroid(array(array(1.0d, 2.0d))) AS c")
-      .collect()(0).getSeq[Double](0)
-    assert(tiny == Seq(0.0, 0.0))
-  }
-
-  test("polygon_centroid runs inside WholeStageCodegen (no fallback project)") {
-    val df = spark.range(100).selectExpr(
-      "polygon_centroid(array(array(CAST(id AS DOUBLE), 0.0d), array(CAST(id+1 AS DOUBLE), 0.0d), array(CAST(id AS DOUBLE), 1.0d), array(CAST(id AS DOUBLE), 0.0d))) AS c")
-    val plan = df.queryExecution.executedPlan.toString
-    // '*(n)' marks operators fused into a WholeStageCodegen stage; the
-    // Project holding the expression must carry it (a CodegenFallback
-    // expression would strip it).
-    assert(plan.contains("*(1) Project"), s"project fell out of codegen:\n$plan")
-    assert(df.collect().length == 100)
-  }
-
-  test("polygon_centroid returns null for malformed rings instead of crashing the query") {
-    val r = spark.sql(
-      "SELECT polygon_centroid(array(array(1.0d, 2.0d), CAST(NULL AS ARRAY<DOUBLE>), array(3.0d, 4.0d))) AS c")
-      .collect()(0)
-    assert(r.isNullAt(0))
-    val r2 = spark.sql(
-      "SELECT polygon_centroid(array(array(1.0d), array(2.0d, 3.0d), array(4.0d, 5.0d))) AS c")
-      .collect()(0)
-    assert(r2.isNullAt(0), "a point with < 2 coordinates must yield null")
-  }
-
   test("winnow_fps equals the declarative per-position formulation on the corpus") {
     val K = graft.plans.WinnowKernel.K
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -257,42 +208,5 @@ class GraftExtensionsSpec extends AnyFunSuite with GraftTestSession {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project"), s"project fell out of codegen:\n$plan")
     assert(df.collect().forall(_.getSeq[Long](0).nonEmpty))
-  }
-
-  test("alert_to_features rejects a struct with reordered fields at analysis time") {
-    val ex = intercept[Exception] {
-      spark.sql("SELECT alert_to_features(named_struct('sender', 'a', 'identifier', 'b'))").collect()
-    }
-    assert(ex.getMessage.contains("alert_to_features expects"),
-      s"wanted analysis-time schema error, got: ${ex.getMessage}")
-  }
-
-  test("alert_to_features generator reproduces the typed flatMap fan-out") {
-    val asOf = Instant.parse("2024-06-01T00:00:00Z")
-    val xml = spark.read.option("wholetext", "true").text("fixtures/cap")
-      .as(org.apache.spark.sql.Encoders.STRING)
-    val alerts = CapPipeline.filterActive(CapPipeline.parseAlerts(xml), asOf)
-    val expected = CapPipeline.toFeatures(alerts).collect()
-      .map(_.json).sorted
-
-    val gdf = alerts.toDF()
-      .select(expr(s"alert_to_features(struct(${alerts.columns.mkString(", ")}))"))
-    val jsonCol = if (gdf.columns.contains("json")) col("json") else col("col.json")
-    val viaGen = gdf.select(jsonCol).collect().map(_.getString(0)).sorted
-    assert(viaGen.sameElements(expected))
-    assert(expected.nonEmpty)
-  }
-
-  test("centroid_agg computes per-group mean centroids with partial aggregation") {
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    val pts = Seq(
-      ("a", Array(0.0, 0.0)), ("a", Array(2.0, 4.0)),
-      ("b", Array(1.0, 1.0)), ("b", Array(3.0, 5.0)), ("b", Array(5.0, 0.0))).toDF("g", "p")
-    pts.createOrReplaceTempView("pts")
-    val got = spark.sql("SELECT g, centroid_agg(p) AS c FROM pts GROUP BY g ORDER BY g")
-      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
-    assert(got("a") == Seq(1.0, 2.0))
-    assert(got("b") == Seq(3.0, 2.0))
   }
 }

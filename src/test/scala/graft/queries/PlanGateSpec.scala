@@ -59,7 +59,6 @@ class PlanGateSpec extends AnyFunSuite with GraftTestSession {
 
   test("s12: join and kernel forms are value-equal at the boundary cardinality") {
     import spark.implicits._
-    graft.plans.GraftFunctions.ensureCosine(spark)
     def h(i: Int, j: Int): Double = {
       val x = (i * 73856093) ^ (j * 19349663)
       ((x % 1000003 + 1000003) % 1000003) / 1000003.0 - 0.5

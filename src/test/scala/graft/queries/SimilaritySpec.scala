@@ -554,7 +554,6 @@ class SimilaritySpec extends AnyFunSuite with GraftTestSession {
 
   test("s12 max-cosine kernel is bit-identical to the broadcast-product form") {
     import spark.implicits._
-    graft.plans.GraftFunctions.ensureCosine(spark)
     def h(i: Int, j: Int): Float = {
       val x = (i * 73856093) ^ (j * 19349663)
       ((x % 1000003 + 1000003) % 1000003) / 1000003.0f - 0.5f
@@ -686,7 +685,6 @@ class SimilaritySpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("native cosine_sim is bit-identical to the declarative fold it replaced") {
-    graft.plans.GraftFunctions.ensureCosine(spark)
     import org.apache.spark.sql.functions._
     val e = Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 40)

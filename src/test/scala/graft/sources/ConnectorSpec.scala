@@ -139,7 +139,7 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       .exists(t => Option(t.getMessage).exists(_.contains("HTTP 404"))))
   }
 
-  test("capfeed: fetchConcurrency overlaps a partition's fetches and keeps skip/failFast semantics") {
+  test("capfeed: the default window overlaps a partition's fetches and keeps skip/failFast semantics") {
     // 6 deliberately slow alert endpoints + 1 dead link, all in ONE
     // partition, so any speedup must come from intra-partition overlap
     val slowMs = 150L
@@ -165,42 +165,29 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     server.createContext("/slowfeed", (ex: HttpExchange) =>
       respond(ex, 200, s"<rss><channel>$links</channel></rss>"))
 
-    def run(extra: (String, String)*): (Long, Array[org.apache.spark.sql.Row]) = {
+    def run(extra: (String, String)*): Array[org.apache.spark.sql.Row] = {
       var reader = spark.read.format("capfeed")
         .option("url", s"$base/slowfeed")
         .option("numPartitions", 1)
         .option("timeout", 5000)
         .option("retries", 0)
       extra.foreach { case (k, v) => reader = reader.option(k, v) }
-      val t0 = System.nanoTime()
-      val rows = reader.load().collect()
-      ((System.nanoTime() - t0) / 1000000L, rows)
+      reader.load().collect()
     }
 
-    val (_, serialRows) = run("fetchConcurrency" -> "1")
-    val serialMax = maxInFlight.get()
-    maxInFlight.set(0)
-    val (_, concRows) = run("fetchConcurrency" -> "7")
-    val concMax = maxInFlight.get()
-    maxInFlight.set(0)
-    val (_, defaultRows) = run()
-    val defaultMax = maxInFlight.get()
-    // same rows every way: 6 good, the dead link skipped
-    assert(serialRows.length == 6 && concRows.length == 6 && defaultRows.length == 6)
-    assert(concRows.map(_.getString(0)).toSet == serialRows.map(_.getString(0)).toSet)
-    assert(defaultRows.map(_.getString(0)).toSet == serialRows.map(_.getString(0)).toSet)
-    // overlap, observed server-side: a window of 1 never has more
-    // than one request open; a window of 7 must genuinely overlap
+    val rows = run()
+    val max = maxInFlight.get()
+    // 6 good rows, the dead link skipped
+    assert(rows.map(_.getString(0)).sorted.toSeq ==
+      (1 to 6).map(i => s"$base/slow/alert-$i.xml").sorted)
+    // overlap, observed server-side: the window must genuinely overlap
     // (≥3 of 7 in flight together — conservative so a slow submission
-    // ramp can't flake it), and so must the default window, which can
-    // never exceed the partition's 7 links
-    assert(serialMax == 1, s"serial reader overlapped requests: max in-flight $serialMax")
-    assert(concMax >= 3, s"no intra-partition overlap: max in-flight $concMax")
-    assert(defaultMax >= 3 && defaultMax <= 7,
-      s"default window did not overlap within bounds: max in-flight $defaultMax")
+    // ramp can't flake it) and can never exceed the partition's 7 links
+    assert(max >= 3 && max <= 7,
+      s"default window did not overlap within bounds: max in-flight $max")
 
     // failFast still propagates the first failure under concurrency
-    val ex = intercept[Exception](run("fetchConcurrency" -> "4", "failFast" -> "true"))
+    val ex = intercept[Exception](run("failFast" -> "true"))
     assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).take(10)
       .exists(t => Option(t.getMessage).exists(_.contains("HTTP 404"))))
   }
@@ -462,8 +449,6 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     // defaults mirror the reference env schema (task.ts:15-22)
     val c = EtlConfig.fromOptions(opts(Map("url" -> "http://example/feed")), "capfeed")
     assert(c.timeoutMs == 30000L && c.retries == 2 && c.headers.isEmpty && !c.failFast)
-    assert(c.fetchConcurrency == EtlConfig.DefaultFetchConcurrency &&
-      EtlConfig("u").fetchConcurrency == EtlConfig.DefaultFetchConcurrency)
     val full = EtlConfig.fromOptions(opts(Map(
       "url" -> "http://example", "headers" -> "A=1;B=2",
       "timeout" -> "5000", "retries" -> "4", "failFast" -> "true")), "capfeed")
