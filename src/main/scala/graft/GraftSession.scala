@@ -3,9 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.plans.GraftExtensions
+import graft.streaming.StateBackend
 
 /** The one session configuration. Every main and every spec gets its
-  * SparkSession here, so specs check the plans the bench runs. Callers
+  * SparkSession here, so specs check the plans the bench runs, and
+  * every stateful stream runs on the state store this definition names
+  * (RocksDB; nothing sets the state-store confs at runtime). Callers
   * pass only the confs they must change. A second call returns the
   * running session (`getOrCreate`) with the runtime confs re-applied
   * and the extensions not applied again.
@@ -51,6 +54,26 @@ object GraftSession {
     // overhead; ~100 ms with the conf, which AQE-coalesces to the
     // 64 MB advisory target — a corpus-sized cache keeps its width)
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    // every stateful stream keeps its state in RocksDB: the default
+    // HDFS-backed provider holds each partition's whole state map on
+    // the executor heap, so memory grows with state cardinality (at the
+    // ×100 probe, 1M events, it was already the dominant stream cost);
+    // RocksDB keeps it off-heap with spill to disk. StreamRunner.drain
+    // asserts the provider on every drained query.
+    "spark.sql.streaming.stateStore.providerClass" -> StateBackend.RocksDbProvider,
+    // changelog checkpointing: each micro-batch commit uploads only the
+    // batch's state delta, not a full SST snapshot, so commit cost is
+    // O(changed keys) rather than O(total state) on a long-running query
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    // row-count tracking off (r18, measured): exact `numRowsTotal` costs
+    // one extra GET per state put/delete. An interleaved A/B at a ×10
+    // source volume (BENCH_NOTES r18, medians of 3, two legs each)
+    // measured turning it off at −14% to −30% on the state-write-bound
+    // walls (b45 5.69→3.99 s, b46 9.18→6.61 s, b54 4.05→3.49 s). The
+    // `rocksdb*` metrics assertRocksDb reads are unaffected; the
+    // provider reports numRowsTotal = -1. The soak's exact-row gates
+    // opt back in through their own scoped confs.
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 

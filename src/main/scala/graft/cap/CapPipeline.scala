@@ -190,10 +190,15 @@ object CapPipeline {
   private val jsExpiresMs =
     udf((s: String) => graft.functions.JsCompat.jsDateParse(s).map(_.toEpochMilli))
 
+  /** The F1 predicate against a clock column in epoch milliseconds: a
+    * literal for the deterministic batch path, `unix_millis(current_timestamp())`
+    * for the per-batch streaming clock (CapStream.featuresNow). */
+  private[graft] def activeAt(nowMs: Column): Column =
+    col("expires") === "" ||
+      coalesce(jsExpiresMs(col("expires")) >= nowMs, lit(true))
+
   def filterActive(alerts: Dataset[CapAlert], asOf: Instant): Dataset[CapAlert] =
-    alerts.filter(
-      col("expires") === "" ||
-      coalesce(jsExpiresMs(col("expires")) >= lit(asOf.toEpochMilli), lit(true)))
+    alerts.filter(activeAt(lit(asOf.toEpochMilli)))
 
   // ---------------------------------------------------------------
   // X2 fan-out — typed flatMap over the heavily unit-tested pure

@@ -79,34 +79,26 @@ object CapQueries {
   val cap3Sql: String =
     s"SELECT identifier, error FROM '${golden("cap3_quarantine.parquet")}' ORDER BY identifier"
 
-  /** Run a streaming Dataset through the micro-batch engine (Update
-    * mode — what mapGroupsWithState requires) and read the committed
-    * result back. Same [[graft.streaming.StreamRunner]] path as b43–b47
-    * (RocksDB state, exactly-once file sink, no driver-resident stream
-    * results — the memory-sink form this replaced was the last holdout
-    * of that pattern). One AvailableNow batch over the fixture dir, so
-    * each alert id yields exactly one update row — the golden compare
-    * DEPENDS on that (update mode emits one row per key per batch), so
-    * StreamRunner asserts the single-data-batch premise loudly: if a
-    * future maxFilesPerTrigger default or added fixtures ever split the
-    * source into multiple batches, this fails here instead of silently
-    * diverging from the golden with duplicate per-id rows. */
-  private def runStream(s: SparkSession, sink: String, df: DataFrame): DataFrame =
-    graft.streaming.StreamRunner.run(s, sink, lifecycleFixtureDir, df,
-      "update", requireSingleDataBatch = true)
-
   /** cap4: the mapGroupsWithState alert lifecycle (Alert → Update* →
     * Cancel, terminal cancel) over a fixture chain, run through the
     * ACTUAL stateful streaming operator — the arbitrary-stateful-
     * processing surface the reference cannot express, held to a golden
-    * oracle like every other query. */
+    * oracle like every other query. Runs through the same
+    * [[graft.streaming.StreamRunner]] path as b43–b57 (RocksDB state,
+    * exactly-once file sink, no driver-resident stream results) in
+    * Update mode, which mapGroupsWithState requires. One AvailableNow
+    * batch over the fixture dir yields exactly one update row per alert
+    * id — the golden compare DEPENDS on that, so StreamRunner's
+    * update-mode single-data-batch check fails here if a future
+    * maxFilesPerTrigger default or added fixtures ever split the
+    * source, instead of silently diverging with duplicate per-id rows. */
   def capLifecycle(s: SparkSession, d: String): DataFrame = {
     val alerts = graft.streaming.CapStream.alerts(s, lifecycleFixtureDir)
-    runStream(s, "cap4_lifecycle_sink",
+    graft.streaming.StreamRunner.run(s, "cap4_lifecycle_sink", lifecycleFixtureDir,
       graft.streaming.CapStream.lifecycle(alerts).toDF()
         .select(col("identifier"), col("status"),
           concat_ws("|", col("msgTypes")).as("msg_chain"),
-          col("lastSent").as("last_sent")))
+          col("lastSent").as("last_sent")), "update")
       .orderBy("identifier")
   }
 
@@ -114,11 +106,11 @@ object CapQueries {
     * the same fixture chain — one row per state transition. */
   def capTransitions(s: SparkSession, d: String): DataFrame = {
     val alerts = graft.streaming.CapStream.alerts(s, lifecycleFixtureDir)
-    runStream(s, "cap5_transitions_sink",
+    graft.streaming.StreamRunner.run(s, "cap5_transitions_sink", lifecycleFixtureDir,
       graft.streaming.CapStream.lifecycleTransitions(alerts).toDF()
         .select(col("identifier"), col("fromStatus").as("from_status"),
           col("toStatus").as("to_status"), col("msgType").as("msg_type"),
-          col("sent")))
+          col("sent")), "update")
       .orderBy("identifier", "sent")
   }
 

@@ -1668,6 +1668,21 @@ object Relational {
 
   val b50Sql: String = b50SqlFor("events")
 
+  /** `left` as-of joined to `right` through the `graft_asof` hint
+    * (parameters as in graft.plans.AsOfJoin: left keys, left time,
+    * right keys, right time, then optional flags). Refuses a session
+    * without GraftExtensions: an unrewritten hint would silently plan
+    * the underlying CROSS join. */
+  private def asofJoin(left: DataFrame, right: DataFrame, params: String*): DataFrame = {
+    val j = left.crossJoin(right).hint("graft_asof", params: _*)
+    if (!j.queryExecution.analyzed.exists(_.isInstanceOf[graft.plans.AsOfJoinPlan]))
+      throw new IllegalStateException(
+        "graft_asof hint was not rewritten to AsOfJoinPlan — build the " +
+          "session with spark.sql.extensions=graft.plans.GraftExtensions " +
+          "(refusing to run the fallback cartesian join)")
+    j
+  }
+
   // -------------------------------------------------------------------
   // B49: native as-of join — the same error→latest-click matching as
   // b15, through the whole-operator extension point instead of the
@@ -1677,9 +1692,8 @@ object Relational {
   // form). The right side is pre-collapsed to one row per (user_id, ts)
   // — max event_id — so the backward match is deterministic in both
   // engines. Oracle: DuckDB's native ASOF JOIN, which implements
-  // exactly this semantic. The builder refuses to run on a session
-  // without GraftExtensions: an unrewritten hint would silently plan
-  // the underlying CROSS join.
+  // exactly this semantic. Like every as-of query here, it goes through
+  // asofJoin, which refuses a session without GraftExtensions.
   // -------------------------------------------------------------------
   def b49AsofNative(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
@@ -1694,14 +1708,8 @@ object Relational {
       .agg(max(col("event_id")).as("click_id"))
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), col("ts"))
-    val j = errors.crossJoin(clicks)
-      .hint("graft_asof", "user_id", "ts", "c_user_id", "c_ts")
-    if (!j.queryExecution.analyzed.exists(_.isInstanceOf[graft.plans.AsOfJoinPlan]))
-      throw new IllegalStateException(
-        "graft_asof hint was not rewritten to AsOfJoinPlan — build the " +
-          "session with spark.sql.extensions=graft.plans.GraftExtensions " +
-          "(refusing to run the fallback cartesian join)")
-    j.select(col("event_id"), col("user_id"), col("click_id"),
+    asofJoin(errors, clicks, "user_id", "ts", "c_user_id", "c_ts")
+      .select(col("event_id"), col("user_id"), col("click_id"),
         (unix_micros(col("ts")) - unix_micros(col("c_ts"))).as("gap_us"))
       .orderBy("event_id")
   }
@@ -1739,14 +1747,8 @@ object Relational {
       .agg(max(col("event_id")).as("click_id"))
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), col("ts"))
-    val j = errors.crossJoin(clicks)
-      .hint("graft_asof", "user_id", "ts", "c_user_id", "c_ts", "left_outer")
-    if (!j.queryExecution.analyzed.exists(_.isInstanceOf[graft.plans.AsOfJoinPlan]))
-      throw new IllegalStateException(
-        "graft_asof hint was not rewritten to AsOfJoinPlan — build the " +
-          "session with spark.sql.extensions=graft.plans.GraftExtensions " +
-          "(refusing to run the fallback cartesian join)")
-    j.select(col("event_id"), col("user_id"),
+    asofJoin(errors, clicks, "user_id", "ts", "c_user_id", "c_ts", "left_outer")
+      .select(col("event_id"), col("user_id"),
         coalesce(col("click_id"), lit(-1L)).as("click_id"),
         (unix_micros(col("ts")) - unix_micros(col("c_ts"))).as("gap_us"))
       .orderBy("event_id")
@@ -1818,14 +1820,8 @@ object Relational {
       .agg(max(col("event_id")).as("click_id"))
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), col("ts"))
-    val j = errors.crossJoin(clicks)
-      .hint("graft_asof", "user_id", "ts", "c_user_id", "c_ts", "forward")
-    if (!j.queryExecution.analyzed.exists(_.isInstanceOf[graft.plans.AsOfJoinPlan]))
-      throw new IllegalStateException(
-        "graft_asof hint was not rewritten to AsOfJoinPlan — build the " +
-          "session with spark.sql.extensions=graft.plans.GraftExtensions " +
-          "(refusing to run the fallback cartesian join)")
-    j.select(col("event_id"), col("user_id"), col("click_id"),
+    asofJoin(errors, clicks, "user_id", "ts", "c_user_id", "c_ts", "forward")
+      .select(col("event_id"), col("user_id"), col("click_id"),
         (unix_micros(col("c_ts")) - unix_micros(col("ts"))).as("gap_us"))
       .orderBy("event_id")
   }
@@ -1867,14 +1863,8 @@ object Relational {
       .agg(max(col("event_id")).as("click_id"))
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), col("ts"))
-    val j = errors.crossJoin(clicks)
-      .hint("graft_asof", "user_id", "ts", "c_user_id", "c_ts", s"tol_us=$B59TolUs")
-    if (!j.queryExecution.analyzed.exists(_.isInstanceOf[graft.plans.AsOfJoinPlan]))
-      throw new IllegalStateException(
-        "graft_asof hint was not rewritten to AsOfJoinPlan — build the " +
-          "session with spark.sql.extensions=graft.plans.GraftExtensions " +
-          "(refusing to run the fallback cartesian join)")
-    j.select(col("event_id"), col("user_id"), col("click_id"),
+    asofJoin(errors, clicks, "user_id", "ts", "c_user_id", "c_ts", s"tol_us=$B59TolUs")
+      .select(col("event_id"), col("user_id"), col("click_id"),
         (unix_micros(col("ts")) - unix_micros(col("c_ts"))).as("gap_us"))
       .orderBy("event_id")
   }
@@ -1916,14 +1906,8 @@ object Relational {
         date_trunc("hour", col("ts")).as("p_ts"))
       .agg(max(col("event_id")).as("policy_id"))
     val fact = ev.select(col("event_id"), col("event_type"), col("ts"))
-    val j = fact.crossJoin(broadcast(policy))
-      .hint("graft_asof", "event_type", "ts", "p_type", "p_ts")
-    if (!j.queryExecution.analyzed.exists(_.isInstanceOf[graft.plans.AsOfJoinPlan]))
-      throw new IllegalStateException(
-        "graft_asof hint was not rewritten to AsOfJoinPlan — build the " +
-          "session with spark.sql.extensions=graft.plans.GraftExtensions " +
-          "(refusing to run the fallback cartesian join)")
-    j.select(col("event_id"), col("event_type"), col("policy_id"),
+    asofJoin(fact, broadcast(policy), "event_type", "ts", "p_type", "p_ts")
+      .select(col("event_id"), col("event_type"), col("policy_id"),
         (unix_micros(col("ts")) - unix_micros(col("p_ts"))).as("gap_us"))
       .orderBy("event_id")
   }
@@ -1964,14 +1948,8 @@ object Relational {
       .agg(max(col("event_id")).as("click_id"))
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("user_id"), band.as("band"), col("ts"))
-    val j = errors.crossJoin(clicks)
-      .hint("graft_asof", "user_id,band", "ts", "c_user_id,c_band", "c_ts")
-    if (!j.queryExecution.analyzed.exists(_.isInstanceOf[graft.plans.AsOfJoinPlan]))
-      throw new IllegalStateException(
-        "graft_asof hint was not rewritten to AsOfJoinPlan — build the " +
-          "session with spark.sql.extensions=graft.plans.GraftExtensions " +
-          "(refusing to run the fallback cartesian join)")
-    j.select(col("event_id"), col("user_id"), col("band"), col("click_id"),
+    asofJoin(errors, clicks, "user_id,band", "ts", "c_user_id,c_band", "c_ts")
+      .select(col("event_id"), col("user_id"), col("band"), col("click_id"),
         (unix_micros(col("ts")) - unix_micros(col("c_ts"))).as("gap_us"))
       .orderBy("event_id")
   }

@@ -66,14 +66,8 @@ object CapStream {
     * the watermark. */
   def featuresNow(alerts: Dataset[CapAlert]): Dataset[CotFeature] = {
     import alerts.sparkSession.implicits._
-    val jsExpiresMs = udf((s: String) =>
-      graft.functions.JsCompat.jsDateParse(s).map(_.toEpochMilli))
-    val active = alerts.filter(
-      col("expires") === "" ||
-        coalesce(jsExpiresMs(col("expires")) >=
-          unix_millis(current_timestamp()), lit(true)))
     CapPipeline.toFeatures(
-      active
+      alerts.filter(CapPipeline.activeAt(unix_millis(current_timestamp())))
         .withColumn("sent_ts", to_timestamp(col("sent")))
         .withWatermark("sent_ts", "1 hour")
         .dropDuplicatesWithinWatermark("identifier")
@@ -93,32 +87,37 @@ object CapStream {
       .groupBy(window(col("sent_ts"), "1 hour"), col("severity"))
       .agg(count(lit(1)).as("n"))
 
+  /** Absolute time of a CAP timestamp; unparseable sorts first. CAP
+    * timestamps mix UTC offsets (`+12:00` vs `Z`), so ordering and
+    * recency compare parsed instants, never raw strings. */
+  private def epochMs(s: String): Long =
+    graft.functions.JsCompat.jsDateParse(s).map(_.toEpochMilli).getOrElse(Long.MinValue)
+
+  /** Deterministic within-batch order: by absolute time, then msgType. */
+  private def inOrder(batch: Iterator[CapAlert]): Seq[CapAlert] =
+    batch.toSeq.sortBy(a => (epochMs(a.sent), a.msgType))
+
+  /** The lifecycle rule: a Cancel cancels, cancelled is terminal,
+    * anything else is active. */
+  private def transition(status: String, msgType: String): String =
+    if (msgType == "Cancel" || status == "cancelled") "cancelled" else "active"
+
   /** Alert lifecycle (Alert → Update* → Cancel) via mapGroupsWithState:
     * per-identifier state accumulates the msgType chain; a Cancel marks
     * the alert cancelled, an Update keeps it active with the latest
     * sent. Arbitrary stateful processing the reference cannot express.
     * State holds one row per distinct alert id (CAP feeds: tens); an
-    * unbounded-id deployment would add a state timeout. Ordering and
-    * recency compare PARSED instants, not raw strings — CAP timestamps
-    * mix UTC offsets (`+12:00` vs `Z`), so lexicographic comparison
+    * unbounded-id deployment would add a state timeout. Recency
+    * compares parsed instants ([[epochMs]]): lexicographic comparison
     * would pick a wall-clock-later-but-absolute-earlier value. */
   def lifecycle(alerts: Dataset[CapAlert]): Dataset[AlertLifecycle] = {
     import alerts.sparkSession.implicits._
-    def epochMs(s: String): Long =
-      graft.functions.JsCompat.jsDateParse(s).map(_.toEpochMilli).getOrElse(Long.MinValue)
     alerts.groupByKey(_.identifier)
       .mapGroupsWithState[AlertLifecycle, AlertLifecycle](GroupStateTimeout.NoTimeout()) {
         (id, batch, state) =>
           val prior = state.getOption.getOrElse(AlertLifecycle(id, "none", Seq.empty, ""))
-          // deterministic within-batch order: by absolute time, then msgType
-          val sorted = batch.toSeq.sortBy(a => (epochMs(a.sent), a.msgType))
-          val next = sorted.foldLeft(prior) { (st, a) =>
-            val status = a.msgType match {
-              case "Cancel" => "cancelled"
-              case _ if st.status == "cancelled" => "cancelled" // terminal
-              case _ => "active"
-            }
-            AlertLifecycle(id, status, st.msgTypes :+ a.msgType,
+          val next = inOrder(batch).foldLeft(prior) { (st, a) =>
+            AlertLifecycle(id, transition(st.status, a.msgType), st.msgTypes :+ a.msgType,
               if (st.lastSent.isEmpty || epochMs(a.sent) > epochMs(st.lastSent)) a.sent
               else st.lastSent)
           }
@@ -140,20 +139,13 @@ object CapStream {
     */
   def lifecycleTransitions(alerts: Dataset[CapAlert]): Dataset[AlertTransition] = {
     import alerts.sparkSession.implicits._
-    def epochMs(s: String): Long =
-      graft.functions.JsCompat.jsDateParse(s).map(_.toEpochMilli).getOrElse(Long.MinValue)
     alerts.groupByKey(_.identifier)
       .flatMapGroupsWithState[String, AlertTransition](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (id, batch, state) =>
           var status = state.getOption.getOrElse("none")
-          val sorted = batch.toSeq.sortBy(a => (epochMs(a.sent), a.msgType))
-          val out = sorted.flatMap { a =>
-            val next = a.msgType match {
-              case "Cancel" => "cancelled"
-              case _ if status == "cancelled" => "cancelled" // terminal
-              case _ => "active"
-            }
+          val out = inOrder(batch).flatMap { a =>
+            val next = transition(status, a.msgType)
             val row =
               if (next != status) Some(AlertTransition(id, status, next, a.msgType, a.sent))
               else None

@@ -346,8 +346,8 @@ object EventStream {
     * depends on micro-batch boundaries by design, so the general surface
     * is property-checked (EventStreamSpec); under the single-data-batch
     * constraint the boundary dependence vanishes and b57 runs it under
-    * the DuckDB oracle gate (StreamQueries.b57StreamTimers,
-    * requireSingleDataBatch). */
+    * the DuckDB oracle gate (StreamQueries.b57StreamTimers, whose
+    * update-mode run StreamRunner holds to one data batch). */
   def inactivityCloses(events: DataFrame, gapMs: Long): DataFrame = {
     val s = events.sparkSession
     import s.implicits._

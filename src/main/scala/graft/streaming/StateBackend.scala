@@ -5,63 +5,24 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** RocksDB state store wiring for every stateful streaming path.
+/** RocksDB state store checks and state sizing for every stateful
+  * streaming path.
   *
-  * The default HDFS-backed provider keeps each partition's entire state
-  * map on the executor HEAP — the one component of this engine whose
-  * memory footprint grows with state cardinality rather than input
-  * partition size. At the ×100 probe (1M events) that is already the
-  * dominant stream cost, and on a real 100 TB/day deployment it is an
-  * executor OOM waiting to happen. RocksDB keeps state off-heap in a
-  * native LSM store with block-cache + spill-to-disk semantics, so
-  * per-partition state is bounded by disk, not heap.
-  *
-  * Every stateful query surface (b43–b47, cap4, cap5) runs through the
-  * helpers in [[StreamQueries]]/[[graft.queries.CapQueries]], which call
-  * [[enableRocksDb]] before `start()` and [[assertRocksDb]] after
-  * termination — so the oracle gate itself executes on RocksDB, and a
-  * silent fallback to the heap provider fails the run loudly instead of
-  * passing with the wrong backend.
+  * The provider itself is part of the session definition
+  * ([[graft.GraftSession]] sets it with changelog checkpointing and
+  * row-count tracking off), so every stateful query on a graft session
+  * keeps its state off-heap in RocksDB rather than in per-partition
+  * heap maps that grow with state cardinality. Every drained query
+  * surface (b43–b47, b51/b53/b54/b57, cap4, cap5 and the soak) runs
+  * through [[StreamRunner.drain]], which calls [[assertRocksDb]] after
+  * termination, so the oracle gate itself executes on RocksDB and a
+  * silent fallback to the heap provider fails the run loudly.
   */
 object StateBackend {
 
   /** Built-in provider, shipped in spark-sql + rocksdbjni. */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Route subsequent streaming queries' state to RocksDB. The provider
-    * class is captured from the session conf at query start, so setting
-    * it here covers exactly the queries these helpers launch. Changelog
-    * checkpointing makes each micro-batch commit upload only the batch's
-    * state DELTA to the checkpoint instead of a full SST snapshot —
-    * commit cost O(changed keys), not O(total state), which is the
-    * difference between constant and ever-growing batch latency on a
-    * long-running session/dedup query.
-    */
-  def enableRocksDb(s: SparkSession): Unit = {
-    s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    s.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    // Row-count tracking OFF by default (r18, measured): RocksDB keeps
-    // `numRowsTotal` exact by doing one extra GET per put/delete —
-    // pure observability bookkeeping on the hottest state write path.
-    // Interleaved A/B at a ×10 source volume (BENCH_NOTES r18;
-    // medians-of-3, two legs each) measured disabling it at −14% to
-    // −30% on the state-write-bound walls (b45 5.69→3.99 s,
-    // b46 9.18→6.61 s, b54 4.05→3.49 s), and at 100 TB state the
-    // per-write GET only gets worse. The rocksdb* metric namespace
-    // that assertRocksDb fingerprints is unaffected; the provider just
-    // reports numRowsTotal = -1. Consumers that ASSERT on exact state
-    // row counts (StreamSoak's bounded-state/eviction gates) opt back
-    // in per session — see StreamSoak.drive — and
-    // SPARK_GRAFT_ROCKS_TRACKROWS=1 re-enables it globally for
-    // debugging/metrics runs.
-    s.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      if (sys.env.get("SPARK_GRAFT_ROCKS_TRACKROWS").contains("1")) "true"
-      else "false")
-  }
 
   /** Size the STATE partition count to the source volume instead of
     * inheriting the batch shuffle width. The number of state stores a
@@ -107,19 +68,15 @@ object StateBackend {
     try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Progress rows that actually report state operators (AvailableNow
-    * runs end with a possibly-empty flush batch; state metrics are
-    * present on every batch once the operator exists). */
-  private def stateProgress(q: StreamingQuery) =
-    q.recentProgress.filter(_.stateOperators.nonEmpty)
-
   /** Assert the finished query executed its stateful operators on
     * RocksDB: the provider publishes `rocksdb*`-prefixed custom metrics
     * per state operator, the heap provider publishes
     * `loadedMapCache*`/`stateOnCurrentVersion*` instead — so the metric
-    * namespace IS the provider fingerprint. */
+    * namespace IS the provider fingerprint. Only progress rows that
+    * report state operators count (state metrics are present on every
+    * batch once the operator exists). */
   def assertRocksDb(q: StreamingQuery): Unit = {
-    val ps = stateProgress(q)
+    val ps = q.recentProgress.filter(_.stateOperators.nonEmpty)
     require(ps.nonEmpty,
       s"${q.name}: no state-operator progress reported — cannot confirm " +
         "the state store provider for a supposedly stateful query")
@@ -129,22 +86,6 @@ object StateBackend {
       s"${q.name}: state operator(s) ${bad.map(_.operatorName).mkString(",")} " +
         "ran WITHOUT RocksDB metrics — provider conf not applied?")
   }
-
-  /** Opt-in one-line-per-operator state metrics dump (set
-    * SPARK_GRAFT_STATE_METRICS=1), for BENCH_NOTES scale accounting:
-    * rows in state, off-heap memory used, and total SST bytes — the
-    * numbers a real-cluster state sizing is derived from. */
-  def reportState(q: StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STATE_METRICS")) {
-      stateProgress(q).lastOption.foreach(_.stateOperators.foreach { op =>
-        val m = op.customMetrics.asScala
-        println(
-          s"""{"state_q":"${q.name}","op":"${op.operatorName}"""" +
-            s""","rows":${op.numRowsTotal},"mem_bytes":${op.memoryUsedBytes}""" +
-            s""","sst_bytes":${m.getOrElse("rocksdbSstFileSize", 0L)}""" +
-            s""","pinned_bytes":${m.getOrElse("rocksdbPinnedBlocksMemoryUsage", 0L)}}""")
-      })
-    }
 
   /** Close every cached state-store provider and stop the maintenance
     * task. Loaded providers outlive their (terminated) query by design —

@@ -13,28 +13,22 @@ import org.apache.spark.sql.functions.{col, unix_micros}
   * batch/stream-unification contract Structured Streaming is built on,
   * here held to the same rows+schema+hash standard as every batch
   * operator.
+  *
+  * Every surface runs through [[StreamRunner.run]] (RocksDB state,
+  * exactly-once file sink, explicit checkpoint, AvailableNow, read-back
+  * scan) with its state width sized to the events source all nine read.
+  * The sink root is wiped per run, so repeated calls in one session
+  * (Verify + Bench) are idempotent. Update-mode surfaces get
+  * StreamRunner's single-data-batch check.
   */
 object StreamQueries {
-
-  /** Materialize a streaming DataFrame through an actual micro-batch
-    * run — see [[StreamRunner.run]] for the full contract (RocksDB
-    * state, exactly-once file sink, explicit checkpoint, AvailableNow,
-    * read-back scan). State width is sized to the events source these
-    * five surfaces all read. Idempotent across repeated calls in one
-    * session (Verify + Bench): the sink root is wiped per run. */
-  private def runToFiles(s: SparkSession, sink: String, d: String,
-      df: DataFrame, mode: String): DataFrame =
-    StreamRunner.run(s, sink, s"$d/events.parquet", df, mode)
-
-  private def runToTable(s: SparkSession, sink: String, d: String, df: DataFrame): DataFrame =
-    runToFiles(s, sink, d, df, "complete")
 
   /** b43: EventStream.hourlyAgg through the micro-batch engine — the
     * result is the streaming runtime's own output, not a batch
     * re-computation. */
   def b43StreamParity(s: SparkSession, d: String): DataFrame =
-    runToTable(s, "b43_stream_parity_sink", d,
-      EventStream.hourlyAgg(EventStream.readEvents(s, d)))
+    StreamRunner.run(s, "b43_stream_parity_sink", s"$d/events.parquet",
+      EventStream.hourlyAgg(EventStream.readEvents(s, d)), "complete")
       .orderBy("hour_epoch")
 
   /** Same result contract as batch b11 — deliberately the same SQL. */
@@ -45,9 +39,9 @@ object StreamQueries {
     * The static side is re-read per micro-batch and never stateful;
     * the oracle is the plain batch join it must equal. */
   def b44StreamSegment(s: SparkSession, d: String): DataFrame =
-    runToTable(s, "b44_stream_segment_sink", d,
+    StreamRunner.run(s, "b44_stream_segment_sink", s"$d/events.parquet",
       EventStream.segmentAgg(EventStream.readEvents(s, d),
-        graft.sources.Tables.customer(s, d)))
+        graft.sources.Tables.customer(s, d)), "complete")
       .orderBy("segment")
 
   val b44Sql: String =
@@ -65,8 +59,8 @@ object StreamQueries {
     * minutes STARTS a new session, which the oracle mirrors with
     * `>= 1800000000` on the microsecond delta. */
   def b45StreamSessions(s: SparkSession, d: String): DataFrame =
-    runToTable(s, "b45_stream_sessions_sink", d,
-      EventStream.sessionAgg(EventStream.readEvents(s, d)))
+    StreamRunner.run(s, "b45_stream_sessions_sink", s"$d/events.parquet",
+      EventStream.sessionAgg(EventStream.readEvents(s, d)), "complete")
       .orderBy("user_id", "sess_start_us")
 
   val b45Sql: String =
@@ -85,14 +79,6 @@ object StreamQueries {
       |FROM g GROUP BY user_id, sess_id
       |ORDER BY user_id, sess_start_us""".stripMargin
 
-  /** Append-mode twin of [[runToTable]] for surfaces complete mode
-    * cannot run (stream-stream joins support append only). Each
-    * matched row is committed exactly once across micro-batches, so
-    * the union of batch directories after AvailableNow drains the
-    * source is the full join result. */
-  private def runToTableAppend(s: SparkSession, sink: String, d: String, df: DataFrame): DataFrame =
-    runToFiles(s, sink, d, df, "append")
-
   /** b46: the stream-stream interval join (every error joined to the
     * same user's clicks in the preceding 30 minutes) through the
     * micro-batch engine. Both sides are the SAME streaming source
@@ -102,8 +88,8 @@ object StreamQueries {
     * equivalent batch interval self-join on microsecond epochs. */
   def b46StreamIntervalJoin(s: SparkSession, d: String): DataFrame = {
     val events = EventStream.readEvents(s, d)
-    runToTableAppend(s, "b46_stream_interval_join_sink", d,
-      EventStream.clickErrorJoin(events, events))
+    StreamRunner.run(s, "b46_stream_interval_join_sink", s"$d/events.parquet",
+      EventStream.clickErrorJoin(events, events), "append")
       .orderBy("error_id", "click_id")
   }
 
@@ -128,10 +114,10 @@ object StreamQueries {
   def b47StreamDedup(s: SparkSession, d: String): DataFrame = {
     val doubled = EventStream.readEvents(s, d)
       .unionAll(EventStream.readEvents(s, d))
-    runToTableAppend(s, "b47_stream_dedup_sink", d,
+    StreamRunner.run(s, "b47_stream_dedup_sink", s"$d/events.parquet",
       EventStream.dedupedEvents(doubled)
         .select(col("event_id"), unix_micros(col("ts")).as("tsus"),
-          col("user_id"), col("event_type"), col("value")))
+          col("user_id"), col("event_type"), col("value")), "append")
       .orderBy("event_id")
   }
 
@@ -149,8 +135,7 @@ object StreamQueries {
     * the same oracle hash at CPUS=3/8. */
   def b51StreamTws(s: SparkSession, d: String): DataFrame =
     StreamRunner.run(s, "b51_stream_tws_sink", s"$d/events.parquet",
-      EventStream.userActivity(EventStream.readEvents(s, d)),
-      "update", requireSingleDataBatch = true)
+      EventStream.userActivity(EventStream.readEvents(s, d)), "update")
       .orderBy("user_id")
 
   val b51Sql: String =
@@ -166,8 +151,7 @@ object StreamQueries {
     * batch GROUP BY oracle. */
   def b53StreamMapState(s: SparkSession, d: String): DataFrame =
     StreamRunner.run(s, "b53_stream_mapstate_sink", s"$d/events.parquet",
-      EventStream.typeHistogram(EventStream.readEvents(s, d)),
-      "update", requireSingleDataBatch = true)
+      EventStream.typeHistogram(EventStream.readEvents(s, d)), "update")
       .orderBy("user_id", "event_type")
 
   val b53Sql: String =
@@ -194,8 +178,7 @@ object StreamQueries {
         max(unix_micros(col("ts"))).as("last_ts_us"))
     val tail = EventStream.readEvents(s, d).filter(col("event_id") % 2 === 1)
     StreamRunner.run(s, "b54_stream_warmstart_sink", s"$d/events.parquet",
-      EventStream.warmStartActivity(tail, backfill),
-      "update", requireSingleDataBatch = true)
+      EventStream.warmStartActivity(tail, backfill), "update")
       .orderBy("user_id")
   }
 
@@ -226,8 +209,7 @@ object StreamQueries {
 
   def b57StreamTimers(s: SparkSession, d: String): DataFrame =
     StreamRunner.run(s, "b57_stream_timers_sink", s"$d/events.parquet",
-      EventStream.inactivityCloses(EventStream.readEvents(s, d), b57GapMs),
-      "update", requireSingleDataBatch = true)
+      EventStream.inactivityCloses(EventStream.readEvents(s, d), b57GapMs), "update")
       .orderBy("user_id")
 
   val b57Sql: String =

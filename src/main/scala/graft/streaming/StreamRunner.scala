@@ -1,53 +1,76 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
-/** The ONE way a streaming query surfaces a result in this engine:
-  * RocksDB state, exactly-once file sink ([[IdempotentSink]]), explicit
-  * checkpoint under the sink root, `Trigger.AvailableNow`, blocking
-  * until the source drains, then a read-back scan of the committed
-  * files. File-backed on purpose — a memory sink holds the whole result
-  * as driver-resident rows which then re-enter downstream plans as
-  * parallelized-collection tasks; across the streaming surfaces at the
-  * ×100 probe that accumulation OOMed an 8 GB heap. The sink write is
-  * per-partition parallel parquet and the read-back is an ordinary
-  * scan, so the result never lives on the driver — the same shape a
-  * real deployment uses (stream → files → consumers). Every caller
-  * (b43–b47, cap4, cap5) goes through here, so the RocksDB provider
-  * assertion and the no-driver-resident-results rule hold uniformly.
+/** The ONE way a streaming query runs in this engine: [[drain]] is the
+  * only `writeStream` call in the engine's sources. RocksDB state (the
+  * provider is part of [[graft.GraftSession]]'s definition), a
+  * `foreachBatch` sink, an explicit checkpoint, `Trigger.AvailableNow`,
+  * blocking until the source drains, then [[StateBackend.assertRocksDb]].
+  *
+  * [[run]] is the query surface (b43–b47, b51/b53/b54/b57, cap4, cap5):
+  * it drains into the exactly-once file sink ([[IdempotentSink]]) and
+  * reads the committed files back. File-backed on purpose — a memory
+  * sink holds the whole result as driver-resident rows which then
+  * re-enter downstream plans as parallelized-collection tasks; across
+  * the streaming surfaces at the ×100 probe that accumulation OOMed an
+  * 8 GB heap. The sink write is per-partition parallel parquet and the
+  * read-back is an ordinary scan, so the result never lives on the
+  * driver — the same shape a real deployment uses (stream → files →
+  * consumers). [[StreamSoak]] drains through the same recipe with its
+  * own sink. Per-batch phase durations, input rows and state metrics
+  * are in each returned query's `recentProgress`.
   */
 object StreamRunner {
 
   private def sinkDir(sink: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_stream_sink/$sink"
 
-  /** Opt-in per-phase wall attribution (SPARK_GRAFT_STREAM_PHASES=1):
-    * one JSON line per run splitting the builder wall into cleanup /
-    * query-planning+start / micro-batch execution / read-back, plus the
-    * engine's own per-batch durationMs. Exists because a stream builder's
-    * bench `build_s` is a single opaque number — when it regresses, this
-    * is the breakdown that says which fixed cost (RocksDB open,
-    * changelog commit, sink write, checkpoint delete) moved. */
-  private val phasesOn = sys.env.contains("SPARK_GRAFT_STREAM_PHASES")
+  /** Drain `df` to completion: query `name`, state width sized to
+    * `statePath` ([[StateBackend.withStatePartitions]]), each micro-batch
+    * into `sink`, checkpoint at `checkpoint`, AvailableNow. Returns the
+    * stopped query; a failed drain keeps its error in `q.exception`.
+    * A drain that failed before its first batch has no progress to
+    * fingerprint, so only then is the RocksDB assertion skipped. */
+  def drain(s: SparkSession, name: String, statePath: String, df: DataFrame,
+      mode: String, checkpoint: String,
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val q = StateBackend.withStatePartitions(s, statePath) {
+      val q = df.writeStream
+        // name the query after its sink so progress and Spark logs
+        // attribute to the surface instead of "null" — one active query
+        // at a time, so unique
+        .queryName(name)
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination()
+      catch { case _: StreamingQueryException => () }
+      finally q.stop()
+      q
+    }
+    if (q.exception.isEmpty || q.recentProgress.nonEmpty) StateBackend.assertRocksDb(q)
+    q
+  }
 
   /** Run `df` through the micro-batch engine and read the committed
     * result back.
     *
     * @param mode `complete` (read back the LAST batch — each holds the
     *             full result), `append` or `update` (union of batches).
+    *             Update-mode golden oracles assume one update row per
+    *             key, which holds only while the source fits one data
+    *             micro-batch, so an update-mode run asserts that loudly
+    *             instead of silently diverging if a maxFilesPerTrigger
+    *             default or grown fixture set ever splits it.
     * @param statePath source path whose volume sizes the state width
     *                  (see [[StateBackend.statePartitions]]).
-    * @param requireSingleDataBatch update-mode golden oracles assume
-    *        one update row per key, which holds only while the source
-    *        fits one data micro-batch — assert it loudly instead of
-    *        silently diverging if a maxFilesPerTrigger default or
-    *        grown fixture set ever splits it.
     */
   def run(s: SparkSession, sink: String, statePath: String, df: DataFrame,
-      mode: String, requireSingleDataBatch: Boolean = false): DataFrame = {
-    def now() = System.nanoTime()
-    val t0 = now()
+      mode: String): DataFrame = {
     val out = sinkDir(sink)
     val p = new org.apache.hadoop.fs.Path(out)
     // one cleanup covers sink AND checkpoint: the checkpoint lives
@@ -84,29 +107,10 @@ object StreamRunner {
       t.setDaemon(true)
       t.start()
     }
-    StateBackend.enableRocksDb(s)
-    val tClean = now()
-    var tStart = 0L
-    val q = StateBackend.withStatePartitions(s, statePath) {
-      val q = df.writeStream
-        // name the query after its sink so progress/state artifacts
-        // ("state_q" rows, Spark logs) attribute to the bench surface
-        // instead of "null" — one active query at a time, so unique
-        .queryName(sink)
-        .foreachBatch(IdempotentSink.parquetSink(s"$out/data"))
-        .option("checkpointLocation", s"$out/checkpoint")
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      tStart = now()
-      try q.awaitTermination()
-      finally q.stop()
-      q
-    }
-    val tRun = now()
-    StateBackend.assertRocksDb(q)
-    StateBackend.reportState(q)
-    if (requireSingleDataBatch) {
+    val q = drain(s, sink, statePath, df, mode, s"$out/checkpoint",
+      IdempotentSink.parquetSink(s"$out/data"))
+    q.exception.foreach(e => throw e)
+    if (mode == "update") {
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)
       require(dataBatches == 1,
         s"$sink: expected exactly 1 data micro-batch (update-mode golden " +
@@ -114,28 +118,7 @@ object StreamRunner {
     }
     // complete mode: each batch directory holds the FULL result — read
     // the last; append/update: batches partition the emitted rows — union
-    val res =
-      if (mode == "complete") IdempotentSink.readBackLast(s, s"$out/data")
-      else IdempotentSink.readBack(s, s"$out/data")
-    if (phasesOn) {
-      def ms(a: Long, b: Long) = (b - a) / 1e6
-      val batches = q.recentProgress.map { pr =>
-        val dm = pr.durationMs
-        s"""{"batch":${pr.batchId},"rows":${pr.numInputRows}""" +
-          s""","addBatch":${dm.getOrDefault("addBatch", -1L)}""" +
-          s""","commitOffsets":${dm.getOrDefault("commitOffsets", -1L)}""" +
-          s""","getBatch":${dm.getOrDefault("getBatch", -1L)}""" +
-          s""","latestOffset":${dm.getOrDefault("latestOffset", -1L)}""" +
-          s""","queryPlanning":${dm.getOrDefault("queryPlanning", -1L)}""" +
-          s""","walCommit":${dm.getOrDefault("walCommit", -1L)}""" +
-          s""","trigger":${dm.getOrDefault("triggerExecution", -1L)}}"""
-      }.mkString("[", ",", "]")
-      println(
-        f"""{"stream_phases":"$sink","cleanup_ms":${ms(t0, tClean)}%.1f""" +
-          f""","plan_start_ms":${ms(tClean, tStart)}%.1f""" +
-          f""","run_ms":${ms(tStart, tRun)}%.1f""" +
-          f""","readback_ms":${ms(tRun, now())}%.1f,"batches":$batches}""")
-    }
-    res
+    if (mode == "complete") IdempotentSink.readBackLast(s, s"$out/data")
+    else IdempotentSink.readBack(s, s"$out/data")
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Many-batch streaming soak — the cross-batch depth evidence the
   * 2-file `maxFilesPerTrigger=1` specs and kill/resume fixtures don't
@@ -101,56 +100,38 @@ object StreamSoak {
       .option("maxFilesPerTrigger", "1")
       .parquet(dir.getAbsolutePath)
 
-  /** Drain `df` (AvailableNow, RocksDB, IdempotentSink at `out`,
-    * checkpoint at `ckpt`); with `killAfter > 0` the query dies once
-    * that many batches committed — modeling an executor loss / restart
-    * mid-drain — and `finished` reports false. The kill lands between
-    * batches: batch `killAfter` fails before it writes anything, so
-    * every batch before it is both committed and in `recentProgress`,
-    * and the resumed run re-plans it from the offset log. */
+  /** Drain `df` through [[StreamRunner.drain]] into an
+    * [[IdempotentSink]] at `out`, checkpoint at `ckpt`; with
+    * `killAfter > 0` the sink dies once that many batches committed —
+    * modeling an executor loss / restart mid-drain — and `finished`
+    * reports false. The kill lands between batches: batch `killAfter`
+    * fails before it writes anything, so every batch before it is both
+    * committed and in `recentProgress`, and the resumed run re-plans it
+    * from the offset log. The state-row counts are exact only on a
+    * session with `trackTotalNumberOfRows` on (see [[main]]). */
   def drive(spark: SparkSession, name: String, df: DataFrame, mode: String,
       ckpt: String, out: String, statePath: String,
       killAfter: Int = -1): SoakRun = {
-    StateBackend.enableRocksDb(spark)
-    // the soak's bounded-state and eviction gates assert on EXACT
-    // numRowsTotal (state plateaus at the key space; session state
-    // shrinks after watermark eviction), so this driver opts back into
-    // RocksDB row-count tracking, which the engine default disables
-    // for the per-write GET it costs (see StateBackend.enableRocksDb)
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "true")
-    // set on the stream thread, read by this thread after
-    // awaitTermination — AtomicBoolean for the cross-thread visibility
-    // a plain var does not guarantee
+    // set on the stream thread, read by this thread after the drain —
+    // AtomicBoolean for the cross-thread visibility a plain var does
+    // not guarantee
     val killed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val sink = IdempotentSink.parquetSink(out)
     val t0 = System.nanoTime()
-    val q = StateBackend.withStatePartitions(spark, statePath) {
-      df.writeStream
-        .queryName(name)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (killAfter > 0 && batchId >= killAfter) {
-            killed.set(true)
-            throw new IllegalStateException(s"$name: soak kill at batch $batchId")
-          }
-          sink(batch, batchId)
+    val q = StreamRunner.drain(spark, name, statePath, df, mode, ckpt,
+      (batch, batchId) => {
+        if (killAfter > 0 && batchId >= killAfter) {
+          killed.set(true)
+          throw new IllegalStateException(s"$name: soak kill at batch $batchId")
         }
-        .option("checkpointLocation", ckpt)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    val finished =
-      try { q.awaitTermination(600000) }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => false }
-      finally q.stop()
-    StateBackend.assertRocksDb(q)
+        sink(batch, batchId)
+      })
     val wall = (System.nanoTime() - t0) / 1e9
     val prog = q.recentProgress.toIndexedSeq.map { p =>
       val st = p.stateOperators.map(_.numRowsTotal).sum
       (p.batchId, p.numInputRows, p.durationMs.getOrDefault("triggerExecution", -1L).toLong, st)
     }
-    SoakRun(wall, prog, finished && !killed.get(), killed.get())
+    SoakRun(wall, prog, q.exception.isEmpty && !killed.get(), killed.get())
   }
 
   /** Per-key LAST update across all committed batches — the read-back
@@ -175,9 +156,14 @@ object StreamSoak {
     // keep every batch's progress for the per-batch record (default
     // retention is 100 — enough for 64 data batches + timer batches,
     // but pin it explicitly so a larger nSlices doesn't silently
-    // truncate the evidence)
-    val spark = graft.GraftSession(
-      overrides = Map("spark.sql.streaming.numRecentProgressUpdates" -> "256"))
+    // truncate the evidence). The bounded-state and eviction figures
+    // read EXACT numRowsTotal (state plateaus at the key space; session
+    // state shrinks after watermark eviction), so the soak opts back
+    // into the RocksDB row-count tracking the session definition turns
+    // off for the per-write GET it costs.
+    val spark = graft.GraftSession(overrides = Map(
+      "spark.sql.streaming.numRecentProgressUpdates" -> "256",
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "true"))
     import spark.implicits._
 
     val (arrivals, arrivalsDup, ev) =
@@ -201,10 +187,6 @@ object StreamSoak {
           s""","state_rows":{"max":${if (stRows.isEmpty) -1 else stRows.max}""" +
           s""","final":${if (stRows.isEmpty) -1 else stRows.last}}""" +
           s""","parity":"$parity"$extra}""")
-      if (sys.env.contains("SPARK_GRAFT_SOAK_DETAIL"))
-        prog.foreach { case (b, r, w, st) =>
-          println(s"""{"soak_batch":"$name","batch":$b,"rows":$r,"trigger_ms":$w,"state_rows":$st}""")
-        }
     }
 
     // batch-side oracles computed once from the raw table

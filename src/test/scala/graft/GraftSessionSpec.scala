@@ -13,13 +13,17 @@ import graft.plans.AsOfJoinStrategy
   * and asking for one twice neither builds a second session nor
   * registers the extensions twice. Also guards the one-registration
   * rule: graft functions reach a session only through
-  * [[graft.plans.GraftExtensions]].
+  * [[graft.plans.GraftExtensions]]; the one-runtime rule: every stream
+  * in the engine starts in [[graft.streaming.StreamRunner.drain]]; and
+  * that only the entry points read environment variables.
   */
 class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
 
   // split so this file does not match itself
   private val builderCall = "SparkSession" + ".builder"
   private val registerCalls = Seq("createOrReplace" + "TempFunction", "udf" + ".register")
+  private val writeStreamCall = "." + "writeStream"
+  private val envRead = "sys" + ".env"
 
   private lazy val sources: Seq[(Path, String)] =
     Seq("src/main/scala", "src/test/scala").flatMap { root =>
@@ -32,6 +36,12 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
   private def callSites(needle: String): Map[Path, Int] =
     sources.map { case (p, text) => p -> text.sliding(needle.length).count(_ == needle) }
       .filter(_._2 > 0).toMap
+
+  /** Like [[callSites]], restricted to src/main. */
+  private def mainCallSites(needle: String): Map[Path, Int] =
+    callSites(needle).filter(_._1.startsWith(Paths.get("src/main/scala")))
+
+  private def mainFile(name: String): Path = Paths.get(s"src/main/scala/graft/$name.scala")
 
   /** Files allowed to build a session, with their number of call sites:
     * GraftSession, and AsOfJoinSpec's deliberately unextended session. */
@@ -59,5 +69,18 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
   test("no code registers a function at runtime; GraftExtensions is the only path") {
     for (call <- registerCalls)
       assert(callSites(call).isEmpty, s"runtime function registration found: $call")
+  }
+
+  test("in src/main only StreamRunner.drain starts a stream") {
+    val sites = mainCallSites(writeStreamCall)
+    assert(sites == Map(mainFile("streaming/StreamRunner") -> 1),
+      s"writeStream called outside StreamRunner.drain: $sites")
+  }
+
+  test("in src/main only GraftSession, Bench, Verify and PlanDump read the environment") {
+    val readers = mainCallSites(envRead).keySet
+    assert(readers.nonEmpty, "the scan found no environment read at all; wrong working directory?")
+    val outside = readers -- Seq("GraftSession", "Bench", "Verify", "PlanDump").map(mainFile)
+    assert(outside.isEmpty, s"environment read outside the entry points: $outside")
   }
 }

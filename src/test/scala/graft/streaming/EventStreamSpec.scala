@@ -186,7 +186,6 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
     }
     writeHalf(col("event_id") % 2 === 0, "a")
     writeHalf(col("event_id") % 2 === 1, "b")
-    StateBackend.enableRocksDb(spark)
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val q = EventStream.userActivity(stream)
@@ -231,7 +230,6 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
     }
     writeHalf(col("event_id") % 2 === 0, "a")
     writeHalf(col("event_id") % 2 === 1, "b")
-    StateBackend.enableRocksDb(spark)
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val q = EventStream.typeHistogram(stream)
@@ -257,7 +255,6 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
   test("warm-started state seeds the stream: backfill + tail equals the full " +
       "aggregate, and provably differs from a cold start") {
     import org.apache.spark.sql.functions.{col, count, lit, max, min, unix_micros}
-    StateBackend.enableRocksDb(spark)
     val ev = graft.sources.Tables.events(spark, sf)
     val backfill = ev.filter(col("event_id") % 2 === 0)
       .groupBy(col("user_id"))
@@ -300,7 +297,6 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
 
   test("event-time timers fire inactivity closes when the watermark passes them") {
     import org.apache.spark.sql.functions.{col, max, unix_micros}
-    StateBackend.enableRocksDb(spark)
     val gapMs = 30L * 60 * 1000
     val ev = graft.sources.Tables.events(spark, sf)
     // two arrival files: the events, then a far-future sentinel that
@@ -366,7 +362,6 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
     // sides — if a Spark upgrade ever flips expiry to exclusive, this
     // fails before the driver's oracle gate does.
     import org.apache.spark.sql.functions.col
-    StateBackend.enableRocksDb(spark)
     val gapMs = 30L * 60 * 1000
     val delayMs = 1000L // the 1-second watermark delay in inactivityCloses
     val tMax = 1_700_000_000_000L // fixture epoch ms; wm = tMax - delayMs

@@ -150,7 +150,6 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // all four files, so the crash lands while most sessions are OPEN
     // — recovery must restore the merged session state, not just
     // replay rows.
-    StateBackend.enableRocksDb(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("sess_arrivals").toString
     writeArrivalFiles(srcDir)
 
@@ -208,7 +207,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("cap4 lifecycle is state-store-provider agnostic (RocksDB == heap HDFS provider)") {
-    // capLifecycle runs on RocksDB (the engine default via runStream);
+    // capLifecycle runs on RocksDB (the session default, drained by StreamRunner);
     // re-run the same pipeline on the legacy heap provider and compare.
     val key = "spark.sql.streaming.stateStore.providerClass"
     val rocks = graft.queries.CapQueries.capLifecycle(spark, sf)
@@ -239,7 +238,6 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("cap4 lifecycle killed mid-stream resumes from the RocksDB checkpoint") {
-    StateBackend.enableRocksDb(spark)
     val fixtures = graft.queries.CapQueries.lifecycleFixtureDir
 
     // one fixture file per micro-batch: per-alert state must survive
@@ -302,7 +300,6 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // per-user ValueState aggregate accumulated over batches 0-1 must
     // survive the crash at batch 2 — a lost prior would make every
     // post-crash emission restart its counts from the batch's own rows.
-    StateBackend.enableRocksDb(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("tws_arrivals").toString
     writeArrivalFiles(srcDir)
 
@@ -363,7 +360,6 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // watermark + interval passes). The quartile arrival split lands
     // the crash while both buffers hold unmatched rows — recovery must
     // restore them or post-crash arrivals silently lose their matches.
-    StateBackend.enableRocksDb(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("join_arrivals").toString
     writeArrivalFiles(srcDir)
 
@@ -414,7 +410,6 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // each (user, type) count across batches; the crash at batch 2 must
     // restore every map entry or post-crash emissions restart counts
     // from the batch's own rows.
-    StateBackend.enableRocksDb(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("map_arrivals").toString
     writeArrivalFiles(srcDir)
 
@@ -479,7 +474,6 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // would double the backfill contribution in every post-crash
     // emission). Control = the uninterrupted warm-start run; ground
     // truth = the full-table batch aggregate over tail-active users.
-    StateBackend.enableRocksDb(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("warm_arrivals").toString
     writeArrivalFiles(srcDir)
 
@@ -557,7 +551,6 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // replayed watermark passes them. Batch boundaries are identical
     // between control and recovery (same files, same order, restored
     // watermark), so the emitted close set must match row-for-row.
-    StateBackend.enableRocksDb(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("timer_arrivals").toString
     writeArrivalFiles(srcDir)
     val gapMs = 30L * 60 * 1000

@@ -15,8 +15,12 @@ import graft.GraftTestSession
   */
 class SoakSpec extends AnyFunSuite with GraftTestSession {
 
-  override protected def suiteConfs =
-    Map("spark.sql.streaming.numRecentProgressUpdates" -> "64")
+  // the bounded-state and eviction gates below read EXACT numRowsTotal,
+  // so the soak opts back into the RocksDB row-count tracking the
+  // session definition turns off
+  override protected def suiteConfs = Map(
+    "spark.sql.streaming.numRecentProgressUpdates" -> "64",
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "true")
 
   private val sf = "/root/testdata/sf0.001"
   private val nSlices = 16

@@ -5,11 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftTestSession
 
-/** Pins the RocksDB state-backend wiring itself: [[StateBackend]] must
-  * route a stateful query to RocksDB (fingerprinted via the provider's
-  * `rocksdb*` custom metrics in query progress), and the assertion must
-  * FAIL on a heap-provider run — i.e. a silent conf regression cannot
-  * pass the oracle gate with the wrong backend.
+/** Pins the RocksDB state-backend wiring itself: the session definition
+  * ([[graft.GraftSession]]) alone must route a stateful query to RocksDB
+  * (fingerprinted via the provider's `rocksdb*` custom metrics in query
+  * progress), and [[StateBackend.assertRocksDb]] must FAIL on a
+  * heap-provider run — i.e. a silent conf regression cannot pass the
+  * oracle gate with the wrong backend.
   */
 class StateBackendSpec extends AnyFunSuite with GraftTestSession {
 
@@ -28,24 +29,27 @@ class StateBackendSpec extends AnyFunSuite with GraftTestSession {
     q
   }
 
-  test("enableRocksDb routes state to RocksDB; assertRocksDb rejects a heap-provider run") {
-    val prev = spark.conf.getOption(key)
-    try {
-      StateBackend.enableRocksDb(spark)
-      StateBackend.assertRocksDb(runHourly("sb_rocks")) // must not throw
+  private val heapProvider =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      val heap = runHourly("sb_heap")
-      intercept[IllegalArgumentException](StateBackend.assertRocksDb(heap))
-
-      // and the two backends agree on the result
-      val a = spark.table("sb_rocks").collect().map(_.toString).sorted.toSeq
-      val b = spark.table("sb_heap").collect().map(_.toString).sorted.toSeq
-      assert(a == b && a.nonEmpty, "providers disagree on the hourly aggregation")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  test("stateful streams run on RocksDB from the session definition alone") {
+    // as if an earlier suite had left the heap provider set: asking for
+    // the session again must restore RocksDB, with no helper call
+    withConfs(key -> heapProvider) {
+      assert(GraftTestSession.session() eq spark)
+      assert(spark.conf.get(key) == StateBackend.RocksDbProvider)
+      StateBackend.assertRocksDb(runHourly("sb_session"))
     }
+  }
+
+  test("assertRocksDb accepts RocksDB, rejects a heap-provider run") {
+    StateBackend.assertRocksDb(runHourly("sb_rocks")) // must not throw
+    val heap = withConfs(key -> heapProvider)(runHourly("sb_heap"))
+    intercept[IllegalArgumentException](StateBackend.assertRocksDb(heap))
+
+    // and the two backends agree on the result
+    val a = spark.table("sb_rocks").collect().map(_.toString).sorted.toSeq
+    val b = spark.table("sb_heap").collect().map(_.toString).sorted.toSeq
+    assert(a == b && a.nonEmpty, "providers disagree on the hourly aggregation")
   }
 }
