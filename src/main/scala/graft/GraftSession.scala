@@ -74,6 +74,10 @@ object GraftSession {
     // provider reports numRowsTotal = -1. The soak's exact-row gates
     // opt back in through their own scoped confs.
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
+    // at shutdown wait 10 s, not 300 s, for state-store maintenance: a
+    // task hung on a closed RocksDB store held a finished Bench 300 s at
+    // exit; maintenance only deletes old state files, which a later run redoes
+    "spark.sql.streaming.stateStore.maintenanceShutdownTimeout" -> "10s",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 

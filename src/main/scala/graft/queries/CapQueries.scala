@@ -67,8 +67,10 @@ object CapQueries {
     * The goldens are locked to the hand-verified fixture JSON goldens
     * (fixtures/golden) by CapPipelineSpec/FeaturesSpec — this
     * turns the XML pipeline's spec coverage into a driver-checkable
-    * rows+schema+hash gate instead of a rows-only smoke check. */
-  private def golden(name: String): String = s"/root/repo/fixtures/golden/$name"
+    * rows+schema+hash gate instead of a rows-only smoke check. Absolute
+    * paths into the checkout in use: DuckDB runs from another directory. */
+  private def golden(name: String): String =
+    new java.io.File(resolve("fixtures/golden"), name).getAbsolutePath
 
   val cap1Sql: String =
     s"SELECT id, json FROM '${golden("cap1_features.parquet")}' ORDER BY id"

@@ -22,16 +22,17 @@ import graft.sources.Tables
   * buckets, and therefore candidate sets are bit-identical in the
   * oracle. Thresholds are applied to un-rounded doubles on both sides.
   *
-  * Scale note on plan shape: the shingle/band subtrees appear several
-  * times per query (self-join sides + Jaccard verification), and at
-  * this SF AQE broadcasts the small sides, so `.explain` shows the
-  * explode recomputed per reference. At cluster scale the self-join
-  * stays sort-merge and Spark's ReusedExchange collapses the identical
-  * shuffle subplans; in a long-running pipeline the shingle relation
-  * would additionally be `persist()`ed (or written bucketed by doc_id)
-  * across the candidate/verify stages — an orchestration concern, not
-  * a query-shape one, so the builders stay side-effect-free here. The
-  * one intentionally stateful exception: [[connectedComponents]]
+  * Plan shape: the relations joined here (candidate pairs, band and
+  * member relations, the per-document item sets) scale WITH THE
+  * CORPUS, so every such join is pinned to sort-merge with a `merge`
+  * hint: size estimates for post-shuffle/post-explode relations
+  * routinely land under the auto-broadcast threshold while the
+  * materialized build side does not — at the ×30 probe that planned
+  * driver-side broadcast builds that OOMed an 8 GB heap. SMJ spills
+  * gracefully at any scale; nothing here belongs on the driver
+  * (PlanShapeSpec pins it). Subtrees read twice (self-join sides)
+  * collapse through ReusedExchange, and the builders stay
+  * side-effect-free. The one stateful exception: [[connectedComponents]]
   * localCheckpoints its pair input, because the iterative loop would
   * otherwise replay the whole upstream LSH per round.
   *
@@ -174,16 +175,22 @@ object Dedup {
     docs.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
       .select(md5(col("text")).as("th"), col("doc_id"), col("text"))
 
-  /** Distinct word-3-gram shingles of the representatives. */
-  private def repShingles(docs: DataFrame): DataFrame =
-    d2Reps(docs).select(col("doc_id"),
-      explode(array_distinct(shingles(col("text")))).as("shingle"))
+  /** A text's distinct word-3-gram shingles: d2's one shingle-set
+    * definition, exploded by the MinHash bands, whole in [[repSets]]. */
+  private def shingleSet(text: Column): Column = array_distinct(shingles(text))
+
+  /** (doc_id, items): each representative's shingle set, for [[verifyJaccard]]. */
+  private def repSets(docs: DataFrame): DataFrame =
+    d2Reps(docs).select(col("doc_id"), shingleSet(col("text")).as("items"))
 
   /** (doc_id, band, sig) minhash band relation of the representatives
     * — the shared front half of d2's self-join and d10's delta×base
     * join. */
   private def d2Bands(docs: DataFrame): DataFrame = {
-    val sh = repShingles(docs)
+    // explode the expression, not repSets' `items`: from an exploded
+    // attribute Spark infers size(items) > 0 and pushes it below the
+    // rep aggregate to the scan, computing every row's shingles twice
+    val sh = d2Reps(docs).select(col("doc_id"), explode(shingleSet(col("text"))).as("shingle"))
     val shh = sh.select(col("doc_id"),
       (hash48(col("shingle")) % P).as("h1"),
       (conv(substring(md5(col("shingle")), 13, 12), 16, 10).cast("long") % P).as("h2"))
@@ -209,7 +216,7 @@ object Dedup {
     * exposed for ScaleSpec's planted-cluster bound. */
   private[queries] def d2Candidates(docs: DataFrame): DataFrame = {
     val capped = cappedBands(d2Bands(docs))
-    // corpus-scaled self-join: pin to sort-merge (see verifyJaccard)
+    // corpus-scaled self-join: pin to sort-merge (see the Dedup scaladoc)
     capped.as("a").join(capped.as("b").hint("merge"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -219,30 +226,37 @@ object Dedup {
 
   /** Full d2 over an arbitrary documents relation: collapse → LSH →
     * verify → expand. */
-  private[queries] def d2Pairs(docs: DataFrame): DataFrame = {
-    val members = docs.select(col("doc_id"), md5(col("text")).as("th"),
-      (size(split(col("text"), " ")) >= 3).as("shingled"))
-    val reps = d2Reps(docs)
-    val sh = repShingles(docs)
-    val repPairs = verifyJaccard(d2Candidates(docs), sh, "shingle")
-    // memRep (one row per document) and members both scale with the
-    // corpus — every join below is SMJ-pinned (see verifyJaccard)
-    val memRep = members.join(reps.select(col("th"), col("doc_id").as("rep")).hint("merge"), "th")
-      .select(col("doc_id"), col("rep"))
-    // cross-group expansion: every member pair inherits the verified
-    // representative jacc (identical texts ⇒ identical shingle sets)
-    val cross = repPairs
-      .join(memRep.select(col("rep").as("da"), col("doc_id").as("ma")).hint("merge"), "da")
-      .join(memRep.select(col("rep").as("db"), col("doc_id").as("mb")).hint("merge"), "db")
-      .select(least(col("ma"), col("mb")).as("da"),
-        greatest(col("ma"), col("mb")).as("db"), col("jacc"))
-    // intra-group expansion: exact duplicates pair at jacc 1.0 — but
-    // only when the text actually shingles (< 3 tokens ⇒ empty shingle
-    // set ⇒ no Jaccard pair in the uncollapsed formulation either)
+  private[queries] def d2Pairs(docs: DataFrame): DataFrame =
+    expandPairs(docs, verifyJaccard(d2Candidates(docs), repSets(docs)), "jacc", lit(1.0))
+
+  /** (doc_id, th, is_base, shingled): each document with its text hash
+    * (its rep group), its d10 split side (base = t6's train bucket, the
+    * same split contract as d9/t7/t13) and whether it has a shingle. */
+  private def docMembers(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), md5(col("text")).as("th"),
+      TextStats.isBaseCol.as("is_base"), (size(split(col("text"), " ")) >= 3).as("shingled"))
+
+  /** Expand verified representative pairs (da, db, `v`) to member pairs,
+    * ordered. Cross-group: every member pair inherits its reps' `v`
+    * (identical texts ⇒ identical shingle sets and signatures).
+    * Intra-group: exact duplicates pair at `same`, but only when the
+    * text shingles (< 3 tokens ⇒ no pair in the uncollapsed
+    * formulation either). `crossing` keeps only pairs across the d10
+    * base/delta split. Members scale with the corpus: SMJ-pinned. */
+  private def expandPairs(docs: DataFrame, repPairs: DataFrame, v: String, same: Column,
+      crossing: Boolean = false): DataFrame = {
+    val members = docMembers(docs)
+    val memRep = members.join(d2Reps(docs).select(col("th"), col("doc_id").as("rep")).hint("merge"), "th")
+    def side(r: String, m: String, b: String) =
+      memRep.select(col("rep").as(r), col("doc_id").as(m), col("is_base").as(b)).hint("merge")
+    def crosses(a: String, b: String) = if (crossing) col(a) =!= col(b) else lit(true)
+    val cross = repPairs.join(side("da", "ma", "ba"), "da").join(side("db", "mb", "bb"), "db")
+      .filter(crosses("ba", "bb"))
+      .select(least(col("ma"), col("mb")).as("da"), greatest(col("ma"), col("mb")).as("db"), col(v))
     val intra = members.as("x").join(members.as("y").hint("merge"),
         col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id") &&
-          col("x.shingled"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"), lit(1.0).as("jacc"))
+          col("x.shingled") && crosses("x.is_base", "y.is_base"))
+      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"), same.as(v))
     cross.union(intra).orderBy("da", "db")
   }
 
@@ -347,7 +361,7 @@ object Dedup {
       .select(col("doc_id"), col("sim"), col("kb.k").as("k"), col("kb.band").as("band"))
     val keep = bands.groupBy("k", "band").agg(count(lit(1)).as("bn"))
       .filter(col("bn") <= BandBucketCap).select("k", "band")
-    // both sides corpus-scaled — SMJ-pinned (see verifyJaccard)
+    // both sides corpus-scaled — SMJ-pinned (see the Dedup scaladoc)
     val capped = bands.join(keep.hint("merge"), Seq("k", "band"))
     capped.as("a").join(capped.as("b").hint("merge"),
         col("a.k") === col("b.k") && col("a.band") === col("b.band") &&
@@ -365,27 +379,11 @@ object Dedup {
     * hd = 0 — with the same ≥3-token guard, since token-free docs have
     * no signature in the uncollapsed formulation either). */
   private[queries] def d3Pairs(docs: DataFrame): DataFrame = {
-    val members = docs.select(col("doc_id"), md5(col("text")).as("th"),
-      (size(split(col("text"), " ")) >= 3).as("shingled"))
-    // memRep/members scale with the corpus — SMJ-pinned throughout
-    // (see verifyJaccard)
-    val memRep = members.join(d2Reps(docs).select(col("th"), col("doc_id").as("rep")).hint("merge"), "th")
-      .select(col("doc_id"), col("rep"))
     val repPairs = d3Candidates(docs)
       .select(col("da"), col("db"),
         expr("bit_count(sa ^ sb)").cast("int").as("hd"))
       .filter(col("hd") <= 3)
-    val cross = repPairs
-      .join(memRep.select(col("rep").as("da"), col("doc_id").as("ma")).hint("merge"), "da")
-      .join(memRep.select(col("rep").as("db"), col("doc_id").as("mb")).hint("merge"), "db")
-      .select(least(col("ma"), col("mb")).as("da"),
-        greatest(col("ma"), col("mb")).as("db"), col("hd"))
-    val intra = members.as("x").join(members.as("y").hint("merge"),
-        col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id") &&
-          col("x.shingled"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
-        lit(0).cast("int").as("hd"))
-    cross.union(intra).orderBy(col("da"), col("db"))
+    expandPairs(docs, repPairs, "hd", lit(0).cast("int"))
   }
 
   def d3Simhash(s: SparkSession, d: String): DataFrame =
@@ -441,7 +439,7 @@ object Dedup {
       .filter(col("bn") <= D4BucketCap).select("bucket")
     val capped = emit.join(keep.hint("merge"), Seq("bucket"))
     // both self-join sides scale with the corpus — pin to sort-merge
-    // (see verifyJaccard) so no side is ever built on the driver
+    // (see the Dedup scaladoc) so no side is ever built on the driver
     capped.as("a").join(capped.as("b").hint("merge"),
         col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id") &&
           abs(col("a.n_chars") - col("b.n_chars")) <= 15)
@@ -451,12 +449,15 @@ object Dedup {
 
   def d4NgramJaccard(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val ng = docs.select(col("doc_id"), explode(array_distinct(
+    val ng = docs.select(col("doc_id"), array_distinct(
         when(length(col("text")) >= 5,
           transform(sequence(lit(1), length(col("text")) - 4),
             i => col("text").substr(i, lit(5))))
-          .otherwise(array().cast("array<string>")))).as("ng"))
-    verifyJaccard(d4Candidates(docs), ng, "ng").orderBy(col("da"), col("db"))
+          .otherwise(array().cast("array<string>"))).as("items"))
+    // orderBy's range exchange samples its input by running it; the
+    // hash exchange lets it sample the verified pairs, not rerun the verify
+    verifyJaccard(d4Candidates(docs), ng).repartition(col("da"))
+      .orderBy(col("da"), col("db"))
   }
 
   val d4Sql: String =
@@ -477,28 +478,21 @@ object Dedup {
       |WHERE CAST(c AS DOUBLE)/(ca.n+cb.n-c) >= 0.5
       |ORDER BY da, db""".stripMargin
 
-  /** Shared candidate-verification: exact Jaccard over shared tokens,
-    * threshold on the raw double, round for output. Unordered — the
-    * callers order (or expand) the final relation.
-    *
-    * Every relation here (candidate pairs, the per-doc item sets, the
-    * per-doc counts) scales WITH THE CORPUS, so every join is pinned to
-    * sort-merge: size estimates for post-shuffle/post-explode relations
-    * routinely land under the auto-broadcast threshold while the
-    * materialized build side does not — at the ×30 probe that planned
-    * driver-side broadcast builds that OOMed an 8 GB heap. SMJ spills
-    * gracefully at any scale; nothing in this subtree belongs on the
-    * driver. */
-  private def verifyJaccard(cand: DataFrame, items: DataFrame, itemCol: String): DataFrame = {
-    val counts = items.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(items.as("x").hint("merge"), col("x.doc_id") === col("da"))
-      .join(items.as("y").hint("merge"), col("y.doc_id") === col("db") && col(s"y.$itemCol") === col(s"x.$itemCol"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
-    val raw = col("c") / (col("ca.n") + col("cb.n") - col("c"))
-    inter
-      .join(counts.as("ca").hint("merge"), col("ca.doc_id") === col("da"))
-      .join(counts.as("cb").hint("merge"), col("cb.doc_id") === col("db"))
+  /** Shared candidate verification: exact Jaccard over per-document
+    * sets (doc_id, items), threshold on the raw double, round for
+    * output; c = |A ∩ B| is size(array_intersect). Unordered — the
+    * callers order (or expand) the final relation. A pair with c = 0 is
+    * never emitted: two empty sets would divide 0 by 0, which ANSI
+    * raises. The threshold lands in the join condition, where Spark
+    * eliminates no common subexpression; the one-element `transform`
+    * binds c, so each candidate pays one array_intersect, not three. */
+  private def verifyJaccard(cand: DataFrame, sets: DataFrame): DataFrame = {
+    val n = size(col("a.items")) + size(col("b.items"))
+    val raw = transform(array(size(array_intersect(col("a.items"), col("b.items")))),
+      c => when(c > 0, c / (n - c))).getItem(0)
+    cand
+      .join(sets.as("a").hint("merge"), col("a.doc_id") === col("da"))
+      .join(sets.as("b").hint("merge"), col("b.doc_id") === col("db"))
       .filter(raw >= 0.5)
       .select(col("da"), col("db"), round(raw, 6).as("jacc"))
   }
@@ -549,7 +543,7 @@ object Dedup {
     while (!converged && iter < maxRounds) {
       // labels/edges scale with the corpus; localCheckpoint leaves the
       // planner without reliable size stats — SMJ-pinned so no round
-      // ever builds a corpus-sized broadcast (see verifyJaccard)
+      // ever builds a corpus-sized broadcast (see the Dedup scaladoc)
       val viaEdge = edges.join(labels.hint("merge"), edges("dst") === labels("doc_id"))
         .select(edges("src").as("doc_id"), col("label"))
       val viaJump = labels.as("a")
@@ -628,7 +622,7 @@ object Dedup {
       .agg(sum(when(col("hit").isNotNull, 1L).otherwise(0L)).as("nhit"))
     // hits/exactTexts scale with the corpus (unlike the constant-size
     // bits relation above, which is the one intentional broadcast) —
-    // SMJ-pinned (see verifyJaccard)
+    // SMJ-pinned (see the Dedup scaladoc)
     val exactTexts = test.select("text").distinct().withColumn("is_exact", lit(true))
     val flags = train.join(hits.hint("merge"), "doc_id")
       .join(exactTexts.hint("merge"), Seq("text"), "left")
@@ -683,12 +677,6 @@ object Dedup {
   // member-expansion semantics as d2, so the two formulations are
   // provably row-identical.
   // -------------------------------------------------------------------
-  /** (doc_id, th, is_base, shingled) member relation of the d10 split
-    * — base = t6's train bucket, the same split contract as d9/t7/t13. */
-  private[queries] def d10Members(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), md5(col("text")).as("th"),
-      TextStats.isBaseCol.as("is_base"), (size(split(col("text"), " ")) >= 3).as("shingled"))
-
   /** Capped rep band relation tagged has-base (`hb`) / has-delta
     * (`hd`) from each rep's member set — the join input of BOTH d10
     * formulations. */
@@ -698,38 +686,18 @@ object Dedup {
         max(when(!col("is_base"), 1).otherwise(0)).as("hd"))
       .join(d2Reps(docs).select(col("th"), col("doc_id")).hint("merge"), "th")
       .select("doc_id", "hb", "hd")
-    // both sides corpus-scaled — SMJ-pinned (see verifyJaccard)
+    // both sides corpus-scaled — SMJ-pinned (see the Dedup scaladoc)
     cappedBands(d2Bands(docs)).join(repFlags.hint("merge"), "doc_id")
   }
 
   /** Verify candidate rep pairs and expand to boundary-crossing member
     * pairs — the shared back half of both d10 formulations. */
-  private def d10VerifyExpand(docs: DataFrame, members: DataFrame,
-      cand: DataFrame): DataFrame = {
-    val repPairs = verifyJaccard(cand, repShingles(docs), "shingle")
-    // memRep/members scale with the corpus — SMJ-pinned (see
-    // verifyJaccard)
-    val memRep = members.join(d2Reps(docs).select(col("th"), col("doc_id").as("rep")).hint("merge"), "th")
-      .select(col("doc_id"), col("rep"), col("is_base"))
-    val cross = repPairs
-      .join(memRep.select(col("rep").as("da"), col("doc_id").as("ma"),
-        col("is_base").as("ba")).hint("merge"), "da")
-      .join(memRep.select(col("rep").as("db"), col("doc_id").as("mb"),
-        col("is_base").as("bb")).hint("merge"), "db")
-      .filter(col("ba") =!= col("bb"))
-      .select(least(col("ma"), col("mb")).as("da"),
-        greatest(col("ma"), col("mb")).as("db"), col("jacc"))
-    val intra = members.as("x").join(members.as("y").hint("merge"),
-        col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id") &&
-          col("x.shingled") && col("x.is_base") =!= col("y.is_base"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"), lit(1.0).as("jacc"))
-    cross.union(intra).orderBy("da", "db")
-  }
+  private def d10VerifyExpand(docs: DataFrame, cand: DataFrame): DataFrame =
+    expandPairs(docs, verifyJaccard(cand, repSets(docs)), "jacc", lit(1.0), crossing = true)
 
   def d10IncrementalNeardup(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val members = d10Members(docs)
-    val capped = d10TaggedBands(docs, members)
+    val capped = d10TaggedBands(docs, docMembers(docs))
     val cand = capped.as("a").join(capped.as("b").hint("merge"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
           col("a.doc_id") < col("b.doc_id") &&
@@ -737,7 +705,7 @@ object Dedup {
             (col("a.hb") === 1 && col("b.hd") === 1)))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
-    d10VerifyExpand(docs, members, cand)
+    d10VerifyExpand(docs, cand)
   }
 
   // -------------------------------------------------------------------
@@ -776,8 +744,7 @@ object Dedup {
 
   def d10BucketedBase(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val members = d10Members(docs)
-    val capped = d10TaggedBands(docs, members)
+    val capped = d10TaggedBands(docs, docMembers(docs))
     // the standing corpus: bands of base-bearing reps, materialized as
     // a bucketed table (the "write once per ingest epoch" side).
     // Drop both the catalog entry AND any orphaned location first — a
@@ -810,7 +777,7 @@ object Dedup {
       .select(least(col("a.doc_id"), col("b.doc_id")).as("da"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("db"))
       .distinct()
-    d10VerifyExpand(docs, members, cand)
+    d10VerifyExpand(docs, cand)
   }
 
   val d10Sql: String =

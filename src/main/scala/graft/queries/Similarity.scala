@@ -327,8 +327,8 @@ object Similarity {
     val keep = b.groupBy("band", "bval").agg(count(lit(1)).as("bn"))
       .filter(col("bn") <= D5BucketCap && col("bn") >= 2)
       .select("band", "bval")
-    // all three relations scale with the corpus — SMJ-pinned (see
-    // Dedup.verifyJaccard) so no side is ever built on the driver
+    // all three relations scale with the corpus — SMJ-pinned (see the
+    // Dedup scaladoc) so no side is ever built on the driver
     val capped = b.join(keep.hint("merge"), Seq("band", "bval"))
     capped.as("a").join(capped.as("b").hint("merge"),
         col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&

@@ -66,6 +66,10 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
     assert(spark.sql("SELECT cosine_sim(array(1d, 0d), array(1d, 0d))").head().getDouble(0) == 1.0)
   }
 
+  test("state-store maintenance waits at most 10 s at shutdown, not the 300 s default") {
+    assert(spark.conf.get("spark.sql.streaming.stateStore.maintenanceShutdownTimeout") == "10s")
+  }
+
   test("no code registers a function at runtime; GraftExtensions is the only path") {
     for (call <- registerCalls)
       assert(callSites(call).isEmpty, s"runtime function registration found: $call")

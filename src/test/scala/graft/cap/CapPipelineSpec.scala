@@ -176,4 +176,12 @@ class CapPipelineSpec extends AnyFunSuite with GraftTestSession {
     val want = new String(java.nio.file.Files.readAllBytes(goldenPath))
     assert(got == want)
   }
+
+  test("cap1-cap5 oracles read the goldens of this checkout") {
+    val dir = new java.io.File("fixtures/golden").getAbsolutePath
+    for (sql <- Seq(graft.queries.CapQueries.cap1Sql, graft.queries.CapQueries.cap2Sql,
+        graft.queries.CapQueries.cap3Sql, graft.queries.CapQueries.cap4Sql,
+        graft.queries.CapQueries.cap5Sql))
+      assert(sql.contains(s"'$dir/"), s"oracle reads goldens outside $dir: $sql")
+  }
 }

@@ -15,6 +15,9 @@ class DedupSpec extends AnyFunSuite with GraftTestSession {
 
   private val sf = "/root/testdata/sf0.001"
 
+  private def triple(r: org.apache.spark.sql.Row): (Long, Long, Double) =
+    (r.getLong(0), r.getLong(1), r.getDouble(2))
+
   test("d1: stats add up against the raw table") {
     val r = Dedup.d1ExactDedup(spark, sf).collect()(0)
     val nDocs = Tables.documents(spark, sf).count()
@@ -40,10 +43,10 @@ class DedupSpec extends AnyFunSuite with GraftTestSession {
       .join(counts.as("ca"), col("ca.doc_id") === col("da"))
       .join(counts.as("cb"), col("cb.doc_id") === col("db"))
       .filter(col("c") / (col("ca.n") + col("cb.n") - col("c")) >= 0.5)
-      .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .select(col("da"), col("db"), round(col("c") / (col("ca.n") + col("cb.n") - col("c")), 6))
+      .collect().map(triple).toSet
 
-    val lsh = Dedup.d2MinhashLsh(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lsh = Dedup.d2MinhashLsh(spark, sf).collect().map(triple).toSet
     assert(lsh == truth, s"LSH=$lsh truth=$truth")
     assert(truth.nonEmpty, "corpus should contain injected near-dups")
   }
@@ -106,9 +109,28 @@ class DedupSpec extends AnyFunSuite with GraftTestSession {
       .join(counts.as("ca"), col("ca.doc_id") === col("da"))
       .join(counts.as("cb"), col("cb.doc_id") === col("db"))
       .filter(col("c") / (col("ca.n") + col("cb.n") - col("c")) >= 0.5)
-      .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+      .select(col("da"), col("db"), round(col("c") / (col("ca.n") + col("cb.n") - col("c")), 6))
+      .collect().map(triple).toSet
+    val got = rows.map(triple).toSet
     assert(got == truth, s"blocking dropped true pairs: missing=${truth.diff(got)}")
+  }
+
+  test("d4: documents with no 5-gram or no shared 5-gram pair with nothing, without error") {
+    // every pair here lands in one length bucket, but no two sets share
+    // a 5-gram: docs 1 and 2 are under 5 characters and doc 5 has no
+    // text, so their sets are empty and (1,2), (1,5), (2,5) would
+    // compute 0/0, which ANSI mode raises; docs 3 and 4 are a disjoint
+    // pair (c = 0 over a non-empty union)
+    import spark.implicits._
+    val docs = Seq[(Long, String, Long)]((1L, "abc", 3L), (2L, "wxyz", 4L),
+        (3L, "aaaaaaa", 7L), (4L, "bbbbbbb", 7L), (5L, null, 0L))
+      .toDF("doc_id", "text", "n_chars")
+    val dir = java.nio.file.Files.createTempDirectory("d4empty").toString
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(Dedup.d4Candidates(Tables.documents(spark, dir)).count() == 10,
+      "every pair must reach the verify")
+    val got = Dedup.d4NgramJaccard(spark, dir).collect()
+    assert(got.isEmpty, s"pairs without a shared 5-gram emitted: ${got.toSeq}")
   }
 
   test("d7: clusters are the connected components of the verified pair graph") {

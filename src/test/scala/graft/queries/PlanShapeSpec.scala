@@ -95,6 +95,25 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
     graft.queries.Dedup.releaseSharedPairs(spark)
   }
 
+  test("d4: the verify reads per-document sets; the only Generate is the length-bucket emit") {
+    // the Jaccard verify intersects each candidate's two n-gram arrays
+    // (size(array_intersect)); an n-gram explode joined per item
+    // (154.8M rows out of the first join at sf0.1) must not come back.
+    // The pre-AQE plan repeats the emit under both self-join sides and
+    // both cap inputs, so Generates are compared with expression ids
+    // stripped: one distinct generator must remain.
+    val p = plan("d4_ngram_jaccard")
+    val gens = p.linesIterator.collect {
+      case l if l.contains("Generate ") =>
+        l.substring(l.indexOf("Generate ")).replaceAll("#\\d+L?", "")
+          .split(", (\\[|false)")(0)
+    }.toSet
+    assert(gens == Set("Generate explode(array(FLOOR((cast(n_chars as double) / 16.0)), " +
+        "(FLOOR((cast(n_chars as double) / 16.0)) + 1)))"),
+      s"d4 must plan exactly one Generate, the length-bucket emit, got $gens:\n$p")
+    assert(p.contains("array_intersect"), s"d4 lost the set-intersection verify:\n$p")
+  }
+
   test("d11: single corpus pass — one scan, no joins of any kind") {
     // the r18 rewrite: the dup-window membership runs as a min/max
     // window over the (h1, h2) exchange and the totals ride the
