@@ -49,12 +49,3 @@ final case class CotFeature(
   * the engine's side-channel replacing the reference's log-and-drop
   * (task.ts:876-878). */
 final case class QuarantinedAlert(identifier: String, error: String)
-
-/** Tagged union row of the fused X2 fan-out: exactly one of the two
-  * sides is populated — a rendered feature on success, the quarantine
-  * record on per-alert failure (F2). Spark has no sum types; the
-  * two-Option struct with a disjointness invariant is the encoder-
-  * friendly equivalent. */
-final case class FanOutRow(
-    feature: Option[CotFeature],
-    quarantined: Option[QuarantinedAlert])

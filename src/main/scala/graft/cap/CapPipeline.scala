@@ -6,7 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import scala.util.Try
+import scala.util.control.NonFatal
+
+import graft.sources.FeedLinks
 
 /** The CAP dataflow as first-class Spark operators (SURVEY.md §2/§3).
   *
@@ -18,6 +20,11 @@ import scala.util.Try
   * win. Fetching is decoupled: these operators take `Dataset[String]`
   * of feed/alert bodies, so any source (files, a DSv2 HTTP connector,
   * a stream) plugs in front.
+  *
+  * Each step has one definition, shared with the connectors: link
+  * extraction is [[FeedLinks]], the per-alert fan-out is
+  * the private `fanOut` behind [[toFeatures]] and [[quarantine]], and
+  * the FeatureCollection envelope is [[Features.featureCollectionJson]].
   */
 object CapPipeline {
 
@@ -71,15 +78,10 @@ object CapPipeline {
           StructField("X509Certificate", StringType))))))))))))
 
   // ---------------------------------------------------------------
-  // P1-P3: feed link extraction — regexp_extract_all for both RSS
-  // (<link>text</link>) and Atom (<link href="...">) shapes, with the
-  // reference's {1,1000} ReDoS length caps (task.ts:563, 572), then
-  // the /cap/-or-alert predicate and distinct. Patterns are shared
-  // with the capfeed connector's driver-side planner (FeedLinks) so
-  // the two paths cannot drift apart.
+  // P1-P3: feed link extraction. The patterns, the JS trim and the
+  // /cap/-or-alert predicate are FeedLinks, the same
+  // definition the capfeed connector plans with.
   // ---------------------------------------------------------------
-  private val rssLinkRe = graft.sources.FeedLinks.RssLinkPattern
-  private val atomLinkRe = graft.sources.FeedLinks.AtomLinkPattern
 
   /** Order-preserving dedup, mirroring the reference's
     * `[...new Set(links)]` (task.ts:580): each link keeps its FIRST
@@ -93,12 +95,10 @@ object CapPipeline {
   def parseFeedLinks(feeds: Dataset[String]): Dataset[String] = {
     val spark = feeds.sparkSession
     import spark.implicits._
-    feeds.toDF("body")
-      .select(posexplode(concat(
-        regexp_extract_all(col("body"), lit(rssLinkRe), lit(1)),
-        regexp_extract_all(col("body"), lit(atomLinkRe), lit(1)))).as(Seq("pos", "link")))
-      .select(col("pos"), trim(col("link")).as("link"))
-      .filter(col("link").contains("/cap/") || col("link").contains("alert"))
+    // a link's position counts every match before it, kept or not
+    feeds.flatMap(body => FeedLinks.matches(body).zipWithIndex
+        .filter { case (link, _) => FeedLinks.isCapAlertLink(link) })
+      .toDF("link", "pos")
       .groupBy(col("link")).agg(min(col("pos")).as("first_pos"))
       .orderBy(col("first_pos"), col("link"))
       .select(col("link"))
@@ -205,70 +205,34 @@ object CapPipeline {
   // function; per-alert error isolation (F2) mirrors the reference's
   // try/catch-and-continue (task.ts:876-878).
   // ---------------------------------------------------------------
+
+  /** One alert's fan-out: its features, or the quarantine row when
+    * `alertToFeatures` throws (e.g. an unparseable `sent` making
+    * `toISOString` fail). The error text is the exception's message,
+    * else its class's simple name. */
+  private def fanOut(a: CapAlert): Either[QuarantinedAlert, Seq[CotFeature]] =
+    try Right(Features.alertToFeatures(a))
+    catch {
+      case NonFatal(e) => Left(QuarantinedAlert(a.identifier,
+        Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
+    }
+
+  /** The features of every alert whose fan-out succeeds. */
   def toFeatures(alerts: Dataset[CapAlert]): Dataset[CotFeature] = {
     val spark = alerts.sparkSession
     import spark.implicits._
-    alerts.flatMap(a => Try(Features.alertToFeatures(a)).getOrElse(Seq.empty))
-  }
-
-  /** The X2 fan-out as a TAGGED UNION in ONE narrow pass:
-    * `alertToFeatures` is evaluated exactly once per alert; success
-    * rows carry a feature each, a failure contributes one quarantine
-    * row. Callers that materialize both sides persist this Dataset so
-    * the alerts source is scanned once (what
-    * [[toFeaturesWithQuarantine]] does). */
-  def fanOutTagged(alerts: Dataset[CapAlert]): Dataset[FanOutRow] = {
-    val spark = alerts.sparkSession
-    import spark.implicits._
-    alerts.flatMap { a =>
-      Try(Features.alertToFeatures(a)) match {
-        case scala.util.Success(fs) =>
-          fs.iterator.map(f => FanOutRow(Some(f), None))
-        case scala.util.Failure(e) =>
-          Iterator.single(FanOutRow(None, Some(QuarantinedAlert(a.identifier,
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))))
-      }
-    }
-  }
-
-  /** Both sides of the fused fan-out plus the lifecycle handle for the
-    * persisted tagged intermediate. `unpersist()` releases the cache
-    * entry (a no-op when the fan-out ran with `persist = false`) — call
-    * it once both sides are materialized, so long-lived sessions don't
-    * accumulate cache entries across repeated pipeline runs.
-    */
-  final case class QuarantineFanOut(
-      features: Dataset[CotFeature],
-      quarantine: Dataset[QuarantinedAlert],
-      private val tagged: Option[Dataset[FanOutRow]]) {
-    def unpersist(): Unit = tagged.foreach(_.unpersist())
+    alerts.flatMap(a => fanOut(a).getOrElse(Seq.empty))
   }
 
   /** F2 with a quarantine side-channel — the engine's improvement over
     * the reference, which only console-logs and drops (task.ts:876-878):
-    * alerts whose fan-out throws (e.g. an unparseable `sent` making
-    * `toISOString` fail, matching the reference's per-alert catch) come
-    * back as (identifier, error) rows instead of vanishing.
-    *
-    * Fused via [[fanOutTagged]]: ONE pass evaluates the fan-out, and
-    * with `persist` (the default) the tagged intermediate is cached so
-    * materializing both outputs scans the alerts source exactly once
-    * (plan-asserted in PlanShapeSpec). The returned [[QuarantineFanOut]]
-    * owns the cache entry — call `unpersist()` when done. Pass
-    * `persist = false` when only one side will be materialized, or
-    * manage [[fanOutTagged]] and its lifecycle directly.
-    */
-  def toFeaturesWithQuarantine(alerts: Dataset[CapAlert], persist: Boolean = true)
-      : QuarantineFanOut = {
+    * an alert whose fan-out throws comes back as one (identifier, error)
+    * row instead of vanishing. A caller that wants both sides of one
+    * source persists the alerts and calls [[toFeatures]] and this. */
+  def quarantine(alerts: Dataset[CapAlert]): Dataset[QuarantinedAlert] = {
     val spark = alerts.sparkSession
     import spark.implicits._
-    val tagged0 = fanOutTagged(alerts)
-    val tagged =
-      if (persist) tagged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tagged0
-    QuarantineFanOut(
-      tagged.flatMap(_.feature), tagged.flatMap(_.quarantined),
-      if (persist) Some(tagged) else None)
+    alerts.flatMap(a => fanOut(a).swap.toSeq)
   }
 
   /** End-to-end over a directory of CAP alert XML files (one alert per

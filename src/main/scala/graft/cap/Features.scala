@@ -195,9 +195,9 @@ object Features {
     }
   }
 
-  /** Sink envelope (`task.ts:615-623`): features wrapped as a
-    * FeatureCollection, in the given order. */
-  def featureCollectionJson(features: Seq[CotFeature]): String =
-    obj(Seq("type" -> str("FeatureCollection"),
-      "features" -> arr(features.map(_.json))))
+  /** Sink envelope (`task.ts:615-623`): rendered Feature documents
+    * (`CotFeature.json`) wrapped as a FeatureCollection, in the given
+    * order. One `mkString`, so a multi-MB sink body is built once. */
+  def featureCollectionJson(jsons: scala.collection.Seq[String]): String =
+    jsons.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
 }

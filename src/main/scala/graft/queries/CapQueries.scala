@@ -51,14 +51,13 @@ object CapQueries {
     * (unparseable `sent`/`onset` — the reference's per-alert
     * try/catch-and-drop, task.ts:876-878, upgraded to a side-channel):
     * the full pipeline runs and the quarantined (identifier, error)
-    * rows come back. `persist = false` — only one side of the fused
-    * fan-out is materialized here. */
+    * rows come back. */
   def capQuarantine(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val xml = s.read.option("wholetext", "true").text(badFixtureDir).as[String]
     val alerts = CapPipeline.filterActive(CapPipeline.parseAlerts(xml), asOf)
-    val quarantine = CapPipeline.toFeaturesWithQuarantine(alerts, persist = false).quarantine
-    quarantine.toDF().select(col("identifier"), col("error")).orderBy("identifier")
+    CapPipeline.quarantine(alerts).toDF().select(col("identifier"), col("error"))
+      .orderBy("identifier")
   }
 
   /** Golden-file oracles: the driver's DuckDB compare reads a

@@ -26,11 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Options: `url` (required), `headers` ("K=V;K=V"), `timeout` (ms,
   * default 30000), `retries` (default 2), `numPartitions` (default 4) —
   * timeout/retries defaults mirror the reference env schema
-  * (task.ts:15-22). Engine-only, parsed by [[EtlConfig.fromOptions]]:
-  * `failFast` (default false: a failed alert is logged and skipped like
-  * the reference; true fails the read). A read sends up to
-  * numPartitions × 8 alert GETs to the feed host at once; lower
-  * `numPartitions` to send fewer.
+  * (task.ts:15-22). A failed alert fetch is logged and skipped like the
+  * reference's per-alert try/catch; that is the one failure path. A
+  * read sends up to numPartitions × 8 alert GETs to the feed host at
+  * once; lower `numPartitions` to send fewer.
   */
 class CapFeedDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "capfeed"
@@ -118,9 +117,8 @@ private class CapFeedReaderFactory extends PartitionReaderFactory {
   *
   * Reference parity: each alert fetch sits inside the per-alert
   * try/catch (task.ts:626-878) — a dead link is logged and skipped
-  * after retries, it does not fail the run. failFast=true propagates
-  * the first failure instead. Interrupts and fatal errors always
-  * propagate.
+  * after retries, it does not fail the run. Interrupts and fatal
+  * errors propagate.
   *
   * Submission is throttled: at most `FetchWindow` URLs are ever
   * in the pool at once, and the next URL is submitted only when a
@@ -168,8 +166,6 @@ private class CapFeedReader(p: CapFeedPartition)
           throw e.getCause
       }
       inFlight -= 1
-      // failFast: nothing is submitted after the first failure
-      if (p.conf.failFast) fetched.left.foreach { case (_, e) => close(); throw e }
       submitNext() // one consumed → one submitted: bounded retention
       fetched match {
         case Right((url, xml)) =>
@@ -189,28 +185,24 @@ private class CapFeedReader(p: CapFeedPartition)
   }
 }
 
-/** Streaming offset = the set of alert URLs already emitted, JSON-
-  * serialized so a restart from checkpoint resumes exactly where the
-  * last run stopped. CAP feeds are small (tens of entries), so the
-  * offset stays cheap; a high-churn feed would swap the URL set for a
-  * (bounded) rolling window + dedup downstream.
+/** Streaming offset = the set of alert URLs already emitted, as a
+  * sorted JSON array of strings, so a restart from checkpoint resumes
+  * exactly where the last run stopped. Jackson writes it, so every
+  * control character in a link is escaped and the offset stays on the
+  * one line Spark's offset log gives it. CAP feeds are small (tens of
+  * entries), so the offset stays cheap; a high-churn feed would swap
+  * the URL set for a (bounded) rolling window + dedup downstream.
   */
 private case class CapFeedOffset(seen: Seq[String])
     extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String =
-    seen.sorted.map(u => "\"" + u.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
+  override def json(): String = CapFeedOffset.mapper.writeValueAsString(seen.sorted.toArray)
 }
 
 private object CapFeedOffset {
-  def fromJson(json: String): CapFeedOffset = {
-    // offsets only ever contain strings we serialized above
-    val items = "\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findAllMatchIn(json)
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-      .toSeq
-    CapFeedOffset(items)
-  }
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  def fromJson(json: String): CapFeedOffset =
+    CapFeedOffset(mapper.readValue(json, classOf[Array[String]]).toSeq)
 }
 
 /** `spark.readStream.format("capfeed")` — the reference's scheduled
@@ -252,7 +244,7 @@ private class CapFeedMicroBatchStream(options: CaseInsensitiveStringMap)
       // offset built from `known` would not, because Spark polls
       // before it deserializes the checkpoint, so after a restart
       // `known` is still empty and the offset would move backwards.
-      case scala.util.control.NonFatal(e) if !c.failFast =>
+      case scala.util.control.NonFatal(e) =>
         System.err.println(s"[capfeed] feed poll failed, no new batch: $feedUrl: ${e.getMessage}")
         return null
     }

@@ -12,12 +12,15 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.cap.Features
+
 /** `df.write.format("cloudtak")` — DSv2 batch sink (S4). Input: one
   * STRING column of GeoJSON Feature documents (`CotFeature.json`). Each
   * partition buffers its features and POSTs ONE FeatureCollection
   * envelope on task commit, with reference-parity retry/backoff — the
   * distributed analog of the reference's single `submit(fc)`
-  * (task.ts:615-623, 882): same envelope shape, one request per
+  * (task.ts:615-623, 882): the same envelope, built by
+  * [[graft.cap.Features.featureCollectionJson]], one request per
   * partition instead of per run, identity/upsert by feature id making
   * the partitioned submission idempotent downstream.
   *
@@ -87,9 +90,9 @@ private class CloudTakWriter(conf: EtlConfig)
 
   override def commit(): WriterCommitMessage = {
     if (features.nonEmpty) {
-      // FeatureCollection envelope only materialized at the sink
-      // (task.ts:615-623); empty partitions submit nothing.
-      val fc = features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+      // the envelope is only materialized at the sink; empty
+      // partitions submit nothing
+      val fc = Features.featureCollectionJson(features)
       Http.fetchWithRetry(conf.url, conf.headers ++ Map("Content-Type" -> "application/json"),
         conf.timeoutMs, conf.retries, method = "POST", body = Some(fc))
     }

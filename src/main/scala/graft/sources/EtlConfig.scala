@@ -8,19 +8,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * defaulting to 2. Both DSv2 connectors (capfeed source, cloudtak
   * sink) parse their options through [[EtlConfig.fromOptions]], so the
   * defaults, validation, and the published JSON schema are one
-  * definition that cannot drift apart.
-  *
-  * `failFast` is engine-only and deliberately absent from the
-  * published input schema, which mirrors the reference environment
-  * surface: it opts into strict error propagation instead of the
-  * reference's log-and-skip.
+  * definition that cannot drift apart. There is no engine-only
+  * option: an option not named here is ignored.
   */
 final case class EtlConfig(
     url: String,
     headers: Map[String, String] = Map.empty,
     timeoutMs: Long = EtlConfig.DefaultTimeoutMs,
-    retries: Int = EtlConfig.DefaultRetries,
-    failFast: Boolean = false)
+    retries: Int = EtlConfig.DefaultRetries)
 
 object EtlConfig {
   /** Reference defaults (task.ts:15-22). */
@@ -39,7 +34,7 @@ object EtlConfig {
     if (retries < 0)
       throw new IllegalArgumentException(s"$who: 'retries' must be >= 0, got $retries")
     EtlConfig(url, Http.parseHeaders(options.getOrDefault("headers", "")),
-      timeoutMs, retries, options.getBoolean("failFast", false))
+      timeoutMs, retries)
   }
 
   /** JSON-schema rendering of the input configuration — the engine's

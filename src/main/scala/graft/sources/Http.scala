@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
+import graft.functions.JsCompat
+
 /** S1 — HTTP fetch with retry/backoff, semantics matching the reference
   * `fetchWithRetry` (task.ts:382-407): `retries + 1` total attempts,
   * per-attempt timeout, non-2xx throws `HTTP <status>`, linear backoff
@@ -65,29 +67,28 @@ object Http {
     }.toMap
 }
 
-/** P1-P3 link extraction (reference task.ts:555-581). The pattern
-  * strings and predicate here are THE canonical definitions — the
-  * declarative `CapPipeline.parseFeedLinks` references these same vals,
-  * so connector planning and the pipeline cannot desynchronize.
-  * `extract` is the pure driver-side form with order-preserving
-  * distinct like JS `[...new Set(links)]` (task.ts:580).
+/** P1-P3 link extraction (reference task.ts:555-581), the one
+  * definition: the `capfeed` planner calls [[extract]], and the
+  * declarative `CapPipeline.parseFeedLinks` flatMaps [[matches]].
   */
 object FeedLinks {
   /** RSS `<link>text</link>` with the reference's {1,1000} ReDoS cap. */
-  val RssLinkPattern = "<link>([^<]{1,1000})</link>"
+  private val RssLink = "<link>([^<]{1,1000})</link>".r
   /** Atom `<link ... href="...">`, same length cap. */
-  val AtomLinkPattern = "<link[^>]+href=[\"']([^\"']{1,1000})[\"'][^>]*>"
+  private val AtomLink = "<link[^>]+href=[\"']([^\"']{1,1000})[\"'][^>]*>".r
 
   /** P2 predicate: keep links containing `/cap/` or `alert`. */
   def isCapAlertLink(l: String): Boolean = l.contains("/cap/") || l.contains("alert")
 
-  private val RssLink = RssLinkPattern.r
-  private val AtomLink = AtomLinkPattern.r
+  /** Every link in `body`: the RSS matches, then the Atom matches, each
+    * in match order and JS-trimmed like the reference's `.trim()` (task.ts:559-581), before
+    * the predicate and dedup. A match's index is its extraction position. */
+  def matches(body: String): Seq[String] =
+    (RssLink.findAllMatchIn(body) ++ AtomLink.findAllMatchIn(body))
+      .map(m => JsCompat.jsTrim(m.group(1))).toSeq
 
-  def extract(feedText: String): Seq[String] = {
-    val all =
-      RssLink.findAllMatchIn(feedText).map(_.group(1).trim) ++
-      AtomLink.findAllMatchIn(feedText).map(_.group(1).trim)
-    all.filter(isCapAlertLink).distinct.toSeq
-  }
+  /** P1-P3 over one feed: order-preserving distinct like JS
+    * `[...new Set(links)]` (task.ts:580). */
+  def extract(feedText: String): Seq[String] =
+    matches(feedText).filter(isCapAlertLink).distinct
 }

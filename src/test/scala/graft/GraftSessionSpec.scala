@@ -14,8 +14,9 @@ import graft.plans.AsOfJoinStrategy
   * registers the extensions twice. Also guards the one-registration
   * rule: graft functions reach a session only through
   * [[graft.plans.GraftExtensions]]; the one-runtime rule: every stream
-  * in the engine starts in [[graft.streaming.StreamRunner.drain]]; and
-  * that only the entry points read environment variables.
+  * in the engine starts in [[graft.streaming.StreamRunner.drain]];
+  * that only the entry points read environment variables; and that each
+  * CAP step spelled as a literal has one home.
   */
 class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
 
@@ -24,6 +25,8 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
   private val registerCalls = Seq("createOrReplace" + "TempFunction", "udf" + ".register")
   private val writeStreamCall = "." + "writeStream"
   private val envRead = "sys" + ".env"
+  private val linkTag = "<" + "link"
+  private val envelope = "\"Feature" + "Collection\""
 
   private lazy val sources: Seq[(Path, String)] =
     Seq("src/main/scala", "src/test/scala").flatMap { root =>
@@ -86,5 +89,13 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
     assert(readers.nonEmpty, "the scan found no environment read at all; wrong working directory?")
     val outside = readers -- Seq("GraftSession", "Bench", "Verify", "PlanDump").map(mainFile)
     assert(outside.isEmpty, s"environment read outside the entry points: $outside")
+  }
+
+  test("in src/main only FeedLinks spells <link and only Features the envelope") {
+    val links = mainCallSites(linkTag).keySet
+    val envelopes = mainCallSites(envelope).keySet
+    assert(links == Set(mainFile("sources/Http")) && envelopes == Set(mainFile("cap/Features")),
+      s"<link spelled in $links, only FeedLinks may; " +
+        s"the FeatureCollection envelope built in $envelopes, only Features may")
   }
 }

@@ -144,12 +144,20 @@ class CapPipelineSpec extends AnyFunSuite with GraftTestSession {
       "https://alerts.example.nz/cap/rss/abc123",
       "https://api.geonet.org.nz/cap/1.2/GPA1.0/quake/2026p123456",
       "https://alerts.example.nz/cap/rss/def456"))
+    // padded links: the pipeline and the capfeed planner return the same
+    // JS-trimmed links (.trim() strips newlines, indents, NBSP and BOM)
+    val padded = "<rss><channel><item><link>\n    https://alerts.example.nz/cap/rss/nl1\n  </link></item>" +
+      "<link rel=\"alternate\" href=\"\u00a0\ufeffhttps://alerts.example.nz/cap/atom/pad1\ufeff\u00a0\"/>" +
+      "</channel></rss>"
+    val trimmed = Seq("https://alerts.example.nz/cap/rss/nl1", "https://alerts.example.nz/cap/atom/pad1")
+    assert(CapPipeline.parseFeedLinks(Seq(padded).toDS()).collect().toSeq == trimmed)
+    assert(graft.sources.FeedLinks.extract(padded) == trimmed)
   }
 
   test("golden: metservice-polygon FeatureCollection JSON") {
     val goldenPath = java.nio.file.Paths.get("fixtures/golden/metservice-polygon.json")
     val fs = Seq(features("MS-2026-001"), features("MS-2026-001-center"))
-    val got = Features.featureCollectionJson(fs)
+    val got = Features.featureCollectionJson(fs.map(_.json))
     if (!java.nio.file.Files.exists(goldenPath)) {
       java.nio.file.Files.createDirectories(goldenPath.getParent)
       java.nio.file.Files.writeString(goldenPath, got)
@@ -167,7 +175,7 @@ class CapPipelineSpec extends AnyFunSuite with GraftTestSession {
     // against regressions, not independently re-derived.
     val goldenPath = java.nio.file.Paths.get("fixtures/golden/all-fixtures.json")
     val fs = features.keys.toSeq.sorted.map(features)
-    val got = Features.featureCollectionJson(fs)
+    val got = Features.featureCollectionJson(fs.map(_.json))
     if (!java.nio.file.Files.exists(goldenPath)) {
       java.nio.file.Files.createDirectories(goldenPath.getParent)
       java.nio.file.Files.writeString(goldenPath, got)

@@ -165,7 +165,7 @@ class FeaturesSpec extends AnyFunSuite {
 
   test("FeatureCollection envelope (task.ts:615-623)") {
     val fs = alertToFeatures(alert())
-    val fc = featureCollectionJson(fs)
+    val fc = featureCollectionJson(fs.map(_.json))
     assert(fc.startsWith("""{"type":"FeatureCollection","features":[{"""))
   }
 }

@@ -44,11 +44,9 @@ class ParseRobustnessSpec extends AnyFunSuite with GraftTestSession {
         Seq("nonsense", "", "1,2"), "circle nonsense", "#zzz", "not-base64!"),
       CapAlert("id2", "s", "2024-01-01T00:00:00Z", "", "", "", "", "", "", "", "",
         "", "", "", "", "", "", "", "", "", Seq.empty, "", "", ""))
-    val fanOut = CapPipeline.toFeaturesWithQuarantine(weird.toDS())
     // must evaluate without throwing; id1 (bad sent) quarantined, id2 emits
-    val q = fanOut.quarantine.collect().map(_.identifier).toSet
-    val f = fanOut.features.collect().map(_.id)
-    fanOut.unpersist()
+    val q = CapPipeline.quarantine(weird.toDS()).collect().map(_.identifier).toSet
+    val f = CapPipeline.toFeatures(weird.toDS()).collect().map(_.id)
     assert(q == Set("id1"))
     assert(f.nonEmpty && f.forall(_.startsWith("id2")))
   }

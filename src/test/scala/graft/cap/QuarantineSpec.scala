@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftTestSession
 
 /** F2 quarantine semantics: throwing alerts surface as (id, error)
-  * rows; healthy alerts quarantine nothing; features output is
-  * unchanged from the plain path.
+  * rows; healthy alerts quarantine nothing, and a failing alert leaves
+  * the other alerts' features unchanged.
   */
 class QuarantineSpec extends AnyFunSuite with GraftTestSession {
 
@@ -22,29 +22,24 @@ class QuarantineSpec extends AnyFunSuite with GraftTestSession {
       alert("ok-1", "2024-05-01T10:00:00Z"),
       alert("bad-1", "not a date"),
       alert("ok-2", "2024-05-02T10:00:00Z")).toDS()
-    val fanOut = CapPipeline.toFeaturesWithQuarantine(alerts)
-    val (features, quarantine) = (fanOut.features, fanOut.quarantine)
-
-    val q = quarantine.collect()
+    val q = CapPipeline.quarantine(alerts).collect()
     assert(q.map(_.identifier).toSeq == Seq("bad-1"))
     assert(q.head.error.nonEmpty)
 
-    val featIds = features.collect().map(_.id).toSet
+    val featIds = CapPipeline.toFeatures(alerts).collect().map(_.id).toSet
     // polygon + centroid features for each valid alert, none for bad-1
     assert(featIds.exists(_.startsWith("ok-1")))
     assert(featIds.exists(_.startsWith("ok-2")))
     assert(!featIds.exists(_.startsWith("bad-1")))
-    // identical to the plain toFeatures output
-    assert(featIds == CapPipeline.toFeatures(alerts).collect().map(_.id).toSet)
-    fanOut.unpersist()
+    // the failing alert leaves the other alerts' features unchanged
+    assert(featIds == CapPipeline.toFeatures(alerts.filter(_.identifier != "bad-1"))
+      .collect().map(_.id).toSet)
   }
 
   test("fixture corpus quarantines nothing (all failures are handled fallbacks)") {
     import spark.implicits._
     val xml = spark.read.option("wholetext", "true").text("fixtures/cap").as[String]
-    val fanOut = CapPipeline.toFeaturesWithQuarantine(
-      CapPipeline.parseAlerts(xml), persist = false)
-    assert(fanOut.quarantine.count() == 0,
-      s"unexpected quarantine: ${fanOut.quarantine.collect().toSeq}")
+    val quarantine = CapPipeline.quarantine(CapPipeline.parseAlerts(xml))
+    assert(quarantine.count() == 0, s"unexpected quarantine: ${quarantine.collect().toSeq}")
   }
 }

@@ -483,35 +483,4 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
       }
     }
   }
-
-  test("fused fan-out: materializing features AND quarantine scans the alerts source once") {
-    import spark.implicits._
-    val xml = spark.read.option("wholetext", "true")
-      .text(CapQueries.badFixtureDir).as[String]
-    val alerts = graft.cap.CapPipeline.filterActive(
-      graft.cap.CapPipeline.parseAlerts(xml), CapQueries.asOf)
-    val fanOut = graft.cap.CapPipeline.toFeaturesWithQuarantine(alerts)
-    val (features, quarantine) = (fanOut.features, fanOut.quarantine)
-    try {
-      // first action builds the persisted tagged union; the second must
-      // read the cache, NOT re-run the fan-out over the alerts source
-      assert(quarantine.count() == 2)
-      assert(features.count() > 0)
-      val fPlan = features.queryExecution.executedPlan.toString
-      val qPlan = quarantine.queryExecution.executedPlan.toString
-      assert(fPlan.contains("InMemoryTableScan"),
-        s"features side must read the cached tagged union:\n$fPlan")
-      assert(qPlan.contains("InMemoryTableScan"),
-        s"quarantine side must read the cached tagged union:\n$qPlan")
-      // exactly one of the two sides populated on every tagged row
-      graft.cap.CapPipeline.fanOutTagged(alerts).collect().foreach { r =>
-        assert(r.feature.isDefined != r.quarantined.isDefined,
-          "tagged union rows must populate exactly one side")
-      }
-    } finally {
-      // release the tagged-union cache entry via the result's own
-      // lifecycle handle so later plan-shape tests see a clean session
-      fanOut.unpersist()
-    }
-  }
 }

@@ -114,7 +114,7 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       chain(ex).exists(t => Option(t.getMessage).exists(_.contains("HTTP 503"))))
   }
 
-  test("capfeed: a dead alert link is skipped (reference per-alert isolation), failFast opts out") {
+  test("capfeed: a dead alert link is skipped (reference per-alert isolation)") {
     // feed with one good and one 404 link
     server.createContext("/deadfeed", (ex: HttpExchange) => respond(ex, 200,
       s"<rss><channel><item><link>$base/cap/metservice-polygon.xml</link></item>" +
@@ -126,20 +126,9 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       .load().collect()
     assert(rows.length == 1, "dead link must be skipped, not fail the run")
     assert(rows(0).getString(0).endsWith("metservice-polygon.xml"))
-
-    val ex = intercept[Exception] {
-      spark.read.format("capfeed")
-        .option("url", s"$base/deadfeed")
-        .option("timeout", 2000)
-        .option("retries", 0)
-        .option("failFast", true)
-        .load().count()
-    }
-    assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).take(10)
-      .exists(t => Option(t.getMessage).exists(_.contains("HTTP 404"))))
   }
 
-  test("capfeed: the default window overlaps a partition's fetches and keeps skip/failFast semantics") {
+  test("capfeed: the default window overlaps a partition's fetches and skips dead links") {
     // 6 deliberately slow alert endpoints + 1 dead link, all in ONE
     // partition, so any speedup must come from intra-partition overlap
     val slowMs = 150L
@@ -165,17 +154,12 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     server.createContext("/slowfeed", (ex: HttpExchange) =>
       respond(ex, 200, s"<rss><channel>$links</channel></rss>"))
 
-    def run(extra: (String, String)*): Array[org.apache.spark.sql.Row] = {
-      var reader = spark.read.format("capfeed")
-        .option("url", s"$base/slowfeed")
-        .option("numPartitions", 1)
-        .option("timeout", 5000)
-        .option("retries", 0)
-      extra.foreach { case (k, v) => reader = reader.option(k, v) }
-      reader.load().collect()
-    }
-
-    val rows = run()
+    val rows = spark.read.format("capfeed")
+      .option("url", s"$base/slowfeed")
+      .option("numPartitions", 1)
+      .option("timeout", 5000)
+      .option("retries", 0)
+      .load().collect()
     val max = maxInFlight.get()
     // 6 good rows, the dead link skipped
     assert(rows.map(_.getString(0)).sorted.toSeq ==
@@ -185,11 +169,6 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     // ramp can't flake it) and can never exceed the partition's 7 links
     assert(max >= 3 && max <= 7,
       s"default window did not overlap within bounds: max in-flight $max")
-
-    // failFast still propagates the first failure under concurrency
-    val ex = intercept[Exception](run("failFast" -> "true"))
-    assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).take(10)
-      .exists(t => Option(t.getMessage).exists(_.contains("HTTP 404"))))
   }
 
   /** One AvailableNow run of a `capfeed` stream over `feedUrl` on
@@ -289,22 +268,30 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     val afterOutage = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
     assert(afterOutage == Right(Seq(added)),
       s"the run after a failed poll must emit only the new link, got $afterOutage")
+  }
 
-    // failFast keeps the old behaviour: the failed poll fails the query
-    feedUp.set(false)
-    val strict = availableNow(s"$base/outagefeed",
-      Files.createTempDirectory("capfeed-outage-strict-ckpt").toString,
-      "retries" -> "0", "failFast" -> "true")
-    assert(strict.left.exists(e => Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
-      .exists(t => Option(t.getMessage).exists(_.contains("HTTP 500")))),
-      s"failFast must fail the query on a failed poll, got $strict")
+  test("capfeed streaming: a link with an inner newline round-trips the checkpointed offset") {
+    // the RSS pattern admits newlines and tabs inside <link>; Spark's
+    // offset log keeps one offset per line, so the offset JSON must
+    // escape them or the restart below cannot read its checkpoint
+    val good = s"$base/cap/metservice-polygon.xml"
+    server.createContext("/newlinefeed", (ex: HttpExchange) => respond(ex, 200,
+      s"<rss><channel><item><link>$good</link></item>" +
+        s"<item><link>$base/cap/geonet-\n\tcircle.xml</link></item></channel></rss>"))
+    val ckpt = Files.createTempDirectory("capfeed-newline-ckpt").toString
+
+    // the broken link is planned into the offset, its fetch fails and is skipped
+    val first = availableNow(s"$base/newlinefeed", ckpt, "retries" -> "0")
+    assert(first == Right(Seq(good)), s"first run must emit the good link once, got $first")
+    val restart = availableNow(s"$base/newlinefeed", ckpt, "retries" -> "0")
+    assert(restart == Right(Nil), s"a restart must read its offset and re-emit nothing, got $restart")
   }
 
   test("streaming quarantine parity: a planted bad alert through the capfeed " +
       "MicroBatchStream lands in the quarantine side-channel") {
     // cap3_quarantine gates per-alert error isolation in BATCH mode;
-    // this proves the same tagged-union side-channel through the
-    // capfeed streaming source — a feed mixing healthy alerts with the
+    // this proves the same side-channel through the capfeed streaming
+    // source — a feed mixing healthy alerts with the
     // planted bad fixtures (unparseable sent/onset) must stream the
     // good features and quarantine exactly the bad identifiers, no
     // batch/stream divergence.
@@ -325,9 +312,16 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
 
     import spark.implicits._
     val asOf = java.time.Instant.parse("2024-06-01T00:00:00Z")
-    def tagged(xml: org.apache.spark.sql.Dataset[String]) =
-      CapPipeline.fanOutTagged(
-        CapPipeline.filterActive(CapPipeline.parseAlerts(xml), asOf))
+    def active(xml: org.apache.spark.sql.Dataset[String]) =
+      CapPipeline.filterActive(CapPipeline.parseAlerts(xml), asOf)
+    /** Both sides of one fan-out over `alerts`, read from one persisted copy. */
+    def bothSides(alerts: org.apache.spark.sql.Dataset[graft.cap.CapAlert])
+        : (Set[String], Set[(String, String)]) = {
+      alerts.persist()
+      try (CapPipeline.toFeatures(alerts).collect().map(_.id).toSet,
+        CapPipeline.quarantine(alerts).collect().map(qa => (qa.identifier, qa.error)).toSet)
+      finally alerts.unpersist()
+    }
 
     val featIds = new ConcurrentLinkedQueue[String]()
     val quarantined = new ConcurrentLinkedQueue[(String, String)]()
@@ -337,13 +331,12 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       .option("timeout", 5000)
       .load()
       .select("xml").as[String]
-      .transform(tagged)
+      .transform(active)
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.cap.FanOutRow], _: Long) =>
-        batch.collect().foreach { r =>
-          r.feature.foreach(f => featIds.add(f.id))
-          r.quarantined.foreach(qa => quarantined.add((qa.identifier, qa.error)))
-        }
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.cap.CapAlert], _: Long) =>
+        val (fs, qs) = bothSides(batch)
+        fs.foreach(featIds.add)
+        qs.foreach(quarantined.add)
       }
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -354,10 +347,7 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     // batch reference over the identical source
     val xmlB = spark.read.format("capfeed").option("url", s"$base/feedbad").load()
       .select("xml").as[String]
-    val batchRows = tagged(xmlB).collect()
-    val batchFeats = batchRows.flatMap(_.feature).map(_.id).toSet
-    val batchQuar = batchRows.flatMap(_.quarantined)
-      .map(qa => (qa.identifier, qa.error)).toSet
+    val (batchFeats, batchQuar) = bothSides(active(xmlB))
 
     assert(quarantined.asScala.toSet == batchQuar,
       s"stream quarantine diverges from batch: ${quarantined.asScala.toSet} vs $batchQuar")
@@ -448,12 +438,12 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     def opts(m: Map[String, String]) = new CaseInsensitiveStringMap(m.asJava)
     // defaults mirror the reference env schema (task.ts:15-22)
     val c = EtlConfig.fromOptions(opts(Map("url" -> "http://example/feed")), "capfeed")
-    assert(c.timeoutMs == 30000L && c.retries == 2 && c.headers.isEmpty && !c.failFast)
+    assert(c.timeoutMs == 30000L && c.retries == 2 && c.headers.isEmpty)
     val full = EtlConfig.fromOptions(opts(Map(
       "url" -> "http://example", "headers" -> "A=1;B=2",
-      "timeout" -> "5000", "retries" -> "4", "failFast" -> "true")), "capfeed")
+      "timeout" -> "5000", "retries" -> "4")), "capfeed")
     assert(full.headers == Map("A" -> "1", "B" -> "2"))
-    assert(full.timeoutMs == 5000L && full.retries == 4 && full.failFast)
+    assert(full.timeoutMs == 5000L && full.retries == 4)
     // malformed configs are rejected with the connector name
     val e1 = intercept[IllegalArgumentException](
       EtlConfig.fromOptions(opts(Map.empty), "capfeed"))
