@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.SharedRelation
@@ -91,101 +92,94 @@ object Bench {
     val boxPre = boxState()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.localCores
-    val spark = GraftSession(cpus)
-
     // SPARK_GRAFT_ONLY: optional regex narrowing the sweep to matching
-    // query names, taken in NATURAL (numeric-aware) order: b2 before b10.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    def naturalKey(n: String): String =
-      "\\d+".r.replaceAllIn(n, m => f"${m.matched.toInt}%06d")
-    val selected = SparkEntry.queries.toIndexedSeq.sortBy(t => naturalKey(t._1))
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-    val k = selected.size
+    // query names, taken in natural order (SparkEntry.select)
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    GraftSession.run(cpus) { spark =>
+      val selected = SparkEntry.select(only.map(_.r))
+      val k = selected.size
 
-    // a query that fails once is reported as -1 and skipped afterwards
-    val failed = mutable.Set.empty[String]
-    val times = mutable.Map.empty[String, List[(Double, Double)]].withDefaultValue(Nil)
-    def pass(label: String, rotation: Int, timed: Boolean): Double = {
-      val t0 = System.nanoTime()
-      (0 until k).foreach { i =>
-        val (name, build) = selected((rotation + i) % k)
-        if (!failed(name))
-          try {
-            val t = run(spark, build, sfDir)
-            if (timed) times(name) ::= t
-          } catch {
-            case e: Throwable =>
-              failed += name
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          }
+      // a query that fails once is reported as -1 and skipped afterwards
+      val failed = mutable.Set.empty[String]
+      val times = mutable.Map.empty[String, List[(Double, Double)]].withDefaultValue(Nil)
+      def pass(label: String, rotation: Int, timed: Boolean): Double = {
+        val t0 = System.nanoTime()
+        (0 until k).foreach { i =>
+          val (name, build) = selected((rotation + i) % k)
+          if (!failed(name))
+            try {
+              val t = run(spark, build, sfDir)
+              if (timed) times(name) ::= t
+            } catch {
+              case e: Throwable =>
+                failed += name
+                System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            }
+        }
+        val s = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench] $label pass: $s%.1f s")
+        s
       }
-      val s = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $label pass: $s%.1f s")
-      s
+      val warmupS = pass("warmup", 0, timed = false)
+      val passes = if (warmupS > 600) 1 else 5
+      (0 until passes).foreach(p => pass(s"timed ${p + 1}/$passes", p * k / 5, timed = true))
+
+      // per query: (build_s, exec_s, total) medians; -1 when it failed
+      val results: Seq[(String, (Double, Double, Double))] = selected.map {
+        case (name, _) =>
+          val ts = if (failed(name)) Nil else times(name)
+          val m = (median(ts.map(_._1)), median(ts.map(_._2)),
+            median(ts.map(t => t._1 + t._2)))
+          println(s"""{"q":"$name","build_s":${jnum(m._1)},"exec_s":${jnum(m._2)},"sec":${jnum(m._3)}}""")
+          name -> m
+      }
+      val total = results.map(_._2._3).filter(_ >= 0).sum
+      val headSum = results.collect {
+        case (n, (_, _, v)) if headline.contains(n) && v >= 0 => v }.sum
+
+      // A SPARK_GRAFT_ONLY-filtered sweep has partial totals — stamp the
+      // filter so a tail capture can never mistake it for a full sweep.
+      val filteredTag = only
+        .map(re => s""","filtered":true,"filter":${new ObjectMapper().writeValueAsString(re)}""")
+        .getOrElse("")
+      // tables Tables.maybeCompact rewrote: the sweep measured the
+      // compacted copy, not the producer file (empty = no rewrite fired)
+      import scala.jdk.CollectionConverters._
+      val compactedTag =
+        s""","compacted":${graft.sources.Tables.compactedTables.asScala.toSeq.sorted
+          .map("\"" + _ + "\"").mkString("[", ",", "]")}"""
+      // load averages + running-java count at sweep start and end: an
+      // idle-box sweep reads ~(this JVM's own load, 1–2 java procs)
+      val boxPost = boxState()
+      val stamps =
+        s""","protocol":"$protocol","passes":$passes,"warmup_s":${jnum(warmupS)}""" +
+          filteredTag + compactedTag +
+          s""","box":{"load1":[${jnum(boxPre._1)},${jnum(boxPost._1)}],""" +
+          s""""load15":[${jnum(boxPre._2)},${jnum(boxPost._2)}],""" +
+          s""""java_procs":[${boxPre._3},${boxPost._3}]}""" +
+          // requested width AND the session's effective parallelism, so
+          // the SPARK_GRAFT_CPUS contract is checkable from the artifact
+          s""","cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism}"""
+      val head =
+        s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
+          s""""headline_b1_b12":${jnum(headSum)},"n_queries":${results.size},"queries":"""
+
+      val fullJson = head + results.map { case (n, (b, e, t)) =>
+        s""""$n":{"build_s":${jnum(b)},"exec_s":${jnum(e)},"sec":${jnum(t)}}"""
+      }.mkString("{", ",", "}") + stamps + s""","sf":"$sfDir"}"""
+      Files.write(Paths.get("bench_out.json"), fullJson.getBytes(StandardCharsets.UTF_8))
+      // bench_out.json is clobbered by every sweep: archive each FULL
+      // sweep under bench_runs/ (filtered probes are partial by design)
+      if (only.isEmpty) {
+        val runsDir = Paths.get("bench_runs")
+        Files.createDirectories(runsDir)
+        Files.write(runsDir.resolve(s"bench_${System.currentTimeMillis / 1000}.json"),
+          fullJson.getBytes(StandardCharsets.UTF_8))
+      }
+
+      println(head + results.collect { case (n, (_, _, t)) if headline.contains(n) =>
+        s""""$n":${jnum(t)}""" }.mkString("{", ",", "}") +
+        stamps + s""","full":"bench_out.json","sf":"$sfDir"}""")
     }
-    val warmupS = pass("warmup", 0, timed = false)
-    val passes = if (warmupS > 600) 1 else 5
-    (0 until passes).foreach(p => pass(s"timed ${p + 1}/$passes", p * k / 5, timed = true))
-
-    // per query: (build_s, exec_s, total) medians; -1 when it failed
-    val results: Seq[(String, (Double, Double, Double))] = selected.map {
-      case (name, _) =>
-        val ts = if (failed(name)) Nil else times(name)
-        val m = (median(ts.map(_._1)), median(ts.map(_._2)),
-          median(ts.map(t => t._1 + t._2)))
-        println(s"""{"q":"$name","build_s":${jnum(m._1)},"exec_s":${jnum(m._2)},"sec":${jnum(m._3)}}""")
-        name -> m
-    }
-    val total = results.map(_._2._3).filter(_ >= 0).sum
-    val headSum = results.collect {
-      case (n, (_, _, v)) if headline.contains(n) && v >= 0 => v }.sum
-
-    // A SPARK_GRAFT_ONLY-filtered sweep has partial totals — stamp the
-    // filter so a tail capture can never mistake it for a full sweep.
-    val filteredTag = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(re => s""","filtered":true,"filter":"${re.replace("\\", "\\\\").replace("\"", "\\\"")}"""")
-      .getOrElse("")
-    // tables Tables.maybeCompact rewrote: the sweep measured the
-    // compacted copy, not the producer file (empty = no rewrite fired)
-    import scala.jdk.CollectionConverters._
-    val compactedTag =
-      s""","compacted":${graft.sources.Tables.compactedTables.asScala.toSeq.sorted
-        .map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-    // load averages + running-java count at sweep start and end: an
-    // idle-box sweep reads ~(this JVM's own load, 1–2 java procs)
-    val boxPost = boxState()
-    val stamps =
-      s""","protocol":"$protocol","passes":$passes,"warmup_s":${jnum(warmupS)}""" +
-        filteredTag + compactedTag +
-        s""","box":{"load1":[${jnum(boxPre._1)},${jnum(boxPost._1)}],""" +
-        s""""load15":[${jnum(boxPre._2)},${jnum(boxPost._2)}],""" +
-        s""""java_procs":[${boxPre._3},${boxPost._3}]}""" +
-        // requested width AND the session's effective parallelism, so
-        // the SPARK_GRAFT_CPUS contract is checkable from the artifact
-        s""","cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism}"""
-    val head =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
-        s""""headline_b1_b12":${jnum(headSum)},"n_queries":${results.size},"queries":"""
-
-    val fullJson = head + results.map { case (n, (b, e, t)) =>
-      s""""$n":{"build_s":${jnum(b)},"exec_s":${jnum(e)},"sec":${jnum(t)}}"""
-    }.mkString("{", ",", "}") + stamps + s""","sf":"$sfDir"}"""
-    Files.write(Paths.get("bench_out.json"), fullJson.getBytes(StandardCharsets.UTF_8))
-    // bench_out.json is clobbered by every sweep: archive each FULL
-    // sweep under bench_runs/ (filtered probes are partial by design)
-    if (only.isEmpty) {
-      val runsDir = Paths.get("bench_runs")
-      Files.createDirectories(runsDir)
-      Files.write(runsDir.resolve(s"bench_${System.currentTimeMillis / 1000}.json"),
-        fullJson.getBytes(StandardCharsets.UTF_8))
-    }
-
-    println(head + results.collect { case (n, (_, _, t)) if headline.contains(n) =>
-      s""""$n":${jnum(t)}""" }.mkString("{", ",", "}") +
-      stamps + s""","full":"bench_out.json","sf":"$sfDir"}""")
-    // close RocksDB natives before the shutdown hook deletes their
-    // working dirs (see StateBackend.shutdown scaladoc)
-    graft.streaming.StateBackend.shutdown()
-    spark.stop()
   }
 }

@@ -5,15 +5,17 @@ import org.apache.spark.sql.SparkSession
 import graft.plans.GraftExtensions
 import graft.streaming.StateBackend
 
-/** The one session configuration. Every main and every spec gets its
-  * SparkSession here, so specs check the plans the bench runs, and
-  * every stateful stream runs on the state store this definition names
-  * (RocksDB; nothing sets the state-store confs at runtime). Callers
-  * pass only the confs they must change. A second call returns the
-  * running session (`getOrCreate`) with the runtime confs re-applied
-  * and the extensions not applied again.
+/** The one session configuration and the one main harness. Every spec
+  * gets its SparkSession here, and every main runs its work inside
+  * [[run]], so specs check the plans the bench runs, every stateful
+  * stream runs on the state store this definition names (RocksDB;
+  * nothing sets the state-store confs at runtime), and every main ends
+  * the same way. Callers pass only the confs they must change. A second
+  * call returns the running session (`getOrCreate`) with the runtime
+  * confs re-applied and the extensions not applied again.
   *
-  * Usage: `GraftSession()` for a `local[localCores]` session,
+  * Usage: `GraftSession.run() { spark => ... }` in a main;
+  * `GraftSession()` for a `local[localCores]` session,
   * `GraftSession(4, Map(key -> value))` to pin the width and override.
   */
 object GraftSession {
@@ -96,5 +98,20 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** A main's whole life: build the session, run `body`, and then,
+    * also when `body` throws, close the RocksDB state stores
+    * ([[StateBackend.shutdown]]) before stopping the session, so no
+    * native flush outlives the working dirs the JVM's shutdown hook
+    * deletes. */
+  def run[T](cores: Int = localCores, overrides: Map[String, String] = Map.empty)
+      (body: SparkSession => T): T = {
+    val spark = apply(cores, overrides)
+    try body(spark)
+    finally {
+      StateBackend.shutdown()
+      spark.stop()
+    }
   }
 }

@@ -9,19 +9,15 @@ import java.nio.file.{Files, Paths}
   * join strategy, PushedFilters/ReadSchema, codegen spans) are checkable
   * files, not prose. `runMain graft.PlanDump <outDir> <tag> [sfDir] [nameRegex]`.
   *
-  * The dump is plan-only (no execution) except for builders that run a
-  * stream or write a table as part of construction — those run exactly as
-  * they do under Verify/Bench, and their dumped plan is the final
-  * DataFrame the driver hashes.
-  *
-  * `SPARK_GRAFT_PLAN_EXEC=1` executes each query FIRST (a `collect()`,
-  * driving the DataFrame's own QueryExecution — a noop-sink write would
-  * plan a separate write QueryExecution and leave this one unexecuted)
-  * and dumps the plan afterwards, so AQE sections show the FINAL runtime
-  * plan (`isFinalPlan=true`: runtime join strategy, coalesced reads, and
+  * Each query is executed first (a `collect()`, driving the DataFrame's
+  * own QueryExecution — a noop-sink write would plan a separate write
+  * QueryExecution and leave this one unexecuted) and its plan dumped
+  * afterwards, so AQE sections show the FINAL runtime plan
+  * (`isFinalPlan=true`: runtime join strategy, coalesced reads, and
   * exchange/stage reuse) instead of the static initial plan — static
   * `.explain` under AQE shows zero ReusedExchange even where the runtime
-  * stage cache collapses every repeated subtree.
+  * stage cache collapses every repeated subtree. A full dump therefore
+  * costs about one Bench pass.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -29,17 +25,12 @@ object PlanDump {
     val tag = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val only = if (args.length > 3) Some(args(3).r) else None
-    val exec = sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("1")
-    val spark = GraftSession()
-    Files.createDirectories(Paths.get(outDir))
-    def naturalKey(n: String): String =
-      "\\d+".r.replaceAllIn(n, m => f"${m.matched.toInt}%06d")
-    SparkEntry.queries.toSeq.sortBy(t => naturalKey(t._1))
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-      .foreach { case (name, fn) =>
+    GraftSession.run() { spark =>
+      Files.createDirectories(Paths.get(outDir))
+      SparkEntry.select(only).foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
-          if (exec) df.collect()
+          df.collect()
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           Files.write(Paths.get(outDir, s"${name}_$tag.txt"),
@@ -50,7 +41,6 @@ object PlanDump {
             System.err.println(s"[plandump] $name failed: ${e.getMessage}")
         }
       }
-    graft.streaming.StateBackend.shutdown()
-    spark.stop()
+    }
   }
 }

@@ -43,9 +43,7 @@ object ScaleGen {
     val out = if (args.length > 1) args(1) else "scaledata/sf1-synth"
     val tiles = if (args.length > 2) args(2).toInt else 10
     val tablesRe = if (args.length > 3) args(3) else ".*"
-    val spark = GraftSession()
-    generate(spark, src, out, tiles, tablesRe)
-    spark.stop()
+    GraftSession.run()(generate(_, src, out, tiles, tablesRe))
   }
 
   def generate(s: SparkSession, src: String, out: String, tiles: Int,

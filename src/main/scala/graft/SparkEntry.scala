@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.multimodal.Multimodal
@@ -26,6 +28,16 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     oracled.map { case (name, fn, _) => name -> fn }.toMap
+
+  /** The builders every main runs, in natural (numeric-aware) name
+    * order, b2 before b10, keeping only the names `only` finds a match
+    * in (all of them for `None`). */
+  def select(only: Option[Regex]): IndexedSeq[(String, (SparkSession, String) => DataFrame)] = {
+    val digits = "\\d+".r
+    queries.toIndexedSeq
+      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
+      .sortBy { case (name, _) => digits.replaceAllIn(name, m => f"${m.matched.toInt}%06d") }
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,8 +1,25 @@
 package graft
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+/** Correctness dump: each SparkEntry query result → parquet under
+  * `<outDir>/<name>`, in natural name order, plus `oracle_sql.json`,
+  * for the DuckDB compare (`scripts/check.py`).
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir>`
+  */
 object Verify {
+
+  /** `oracle_sql.json`: one JSON object of query name → oracle SQL, keys
+    * sorted. Jackson escapes every control character, so a tab or CR in
+    * an oracle's SQL cannot break the compare's `json.load`. */
+  def oracleJson(sql: Map[String, String]): String =
+    new ObjectMapper().writeValueAsString(new java.util.TreeMap(sql.asJava))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // SPARK_GRAFT_SHUFFLE decouples the shuffle-partition count from
@@ -11,44 +28,26 @@ object Verify {
     // results under ANY (threads, partitions) pairing, and the sweep
     // measures that promise instead of assuming it. Under AQE the
     // exchanges start at initialPartitionNum, so both are set.
-    val spark = GraftSession(overrides = sys.env.get("SPARK_GRAFT_SHUFFLE")
+    val overrides = sys.env.get("SPARK_GRAFT_SHUFFLE")
       .map(n => Map("spark.sql.shuffle.partitions" -> n,
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> n))
-      .getOrElse(Map.empty))
-    new java.io.File(outDir).mkdirs()
+      .getOrElse(Map.empty[String, String])
     // SPARK_GRAFT_ONLY: optional regex narrowing the dump to matching
     // query names — scale probes over table-subset corpora (ScaleGen
     // tablesRe) run just the family the corpus carries. Same contract
     // as Bench's filter; the driver never sets it, so driver rounds
     // always dump the full surface.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    GraftSession.run(overrides = overrides) { spark =>
+      new java.io.File(outDir).mkdirs()
+      SparkEntry.select(only).foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // close RocksDB natives before the shutdown hook deletes their
-    // working dirs (see StateBackend.shutdown scaladoc)
-    graft.streaming.StateBackend.shutdown()
-    spark.stop()
   }
 }

@@ -190,15 +190,12 @@ object CapPipeline {
   private val jsExpiresMs =
     udf((s: String) => graft.functions.JsCompat.jsDateParse(s).map(_.toEpochMilli))
 
-  /** The F1 predicate against a clock column in epoch milliseconds: a
-    * literal for the deterministic batch path, `unix_millis(current_timestamp())`
-    * for the per-batch streaming clock (CapStream.featuresNow). */
-  private[graft] def activeAt(nowMs: Column): Column =
-    col("expires") === "" ||
-      coalesce(jsExpiresMs(col("expires")) >= nowMs, lit(true))
-
+  /** F1: the alerts active at `asOf` — no `expires`, an `expires` at
+    * or after `asOf`, or one JS cannot parse. The same filter serves
+    * batch and streaming Datasets (CapStreamSpec runs it on both). */
   def filterActive(alerts: Dataset[CapAlert], asOf: Instant): Dataset[CapAlert] =
-    alerts.filter(activeAt(lit(asOf.toEpochMilli)))
+    alerts.filter(col("expires") === "" ||
+      coalesce(jsExpiresMs(col("expires")) >= lit(asOf.toEpochMilli), lit(true)))
 
   // ---------------------------------------------------------------
   // X2 fan-out — typed flatMap over the heavily unit-tested pure

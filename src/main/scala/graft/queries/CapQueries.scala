@@ -2,14 +2,16 @@ package graft.queries
 
 import java.time.Instant
 
+import scala.collection.immutable.SortedMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cap.CapPipeline
 
 /** CAP ETL pipeline exposed on the driver's queries surface. Not
-  * SQL-expressible (XML + custom fan-out semantics), so there is no
-  * DuckDB oracle — the driver records a rows-only check; full semantic
+  * SQL-expressible (XML + custom fan-out semantics), so each oracle
+  * reads a checked-in golden parquet ([[goldens]]); full semantic
   * coverage lives in the ScalaTest suites + golden files.
   */
 object CapQueries {
@@ -66,19 +68,27 @@ object CapQueries {
     * The goldens are locked to the hand-verified fixture JSON goldens
     * (fixtures/golden) by CapPipelineSpec/FeaturesSpec — this
     * turns the XML pipeline's spec coverage into a driver-checkable
-    * rows+schema+hash gate instead of a rows-only smoke check. Absolute
-    * paths into the checkout in use: DuckDB runs from another directory. */
-  private def golden(name: String): String =
-    new java.io.File(resolve("fixtures/golden"), name).getAbsolutePath
+    * rows+schema+hash gate instead of a rows-only smoke check.
+    *
+    * The one table of golden files: query name → the file its oracle
+    * reads and GoldenGen writes. Absolute paths into the checkout in
+    * use: DuckDB runs from another directory. */
+  val goldens: SortedMap[String, String] = SortedMap(
+    "cap1_features" -> "cap1_features.parquet",
+    "cap2_feed_links" -> "cap2_feed_links.parquet",
+    "cap3_quarantine" -> "cap3_quarantine.parquet",
+    "cap4_stream_lifecycle" -> "cap4_lifecycle.parquet",
+    "cap5_stream_transitions" -> "cap5_transitions.parquet")
+    .map { case (q, f) => q -> new java.io.File(resolve("fixtures/golden"), f).getAbsolutePath }
 
   val cap1Sql: String =
-    s"SELECT id, json FROM '${golden("cap1_features.parquet")}' ORDER BY id"
+    s"SELECT id, json FROM '${goldens("cap1_features")}' ORDER BY id"
 
   val cap2Sql: String =
-    s"SELECT link FROM '${golden("cap2_feed_links.parquet")}'"
+    s"SELECT link FROM '${goldens("cap2_feed_links")}'"
 
   val cap3Sql: String =
-    s"SELECT identifier, error FROM '${golden("cap3_quarantine.parquet")}' ORDER BY identifier"
+    s"SELECT identifier, error FROM '${goldens("cap3_quarantine")}' ORDER BY identifier"
 
   /** cap4: the mapGroupsWithState alert lifecycle (Alert → Update* →
     * Cancel, terminal cancel) over a fixture chain, run through the
@@ -116,10 +126,10 @@ object CapQueries {
   }
 
   val cap4Sql: String =
-    s"SELECT identifier, status, msg_chain, last_sent FROM '${golden("cap4_lifecycle.parquet")}' ORDER BY identifier"
+    s"SELECT identifier, status, msg_chain, last_sent FROM '${goldens("cap4_stream_lifecycle")}' ORDER BY identifier"
 
   val cap5Sql: String =
-    s"SELECT identifier, from_status, to_status, msg_type, sent FROM '${golden("cap5_transitions.parquet")}' ORDER BY identifier, sent"
+    s"SELECT identifier, from_status, to_status, msg_type, sent FROM '${goldens("cap5_stream_transitions")}' ORDER BY identifier, sent"
 
   val queries: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
     ("cap1_features", capFeatures _, cap1Sql),

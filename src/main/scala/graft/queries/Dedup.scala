@@ -268,15 +268,11 @@ object Dedup {
     * (InMemoryTableScan — plan-asserted in PlanShapeSpec). At 100 TB
     * the equivalent is writing the verified pairs once as a table;
     * in-session the cache is that table. Lifecycle (weak session keys,
-    * eager [[releaseSharedPairs]]) lives in the one shared idiom,
+    * eager [[SharedRelation.releaseAll]]) lives in the one shared idiom,
     * [[SharedRelation]].
     */
   def d2MinhashLsh(s: SparkSession, d: String): DataFrame =
     SharedRelation(s, "dedup.pairs", d)(d2Pairs(Tables.documents(s, d)))
-
-  /** Unpersist and forget the shared pair relation(s) of `s`. */
-  def releaseSharedPairs(s: SparkSession): Unit =
-    SharedRelation.release(s, "dedup.pairs")
 
   /** Shared DuckDB CTE chain mirroring [[d2Pairs]] exactly: exact-dup
     * collapse → shingles → minhash → capped bands → verified rep pairs

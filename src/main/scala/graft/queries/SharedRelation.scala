@@ -20,9 +20,9 @@ import org.apache.spark.storage.StorageLevel
   *    InMemoryTableScan — plan-asserted in PlanShapeSpec);
   *  - sessions are held WEAKLY, so the registry can never pin a
   *    stopped session's cache entries;
-  *  - [[release]] drops one family's entries eagerly (unpersist +
-  *    forget), [[releaseAll]] a session's whole registry — test
-  *    hygiene and the corpus-swap path in long-lived sessions.
+  *  - [[releaseAll]] drops a session's whole registry eagerly
+  *    (unpersist + forget) — Bench's per-run reset, test hygiene and
+  *    the corpus-swap path in long-lived sessions.
   *
   * At 100 TB the equivalent of every entry here is writing the
   * relation once as a table and reading it from each consumer;
@@ -51,15 +51,6 @@ object SharedRelation {
   def apply(s: SparkSession, family: String, key: Any)(build: => DataFrame): DataFrame =
     perSession(s).getOrElseUpdate((family, key),
       build.persist(StorageLevel.MEMORY_AND_DISK))
-
-  /** Unpersist and forget every `family` entry of session `s`. */
-  def release(s: SparkSession, family: String): Unit = registry.synchronized {
-    val m = registry.get(s)
-    if (m != null) m.filterInPlace { case ((f, _), df) =>
-      if (f == family) df.unpersist()
-      f != family
-    }
-  }
 
   /** Unpersist and forget ALL of session `s`'s shared relations. */
   def releaseAll(s: SparkSession): Unit = registry.synchronized {

@@ -319,8 +319,8 @@ object Similarity {
     // the persisted band relation goes through the one shared-cache
     // idiom ([[SharedRelation]], r16 verdict task 6) — keyed by the
     // input's canonicalized plan + geometry so distinct corpora get
-    // distinct entries, with releaseSharedBands as the eager hygiene
-    // hook the anonymous persist() lacked
+    // distinct entries, with SharedRelation.releaseAll as the eager
+    // hygiene hook the anonymous persist() lacked
     val b = SharedRelation(s, "d5.bands",
       (emb.queryExecution.logical.canonicalized, nPlanes))(
       bands(emb, nPlanes, bits))
@@ -336,11 +336,6 @@ object Similarity {
       .select(col("a.vec_id").as("qid"), col("b.vec_id").as("vec_id"))
       .distinct()
   }
-
-  /** Unpersist and forget `s`'s shared d5 band relations (all corpora
-    * and both geometries). */
-  def releaseSharedBands(s: SparkSession): Unit =
-    SharedRelation.release(s, "d5.bands")
 
   def d5EmbeddingNeardup(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)

@@ -41,7 +41,7 @@ object TextStats {
     * each pair as two independent corpus scans — the per-row top-100
     * kernel (the dominant per-row cost) and the vocabulary groupBy
     * would both run twice per query. Lifecycle (weak session keys,
-    * eager [[releaseSharedProfs]]) lives in the one shared idiom,
+    * eager [[SharedRelation.releaseAll]]) lives in the one shared idiom,
     * [[SharedRelation]]. At
     * 100 TB the equivalent is writing both tables once and reading
     * them from every consumer.
@@ -89,12 +89,6 @@ object TextStats {
         .select(col("lang").as("cand"), col("ng").as("lng"), col("lrank"))
     }
     (profs, langProf)
-  }
-
-  /** Unpersist and forget the shared T1 relations of `s`. */
-  def releaseSharedProfs(s: SparkSession): Unit = {
-    SharedRelation.release(s, "t1.profs")
-    SharedRelation.release(s, "t1.langprof")
   }
 
   // -------------------------------------------------------------------

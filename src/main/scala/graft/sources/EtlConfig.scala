@@ -8,8 +8,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * defaulting to 2. Both DSv2 connectors (capfeed source, cloudtak
   * sink) parse their options through [[EtlConfig.fromOptions]], so the
   * defaults, validation, and the published JSON schema are one
-  * definition that cannot drift apart. There is no engine-only
-  * option: an option not named here is ignored.
+  * definition that cannot drift apart. One option lives outside it:
+  * `capfeed` alone reads `numPartitions` (default 4), the number of
+  * partitions its alert links are spread over, in the batch scan and
+  * in every micro-batch; the `cloudtak` sink ignores it. Any other
+  * option not named here is ignored.
   */
 final case class EtlConfig(
     url: String,

@@ -1,12 +1,9 @@
 package graft.streaming
 
-import java.time.Instant
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-import graft.cap.{CapAlert, CapPipeline, CotFeature}
+import graft.cap.{CapAlert, CapPipeline}
 
 /** Lifecycle state carried across micro-batches for one alert id. */
 final case class AlertLifecycle(identifier: String, status: String,
@@ -18,26 +15,25 @@ final case class AlertTransition(identifier: String, fromStatus: String,
 
 /** Streaming mode for the CAP pipeline (SURVEY §2.9): the reference's
   * "streaming" is scheduled whole-batch re-execution (task.ts:66); here
-  * the same operators run as a Structured Streaming job —
-  * `Trigger.AvailableNow` replaces the external scheduler, incremental
-  * file listing replaces refetching, within-stream dedup replaces the
-  * downstream upsert, and `mapGroupsWithState` adds the alert-lifecycle
+  * a Structured Streaming job reads the alert files incrementally
+  * (`Trigger.AvailableNow` replaces the external scheduler), and
+  * `mapGroupsWithState`/`flatMapGroupsWithState` add the alert-lifecycle
   * tracking the reference leaves to CloudTAK (msgType field exists at
   * task.ts:31 but is never consumed).
   *
-  * All transforms below are the SAME operators as the batch path
-  * (CapPipeline.parseAlerts / filterActive / toFeatures run unchanged on
-  * streaming Datasets) — the engine's batch/stream unification story.
+  * The stateless steps have no streaming copy: CapPipeline.parseAlerts
+  * / filterActive / toFeatures run unchanged on the streaming
+  * [[alerts]] Dataset (CapStreamSpec drains them against the batch
+  * pipeline) — the engine's batch/stream unification story.
   */
 object CapStream {
 
   /** Streaming source: one CAP XML document per file in `xmlDir`.
     * No maxFilesPerTrigger cap by default: with Trigger.AvailableNow
-    * that means ONE micro-batch over the whole directory, which is what
-    * makes `features` reproduce the batch pipeline exactly (a cap would
-    * split event-time-unordered files across batches and the watermark
-    * in `severityCounts` would then legitimately drop late ones). Pass
-    * `maxFilesPerTrigger > 0` for incremental continuous deployments. */
+    * that means ONE micro-batch over the whole directory, so the
+    * lifecycle surfaces (cap4, cap5) see every alert of a chain in one
+    * batch. Pass `maxFilesPerTrigger > 0` for incremental continuous
+    * deployments. */
   def alerts(spark: SparkSession, xmlDir: String,
       maxFilesPerTrigger: Int = 0): Dataset[CapAlert] = {
     import spark.implicits._
@@ -48,44 +44,6 @@ object CapStream {
       else reader
     CapPipeline.parseAlerts(capped.text(xmlDir).as[String])
   }
-
-  /** Features stream with a DETERMINISTIC clock — for tests and
-    * replayable backfills. Dedup keys on `identifier` BEFORE the
-    * fan-out so state is one row per alert, not per feature. Plain
-    * dropDuplicates state grows with distinct alert ids (fine for CAP
-    * feeds: tens of ids; use [[featuresNow]]'s watermarked dedup for
-    * unbounded streams). */
-  def features(alerts: Dataset[CapAlert], asOf: Instant): Dataset[CotFeature] =
-    CapPipeline.toFeatures(
-      CapPipeline.filterActive(alerts, asOf).dropDuplicates("identifier"))
-
-  /** Production streaming variant: per-batch wall clock (the reference
-    * re-evaluates `new Date()` every scheduled run — a frozen asOf
-    * would keep emitting alerts that expired after query start) and
-    * watermarked dedup so state is dropped once `sent` falls behind
-    * the watermark. */
-  def featuresNow(alerts: Dataset[CapAlert]): Dataset[CotFeature] = {
-    import alerts.sparkSession.implicits._
-    CapPipeline.toFeatures(
-      alerts.filter(CapPipeline.activeAt(unix_millis(current_timestamp())))
-        .withColumn("sent_ts", to_timestamp(col("sent")))
-        .withWatermark("sent_ts", "1 hour")
-        .dropDuplicatesWithinWatermark("identifier")
-        .drop("sent_ts")
-        .as[CapAlert])
-  }
-
-  /** Tumbling-window severity counts with a watermark on `sent` — the
-    * streaming analog of the batch B11 time-window aggregation. Late
-    * alerts beyond 10 minutes are dropped by the watermark, bounding
-    * state. */
-  def severityCounts(alerts: Dataset[CapAlert]): DataFrame =
-    alerts
-      .withColumn("sent_ts", to_timestamp(col("sent")))
-      .filter(col("sent_ts").isNotNull)
-      .withWatermark("sent_ts", "10 minutes")
-      .groupBy(window(col("sent_ts"), "1 hour"), col("severity"))
-      .agg(count(lit(1)).as("n"))
 
   /** Absolute time of a CAP timestamp; unparseable sorts first. CAP
     * timestamps mix UTC offsets (`+12:00` vs `Z`), so ordering and

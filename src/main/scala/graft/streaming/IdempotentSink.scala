@@ -45,7 +45,7 @@ object IdempotentSink {
       .drop("batch_id")
   }
 
-  private def batchDirs(s: SparkSession, outDir: String): Array[String] = {
+  private[streaming] def batchDirs(s: SparkSession, outDir: String): Array[String] = {
     val p = new org.apache.hadoop.fs.Path(outDir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(p))

@@ -96,10 +96,10 @@ object StateBackend {
     * out from under the native thread: at best a spurious
     * `ERROR RocksDB ... background flush error: IO error` in the
     * process tail (seen on the ×300 stream probe), at worst a SIGSEGV
-    * in the JNI logger callback racing teardown. Entry points that run
-    * streams and then exit (Bench, Verify) call this right before
-    * `spark.stop()`; `StateStore.stop()` is idempotent and a later
-    * stream in the same JVM lazily restarts the maintenance task. */
+    * in the JNI logger callback racing teardown. Every main ends in
+    * [[graft.GraftSession.run]], which calls this right before it stops
+    * the session; the store's stop is idempotent and a later stream in
+    * the same JVM lazily restarts the maintenance task. */
   def shutdown(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 }

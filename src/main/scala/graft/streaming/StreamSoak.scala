@@ -35,9 +35,10 @@ import org.apache.spark.sql.functions._
   *    genuinely elapsed mid-corpus) and are counted, not failed.
   *
   * The building blocks (slicing, the drained run with optional
-  * mid-soak kill, the per-key last-update read-back) are exposed so
-  * `SoakSpec` gates a compact version of the same path in `sbt test`;
-  * this main is the full-depth probe.
+  * mid-soak kill, the per-key last-update read-back, the batch oracles
+  * and the parity count) are exposed so `SoakSpec` gates a compact
+  * version of the same path in `sbt test`; this main is the full-depth
+  * probe.
   *
   * Usage: runMain graft.streaming.StreamSoak [sfDir] [nSlices] [workDir]
   * Output: one JSON line per query + one for the kill/resume leg.
@@ -138,15 +139,47 @@ object StreamSoak {
     * an update-mode stream's converged value lives in (the batch_id
     * partition column orders the re-emissions). */
   def lastUpdate(spark: SparkSession, out: String, keys: Seq[String]): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(out)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(p).map(_.getPath.toString)
-      .filter(_.contains("batch_id=")).toIndexedSeq
-    val all = spark.read.option("basePath", out).parquet(dirs: _*)
+    val all = spark.read.option("basePath", out)
+      .parquet(IdempotentSink.batchDirs(spark, out).toIndexedSeq: _*)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col("batch_id").desc)
     all.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .drop("rn", "batch_id")
   }
+
+  /** Rows whose multiplicity across `got` and `want` is not exactly 2:
+    * zero when the two duplicate-free results hold the same rows. */
+  def asymmetricRows(got: DataFrame, want: DataFrame): Long =
+    got.unionAll(want).groupBy(got.columns.map(col).toIndexedSeq: _*)
+      .count().filter(col("count") =!= 2).count()
+
+  // The batch oracles, each computed from the raw events table `ev`.
+
+  /** b47: the sorted event ids of `df`; the deduped doubled stream's
+    * committed ids must equal those of the raw table. */
+  def eventIds(df: DataFrame): Seq[Long] = {
+    import df.sparkSession.implicits._
+    df.select("event_id").as[Long].collect().sorted.toSeq
+  }
+
+  /** b51: the batch GROUP BY the converged per-user state must equal. */
+  def b51Oracle(ev: DataFrame): DataFrame = ev.groupBy("user_id").agg(
+    count(lit(1)).as("n_events"), max(col("value")).as("max_value"),
+    min(unix_micros(col("ts"))).as("first_ts_us"),
+    max(unix_micros(col("ts"))).as("last_ts_us"))
+
+  /** b45: the batch twin (sessionAgg is batch/stream agnostic)
+    * restricted to sessions the FINAL watermark closed: wm_ms =
+    * floor(max_us/1000) - 2h, emit when sess_end_us <= wm_ms*1000 (the
+    * same ms truncation the engine applies — the b57 oracle lesson). */
+  def b45Oracle(ev: DataFrame): DataFrame =
+    EventStream.sessionAgg(ev)
+      .crossJoin(ev.agg(
+        ((floor(max(unix_micros(col("ts"))) / 1000) - 7200000L) * 1000).as("wm_us")))
+      .filter(col("sess_end_us") <= col("wm_us"))
+      .drop("wm_us")
+
+  /** b46: the batch interval self-join. */
+  def b46Oracle(ev: DataFrame): DataFrame = EventStream.clickErrorJoin(ev, ev)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -161,11 +194,13 @@ object StreamSoak {
     // state shrinks after watermark eviction), so the soak opts back
     // into the RocksDB row-count tracking the session definition turns
     // off for the per-write GET it costs.
-    val spark = graft.GraftSession(overrides = Map(
+    graft.GraftSession.run(overrides = Map(
       "spark.sql.streaming.numRecentProgressUpdates" -> "256",
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "true"))
-    import spark.implicits._
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "true"))(
+      soak(_, sfDir, nSlices, work))
+  }
 
+  private def soak(spark: SparkSession, sfDir: String, nSlices: Int, work: String): Unit = {
     val (arrivals, arrivalsDup, ev) =
       writeTimeSlices(spark, sfDir, nSlices, work)
     val evSchema = ev.schema
@@ -198,9 +233,8 @@ object StreamSoak {
       val out = s"$work/b47/out"; val ckpt = s"$work/b47/ckpt"
       val r = drive(spark, "soak_b47",
         EventStream.dedupedEvents(arr(arrivalsDup)), "append", ckpt, out, statePath)
-      val got = IdempotentSink.readBack(spark, out)
-        .select("event_id").as[Long].collect().sorted.toSeq
-      val want = evB.select("event_id").as[Long].collect().sorted.toSeq
+      val got = eventIds(IdempotentSink.readBack(spark, out))
+      val want = eventIds(evB)
       val parity = if (got == want) "ok"
         else s"FAIL got=${got.size} want=${want.size}"
       report("b47_dedup", Seq(r), parity)
@@ -213,13 +247,7 @@ object StreamSoak {
       val half = drive(spark, "soak_b51", df, "update", ckpt, out, statePath,
         killAfter = nSlices / 2)
       val rest = drive(spark, "soak_b51_resume", df, "update", ckpt, out, statePath)
-      val got = lastUpdate(spark, out, Seq("user_id"))
-      val want = evB.groupBy("user_id").agg(
-        count(lit(1)).as("n_events"), max(col("value")).as("max_value"),
-        min(unix_micros(col("ts"))).as("first_ts_us"),
-        max(unix_micros(col("ts"))).as("last_ts_us"))
-      val diff = got.unionAll(want).groupBy(got.columns.map(col).toIndexedSeq: _*)
-        .count().filter(col("count") =!= 2).count()
+      val diff = asymmetricRows(lastUpdate(spark, out, Seq("user_id")), b51Oracle(evB))
       val parity = if (diff == 0) "ok" else s"FAIL $diff asymmetric rows"
       val kb = half.progress.count(_._2 > 0)
       report("b51_tws_killresume", Seq(half, rest), parity,
@@ -231,10 +259,8 @@ object StreamSoak {
       val out = s"$work/b53/out"; val ckpt = s"$work/b53/ckpt"
       val r = drive(spark, "soak_b53",
         EventStream.typeHistogram(arr(arrivals)), "update", ckpt, out, statePath)
-      val got = lastUpdate(spark, out, Seq("user_id", "event_type"))
-      val want = evB.groupBy("user_id", "event_type").agg(count(lit(1)).as("n_events"))
-      val diff = got.unionAll(want).groupBy(got.columns.map(col).toIndexedSeq: _*)
-        .count().filter(col("count") =!= 2).count()
+      val diff = asymmetricRows(lastUpdate(spark, out, Seq("user_id", "event_type")),
+        evB.groupBy("user_id", "event_type").agg(count(lit(1)).as("n_events")))
       report("b53_mapstate", Seq(r), if (diff == 0) "ok" else s"FAIL $diff")
     }
 
@@ -250,19 +276,9 @@ object StreamSoak {
         killAfter = nSlices / 2)
       val rest = drive(spark, "soak_b45_resume", df, "append", ckpt, out, statePath)
       val got = IdempotentSink.readBack(spark, out)
-      // batch twin (sessionAgg is batch/stream agnostic) restricted to
-      // sessions the FINAL watermark closed: wm_ms = floor(max_us/1000)
-      // - 2h, emit when sess_end_us <= wm_ms*1000 (same ms truncation
-      // the engine applies — the b57 oracle lesson)
-      val want = EventStream.sessionAgg(evB)
-        .crossJoin(evB.agg(
-          ((floor(max(unix_micros(col("ts"))) / 1000) - 7200000L) * 1000)
-            .as("wm_us")))
-        .filter(col("sess_end_us") <= col("wm_us"))
-        .drop("wm_us")
+      val want = b45Oracle(evB)
       val nGot = got.count(); val nWant = want.count()
-      val diff = got.unionAll(want).groupBy(got.columns.map(col).toIndexedSeq: _*)
-        .count().filter(col("count") =!= 2).count()
+      val diff = asymmetricRows(got, want)
       val parity = if (diff == 0) "ok"
         else s"FAIL $diff asymmetric rows (got=$nGot want=$nWant)"
       val kb = half.progress.count(_._2 > 0)
@@ -286,10 +302,9 @@ object StreamSoak {
         killAfter = nSlices / 2)
       val rest = drive(spark, "soak_b46_resume", df, "append", ckpt, out, statePath)
       val got = IdempotentSink.readBack(spark, out)
-      val want = EventStream.clickErrorJoin(evB, evB)
+      val want = b46Oracle(evB)
       val nGot = got.count(); val nWant = want.count()
-      val diff = got.unionAll(want).groupBy(got.columns.map(col).toIndexedSeq: _*)
-        .count().filter(col("count") =!= 2).count()
+      val diff = asymmetricRows(got, want)
       val parity = if (diff == 0) "ok"
         else s"FAIL $diff asymmetric rows (got=$nGot want=$nWant)"
       val kb = half.progress.count(_._2 > 0)
@@ -329,7 +344,5 @@ object StreamSoak {
     }
 
     evB.unpersist()
-    StateBackend.shutdown()
-    spark.stop()
   }
 }

@@ -15,8 +15,9 @@ import graft.plans.AsOfJoinStrategy
   * rule: graft functions reach a session only through
   * [[graft.plans.GraftExtensions]]; the one-runtime rule: every stream
   * in the engine starts in [[graft.streaming.StreamRunner.drain]];
-  * that only the entry points read environment variables; and that each
-  * CAP step spelled as a literal has one home.
+  * that only the entry points read environment variables; that every
+  * main ends in [[GraftSession.run]]; and that each CAP step spelled as
+  * a literal has one home.
   */
 class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
 
@@ -27,6 +28,8 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
   private val envRead = "sys" + ".env"
   private val linkTag = "<" + "link"
   private val envelope = "\"Feature" + "Collection\""
+  private val stateShutdown = "StateBackend" + ".shutdown()"
+  private val stopCall = "." + "stop()"
 
   private lazy val sources: Seq[(Path, String)] =
     Seq("src/main/scala", "src/test/scala").flatMap { root =>
@@ -84,11 +87,22 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
       s"writeStream called outside StreamRunner.drain: $sites")
   }
 
-  test("in src/main only GraftSession, Bench, Verify and PlanDump read the environment") {
+  test("in src/main only GraftSession, Bench and Verify read the environment") {
     val readers = mainCallSites(envRead).keySet
     assert(readers.nonEmpty, "the scan found no environment read at all; wrong working directory?")
-    val outside = readers -- Seq("GraftSession", "Bench", "Verify", "PlanDump").map(mainFile)
+    val outside = readers -- Seq("GraftSession", "Bench", "Verify").map(mainFile)
     assert(outside.isEmpty, s"environment read outside the entry points: $outside")
+  }
+
+  test("in src/main only GraftSession.run closes the state stores and stops the session") {
+    val shutdowns = mainCallSites(stateShutdown)
+    // the other two stops are a drained query's and the state store's own
+    val stops = mainCallSites(stopCall)
+    assert(shutdowns == Map(mainFile("GraftSession") -> 1) &&
+      stops == Map(mainFile("GraftSession") -> 1,
+        mainFile("streaming/StreamRunner") -> 1, mainFile("streaming/StateBackend") -> 1),
+      s"StateBackend.shutdown called in $shutdowns, only GraftSession.run may; " +
+        s"stop() called in $stops, only GraftSession.run, StreamRunner.drain and StateBackend may")
   }
 
   test("in src/main only FeedLinks spells <link and only Features the envelope") {

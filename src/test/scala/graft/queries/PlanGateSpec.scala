@@ -95,6 +95,6 @@ class PlanGateSpec extends AnyFunSuite with GraftTestSession {
     val window = rows(TextStats.t1LangIdWindowForm(spark, sf))
     assert(kernel == window,
       s"t1 kernel/window divergence: ${(kernel diff window).take(3)} vs ${(window diff kernel).take(3)}")
-    TextStats.releaseSharedProfs(spark)
+    SharedRelation.releaseAll(spark)
   }
 }

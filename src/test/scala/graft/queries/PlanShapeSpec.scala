@@ -92,7 +92,7 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
         s"$q broadcasts a corpus-scaled relation (the ×30 OOM shape):\n$p")
       assert(p.contains("SortMergeJoin"), s"$q lost the SMJ pin:\n$p")
     }
-    graft.queries.Dedup.releaseSharedPairs(spark)
+    SharedRelation.releaseAll(spark)
   }
 
   test("d4: the verify reads per-document sets; the only Generate is the length-bucket emit") {
@@ -153,7 +153,7 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
     val p39 = plan("b39_argmax")
     assert(p39.contains("ObjectHashAggregate"),
       s"b39's typed string argmin/argmax must ride ObjectHashAggregate:\n$p39")
-    graft.queries.Dedup.releaseSharedPairs(spark)
+    SharedRelation.releaseAll(spark)
   }
 
   test("d8b/s2/s7: centroid assignment is a hash aggregate, never a sorted window") {
@@ -323,7 +323,7 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
     assert(docScans.isEmpty,
       s"t1's outer plan must not re-scan documents.parquet (both corpus " +
         s"passes live inside the cached builds), saw ${docScans.length}:\n$opt")
-    graft.queries.TextStats.releaseSharedProfs(spark)
+    SharedRelation.releaseAll(spark)
   }
 
   test("s7: the PQ codebook joins via broadcast; no all-pairs scoring") {
@@ -411,7 +411,7 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
       }
       assert(docScans.isEmpty,
         s"d6 re-planned the MinHash subtree (${docScans.length} documents scans):\n$opt")
-    } finally graft.queries.Dedup.releaseSharedPairs(spark)
+    } finally SharedRelation.releaseAll(spark)
   }
 
   test("s7/s11: the PQ argmin re-aligns on (vec_id, sub) before aggregating — never fused into the distance agg's stage") {
@@ -465,7 +465,7 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
     val keyC = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     val prevA = spark.conf.getOption(keyA)
     val prevC = spark.conf.getOption(keyC)
-    graft.queries.Dedup.releaseSharedPairs(spark)
+    SharedRelation.releaseAll(spark)
     try {
       spark.conf.set(keyA, "64")
       spark.conf.set(keyC, "true") // must be set BEFORE the cache is built
@@ -476,7 +476,7 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
         s"cache read kept $parts partitions for a tiny result — AQE did " +
           "not re-plan the cached output (canChangeCachedPlanOutputPartitioning regression)")
     } finally {
-      graft.queries.Dedup.releaseSharedPairs(spark)
+      SharedRelation.releaseAll(spark)
       Seq((keyA, prevA), (keyC, prevC)).foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

@@ -32,29 +32,16 @@ class SharedRelationSpec extends AnyFunSuite with GraftTestSession {
     // a distinct key is a distinct entry — no cross-key aliasing
     SharedRelation(spark, "spec.memo", "k2")(spark.range(5).toDF("id"))
     assert(SharedRelation.entryCount(spark, "spec.memo") == 2)
-    SharedRelation.release(spark, "spec.memo")
+    SharedRelation.releaseAll(spark)
     assert(SharedRelation.entryCount(spark, "spec.memo") == 0)
     assert(a.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "release must unpersist the relation")
   }
 
-  test("release is family-scoped: other families survive") {
-    val a = SharedRelation(spark, "spec.famA", 1)(spark.range(10).toDF("id"))
-    val b = SharedRelation(spark, "spec.famB", 1)(spark.range(10, 20).toDF("id"))
-    SharedRelation.release(spark, "spec.famA")
-    assert(a.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(b.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-      "releasing famA must not unpersist famB")
-    assert(SharedRelation.entryCount(spark, "spec.famB") == 1)
-    SharedRelation.release(spark, "spec.famB")
-  }
-
   test("call sites: repeated evaluation holds the registry flat; release unpersists") {
     // suites share this JVM's SparkSession — drop any entries earlier
     // suites left so the exact counts below are deterministic
-    Dedup.releaseSharedPairs(spark)
-    TextStats.releaseSharedProfs(spark)
-    Similarity.releaseSharedBands(spark)
+    SharedRelation.releaseAll(spark)
     // d2 pairs — one entry however many consumers run
     val p1 = Dedup.d2MinhashLsh(spark, sf)
     Dedup.d2MinhashLsh(spark, sf); Dedup.d2MinhashLsh(spark, sf)
@@ -76,13 +63,11 @@ class SharedRelationSpec extends AnyFunSuite with GraftTestSession {
     assert(SharedRelation.entryCount(spark, "d5.bands") == 2)
 
     // release actually unpersists and empties each family
-    Dedup.releaseSharedPairs(spark)
+    SharedRelation.releaseAll(spark)
     assert(SharedRelation.entryCount(spark, "dedup.pairs") == 0)
     assert(p1.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    TextStats.releaseSharedProfs(spark)
     assert(SharedRelation.entryCount(spark, "t1.profs") == 0)
     assert(SharedRelation.entryCount(spark, "t1.langprof") == 0)
-    Similarity.releaseSharedBands(spark)
     assert(SharedRelation.entryCount(spark, "d5.bands") == 0)
   }
 }

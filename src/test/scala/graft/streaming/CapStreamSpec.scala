@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.cap.{CapAlert, CapPipeline}
 import graft.GraftTestSession
 
-/** Streaming semantics: AvailableNow over the fixture directory must
-  * reproduce the batch pipeline's output; watermarked window agg and
-  * stateful lifecycle run on MemoryStream-driven micro-batches.
+/** Streaming semantics: the batch pipeline's steps, drained AvailableNow
+  * over the fixture directory, must reproduce the batch pipeline's
+  * output; the stateful lifecycle runs on MemoryStream-driven
+  * micro-batches.
   */
 class CapStreamSpec extends AnyFunSuite with GraftTestSession {
 
@@ -27,10 +28,11 @@ class CapStreamSpec extends AnyFunSuite with GraftTestSession {
     import spark.implicits._
     val expected = {
       val xml = spark.read.option("wholetext", "true").text("fixtures/cap").as[String]
-      CapStream.features(CapPipeline.parseAlerts(xml), asOf)
+      CapPipeline.toFeatures(CapPipeline.filterActive(CapPipeline.parseAlerts(xml), asOf))
         .collect().map(_.id).sorted
     }
-    val q = CapStream.features(CapStream.alerts(spark, "fixtures/cap"), asOf)
+    val q = CapPipeline.toFeatures(
+        CapPipeline.filterActive(CapStream.alerts(spark, "fixtures/cap"), asOf))
       .writeStream
       .format("memory")
       .queryName("feat_stream")
@@ -42,24 +44,6 @@ class CapStreamSpec extends AnyFunSuite with GraftTestSession {
       .map(_.getAs[String]("id")).sorted
     assert(got.sameElements(expected), s"stream=${got.toSeq} batch=${expected.toSeq}")
     assert(got.nonEmpty)
-  }
-
-  test("featuresNow (wall clock + watermarked dedup) matches the deterministic path on fixtures") {
-    import spark.implicits._
-    val expected = {
-      val xml = spark.read.option("wholetext", "true").text("fixtures/cap").as[String]
-      CapStream.features(CapPipeline.parseAlerts(xml), java.time.Instant.now())
-        .collect().map(_.id).sorted
-    }
-    val q = CapStream.featuresNow(CapStream.alerts(spark, "fixtures/cap"))
-      .writeStream.format("memory").queryName("feat_now")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val got = spark.table("feat_now").collect().map(_.getAs[String]("id")).sorted
-    assert(got.sameElements(expected))
-    q.stop()
   }
 
   test("lifecycle orders by ABSOLUTE time across mixed UTC offsets, not by string") {
@@ -81,25 +65,6 @@ class CapStreamSpec extends AnyFunSuite with GraftTestSession {
       .maxBy(_._2.length)
     assert(r._2 == Seq("Alert", "Update"), s"wrong order: ${r._2}")
     assert(r._3 == "2024-05-01T11:00:00Z", s"lastSent must be the absolute-latest: ${r._3}")
-    q.stop()
-  }
-
-  test("watermarked tumbling window counts severities per hour") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[CapAlert]
-    val q = CapStream.severityCounts(in.toDS())
-      .writeStream.format("memory").queryName("sev_counts")
-      .outputMode("complete")
-      .start()
-    in.addData(
-      mkAlert("a1", "Alert", "2024-05-01T10:05:00Z"),
-      mkAlert("a2", "Alert", "2024-05-01T10:55:00Z"),
-      mkAlert("a3", "Alert", "2024-05-01T11:05:00Z"))
-    q.processAllAvailable()
-    val rows = spark.table("sev_counts").collect()
-      .map(r => (r.getStruct(0).getTimestamp(0).toInstant.toString, r.getLong(2)))
-    assert(rows.toSet == Set(("2024-05-01T10:00:00Z", 2L), ("2024-05-01T11:00:00Z", 1L)))
     q.stop()
   }
 

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftTestSession
@@ -51,13 +50,8 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
     assert(dataBatches >= nSlices,
       s"expected >= $nSlices data micro-batches across kill+resume, saw $dataBatches")
     // converged value parity: per-user LAST update == batch GROUP BY
-    val got = StreamSoak.lastUpdate(spark, s"$work/out", Seq("user_id"))
-    val want = ev.groupBy("user_id").agg(
-      count(lit(1)).as("n_events"), max(col("value")).as("max_value"),
-      min(unix_micros(col("ts"))).as("first_ts_us"),
-      max(unix_micros(col("ts"))).as("last_ts_us"))
-    val asym = got.unionAll(want).groupBy(got.columns.map(col).toIndexedSeq: _*)
-      .count().filter(col("count") =!= 2).count()
+    val asym = StreamSoak.asymmetricRows(
+      StreamSoak.lastUpdate(spark, s"$work/out", Seq("user_id")), StreamSoak.b51Oracle(ev))
     assert(asym == 0, s"$asym asymmetric rows between converged state and batch aggregate")
     // bounded state: the store plateaus at the user-key space, never above
     val users = ev.select("user_id").distinct().count()
@@ -76,14 +70,8 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
       EventStream.sessionAgg(StreamSoak.readArrivals(spark, arrivals, ev.schema)),
       "append", s"$w45/ckpt", s"$w45/out", arrivals.getAbsolutePath)
     assert(r45.finished && r45.progress.count(_._2 > 0) >= nSlices)
-    val got45 = IdempotentSink.readBack(spark, s"$w45/out")
-    val want45 = EventStream.sessionAgg(ev)
-      .crossJoin(ev.agg(
-        ((floor(max(unix_micros(col("ts"))) / 1000) - 7200000L) * 1000).as("wm_us")))
-      .filter(col("sess_end_us") <= col("wm_us")).drop("wm_us")
-    val asym45 = got45.unionAll(want45)
-      .groupBy(got45.columns.map(col).toIndexedSeq: _*)
-      .count().filter(col("count") =!= 2).count()
+    val asym45 = StreamSoak.asymmetricRows(
+      IdempotentSink.readBack(spark, s"$w45/out"), StreamSoak.b45Oracle(ev))
     assert(asym45 == 0, s"b45: $asym45 asymmetric session rows")
     val st45 = r45.progress.map(_._4)
     assert(st45.last < st45.max, s"b45: no session-state eviction (peak ${st45.max})")
@@ -94,11 +82,8 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
         EventStream.clickErrorJoin(e, e)
       }, "append", s"$w46/ckpt", s"$w46/out", arrivals.getAbsolutePath)
     assert(r46.finished && r46.progress.count(_._2 > 0) >= nSlices)
-    val got46 = IdempotentSink.readBack(spark, s"$w46/out")
-    val want46 = EventStream.clickErrorJoin(ev, ev)
-    val asym46 = got46.unionAll(want46)
-      .groupBy(got46.columns.map(col).toIndexedSeq: _*)
-      .count().filter(col("count") =!= 2).count()
+    val asym46 = StreamSoak.asymmetricRows(
+      IdempotentSink.readBack(spark, s"$w46/out"), StreamSoak.b46Oracle(ev))
     assert(asym46 == 0, s"b46: $asym46 asymmetric joined rows")
     val st46 = r46.progress.map(_._4)
     assert(st46.last < st46.max, s"b46: no join-buffer eviction (peak ${st46.max})")
@@ -106,7 +91,6 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
 
   test("b47 dedup over a doubled 16-batch stream reproduces the raw table " +
       "with watermark-bounded state") {
-    import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("soak_b47").toString
     val r = StreamSoak.drive(spark, "spec_soak_b47",
       EventStream.dedupedEvents(
@@ -114,9 +98,8 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
       "append", s"$work/ckpt", s"$work/out", arrivals.getAbsolutePath)
     assert(r.finished)
     assert(r.progress.count(_._2 > 0) >= nSlices)
-    val got = IdempotentSink.readBack(spark, s"$work/out")
-      .select("event_id").as[Long].collect().sorted.toSeq
-    val want = ev.select("event_id").as[Long].collect().sorted.toSeq
+    val got = StreamSoak.eventIds(IdempotentSink.readBack(spark, s"$work/out"))
+    val want = StreamSoak.eventIds(ev)
     assert(got == want,
       s"dedup output diverged: got ${got.size} rows, want ${want.size}")
     // eviction visible: the final batch's seen-key state is strictly
