@@ -2,7 +2,7 @@ package graft.cap
 
 import java.time.Instant
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,6 +25,7 @@ import graft.sources.FeedLinks
   * extraction is [[FeedLinks]], the per-alert fan-out is
   * the private `fanOut` behind [[toFeatures]] and [[quarantine]], and
   * the FeatureCollection envelope is [[Features.featureCollectionJson]].
+  * [[CapEtl]] composes them with the connectors into the one job.
   */
 object CapPipeline {
 
@@ -191,8 +192,8 @@ object CapPipeline {
     udf((s: String) => graft.functions.JsCompat.jsDateParse(s).map(_.toEpochMilli))
 
   /** F1: the alerts active at `asOf` — no `expires`, an `expires` at
-    * or after `asOf`, or one JS cannot parse. The same filter serves
-    * batch and streaming Datasets (CapStreamSpec runs it on both). */
+    * or after `asOf`, or one JS cannot parse. Callers reach it through
+    * [[active]]. */
   def filterActive(alerts: Dataset[CapAlert], asOf: Instant): Dataset[CapAlert] =
     alerts.filter(col("expires") === "" ||
       coalesce(jsExpiresMs(col("expires")) >= lit(asOf.toEpochMilli), lit(true)))
@@ -232,14 +233,9 @@ object CapPipeline {
     alerts.flatMap(a => fanOut(a).swap.toSeq)
   }
 
-  /** End-to-end over a directory of CAP alert XML files (one alert per
-    * file, read whole-file so documents aren't line-split). */
-  def run(spark: SparkSession, xmlDir: String, asOf: Instant): Dataset[CotFeature] = {
-    import spark.implicits._
-    val xml = spark.read
-      .option("wholetext", "true")
-      .text(xmlDir)
-      .as[String]
-    toFeatures(filterActive(parseAlerts(xml), asOf))
-  }
+  /** The active alerts of `xml` at `asOf`: [[parseAlerts]] then
+    * [[filterActive]], the one parse-then-expiry composition, for batch
+    * and streaming Datasets alike. */
+  def active(xml: Dataset[String], asOf: Instant): Dataset[CapAlert] =
+    filterActive(parseAlerts(xml), asOf)
 }

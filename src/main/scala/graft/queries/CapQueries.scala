@@ -4,7 +4,7 @@ import java.time.Instant
 
 import scala.collection.immutable.SortedMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cap.CapPipeline
@@ -29,38 +29,37 @@ object CapQueries {
   def badFixtureDir: String = resolve("fixtures/cap_bad")
   def lifecycleFixtureDir: String = resolve("fixtures/cap_lifecycle")
 
+  /** One XML document (an alert or a feed) per file of `dir`, read
+    * whole so no document is split at a line. */
+  private def xmlFiles(s: SparkSession, dir: String): Dataset[String] =
+    s.read.option("wholetext", "true").text(dir).as(Encoders.STRING)
+
   /** Full pipeline: alert XML fixtures → CoT features, projected to
     * (id, json) — `json` is the COMPLETE rendered feature (the
     * reference's actual output format), so every envelope/metadata/
     * geometry/style field participates in the oracle hash while the
     * compare stays engine-portable (two string columns, no nested
-    * types). The typed Dataset surface is [[CapPipeline.run]]. */
+    * types). */
   def capFeatures(s: SparkSession, d: String): DataFrame =
-    CapPipeline.run(s, fixtureDir, asOf)
+    CapPipeline.toFeatures(CapPipeline.active(xmlFiles(s, fixtureDir), asOf))
       .toDF()
       .select(col("id"), col("json"))
       .orderBy(col("id"))
 
   /** P1-P3: feed-link extraction over RSS+Atom fixture feeds, in the
     * reference's first-occurrence order (order-preserving dedup). */
-  def capFeedLinks(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val feeds = s.read.option("wholetext", "true").text(feedDir).as[String]
-    CapPipeline.parseFeedLinks(feeds).toDF("link")
-  }
+  def capFeedLinks(s: SparkSession, d: String): DataFrame =
+    CapPipeline.parseFeedLinks(xmlFiles(s, feedDir)).toDF("link")
 
   /** F2 quarantine surface over a fixture set with PLANTED bad alerts
     * (unparseable `sent`/`onset` — the reference's per-alert
     * try/catch-and-drop, task.ts:876-878, upgraded to a side-channel):
     * the full pipeline runs and the quarantined (identifier, error)
     * rows come back. */
-  def capQuarantine(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val xml = s.read.option("wholetext", "true").text(badFixtureDir).as[String]
-    val alerts = CapPipeline.filterActive(CapPipeline.parseAlerts(xml), asOf)
-    CapPipeline.quarantine(alerts).toDF().select(col("identifier"), col("error"))
+  def capQuarantine(s: SparkSession, d: String): DataFrame =
+    CapPipeline.quarantine(CapPipeline.active(xmlFiles(s, badFixtureDir), asOf))
+      .toDF().select(col("identifier"), col("error"))
       .orderBy("identifier")
-  }
 
   /** Golden-file oracles: the driver's DuckDB compare reads a
     * checked-in expected-output parquet (regenerate with

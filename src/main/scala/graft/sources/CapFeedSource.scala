@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `spark.read.format("capfeed")` — DSv2 batch source for a CAP feed
+/** `capfeed`, the DSv2 batch source for a CAP feed
   * (S1-S3). Planning (driver): fetch the RSS/Atom feed once, extract
   * alert links (P1-P3). Execution (executors): each partition fetches
   * its slice of alert URLs with reference-parity retry/backoff, up to
@@ -205,7 +205,7 @@ private object CapFeedOffset {
     CapFeedOffset(mapper.readValue(json, classOf[Array[String]]).toSeq)
 }
 
-/** `spark.readStream.format("capfeed")` — the reference's scheduled
+/** `capfeed` as a stream source: the reference's scheduled
   * whole-feed re-fetch (task.ts:66) as a real incremental source: each
   * micro-batch polls the feed once, and only links not covered by the
   * previous offset become input partitions. With Trigger.AvailableNow

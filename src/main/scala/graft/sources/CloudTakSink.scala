@@ -14,7 +14,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.cap.Features
 
-/** `df.write.format("cloudtak")` — DSv2 batch sink (S4). Input: one
+/** `cloudtak`, the DSv2 batch sink (S4). Input: one
   * STRING column of GeoJSON Feature documents (`CotFeature.json`). Each
   * partition buffers its features and POSTs ONE FeatureCollection
   * envelope on task commit, with reference-parity retry/backoff — the

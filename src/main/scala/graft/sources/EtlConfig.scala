@@ -7,12 +7,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * optional `headers`, `timeout` defaulting to 30000 ms, `retries`
   * defaulting to 2. Both DSv2 connectors (capfeed source, cloudtak
   * sink) parse their options through [[EtlConfig.fromOptions]], so the
-  * defaults, validation, and the published JSON schema are one
-  * definition that cannot drift apart. One option lives outside it:
-  * `capfeed` alone reads `numPartitions` (default 4), the number of
-  * partitions its alert links are spread over, in the batch scan and
-  * in every micro-batch; the `cloudtak` sink ignores it. Any other
-  * option not named here is ignored.
+  * defaults and validation are one definition that cannot drift apart.
+  * One option lives outside it: `capfeed` alone reads `numPartitions`
+  * (default 4), the number of partitions its alert links are spread
+  * over, in the batch scan and in every micro-batch; the `cloudtak`
+  * sink ignores it. Any other option not named here is ignored.
   */
 final case class EtlConfig(
     url: String,
@@ -39,20 +38,4 @@ object EtlConfig {
     EtlConfig(url, Http.parseHeaders(options.getOrDefault("headers", "")),
       timeoutMs, retries)
   }
-
-  /** JSON-schema rendering of the input configuration — the engine's
-    * `schema(Input, Incoming)` (task.ts:583-596). Stable literal: the
-    * options above, their defaults, and `url` as the only required
-    * field. */
-  val inputJsonSchema: String =
-    """{"type":"object","properties":{
-      |"url":{"type":"string","description":"CAP RSS or Atom feed URL"},
-      |"headers":{"type":"string","description":"Extra request headers, 'K1=V1;K2=V2'"},
-      |"timeout":{"type":"number","default":30000,"description":"Request timeout in milliseconds"},
-      |"retries":{"type":"number","default":2,"description":"Number of retry attempts on failure"}
-      |},"required":["url"]}""".stripMargin.replace("\n", "")
-
-  /** The outgoing/output schemas are empty objects, as in the
-    * reference (task.ts:590-595). */
-  val emptyJsonSchema: String = """{"type":"object","properties":{}}"""
 }

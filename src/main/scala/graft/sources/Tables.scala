@@ -90,8 +90,7 @@ object Tables {
   // subsequent scan from that. Content-identical, order-insensitive
   // (every consumer either sorts or is a set/agg semantics query — the
   // determinism recipe is proven across partition-count changes, see
-  // BENCH_NOTES determinism runs). Disable with
-  // `spark.graft.compact.enabled=false`.
+  // BENCH_NOTES determinism runs).
   //
   // `events` is deliberately NOT compacted: the streaming readers
   // replay it as a micro-batch source, and physical row order there
@@ -193,12 +192,11 @@ object Tables {
 
   /** Resolve a table path to its compacted copy, rewriting on first
     * touch. Returns the original path when the layout is already
-    * scan-parallel (or compaction is disabled). The copy is keyed by
-    * (path, size, mtime, footer fingerprint) and re-verified via its
+    * scan-parallel. The copy is keyed by (path, size, mtime, footer
+    * fingerprint) and re-verified via its
     * `_SUCCESS` marker on every resolution, so a deleted or
     * half-written cache entry is rebuilt instead of served. */
   def maybeCompact(spark: SparkSession, p: String): String = {
-    if (conf(spark, "spark.graft.compact.enabled", "true") != "true") return p
     val minBytes = conf(spark, "spark.graft.compact.minBytes", (4L << 20).toString).toLong
     fileLayout(spark, p) match {
       case Some((bytes, rgs, mtime)) if bytes > minBytes && bytes / math.max(rgs, 1) > minBytes =>

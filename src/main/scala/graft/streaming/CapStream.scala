@@ -22,27 +22,20 @@ final case class AlertTransition(identifier: String, fromStatus: String,
   * task.ts:31 but is never consumed).
   *
   * The stateless steps have no streaming copy: CapPipeline.parseAlerts
-  * / filterActive / toFeatures run unchanged on the streaming
-  * [[alerts]] Dataset (CapStreamSpec drains them against the batch
-  * pipeline) — the engine's batch/stream unification story.
+  * / active / toFeatures run unchanged on streaming Datasets
+  * (CapStreamSpec drains them against the batch pipeline, and
+  * [[graft.cap.CapEtl.stream]] is the CAP job itself as a stream) — the
+  * engine's batch/stream unification story.
   */
 object CapStream {
 
-  /** Streaming source: one CAP XML document per file in `xmlDir`.
-    * No maxFilesPerTrigger cap by default: with Trigger.AvailableNow
-    * that means ONE micro-batch over the whole directory, so the
-    * lifecycle surfaces (cap4, cap5) see every alert of a chain in one
-    * batch. Pass `maxFilesPerTrigger > 0` for incremental continuous
-    * deployments. */
-  def alerts(spark: SparkSession, xmlDir: String,
-      maxFilesPerTrigger: Int = 0): Dataset[CapAlert] = {
+  /** Streaming source: one CAP XML document per file in `xmlDir`,
+    * parsed. No maxFilesPerTrigger cap: with Trigger.AvailableNow that
+    * means ONE micro-batch over the whole directory, so the lifecycle
+    * surfaces (cap4, cap5) see every alert of a chain in one batch. */
+  def alerts(spark: SparkSession, xmlDir: String): Dataset[CapAlert] = {
     import spark.implicits._
-    val reader = spark.readStream.option("wholetext", "true")
-    val capped =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      else reader
-    CapPipeline.parseAlerts(capped.text(xmlDir).as[String])
+    CapPipeline.parseAlerts(spark.readStream.option("wholetext", "true").text(xmlDir).as[String])
   }
 
   /** Absolute time of a CAP timestamp; unparseable sorts first. CAP

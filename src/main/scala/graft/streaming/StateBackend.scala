@@ -15,8 +15,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * heap maps that grow with state cardinality. Every drained query
   * surface (b43–b47, b51/b53/b54/b57, cap4, cap5 and the soak) runs
   * through [[StreamRunner.drain]], which calls [[assertRocksDb]] after
-  * termination, so the oracle gate itself executes on RocksDB and a
-  * silent fallback to the heap provider fails the run loudly.
+  * termination whenever the executed plan holds a stateful operator, so
+  * the oracle gate itself executes on RocksDB and a silent fallback to
+  * the heap provider fails the run loudly.
   */
 object StateBackend {
 

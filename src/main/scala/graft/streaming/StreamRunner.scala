@@ -1,13 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 /** The ONE way a streaming query runs in this engine: [[drain]] is the
   * only `writeStream` call in the engine's sources. RocksDB state (the
   * provider is part of [[graft.GraftSession]]'s definition), a
   * `foreachBatch` sink, an explicit checkpoint, `Trigger.AvailableNow`,
-  * blocking until the source drains, then [[StateBackend.assertRocksDb]].
+  * blocking until the source drains, then [[StateBackend.assertRocksDb]]
+  * when the executed plan holds a stateful operator.
   *
   * [[run]] is the query surface (b43–b47, b51/b53/b54/b57, cap4, cap5):
   * it drains into the exactly-once file sink ([[IdempotentSink]]) and
@@ -31,8 +34,10 @@ object StreamRunner {
     * `statePath` ([[StateBackend.withStatePartitions]]), each micro-batch
     * into `sink`, checkpoint at `checkpoint`, AvailableNow. Returns the
     * stopped query; a failed drain keeps its error in `q.exception`.
-    * A drain that failed before its first batch has no progress to
-    * fingerprint, so only then is the RocksDB assertion skipped. */
+    * The RocksDB assertion runs when the last executed micro-batch plan
+    * holds a stateful operator: a stateless stream (the CAP job) has no
+    * state store to fingerprint, and neither has a drain that failed
+    * before its first batch reported progress. */
   def drain(s: SparkSession, name: String, statePath: String, df: DataFrame,
       mode: String, checkpoint: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
@@ -52,9 +57,13 @@ object StreamRunner {
       finally q.stop()
       q
     }
-    if (q.exception.isEmpty || q.recentProgress.nonEmpty) StateBackend.assertRocksDb(q)
+    if (q.recentProgress.nonEmpty && stateful(q)) StateBackend.assertRocksDb(q)
     q
   }
+
+  private def stateful(q: StreamingQuery): Boolean =
+    Option(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution)
+      .exists(_.executedPlan.exists(_.isInstanceOf[StatefulOperator]))
 
   /** Run `df` through the micro-batch engine and read the committed
     * result back.

@@ -30,6 +30,8 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
   private val envelope = "\"Feature" + "Collection\""
   private val stateShutdown = "StateBackend" + ".shutdown()"
   private val stopCall = "." + "stop()"
+  private val connectorFormats = Seq("capfeed", "cloudtak").map(f => "format(\"" + f + "\")")
+  private val expiryCall = "filter" + "Active("
 
   private lazy val sources: Seq[(Path, String)] =
     Seq("src/main/scala", "src/test/scala").flatMap { root =>
@@ -111,5 +113,13 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
     assert(links == Set(mainFile("sources/Http")) && envelopes == Set(mainFile("cap/Features")),
       s"<link spelled in $links, only FeedLinks may; " +
         s"the FeatureCollection envelope built in $envelopes, only Features may")
+  }
+
+  test("in src/main only CapEtl names the connector formats; only CapPipeline calls filterActive") {
+    val formats = connectorFormats.flatMap(f => mainCallSites(f).keySet).toSet
+    val expiry = callSites(expiryCall).keySet
+    assert(formats == Set(mainFile("cap/CapEtl")) && expiry == Set(mainFile("cap/CapPipeline")),
+      s"capfeed/cloudtak format named in $formats, only CapEtl may; " +
+        s"filterActive called in $expiry, only CapPipeline may")
   }
 }

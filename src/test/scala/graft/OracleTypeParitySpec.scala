@@ -112,10 +112,9 @@ class OracleTypeParitySpec extends AnyFunSuite with GraftTestSession {
           .mkString("{", ",", "}")
         s"""{"name": ${jq(name)}, "sql": ${jq(sql)}, "cols": $cols}"""
       }
-    val payload = Files.createTempFile("oracle_parity", ".json")
-    Files.writeString(payload, entries.mkString("[", ",", "]"))
-    val script = Files.createTempFile("oracle_parity", ".py")
-    Files.writeString(script, pyChecker)
+    val dir = tempDir("oracle_parity")
+    val payload = Files.writeString(dir.resolve("payload.json"), entries.mkString("[", ",", "]"))
+    val script = Files.writeString(dir.resolve("check.py"), pyChecker)
 
     val out = new StringBuilder
     val code = Seq("python3", script.toString, payload.toString, sf)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +16,7 @@ class ScaleGenSpec extends AnyFunSuite with GraftTestSession {
   private val tiles = 3
 
   private lazy val out: String = {
-    val dir = Files.createTempDirectory("scalegen").toString
+    val dir = tempDir("scalegen").toString
     ScaleGen.generate(spark, src, dir, tiles)
     dir
   }
@@ -83,7 +81,7 @@ class ScaleGenSpec extends AnyFunSuite with GraftTestSession {
 
   test("beyond 64 tiles, sign-flip groups keep every copy distinct and |component|-preserving") {
     val bigTiles = 66 // crosses the 64-rotation boundary into group 1
-    val dir = Files.createTempDirectory("scalegen-flip").toString
+    val dir = tempDir("scalegen-flip").toString
     ScaleGen.generate(spark, src, dir, bigTiles)
     val e = spark.read.parquet(s"$dir/embeddings.parquet").select(
       (col("vec_id") % 10000000L).as("src_id"),
@@ -113,7 +111,7 @@ class ScaleGenSpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("the tables filter generates exactly the matching tables") {
-    val dir = Files.createTempDirectory("scalegen-filter").toString
+    val dir = tempDir("scalegen-filter").toString
     ScaleGen.generate(spark, src, dir, 2, "documents|embeddings|events")
     val written = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(written === Set("documents.parquet", "embeddings.parquet", "events.parquet"))
@@ -123,7 +121,7 @@ class ScaleGenSpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("tile counts past the birthday-bounded ceiling are rejected loudly") {
-    val dir = Files.createTempDirectory("scalegen-reject").toString
+    val dir = tempDir("scalegen-reject").toString
     val err = intercept[IllegalArgumentException] {
       ScaleGen.generate(spark, src, dir, 16385)
     }
@@ -137,7 +135,7 @@ class ScaleGenSpec extends AnyFunSuite with GraftTestSession {
     // other rot-0 tile — distinctness is the invariant that keeps the
     // d8b design-point corpus (×5000) measuring corpus growth.
     val bigTiles = 4100
-    val dir = Files.createTempDirectory("scalegen-grp64").toString
+    val dir = tempDir("scalegen-grp64").toString
     ScaleGen.generate(spark, src, dir, bigTiles, "embeddings")
     val e = spark.read.parquet(s"$dir/embeddings.parquet").select(
       (col("vec_id") % 10000000L).as("src_id"),

@@ -11,10 +11,15 @@ class CapPipelineSpec extends AnyFunSuite with GraftTestSession {
   private val asOf = Instant.parse("2026-08-12T00:00:00Z")
   private val fixtureDir = "fixtures/cap"
 
-  private lazy val features: Map[String, CotFeature] = {
-    val fs = CapPipeline.run(spark, fixtureDir, asOf).collect()
-    fs.map(f => f.id -> f).toMap
+  /** The features of the fixture alerts active at `at`. */
+  private def featuresAt(at: Instant): Seq[CotFeature] = {
+    import spark.implicits._
+    val xml = spark.read.option("wholetext", "true").text(fixtureDir).as[String]
+    CapPipeline.toFeatures(CapPipeline.active(xml, at)).collect().toSeq
   }
+
+  private lazy val features: Map[String, CotFeature] =
+    featuresAt(asOf).map(f => f.id -> f).toMap
 
   test("end-to-end over all fixtures: expected feature id set") {
     val expected = Set(
@@ -117,8 +122,7 @@ class CapPipelineSpec extends AnyFunSuite with GraftTestSession {
   test("F1: asOf before expiry keeps the alert; reference boundary is strict <") {
     // expired.xml has expires 2020-01-02; absent from features (checked above).
     // re-run with asOf back in 2019 → it must appear.
-    val old = CapPipeline.run(spark, fixtureDir, Instant.parse("2019-12-31T00:00:00Z"))
-      .collect().map(_.id).toSet
+    val old = featuresAt(Instant.parse("2019-12-31T00:00:00Z")).map(_.id).toSet
     assert(old.contains("MS-2020-999"))
   }
 

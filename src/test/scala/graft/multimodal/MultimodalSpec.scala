@@ -79,7 +79,7 @@ class MultimodalSpec extends AnyFunSuite with GraftTestSession {
     // planted CAS property: 10 assets sharing one payload contribute
     // 10× the chunks but only 1× the unique digests
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("m4dup").toString
+    val dir = tempDir("m4dup").toString
     val text = "x" * 100 // 4 chunks of 32 (last short)
     (0 until 10).map(i => (i.toLong * 3, text, "en", "srcA", 100L)) // ids ≡ 0 mod 3 → image
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -98,7 +98,7 @@ class MultimodalSpec extends AnyFunSuite with GraftTestSession {
     // 65280·L — the analytic extremes of the per-byte statistic,
     // checked end to end through the real mapPartitions pass
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("m5uni").toString
+    val dir = tempDir("m5uni").toString
     Seq(
       (0L, "abcdefghij", "en", "srcA", 10L),   // 10 distinct bytes, kind image
       (3L, "aaaaaaaaaa", "en", "srcA", 10L))   // 10 equal bytes, kind image
@@ -124,7 +124,7 @@ class MultimodalSpec extends AnyFunSuite with GraftTestSession {
     // planted re-encode: two video-kind docs (ids ≡ 2 mod 3) share the
     // byte stream → identical frame sets → exactly one pair at 1.0
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("m6dup").toString
+    val dir = tempDir("m6dup").toString
     val clip = "the quick brown fox jumps over the lazy dog again and again and again" * 3
     Seq((2L, clip, "en", "srcA", clip.length.toLong),
         (5L, clip, "en", "srcA", clip.length.toLong),

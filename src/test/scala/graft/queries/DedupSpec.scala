@@ -125,7 +125,7 @@ class DedupSpec extends AnyFunSuite with GraftTestSession {
     val docs = Seq[(Long, String, Long)]((1L, "abc", 3L), (2L, "wxyz", 4L),
         (3L, "aaaaaaa", 7L), (4L, "bbbbbbb", 7L), (5L, null, 0L))
       .toDF("doc_id", "text", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("d4empty").toString
+    val dir = tempDir("d4empty").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     assert(Dedup.d4Candidates(Tables.documents(spark, dir)).count() == 10,
       "every pair must reach the verify")
@@ -246,7 +246,7 @@ class DedupSpec extends AnyFunSuite with GraftTestSession {
       (3L, (words("d", 5) ++ shared2).mkString(" ")),
       (4L, (selfRep ++ words("e", 4) ++ selfRep).mkString(" ")))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("d11fix").toString
+    val dir = tempDir("d11fix").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.d11SubstringSpans(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") ->

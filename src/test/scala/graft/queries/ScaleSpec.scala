@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -187,7 +185,7 @@ class ScaleSpec extends AnyFunSuite with GraftTestSession {
     val docs = (0 until 1000).map(i =>
       (800000L + i, s"$boiler unique$i tail$i words$i here$i", "en", "srcZ", 60L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("t12hot").toString
+    val dir = tempDir("t12hot").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = TextStats.t12Boilerplate(spark, dir).collect()
     assert(rows.length == 1)
@@ -221,7 +219,7 @@ class ScaleSpec extends AnyFunSuite with GraftTestSession {
     val docs = (0 until 4000).map(i =>
       (i.toLong, s"$boiler unq$i tail$i word$i here$i more$i", "en", "srcS", 64L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("skewshingle").toString
+    val dir = tempDir("skewshingle").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val confs = Seq(
       "spark.sql.adaptive.enabled" -> "true",
@@ -357,7 +355,7 @@ class ScaleSpec extends AnyFunSuite with GraftTestSession {
     // a low-cardinality predicate column so readers touch one
     // directory, not the corpus. Asserts the pruning actually shows in
     // the plan — a regression here silently rescans everything.
-    val dir = Files.createTempDirectory("graft-partitioned").toString
+    val dir = tempDir("graft-partitioned").toString
     Tables.events(spark, sf)
       .withColumn("etype", col("event_type"))
       .write.mode("overwrite").partitionBy("etype").parquet(dir)

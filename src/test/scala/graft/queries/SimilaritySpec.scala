@@ -256,7 +256,7 @@ class SimilaritySpec extends AnyFunSuite with GraftTestSession {
     val planted = distinct.filter(_._1 % 160 == 0).flatMap { case (id, v) =>
       (1 to 9).map(k => (100000L + id * 16 + k, v)) // 100000+16id+k ≢ 10 (mod 20) for k ∈ 1..9
     }
-    val sfDir = java.nio.file.Files.createTempDirectory("d8bsf").toString
+    val sfDir = tempDir("d8bsf").toString
     (distinct ++ planted).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$sfDir/embeddings.parquet")
 
@@ -599,7 +599,7 @@ class SimilaritySpec extends AnyFunSuite with GraftTestSession {
       ((x % 1000003 + 1000003) % 1000003) / 1000003.0f - 0.5f
     }
     def writeCorpus(n: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory(s"s12plan$n").toString
+      val dir = tempDir(s"s12plan$n").toString
       (0 until n).map(i => (i.toLong, i % 10, Array.tabulate(64)(j => h(i, j))))
         .toDF("vec_id", "label", "embedding")
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -641,7 +641,7 @@ class SimilaritySpec extends AnyFunSuite with GraftTestSession {
     // q = 0 so the reconstruction is exact and the label aggregates
     // stay NaN-free.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("s6const").toString
+    val dir = tempDir("s6const").toString
     Seq(
       (1L, Array.fill(64)(0.25f), 7),
       (2L, Array.tabulate(64)(i => i * 0.01f), 7))
@@ -670,7 +670,7 @@ class SimilaritySpec extends AnyFunSuite with GraftTestSession {
     }
     // a corpus that IS the codebook must quantize losslessly: each seed
     // subvector's nearest code is itself at distance 0
-    val dir = java.nio.file.Files.createTempDirectory("s7seed").toString
+    val dir = tempDir("s7seed").toString
     Tables.embeddings(spark, sf)
       .filter(col("vec_id") >= 200 && col("vec_id") < 216)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

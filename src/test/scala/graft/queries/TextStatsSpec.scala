@@ -47,7 +47,7 @@ class TextStatsSpec extends AnyFunSuite with GraftTestSession {
       (6L, "", "bb", "s1", 0L),
       (7L, "the quick brown fox jumps over the lazy dog the end", "cc", "s1", 0L),
       (8L, "zzz" + new String(Array(0x10FFFF, 0x10FFFF, 0x10FFFF), 0, 3), "cc", "s1", 0L))
-    val dir = java.nio.file.Files.createTempDirectory("t1diff").toString
+    val dir = tempDir("t1diff").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val kernel = TextStats.t1LangId(spark, dir).collect().map(_.toSeq).toSeq
@@ -213,7 +213,7 @@ class TextStatsSpec extends AnyFunSuite with GraftTestSession {
     // 30 copies of the same word -> 28 trigrams, 1 distinct, dup frac ~0.96
     import spark.implicits._
     val w = Seq.fill(30)("spam").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("t9-planted").toString
+    val dir = tempDir("t9-planted").toString
     graft.sources.Tables.documents(spark, sf)
       .unionByName(Seq((100000L, w, "en", "srcPLANT", w.length.toLong))
         .toDF("doc_id", "text", "lang", "source", "n_chars"))
@@ -266,7 +266,7 @@ class TextStatsSpec extends AnyFunSuite with GraftTestSession {
     // planted corpus: two identical docs share every shingle; the third
     // shares none — exactly 2 majority-boilerplate docs
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("t12dup").toString
+    val dir = tempDir("t12dup").toString
     val same = "alpha beta gamma delta epsilon zeta eta theta"
     Seq(
       (1L, same, "en", "srcA", same.length.toLong),

@@ -13,8 +13,8 @@ import graft.GraftTestSession
   * rewrites such files once into a multi-file local copy and serves
   * scans from it (read-side Delta-OPTIMIZE). These specs pin: the
   * rewrite triggers only above the threshold, the copy is
-  * content-identical and actually scan-parallel, the cache is reused,
-  * and the conf kill-switch works.
+  * content-identical and actually scan-parallel, and the cache is
+  * reused.
   */
 class CompactionSpec extends AnyFunSuite with GraftTestSession {
 
@@ -27,7 +27,7 @@ class CompactionSpec extends AnyFunSuite with GraftTestSession {
     * which is exactly what the footer-fingerprint test needs. */
   private def writeSingleRowGroup(rows: Long, priceFactor: Double = 1.01,
       compression: String = "snappy"): String = {
-    val dir = Files.createTempDirectory("compact-spec-").toFile
+    val dir = tempDir("compact-spec-").toFile
     val out = new java.io.File(dir, "lineitem.parquet")
     val tmp = new java.io.File(dir, "_tmp")
     spark.range(0, rows)
@@ -63,7 +63,7 @@ class CompactionSpec extends AnyFunSuite with GraftTestSession {
     // default 4 MB threshold: a ~700 KB file is left untouched
     assert(Tables.maybeCompact(spark, src) == src)
     // a directory-form table (ScaleGen probe layout) is never rewritten
-    val multi = Files.createTempDirectory("compact-multi-").toFile
+    val multi = tempDir("compact-multi-").toFile
     val mPath = new java.io.File(multi, "lineitem.parquet").getAbsolutePath
     spark.range(0, 1000).select(col("id").as("l_orderkey"))
       .repartition(3).write.mode("overwrite").parquet(mPath)
@@ -120,7 +120,7 @@ class CompactionSpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("eviction removes cache entries whose recorded source no longer exists") {
-    val root = Files.createTempDirectory("compact-evict-root-").toFile
+    val root = tempDir("compact-evict-root-").toFile
     withConfs("spark.graft.compact.dir" -> root.getAbsolutePath) {
       withConfs("spark.graft.compact.minBytes" -> "100000") {
         val dir = writeSingleRowGroup(60000)
@@ -147,16 +147,6 @@ class CompactionSpec extends AnyFunSuite with GraftTestSession {
     withConfs("spark.graft.compact.minBytes" -> "100000") {
       Tables.maybeCompact(spark, s"$dir/lineitem.parquet")
       assert(Tables.compactedTables.contains("lineitem"))
-    }
-  }
-
-  test("spark.graft.compact.enabled=false serves the original path") {
-    val dir = writeSingleRowGroup(60000)
-    withConfs("spark.graft.compact.minBytes" -> "100000") {
-      withConfs("spark.graft.compact.enabled" -> "false") {
-        val src = s"$dir/lineitem.parquet"
-        assert(Tables.maybeCompact(spark, src) == src)
-      }
     }
   }
 }

@@ -12,8 +12,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cap.CapPipeline
+import graft.cap.CapEtl
 import graft.GraftTestSession
+import graft.queries.CapQueries
+import graft.streaming.StreamRunner
 
 /** DSv2 connector tests against a real in-JVM HTTP server: feed
   * planning, partition-parallel alert fetch, retry/backoff parity, and
@@ -29,7 +31,11 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     "metservice-polygon.xml", "metservice-multipolygon.xml", "geonet-circle.xml",
     "nema-nogeometry.xml", "unknown-codes.xml")
 
+  /** Every request the server answered, as "METHOD path". */
+  private val requests = new ConcurrentLinkedQueue[String]()
+
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
+    requests.add(s"${ex.getRequestMethod} ${ex.getRequestURI.getPath}")
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
@@ -40,12 +46,18 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     base = s"http://127.0.0.1:${server.getAddress.getPort}"
     val feed = alertFiles.zipWithIndex.map { case (f, i) =>
-      s"<item><link>$base/cap/$f</link></item>"
+      s"<item><link>$base/alerts/cap/$f</link></item>"
     }.mkString("<rss><channel>", "", "</channel></rss>")
     server.createContext("/feed", (ex: HttpExchange) => respond(ex, 200, feed))
-    server.createContext("/cap/", (ex: HttpExchange) => {
-      val name = ex.getRequestURI.getPath.stripPrefix("/cap/")
-      val p = Paths.get("fixtures/cap", name)
+    // a feed over every file of fixtures/<dir>, at /fixture-feed/<dir>;
+    // the alert paths contain "alert", so the link predicate keeps them
+    server.createContext("/fixture-feed/", (ex: HttpExchange) => {
+      val dir = ex.getRequestURI.getPath.stripPrefix("/fixture-feed/")
+      respond(ex, 200, fixtureFiles(dir).map(f => s"<item><link>$base/alerts/$dir/$f</link></item>")
+        .mkString("<rss><channel>", "", "</channel></rss>"))
+    })
+    server.createContext("/alerts/", (ex: HttpExchange) => {
+      val p = Paths.get("fixtures", ex.getRequestURI.getPath.stripPrefix("/alerts/"))
       if (Files.exists(p)) respond(ex, 200, Files.readString(p))
       else respond(ex, 404, "not found")
     })
@@ -53,7 +65,7 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     server.createContext("/flaky", (ex: HttpExchange) => {
       if (flakyHits.incrementAndGet() <= 2) respond(ex, 503, "unavailable")
       else respond(ex, 200, "<rss><channel><item><link>" + base +
-        "/cap/metservice-polygon.xml</link></item></channel></rss>")
+        "/alerts/cap/metservice-polygon.xml</link></item></channel></rss>")
     })
     server.createContext("/ingest", (ex: HttpExchange) => {
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -69,6 +81,38 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
 
   override def afterAll(): Unit = if (server != null) server.stop(0)
 
+  private def fixtureFiles(dir: String): Seq[String] =
+    new java.io.File("fixtures", dir).list().toSeq.sorted
+
+  private def feedOpts(dir: String) = Map("url" -> s"$base/fixture-feed/$dir", "timeout" -> "5000")
+  private def sinkOpts = Map("url" -> s"$base/ingest", "timeout" -> "5000")
+
+  /** Runs `etl` on a cleared request log: its record, the POST bodies
+    * and the sorted paths of the GETs it sent. */
+  private def logged(etl: => CapEtl.RunRecord): (CapEtl.RunRecord, Seq[String], Seq[String]) = {
+    posts.clear()
+    requests.clear()
+    val record = etl
+    (record, posts.asScala.toSeq,
+      requests.asScala.toSeq.filter(_.startsWith("GET ")).map(_.stripPrefix("GET ")).sorted)
+  }
+
+  /** The GETs of one run over fixtures/`dir`: the feed once, each alert once. */
+  private def fetchedOnce(dir: String): Seq[String] =
+    (s"/fixture-feed/$dir" +: fixtureFiles(dir).map(f => s"/alerts/$dir/$f")).sorted
+
+  private val idRe = """"id":"([^"]+)"""".r
+
+  private def postedIds(bodies: Seq[String]): Seq[String] =
+    bodies.flatMap(b => idRe.findAllMatchIn(b).map(_.group(1))).sorted
+
+  /** The ids of fixtures/golden/all-fixtures.json: every feature of
+    * fixtures/cap at [[CapQueries.asOf]]. */
+  private lazy val goldenIds: Seq[String] =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("fixtures/golden/all-fixtures.json"))
+      .get("features").elements().asScala.map(_.get("id").asText()).toSeq.sorted
+
   test("capfeed: plans one partition slice per link group and fetches all alerts") {
     val df = spark.read.format("capfeed")
       .option("url", s"$base/feed")
@@ -79,7 +123,7 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     val rows = df.collect()
     assert(rows.length == alertFiles.length)
     val urls = rows.map(_.getString(0)).toSet
-    assert(urls == alertFiles.map(f => s"$base/cap/$f").toSet)
+    assert(urls == alertFiles.map(f => s"$base/alerts/cap/$f").toSet)
     rows.foreach(r => assert(r.getString(1).contains("<alert")))
   }
 
@@ -117,8 +161,8 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
   test("capfeed: a dead alert link is skipped (reference per-alert isolation)") {
     // feed with one good and one 404 link
     server.createContext("/deadfeed", (ex: HttpExchange) => respond(ex, 200,
-      s"<rss><channel><item><link>$base/cap/metservice-polygon.xml</link></item>" +
-        s"<item><link>$base/cap/does-not-exist.xml</link></item></channel></rss>"))
+      s"<rss><channel><item><link>$base/alerts/cap/metservice-polygon.xml</link></item>" +
+        s"<item><link>$base/alerts/cap/does-not-exist.xml</link></item></channel></rss>"))
     val rows = spark.read.format("capfeed")
       .option("url", s"$base/deadfeed")
       .option("timeout", 2000)
@@ -171,47 +215,34 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       s"default window did not overlap within bounds: max in-flight $max")
   }
 
-  /** One AvailableNow run of a `capfeed` stream over `feedUrl` on
+  /** One AvailableNow drain of a `capfeed` stream over `feedUrl` on
     * `ckpt`; returns the emitted URLs, or the query's failure. */
   private def availableNow(feedUrl: String, ckpt: String,
       extra: (String, String)*): Either[Throwable, Seq[String]] = {
     val got = new ConcurrentLinkedQueue[String]()
-    var reader = spark.readStream.format("capfeed")
-      .option("url", feedUrl)
-      .option("timeout", 5000)
-    extra.foreach { case (k, v) => reader = reader.option(k, v) }
-    val q = reader.load()
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.collect().foreach(r => got.add(r.getString(0)))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      assert(q.awaitTermination(60000), s"stream over $feedUrl did not finish")
-      Right(got.asScala.toSeq)
-    } catch {
-      case e: org.apache.spark.sql.streaming.StreamingQueryException => Left(e)
-    } finally q.stop()
+    val feed = spark.readStream.format("capfeed")
+      .options(Map("url" -> feedUrl, "timeout" -> "5000") ++ extra).load()
+    val q = StreamRunner.drain(spark, "capfeed_urls", ckpt, feed, "append", ckpt,
+      (df, _) => df.collect().foreach(r => got.add(r.getString(0))))
+    q.exception.toLeft(got.asScala.toSeq)
   }
 
   test("capfeed streaming: AvailableNow polls once; checkpoint restart emits only new links") {
     val streamAlerts = new java.util.concurrent.atomic.AtomicReference(
       Seq("metservice-polygon.xml", "geonet-circle.xml"))
     server.createContext("/streamfeed", (ex: HttpExchange) => respond(ex, 200,
-      streamAlerts.get().map(f => s"<item><link>$base/cap/$f</link></item>")
+      streamAlerts.get().map(f => s"<item><link>$base/alerts/cap/$f</link></item>")
         .mkString("<rss><channel>", "", "</channel></rss>")))
-    val ckpt = java.nio.file.Files.createTempDirectory("capfeed-ckpt").toString
+    val ckpt = tempDir("capfeed-ckpt").toString
 
     val first = availableNow(s"$base/streamfeed", ckpt).toOption.get.toSet
-    assert(first == streamAlerts.get().map(f => s"$base/cap/$f").toSet)
+    assert(first == streamAlerts.get().map(f => s"$base/alerts/cap/$f").toSet)
 
     // feed gains one alert; a restarted stream on the same checkpoint
     // must emit ONLY the new link (offset replay, no re-emission)
     streamAlerts.set(streamAlerts.get() :+ "nema-nogeometry.xml")
     val second = availableNow(s"$base/streamfeed", ckpt).toOption.get.toSet
-    assert(second == Set(s"$base/cap/nema-nogeometry.xml"),
+    assert(second == Set(s"$base/alerts/cap/nema-nogeometry.xml"),
       s"restart must emit only the new alert, got $second")
   }
 
@@ -228,7 +259,7 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     val urls = (1 to 5).map(i => s"$base/slowstream-alerts/a$i.xml")
     server.createContext("/slowstreamfeed", (ex: HttpExchange) => respond(ex, 200,
       urls.map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")))
-    val ckpt = Files.createTempDirectory("capfeed-overlap-ckpt").toString
+    val ckpt = tempDir("capfeed-overlap-ckpt").toString
 
     val got = availableNow(s"$base/slowstreamfeed", ckpt, "numPartitions" -> "1")
     assert(got.map(_.sorted) == Right(urls.sorted), s"one micro-batch must emit every link once, got $got")
@@ -239,13 +270,13 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
   test("capfeed streaming: a failed feed poll plans no batch; the next run emits every link once") {
     val feedUp = new java.util.concurrent.atomic.AtomicBoolean(false)
     val urls = Seq("metservice-polygon.xml", "geonet-circle.xml", "unknown-codes.xml")
-      .map(f => s"$base/cap/$f")
+      .map(f => s"$base/alerts/cap/$f")
     val feedLinks = new java.util.concurrent.atomic.AtomicReference(urls)
     server.createContext("/outagefeed", (ex: HttpExchange) =>
       if (!feedUp.get()) respond(ex, 500, "feed down")
       else respond(ex, 200, feedLinks.get()
         .map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")))
-    val ckpt = Files.createTempDirectory("capfeed-outage-ckpt").toString
+    val ckpt = tempDir("capfeed-outage-ckpt").toString
 
     // the feed is down for the whole first run: it ends cleanly, empty
     val down = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
@@ -262,7 +293,7 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     feedUp.set(false)
     val downAgain = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
     assert(downAgain == Right(Nil), s"a failed poll after a restart must emit nothing, got $downAgain")
-    val added = s"$base/cap/nema-nogeometry.xml"
+    val added = s"$base/alerts/cap/nema-nogeometry.xml"
     feedLinks.set(urls :+ added)
     feedUp.set(true)
     val afterOutage = availableNow(s"$base/outagefeed", ckpt, "retries" -> "0")
@@ -274,11 +305,11 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     // the RSS pattern admits newlines and tabs inside <link>; Spark's
     // offset log keeps one offset per line, so the offset JSON must
     // escape them or the restart below cannot read its checkpoint
-    val good = s"$base/cap/metservice-polygon.xml"
+    val good = s"$base/alerts/cap/metservice-polygon.xml"
     server.createContext("/newlinefeed", (ex: HttpExchange) => respond(ex, 200,
       s"<rss><channel><item><link>$good</link></item>" +
-        s"<item><link>$base/cap/geonet-\n\tcircle.xml</link></item></channel></rss>"))
-    val ckpt = Files.createTempDirectory("capfeed-newline-ckpt").toString
+        s"<item><link>$base/alerts/cap/geonet-\n\tcircle.xml</link></item></channel></rss>"))
+    val ckpt = tempDir("capfeed-newline-ckpt").toString
 
     // the broken link is planned into the offset, its fetch fails and is skipped
     val first = availableNow(s"$base/newlinefeed", ckpt, "retries" -> "0")
@@ -289,71 +320,19 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
 
   test("streaming quarantine parity: a planted bad alert through the capfeed " +
       "MicroBatchStream lands in the quarantine side-channel") {
-    // cap3_quarantine gates per-alert error isolation in BATCH mode;
-    // this proves the same side-channel through the capfeed streaming
-    // source — a feed mixing healthy alerts with the
-    // planted bad fixtures (unparseable sent/onset) must stream the
-    // good features and quarantine exactly the bad identifiers, no
-    // batch/stream divergence.
-    // path segment contains "alert" so the P2 link predicate
-    // (Http.isCapAlertLink) keeps these links — same contract real
-    // CAP feeds satisfy
-    server.createContext("/capbad-alerts/", (ex: HttpExchange) => {
-      val name = ex.getRequestURI.getPath.stripPrefix("/capbad-alerts/")
-      val p = Paths.get("fixtures/cap_bad", name)
-      if (Files.exists(p)) respond(ex, 200, Files.readString(p))
-      else respond(ex, 404, "not found")
-    })
-    val mixed = Seq("/cap/metservice-polygon.xml", "/capbad-alerts/bad-sent.xml",
-      "/capbad-alerts/bad-onset.xml", "/capbad-alerts/ok-point.xml")
-    server.createContext("/feedbad", (ex: HttpExchange) => respond(ex, 200,
-      mixed.map(f => s"<item><link>$base$f</link></item>")
-        .mkString("<rss><channel>", "", "</channel></rss>")))
-
-    import spark.implicits._
-    val asOf = java.time.Instant.parse("2024-06-01T00:00:00Z")
-    def active(xml: org.apache.spark.sql.Dataset[String]) =
-      CapPipeline.filterActive(CapPipeline.parseAlerts(xml), asOf)
-    /** Both sides of one fan-out over `alerts`, read from one persisted copy. */
-    def bothSides(alerts: org.apache.spark.sql.Dataset[graft.cap.CapAlert])
-        : (Set[String], Set[(String, String)]) = {
-      alerts.persist()
-      try (CapPipeline.toFeatures(alerts).collect().map(_.id).toSet,
-        CapPipeline.quarantine(alerts).collect().map(qa => (qa.identifier, qa.error)).toSet)
-      finally alerts.unpersist()
-    }
-
-    val featIds = new ConcurrentLinkedQueue[String]()
-    val quarantined = new ConcurrentLinkedQueue[(String, String)]()
-    val ckpt = java.nio.file.Files.createTempDirectory("capfeed-quar-ckpt").toString
-    val q = spark.readStream.format("capfeed")
-      .option("url", s"$base/feedbad")
-      .option("timeout", 5000)
-      .load()
-      .select("xml").as[String]
-      .transform(active)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.cap.CapAlert], _: Long) =>
-        val (fs, qs) = bothSides(batch)
-        fs.foreach(featIds.add)
-        qs.foreach(quarantined.add)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(60000), "quarantine stream did not finish")
-    q.stop()
-
-    // batch reference over the identical source
-    val xmlB = spark.read.format("capfeed").option("url", s"$base/feedbad").load()
-      .select("xml").as[String]
-    val (batchFeats, batchQuar) = bothSides(active(xmlB))
-
-    assert(quarantined.asScala.toSet == batchQuar,
-      s"stream quarantine diverges from batch: ${quarantined.asScala.toSet} vs $batchQuar")
-    assert(quarantined.asScala.map(_._1).toSet == Set("QBAD-2026-001", "QBAD-2026-002"),
+    // cap3_quarantine gates per-alert error isolation over files; the
+    // same side-channel through CapEtl over the capfeed source, batch
+    // and stream: the planted bad fixtures (unparseable sent/onset)
+    // quarantine, the healthy ones still deliver their features
+    val (batch, batchBodies, _) =
+      logged(CapEtl.run(spark, feedOpts("cap_bad"), sinkOpts, CapQueries.asOf))
+    val (stream, streamBodies, _) = logged(CapEtl.stream(spark, feedOpts("cap_bad"), sinkOpts,
+      CapQueries.asOf, tempDir("capfeed-quar-ckpt").toString))
+    assert(stream.quarantined.toSet == batch.quarantined.toSet,
+      s"stream quarantine diverges from batch: ${stream.quarantined} vs ${batch.quarantined}")
+    assert(batch.quarantined.map(_.identifier).sorted == Seq("QBAD-2026-001", "QBAD-2026-002"),
       "exactly the two planted bad alerts must quarantine")
-    assert(featIds.asScala.toSet == batchFeats && batchFeats.nonEmpty,
+    assert(postedIds(streamBodies) == postedIds(batchBodies) && batchBodies.nonEmpty,
       "healthy alerts must still emit their features through the stream")
   }
 
@@ -368,72 +347,45 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
   }
 
   test("streaming end-to-end: capfeed stream → parse → fan-out → cloudtak per batch") {
-    posts.clear()
-    import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("capfeed-e2e-ckpt").toString
-    val q = spark.readStream.format("capfeed")
-      .option("url", s"$base/feed")
-      .option("timeout", 5000)
-      .load()
-      .select("xml").as[String]
-      .transform(xml => CapPipeline.toFeatures(CapPipeline.filterActive(
-        CapPipeline.parseAlerts(xml), java.time.Instant.parse("2024-06-01T00:00:00Z"))))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.cap.CotFeature], _: Long) =>
-        batch.select("json").write.format("cloudtak")
-          .option("url", s"$base/ingest").option("timeout", 5000)
-          .mode("append").save()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    q.stop()
-    val idRe = """"id":"([^"]+)"""".r
-    val got = posts.asScala.toSeq.flatMap(b => idRe.findAllMatchIn(b).map(_.group(1))).toSet
-    val expected = {
-      val xml = spark.read.format("capfeed").option("url", s"$base/feed").load()
-        .select("xml").as[String]
-      CapPipeline.toFeatures(CapPipeline.filterActive(CapPipeline.parseAlerts(xml),
-        java.time.Instant.parse("2024-06-01T00:00:00Z"))).collect().map(_.id).toSet
-    }
-    assert(got == expected && got.nonEmpty,
-      s"streamed features must equal batch features: got=$got expected=$expected")
+    val ckpt = tempDir("capfeed-etl-ckpt").toString
+    val (record, bodies, gets) =
+      logged(CapEtl.stream(spark, feedOpts("cap"), sinkOpts, CapQueries.asOf, ckpt))
+    assert(postedIds(bodies) == goldenIds, "the stream must POST each golden feature once")
+    assert(record.features == goldenIds.size)
+    assert(gets == fetchedOnce("cap"), "each alert must be fetched once")
+    // a second run from the same checkpoint has no new alert
+    val (again, againBodies, againGets) =
+      logged(CapEtl.stream(spark, feedOpts("cap"), sinkOpts, CapQueries.asOf, ckpt))
+    assert(againBodies.isEmpty && again == CapEtl.RunRecord(0, Nil),
+      s"a re-run on the checkpoint must POST nothing, got $again")
+    assert(againGets == Seq("/fixture-feed/cap"), s"a re-run polls the feed only, got $againGets")
   }
 
   test("end-to-end: capfeed → parse → features → cloudtak FeatureCollection POSTs") {
-    posts.clear()
-    import spark.implicits._
-    val xml = spark.read.format("capfeed")
-      .option("url", s"$base/feed")
-      .option("numPartitions", 2)
-      .load()
-      .select("xml").as[String]
-    val feats = CapPipeline.toFeatures(CapPipeline.filterActive(
-      CapPipeline.parseAlerts(xml), java.time.Instant.parse("2024-06-01T00:00:00Z")))
-    val expected = feats.collect().map(_.id).toSet
-    assert(expected.nonEmpty)
-
-    feats.select("json").write.format("cloudtak")
-      .option("url", s"$base/ingest")
-      .option("timeout", 5000)
-      .mode("append")
-      .save()
-
-    val bodies = posts.asScala.toSeq
+    val (record, bodies, gets) =
+      logged(CapEtl.run(spark, feedOpts("cap"), sinkOpts, CapQueries.asOf))
     assert(bodies.nonEmpty && bodies.size <= 4, "one POST per non-empty partition")
     bodies.foreach { b =>
       assert(b.startsWith("""{"type":"FeatureCollection","features":["""))
       assert(b.endsWith("]}"))
     }
-    // every feature id arrives exactly once across the partition POSTs
-    val idRe = """"id":"([^"]+)"""".r
-    val got = bodies.flatMap(b => idRe.findAllMatchIn(b).map(_.group(1)))
-    assert(got.toSet == expected)
-    assert(got.length == expected.size)
+    assert(postedIds(bodies) == goldenIds, "the run must POST each golden feature once")
+    assert(record.features == goldenIds.size)
+    assert(gets == fetchedOnce("cap"), "each alert must be fetched once")
   }
 
-  test("EtlConfig: reference-parity defaults, validation, and published JSON schema") {
+  test("CapEtl over a feed with no alert POSTs nothing, in batch and in stream") {
+    server.createContext("/emptyfeed", (ex: HttpExchange) =>
+      respond(ex, 200, "<rss><channel></channel></rss>"))
+    val empty = Map("url" -> s"$base/emptyfeed", "timeout" -> "5000")
+    val (batch, batchBodies, _) = logged(CapEtl.run(spark, empty, sinkOpts, CapQueries.asOf))
+    val (stream, streamBodies, _) = logged(CapEtl.stream(spark, empty, sinkOpts,
+      CapQueries.asOf, tempDir("capfeed-empty-ckpt").toString))
+    assert(batch == CapEtl.RunRecord(0, Nil) && stream == CapEtl.RunRecord(0, Nil))
+    assert(batchBodies.isEmpty && streamBodies.isEmpty)
+  }
+
+  test("EtlConfig: reference-parity defaults and validation") {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     def opts(m: Map[String, String]) = new CaseInsensitiveStringMap(m.asJava)
     // defaults mirror the reference env schema (task.ts:15-22)
@@ -454,10 +406,5 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     val e3 = intercept[IllegalArgumentException](
       EtlConfig.fromOptions(opts(Map("url" -> "u", "retries" -> "-1")), "cloudtak"))
     assert(e3.getMessage.contains("retries"))
-    // published schema pins url-required and both reference defaults
-    assert(EtlConfig.inputJsonSchema.contains("\"required\":[\"url\"]"))
-    assert(EtlConfig.inputJsonSchema.contains("\"default\":30000"))
-    assert(EtlConfig.inputJsonSchema.contains("\"default\":2"))
-    assert(EtlConfig.emptyJsonSchema == """{"type":"object","properties":{}}""")
   }
 }

@@ -24,7 +24,7 @@ class TablesSpec extends AnyFunSuite with GraftTestSession {
   /** Write the same logical events under a given ts writer expression,
     * as the single-file `events.parquet` layout the sf dirs use. */
   private def writeFixture(tsCol: String): String = {
-    val dir = Files.createTempDirectory("tables-spec-").toFile
+    val dir = tempDir("tables-spec-").toFile
     val out = new java.io.File(dir, "events.parquet")
     val tmp = new java.io.File(dir, "_tmp")
     val df = spark.range(0, 100)

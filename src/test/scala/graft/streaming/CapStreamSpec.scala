@@ -28,11 +28,10 @@ class CapStreamSpec extends AnyFunSuite with GraftTestSession {
     import spark.implicits._
     val expected = {
       val xml = spark.read.option("wholetext", "true").text("fixtures/cap").as[String]
-      CapPipeline.toFeatures(CapPipeline.filterActive(CapPipeline.parseAlerts(xml), asOf))
-        .collect().map(_.id).sorted
+      CapPipeline.toFeatures(CapPipeline.active(xml, asOf)).collect().map(_.id).sorted
     }
-    val q = CapPipeline.toFeatures(
-        CapPipeline.filterActive(CapStream.alerts(spark, "fixtures/cap"), asOf))
+    val xml = spark.readStream.option("wholetext", "true").text("fixtures/cap").as[String]
+    val q = CapPipeline.toFeatures(CapPipeline.active(xml, asOf))
       .writeStream
       .format("memory")
       .queryName("feat_stream")

@@ -118,7 +118,7 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("idempotent foreachBatch sink: replayed batches do not duplicate output") {
-    val dir = java.nio.file.Files.createTempDirectory("ev_sink").toString
+    val dir = tempDir("ev_sink").toString
     val q = EventStream.dedupedEvents(EventStream.readEvents(spark, sf))
       .writeStream
       .foreachBatch(IdempotentSink.parquetSink(dir))
@@ -175,7 +175,7 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
     // batches, so the second batch exercises the prior-state merge path
     // the single-batch oracle run never reaches
     val ev = graft.sources.Tables.events(spark, sf)
-    val srcDir = java.nio.file.Files.createTempDirectory("tws-src-").toFile
+    val srcDir = tempDir("tws-src-").toFile
     def writeHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
       val tmp = new java.io.File(srcDir, s"stage-$name")
       ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -219,7 +219,7 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
   test("MapState histogram accumulates per-(user,type) entries across micro-batches") {
     import org.apache.spark.sql.functions.{col, count, lit}
     val ev = graft.sources.Tables.events(spark, sf)
-    val srcDir = java.nio.file.Files.createTempDirectory("mapstate-src-").toFile
+    val srcDir = tempDir("mapstate-src-").toFile
     def writeHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
       val tmp = new java.io.File(srcDir, s"stage-$name")
       ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -262,7 +262,7 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
         min(unix_micros(col("ts"))).as("first_ts_us"),
         max(unix_micros(col("ts"))).as("last_ts_us"))
     // stream side: the odd half, via a real file-stream source
-    val tmp = java.nio.file.Files.createTempDirectory("warmstart-src-").toFile
+    val tmp = tempDir("warmstart-src-").toFile
     ev.filter(col("event_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(tmp.toString)
     val tail = spark.readStream.schema(ev.schema).parquet(tmp.toString)
@@ -301,7 +301,7 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
     val ev = graft.sources.Tables.events(spark, sf)
     // two arrival files: the events, then a far-future sentinel that
     // pushes the final watermark past every armed timer
-    val srcDir = java.nio.file.Files.createTempDirectory("timer-src-").toFile
+    val srcDir = tempDir("timer-src-").toFile
     def place(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
       val tmp = new java.io.File(srcDir, s"stage-$name")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -381,7 +381,7 @@ class EventStreamSpec extends AnyFunSuite with GraftTestSession {
       row(3L, wm - gapMs + 1),  // timer at wm + 1: above — must not fire
       row(99L, tMax))           // carries the max event time (sets wm)
     val base = spark.createDataFrame(rows, schema)
-    val srcDir = java.nio.file.Files.createTempDirectory("timer-edge-").toFile
+    val srcDir = tempDir("timer-edge-").toFile
     base.coalesce(1).write.mode("overwrite").parquet(srcDir.toString)
 
     val stream = spark.readStream.schema(base.schema).parquet(srcDir.toString)

@@ -74,7 +74,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
         -1L, "sentinel", 0.0)),
       eventSchema)
     (quartiles :+ sentinel).zipWithIndex.foreach { case (part, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"ev_part$i").toString
+      val tmp = tempDir(s"ev_part$i").toString
       part.coalesce(1).write.mode("overwrite").parquet(tmp)
       val src = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -104,11 +104,11 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("hourlyAgg killed mid-stream resumes from the checkpoint with exactly-once output") {
-    val srcDir = java.nio.file.Files.createTempDirectory("ev_arrivals").toString
+    val srcDir = tempDir("ev_arrivals").toString
     writeArrivalFiles(srcDir)
 
     // control: the same stream, never failed
-    val controlDir = java.nio.file.Files.createTempDirectory("ev_ctl").toString
+    val controlDir = tempDir("ev_ctl").toString
     assert(run(srcDir, s"$controlDir/_ckpt", IdempotentSink.parquetSink(controlDir)) == Finished,
       "control stream did not finish")
     val control = IdempotentSink.readBack(spark, controlDir)
@@ -117,7 +117,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
 
     // failure run: batch 2's sink write SUCCEEDS, then the batch dies
     // before committing — the worst-case at-least-once window
-    val outDir = java.nio.file.Files.createTempDirectory("ev_rec").toString
+    val outDir = tempDir("ev_rec").toString
     val ckpt = s"$outDir/_ckpt"
     val armed = new AtomicBoolean(true)
     val failingSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit =
@@ -150,7 +150,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // all four files, so the crash lands while most sessions are OPEN
     // — recovery must restore the merged session state, not just
     // replay rows.
-    val srcDir = java.nio.file.Files.createTempDirectory("sess_arrivals").toString
+    val srcDir = tempDir("sess_arrivals").toString
     writeArrivalFiles(srcDir)
 
     def sessions(srcDir: String): DataFrame =
@@ -170,7 +170,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     }
 
     // control: the same stream, never failed
-    val controlDir = java.nio.file.Files.createTempDirectory("sess_ctl").toString
+    val controlDir = tempDir("sess_ctl").toString
     assert(run(s"$controlDir/_ckpt", IdempotentSink.parquetSink(controlDir)) == Finished,
       "control session stream did not finish")
     val control = IdempotentSink.readBack(spark, controlDir)
@@ -179,7 +179,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
 
     // failure run: batch 2's sink write SUCCEEDS, then the batch dies
     // before committing (worst-case at-least-once window)
-    val outDir = java.nio.file.Files.createTempDirectory("sess_rec").toString
+    val outDir = tempDir("sess_rec").toString
     val ckpt = s"$outDir/_ckpt"
     val armed = new AtomicBoolean(true)
     val failingSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit =
@@ -212,10 +212,8 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val rocks = graft.queries.CapQueries.capLifecycle(spark, sf)
       .collect().map(_.toString).sorted.toSeq
-    val prev = spark.conf.getOption(key)
-    val heap = try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    val heap = withConfs(key ->
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider") {
       spark.catalog.dropTempView("cap4_heap_sink")
       val q = CapStream.lifecycle(
           CapStream.alerts(spark, graft.queries.CapQueries.lifecycleFixtureDir))
@@ -229,9 +227,6 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
       finally q.stop()
       spark.table("cap4_heap_sink").orderBy("identifier")
         .collect().map(_.toString).sorted.toSeq
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
     assert(rocks == heap && rocks.nonEmpty,
       "mapGroupsWithState lifecycle differs between state store providers")
@@ -243,8 +238,10 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // one fixture file per micro-batch: per-alert state must survive
     // the crash between batches via the RocksDB changelog checkpoint
     def run(ckpt: String, sinkFn: (org.apache.spark.sql.Dataset[Row], Long) => Unit): RunResult = {
-      val q = CapStream.lifecycle(
-          CapStream.alerts(spark, fixtures, maxFilesPerTrigger = 1))
+      import spark.implicits._
+      val xml = spark.readStream.option("wholetext", "true")
+        .option("maxFilesPerTrigger", "1").text(fixtures).as[String]
+      val q = CapStream.lifecycle(graft.cap.CapPipeline.parseAlerts(xml))
         .toDF()
         .writeStream
         .foreachBatch(sinkFn)
@@ -268,7 +265,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
             "|" + last.getAs[String]("lastSent"))
         }
 
-    val controlDir = java.nio.file.Files.createTempDirectory("cap4_ctl").toString
+    val controlDir = tempDir("cap4_ctl").toString
     assert(run(s"$controlDir/_ckpt", IdempotentSink.parquetSink(controlDir)) == Finished,
       "control lifecycle stream did not finish")
     val control = finalState(controlDir)
@@ -277,7 +274,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // crash AFTER batch 2's sink write (worst case: output exists but
     // the batch never committed) — replay must overwrite, state must
     // restore to batch 1's
-    val outDir = java.nio.file.Files.createTempDirectory("cap4_rec").toString
+    val outDir = tempDir("cap4_rec").toString
     val ckpt = s"$outDir/_ckpt"
     val armed = new AtomicBoolean(true)
     val failingSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit =
@@ -300,7 +297,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // per-user ValueState aggregate accumulated over batches 0-1 must
     // survive the crash at batch 2 — a lost prior would make every
     // post-crash emission restart its counts from the batch's own rows.
-    val srcDir = java.nio.file.Files.createTempDirectory("tws_arrivals").toString
+    val srcDir = tempDir("tws_arrivals").toString
     writeArrivalFiles(srcDir)
 
     def run(ckpt: String, outSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit): RunResult = {
@@ -327,7 +324,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
             last.getAs[Long]("first_ts_us"), last.getAs[Long]("last_ts_us"))
         }
 
-    val controlDir = java.nio.file.Files.createTempDirectory("tws_ctl").toString
+    val controlDir = tempDir("tws_ctl").toString
     assert(run(s"$controlDir/_ckpt", IdempotentSink.parquetSink(controlDir)) == Finished,
       "control tws stream did not finish")
     val control = finalAgg(controlDir)
@@ -336,7 +333,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // final count must exceed any single batch's contribution
     assert(control.values.exists(_._1 > 1), "no user accumulated state")
 
-    val outDir = java.nio.file.Files.createTempDirectory("tws_rec").toString
+    val outDir = tempDir("tws_rec").toString
     val ckpt = s"$outDir/_ckpt"
     val armed = new AtomicBoolean(true)
     val failingSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit =
@@ -360,7 +357,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // watermark + interval passes). The quartile arrival split lands
     // the crash while both buffers hold unmatched rows — recovery must
     // restore them or post-crash arrivals silently lose their matches.
-    val srcDir = java.nio.file.Files.createTempDirectory("join_arrivals").toString
+    val srcDir = tempDir("join_arrivals").toString
     writeArrivalFiles(srcDir)
 
     def run(ckpt: String, outSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit): RunResult = {
@@ -379,13 +376,13 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     def matches(outDir: String): Seq[String] =
       IdempotentSink.readBack(spark, outDir).collect().map(_.toString).sorted.toSeq
 
-    val controlDir = java.nio.file.Files.createTempDirectory("join_ctl").toString
+    val controlDir = tempDir("join_ctl").toString
     assert(run(s"$controlDir/_ckpt", IdempotentSink.parquetSink(controlDir)) == Finished,
       "control join stream did not finish")
     val control = matches(controlDir)
     assert(control.nonEmpty, "control join stream matched nothing")
 
-    val outDir = java.nio.file.Files.createTempDirectory("join_rec").toString
+    val outDir = tempDir("join_rec").toString
     val ckpt = s"$outDir/_ckpt"
     val armed = new AtomicBoolean(true)
     val failingSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit =
@@ -410,7 +407,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // each (user, type) count across batches; the crash at batch 2 must
     // restore every map entry or post-crash emissions restart counts
     // from the batch's own rows.
-    val srcDir = java.nio.file.Files.createTempDirectory("map_arrivals").toString
+    val srcDir = tempDir("map_arrivals").toString
     writeArrivalFiles(srcDir)
 
     def run(ckpt: String, outSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit): RunResult = {
@@ -436,7 +433,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
         .groupBy(r => (r.getAs[Long]("user_id"), r.getAs[String]("event_type")))
         .map { case (k, rows) => k -> rows.map(_.getAs[Long]("n_events")).max }
 
-    val controlDir = java.nio.file.Files.createTempDirectory("map_ctl").toString
+    val controlDir = tempDir("map_ctl").toString
     assert(run(s"$controlDir/_ckpt", IdempotentSink.parquetSink(controlDir)) == Finished,
       "control mapstate stream did not finish")
     val control = finalHist(controlDir)
@@ -449,7 +446,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     assert(control == batchTruth,
       "control mapstate histogram diverges from the batch GROUP BY")
 
-    val outDir = java.nio.file.Files.createTempDirectory("map_rec").toString
+    val outDir = tempDir("map_rec").toString
     val ckpt = s"$outDir/_ckpt"
     val armed = new AtomicBoolean(true)
     val failingSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit =
@@ -474,7 +471,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // would double the backfill contribution in every post-crash
     // emission). Control = the uninterrupted warm-start run; ground
     // truth = the full-table batch aggregate over tail-active users.
-    val srcDir = java.nio.file.Files.createTempDirectory("warm_arrivals").toString
+    val srcDir = tempDir("warm_arrivals").toString
     writeArrivalFiles(srcDir)
 
     val ev = graft.sources.Tables.events(spark, sf)
@@ -507,7 +504,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
             last.getAs[Long]("first_ts_us"), last.getAs[Long]("last_ts_us"))
         }
 
-    val controlDir = java.nio.file.Files.createTempDirectory("warm_ctl").toString
+    val controlDir = tempDir("warm_ctl").toString
     assert(run(s"$controlDir/_ckpt", IdempotentSink.parquetSink(controlDir)) == Finished,
       "control warm-start stream did not finish")
     val control = finalAgg(controlDir)
@@ -526,7 +523,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     assert(control == truth,
       "control warm-start final state diverges from the full-table aggregate")
 
-    val outDir = java.nio.file.Files.createTempDirectory("warm_rec").toString
+    val outDir = tempDir("warm_rec").toString
     val ckpt = s"$outDir/_ckpt"
     val armed = new AtomicBoolean(true)
     val failingSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit =
@@ -551,7 +548,7 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     // replayed watermark passes them. Batch boundaries are identical
     // between control and recovery (same files, same order, restored
     // watermark), so the emitted close set must match row-for-row.
-    val srcDir = java.nio.file.Files.createTempDirectory("timer_arrivals").toString
+    val srcDir = tempDir("timer_arrivals").toString
     writeArrivalFiles(srcDir)
     val gapMs = 30L * 60 * 1000
 
@@ -571,13 +568,13 @@ class RecoverySpec extends AnyFunSuite with GraftTestSession {
     def closes(outDir: String): Seq[String] =
       IdempotentSink.readBack(spark, outDir).collect().map(_.toString).sorted.toSeq
 
-    val controlDir = java.nio.file.Files.createTempDirectory("timer_ctl").toString
+    val controlDir = tempDir("timer_ctl").toString
     assert(run(s"$controlDir/_ckpt", IdempotentSink.parquetSink(controlDir)) == Finished,
       "control timer stream did not finish")
     val control = closes(controlDir)
     assert(control.nonEmpty, "control timer stream fired no closes")
 
-    val outDir = java.nio.file.Files.createTempDirectory("timer_rec").toString
+    val outDir = tempDir("timer_rec").toString
     val ckpt = s"$outDir/_ckpt"
     val armed = new AtomicBoolean(true)
     val failingSink: (org.apache.spark.sql.Dataset[Row], Long) => Unit =

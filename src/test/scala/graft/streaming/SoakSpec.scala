@@ -25,7 +25,7 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
   private val nSlices = 16
 
   private lazy val (arrivals, arrivalsDup, ev) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_soak_spec").toString
+    val root = tempDir("graft_soak_spec").toString
     StreamSoak.writeTimeSlices(spark, sf, nSlices, root)
   }
 
@@ -35,7 +35,7 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
       StreamSoak.readArrivals(spark, arrivals, ev.schema))
     // the kill lands between batches (StreamSoak.drive), so it fires on
     // every 16-slice drain and drops no committed batch's progress
-    val work = java.nio.file.Files.createTempDirectory("soak_b51").toString
+    val work = tempDir("soak_b51").toString
     val half = StreamSoak.drive(spark, "spec_soak_b51", df, "update",
       s"$work/ckpt", s"$work/out", arrivals.getAbsolutePath,
       killAfter = nSlices / 2)
@@ -65,7 +65,7 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
     // the two hardest state encodings (merging session state; symmetric
     // join buffers) — full-depth kill/resume evidence lives in the
     // StreamSoak probe, this gates the drain path per build
-    val w45 = java.nio.file.Files.createTempDirectory("soak_b45").toString
+    val w45 = tempDir("soak_b45").toString
     val r45 = StreamSoak.drive(spark, "spec_soak_b45",
       EventStream.sessionAgg(StreamSoak.readArrivals(spark, arrivals, ev.schema)),
       "append", s"$w45/ckpt", s"$w45/out", arrivals.getAbsolutePath)
@@ -76,7 +76,7 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
     val st45 = r45.progress.map(_._4)
     assert(st45.last < st45.max, s"b45: no session-state eviction (peak ${st45.max})")
 
-    val w46 = java.nio.file.Files.createTempDirectory("soak_b46").toString
+    val w46 = tempDir("soak_b46").toString
     val r46 = StreamSoak.drive(spark, "spec_soak_b46", {
         val e = StreamSoak.readArrivals(spark, arrivals, ev.schema)
         EventStream.clickErrorJoin(e, e)
@@ -91,7 +91,7 @@ class SoakSpec extends AnyFunSuite with GraftTestSession {
 
   test("b47 dedup over a doubled 16-batch stream reproduces the raw table " +
       "with watermark-bounded state") {
-    val work = java.nio.file.Files.createTempDirectory("soak_b47").toString
+    val work = tempDir("soak_b47").toString
     val r = StreamSoak.drive(spark, "spec_soak_b47",
       EventStream.dedupedEvents(
         StreamSoak.readArrivals(spark, arrivalsDup, ev.schema)),

@@ -10,7 +10,8 @@ import graft.GraftTestSession
   * (fingerprinted via the provider's `rocksdb*` custom metrics in query
   * progress), and [[StateBackend.assertRocksDb]] must FAIL on a
   * heap-provider run — i.e. a silent conf regression cannot pass the
-  * oracle gate with the wrong backend.
+  * oracle gate with the wrong backend. [[StreamRunner.drain]] asserts
+  * it exactly when the executed plan holds a stateful operator.
   */
 class StateBackendSpec extends AnyFunSuite with GraftTestSession {
 
@@ -51,5 +52,20 @@ class StateBackendSpec extends AnyFunSuite with GraftTestSession {
     val a = spark.table("sb_rocks").collect().map(_.toString).sorted.toSeq
     val b = spark.table("sb_heap").collect().map(_.toString).sorted.toSeq
     assert(a == b && a.nonEmpty, "providers disagree on the hourly aggregation")
+  }
+
+  test("drain checks RocksDB only when the executed plan holds a stateful operator") {
+    // stateless: no state operator to fingerprint, the drain passes
+    val stateless = StreamRunner.drain(spark, "sb_stateless", sf,
+      EventStream.readEvents(spark, sf).filter("value > 0"), "append",
+      tempDir("sb-stateless").toString, (batch, _) => batch.collect())
+    assert(stateless.exception.isEmpty && stateless.recentProgress.nonEmpty)
+    assert(stateless.recentProgress.forall(_.stateOperators.isEmpty))
+    // stateful on the heap provider: the plan decides, the drain fails
+    withConfs(key -> heapProvider) {
+      intercept[IllegalArgumentException](StreamRunner.drain(spark, "sb_heap_drain", sf,
+        EventStream.hourlyAgg(EventStream.readEvents(spark, sf)), "complete",
+        tempDir("sb-heap").toString, (batch, _) => batch.collect()))
+    }
   }
 }
