@@ -5,7 +5,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** JVM kernel for [[WinnowFingerprints]] — winnowing document
@@ -487,8 +493,50 @@ object DotRewrite extends org.apache.spark.sql.catalyst.rules.Rule[
     }
 }
 
+/** AQE query-stage preparation rule: a global sort over a small,
+  * already computed input sorts it in one partition. The exchange a
+  * global sort adds (`ENSURE_REQUIREMENTS` origin, `RangePartitioning`)
+  * first runs a sampling job over its input to pick the range bounds.
+  * For most of the surface's final `orderBy`s that input is a few KB to
+  * a few MB of aggregate output, so the sampling job cost more than the
+  * sort. Once every leaf below the exchange is a materialized query
+  * stage whose runtime size totals at most
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (Spark's own
+  * amount of input for one reducer), the exchange becomes a
+  * `SinglePartition` exchange. The sort above it then gives the same
+  * total order from one partition, and no sampling job runs.
+  *
+  * Left as they are: user range repartitions (their origin is not
+  * `ENSURE_REQUIREMENTS`), a sort over a scan or over an input that is
+  * not yet materialized, and a sort over an input above the bound,
+  * which keeps its parallel range sort.
+  */
+object SmallSortSinglePartition extends Rule[SparkPlan] {
+
+  override def apply(plan: SparkPlan): SparkPlan = {
+    val bound = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    plan.transformUp {
+      case e @ ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _)
+          if materializedBytes(child).exists(_ <= bound) =>
+        e.copy(outputPartitioning = SinglePartition)
+    }
+  }
+
+  /** Runtime bytes of `plan`'s input when every leaf of it is a
+    * materialized query stage, None otherwise. */
+  private def materializedBytes(plan: SparkPlan): Option[BigInt] = {
+    val leaves = plan.collectLeaves()
+    val stages = leaves.collect { case s: QueryStageExec if s.isMaterialized => s }
+    if (leaves.nonEmpty && stages.size == leaves.size)
+      Some(stages.map(_.getRuntimeStatistics.sizeInBytes).sum)
+    else None
+  }
+}
+
 /** Session-extension entry point: registers the graft-native functions
-  * into the Catalyst function registry. [[graft.GraftSession]] applies
+  * into the Catalyst function registry, the [[DotRewrite]] optimizer
+  * rule, the [[SmallSortSinglePartition]] query-stage rule and the
+  * as-of join rule and strategy. [[graft.GraftSession]] applies
   * it to every session it creates; elsewhere activate it with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
   */
@@ -518,6 +566,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         LshBands(exprs.head, lit(exprs(1), "nPlanes"), lit(exprs(2), "bandBits"))
       }))
     ext.injectOptimizerRule(_ => DotRewrite)
+    ext.injectQueryStagePrepRule(_ => SmallSortSinglePartition)
     // whole-operator extension point (SURVEY §4 preference (c)): the
     // graft_asof hint → AsOfJoinPlan rewrite and its physical strategy
     ext.injectResolutionRule(_ => ResolveAsOfJoin)

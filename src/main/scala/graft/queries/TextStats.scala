@@ -152,42 +152,6 @@ object TextStats {
       .orderBy("true_lang", "pred_lang")
   }
 
-  /** The pre-r15 window form of T1 — kept as the differential-spec
-    * reference for [[t1LangId]]'s per-row kernel (same output, plan
-    * shuffles the full counted gram multiset). */
-  private[queries] def t1LangIdWindowForm(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val ng = docs.select(col("doc_id"), col("lang"), explode(
-        when(length(col("text")) >= 3,
-          transform(sequence(lit(1), length(col("text")) - 2),
-            i => col("text").substr(i, lit(3))))
-          .otherwise(array().cast("array<string>"))).as("ng"))
-    val langProf = ng.groupBy("lang", "ng").agg(count(lit(1)).as("c"))
-      .withColumn("lrank", row_number().over(
-        Window.partitionBy("lang").orderBy(col("c").desc, col("ng").asc)))
-      .filter(col("lrank") <= 100)
-      .select(col("lang").as("pl_lang"), col("ng").as("lng"), col("lrank"))
-    val docProf = ng.groupBy("doc_id", "ng").agg(count(lit(1)).as("c"))
-      .withColumn("drank", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("c").desc, col("ng").asc)))
-      .filter(col("drank") <= 100)
-      .select("doc_id", "ng", "drank")
-    val langs = langProf.select(col("pl_lang").as("cand")).distinct()
-    val dist = docProf
-      .crossJoin(broadcast(langs))
-      .join(broadcast(langProf), col("lng") === col("ng") && col("pl_lang") === col("cand"), "left")
-      .groupBy(col("doc_id"), col("cand"))
-      .agg(sum(coalesce(abs(col("drank") - col("lrank")), lit(100))).as("dist"))
-    val pred = dist.withColumn("rn", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("dist").asc, col("cand").asc)))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("cand").as("pred_lang"))
-    docs.select(col("doc_id"), col("lang").as("true_lang"))
-      .join(pred, "doc_id")
-      .groupBy("true_lang", "pred_lang").agg(count(lit(1)).as("n"))
-      .orderBy("true_lang", "pred_lang")
-  }
-
   /** T1's per-row top-100 3-gram profile, replicating the exploded
     * form's semantics EXACTLY:
     *  - grams step by Unicode CODE POINT (what `length()` counts and

@@ -1,8 +1,19 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -11,15 +22,27 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * returned DataFrame and let pushdown do its job (verified via
   * `.explain("formatted")` → `PushedFilters`/`ReadSchema`).
   *
+  * Every read passes its schema (`spark.read.schema(s).parquet(…)`), so
+  * building a DataFrame starts no Spark job. `spark.read.parquet` alone
+  * would infer the schema with a footer-reading job on every call
+  * (about 0.1 s each), and a query over four tables paid four of them
+  * before it ran. The schema comes from the table's parquet footer,
+  * read on the driver once per (file, length, mtime) and converted by
+  * Spark's own `ParquetToSparkSchemaConverter` with the session's conf,
+  * so it is the schema inference would give. File listing still happens
+  * on every read, so a rewritten file is read again. The same footer
+  * gives [[maybeCompact]] its row-group count.
+  *
   * The only special case is `events`: its `ts` column has shipped with
   * two different parquet footers across driver data generations —
   * `timestamp[ns]`, which Spark 4 rejects (`PARQUET_TYPE_ILLEGAL`)
   * unless `spark.sql.legacy.parquet.nanosAsLong=true` is set and then
   * surfaces as a raw nanosecond long, and `timestamp[us]`
-  * (isAdjustedToUTC=false), which surfaces as TIMESTAMP_NTZ. Both are
-  * normalized to a session-TZ TimestampType here (all entry points run
-  * with `spark.sql.session.timeZone=UTC`, so the NTZ wall time and the
-  * raw epoch nanos agree on the same instant).
+  * (isAdjustedToUTC=false), which surfaces as TIMESTAMP_NTZ. The same
+  * footer read decides which ([[schema]]), and both are normalized to
+  * a session-TZ TimestampType here (all entry points run with
+  * `spark.sql.session.timeZone=UTC`, so the NTZ wall time and the raw
+  * epoch nanos agree on the same instant).
   */
 object Tables {
 
@@ -29,40 +52,67 @@ object Tables {
 
   private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** True iff the failure (anywhere in the cause chain) is Spark 4
-    * rejecting a parquet `timestamp[ns]` footer without the legacy
-    * conf (error class PARQUET_TYPE_ILLEGAL, "Illegal Parquet type"). */
-  private def isIllegalNanos(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).exists { t =>
-      val m = Option(t.getMessage).getOrElse("")
-      m.contains("PARQUET_TYPE_ILLEGAL") || m.contains("Illegal Parquet type")
-    }
+  /** A table's parquet footer: `file` is the footer's file, `single`
+    * false for a directory of part files (its first data file's
+    * footer), `meta` its schema and key-value metadata. */
+  private final case class Footer(file: FileStatus, single: Boolean,
+      meta: FileMetaData, rowGroups: Int)
 
-  /** Probe events.parquet's RAW in-scan `ts` type, enabling the legacy
-    * nanosAsLong conf ONLY when the footer is actually `timestamp[ns]`.
-    *
-    * The probe runs WITHOUT the conf first: a modern us/NTZ footer
-    * resolves cleanly and the conf is never touched, so an unrelated
-    * ns-parquet read elsewhere in the session still fails loudly
-    * (PARQUET_TYPE_ILLEGAL) instead of silently yielding raw longs —
-    * the round-9 "spooky action at a distance" trap, removed. Only a
-    * genuine ns events footer flips the conf, and then it must STAY
-    * set: the scan consults it lazily at both schema resolution and
-    * execution, so restoring it would break the very DataFrame the
-    * caller holds (that residual, ns-corpus-only side effect is
-    * documented here and spec-pinned in TablesSpec).
-    */
-  def probeEventsTs(spark: SparkSession, evPath: String): DataType = {
-    val resolved =
-      try Some(spark.read.parquet(evPath).schema("ts").dataType)
-      catch { case e: Throwable if isIllegalNanos(e) => None }
-    resolved match {
-      case Some(t) => t // LongType here means the legacy conf is already on
-      case None =>
-        spark.conf.set(NanosKey, "true")
-        spark.read.parquet(evPath).schema("ts").dataType // LongType
-    }
+  /** Footers already read, by (file, length, mtime). */
+  private val footers = new ConcurrentHashMap[(String, Long, Long), (FileMetaData, Int)]()
+
+  /** The footer of the table at `p`: a single parquet file, or a
+    * directory of part files. None for anything else (a missing path,
+    * a directory without data files, a file that is not parquet); the
+    * caller then leaves the read to Spark. Only a non-fatal failure is
+    * None: an interrupt or a fatal error propagates. */
+  private def footer(spark: SparkSession, p: String): Option[Footer] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    try {
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      val st = fs.getFileStatus(path)
+      val file =
+        if (!st.isDirectory) Some(st)
+        else fs.listStatus(path).filter { e =>
+          val n = e.getPath.getName
+          e.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }.sortBy(_.getPath.getName).headOption
+      file.map { f =>
+        val (meta, rowGroups) = footers.computeIfAbsent(
+          (f.getPath.toString, f.getLen, f.getModificationTime), _ => {
+            val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+            try (r.getFooter.getFileMetaData, r.getRowGroups.size) finally r.close()
+          })
+        Footer(f, !st.isDirectory, meta, rowGroups)
+      }
+    } catch { case NonFatal(_) => None }
   }
+
+  /** The schema `spark.read.parquet(p)` would infer, without its job
+    * (every field nullable, as a file scan reports it).
+    * A `TIMESTAMP(NANOS)` column turns the legacy nanosAsLong conf on
+    * (the column then reads as raw epoch nanos, a LongType), on every
+    * read: the scan consults the conf lazily at execution, so it must
+    * stay set for the DataFrame the caller holds. A modern footer
+    * leaves it untouched, so an unrelated ns-parquet read elsewhere in
+    * the session still fails loudly instead of yielding raw longs. */
+  def schema(spark: SparkSession, p: String): StructType =
+    footer(spark, p) match {
+      case Some(f) =>
+        val nanos = f.meta.getSchema.getColumns.asScala.exists { c =>
+          c.getPrimitiveType.getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => false
+          }
+        }
+        if (nanos) spark.conf.set(NanosKey, "true")
+        ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(f.file.getPath,
+            new ParquetMetadata(f.meta, java.util.Collections.emptyList())),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)).toNullable
+      case None => spark.read.parquet(p).schema // Spark's own error or layout
+    }
 
   /** Normalize a raw-footer `ts` column to a session-TZ TimestampType
     * (all entry points run with session TZ = UTC, so the NTZ wall time
@@ -100,26 +150,6 @@ object Tables {
 
   private def conf(spark: SparkSession, key: String, dflt: String): String =
     spark.conf.getOption(key).getOrElse(dflt)
-
-  /** (bytes, numRowGroups, mtime) for a single parquet FILE; None for
-    * directories (already multi-file — ScaleGen probe layout) or
-    * anything unreadable as parquet. */
-  private def fileLayout(spark: SparkSession, p: String): Option[(Long, Int, Long)] = {
-    import org.apache.hadoop.fs.Path
-    try {
-      val hPath = new Path(p)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(hPath)
-      if (st.isDirectory) None
-      else {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(hPath, spark.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try Some((st.getLen, r.getRowGroups.size(), st.getModificationTime))
-        finally r.close()
-      }
-    } catch { case _: Throwable => None }
-  }
 
   /** Source table basenames (e.g. "lineitem") that resolved to a
     * compacted copy in this JVM — Bench stamps this into its artifacts
@@ -198,8 +228,11 @@ object Tables {
     * half-written cache entry is rebuilt instead of served. */
   def maybeCompact(spark: SparkSession, p: String): String = {
     val minBytes = conf(spark, "spark.graft.compact.minBytes", (4L << 20).toString).toLong
-    fileLayout(spark, p) match {
-      case Some((bytes, rgs, mtime)) if bytes > minBytes && bytes / math.max(rgs, 1) > minBytes =>
+    footer(spark, p) match {
+      case Some(f) if f.single && f.file.getLen > minBytes &&
+          f.file.getLen / math.max(f.rowGroups, 1) > minBytes =>
+        val bytes = f.file.getLen
+        val mtime = f.file.getModificationTime
         val cacheRoot = cacheRootDir(spark)
         evictStale(cacheRoot)
         val fp = footerFingerprint(spark, p, bytes)
@@ -232,13 +265,13 @@ object Tables {
   private val compactLock = new Object
 
   /** Read one table from an sf directory, applying per-table shims. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
-    case "events" =>
-      val evPath = s"$sfDir/events.parquet"
-      val rawType = probeEventsTs(spark, evPath)
-      normalizeTs(spark.read.parquet(evPath), rawType)
-    case other =>
-      spark.read.parquet(maybeCompact(spark, s"$sfDir/$other.parquet"))
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = s"$sfDir/$name.parquet"
+    val s = schema(spark, p)
+    name match {
+      case "events" => normalizeTs(spark.read.schema(s).parquet(p), s("ts").dataType)
+      case _ => spark.read.schema(s).parquet(maybeCompact(spark, p))
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")

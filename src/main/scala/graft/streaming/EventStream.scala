@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.DecimalType
 
 /** Streaming mode for the relational/events surface — the same hourly
   * tumbling-window aggregation as B11, runnable over either the batch
@@ -20,27 +20,13 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType
   */
 object EventStream {
 
-  /** Raw parquet schema of events.parquet, parameterized by the footer's
-    * `ts` representation: raw nanosecond longs (timestamp[ns] footer
-    * under the nanosAsLong legacy conf — same shim as `Tables.events`)
-    * or TIMESTAMP_NTZ (timestamp[us] footer, isAdjustedToUTC=false). */
-  private def rawSchema(tsType: org.apache.spark.sql.types.DataType) = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Streaming view of the events table, `ts` normalized to a session-TZ
-    * TimestampType whichever footer variant the driver generated (the
-    * streaming source needs an explicit schema, so the footer is probed
-    * once through the batch reader — schema resolution only, no scan). */
+    * TimestampType whichever footer variant the driver generated. The
+    * streaming source needs an explicit schema: it is the raw footer
+    * schema `Tables` reads the batch table with (the same ns shim). */
   def readEvents(s: SparkSession, sfDir: String): DataFrame = {
     val evPath = s"$sfDir/events.parquet"
-    // shared footer probe: enables the legacy ns conf only when the
-    // footer is actually timestamp[ns] (see Tables.probeEventsTs)
-    val tsType = graft.sources.Tables.probeEventsTs(s, evPath)
+    val raw = graft.sources.Tables.schema(s, evPath)
     // the streaming file source wants a directory: for the driver SFs'
     // single-FILE layout that is the sf dir + a glob narrowing the
     // listing to the events table; ScaleGen probes write events.parquet
@@ -49,11 +35,11 @@ object EventStream {
     // java.io.File), so an hdfs:///s3a:// sfDir takes the right branch.
     val hPath = new org.apache.hadoop.fs.Path(evPath)
     val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val reader = s.readStream.schema(rawSchema(tsType))
+    val reader = s.readStream.schema(raw)
     val stream =
       if (fs.getFileStatus(hPath).isDirectory) reader.parquet(evPath)
       else reader.option("pathGlobFilter", "events.parquet").parquet(sfDir)
-    graft.sources.Tables.normalizeTs(stream, tsType)
+    graft.sources.Tables.normalizeTs(stream, raw("ts").dataType)
   }
 
   /** Watermarked stream dedup on event_id (SURVEY §2.9 "dedup across

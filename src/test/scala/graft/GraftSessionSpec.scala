@@ -16,8 +16,9 @@ import graft.plans.AsOfJoinStrategy
   * [[graft.plans.GraftExtensions]]; the one-runtime rule: every stream
   * in the engine starts in [[graft.streaming.StreamRunner.drain]];
   * that only the entry points read environment variables; that every
-  * main ends in [[GraftSession.run]]; and that each CAP step spelled as
-  * a literal has one home.
+  * main ends in [[GraftSession.run]]; that each CAP step spelled as
+  * a literal has one home; and that query builders read sf tables only
+  * through [[graft.sources.Tables]].
   */
 class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
 
@@ -32,6 +33,7 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
   private val stopCall = "." + "stop()"
   private val connectorFormats = Seq("capfeed", "cloudtak").map(f => "format(\"" + f + "\")")
   private val expiryCall = "filter" + "Active("
+  private val parquetRead = "read" + ".parquet("
 
   private lazy val sources: Seq[(Path, String)] =
     Seq("src/main/scala", "src/test/scala").flatMap { root =>
@@ -121,5 +123,14 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
     assert(formats == Set(mainFile("cap/CapEtl")) && expiry == Set(mainFile("cap/CapPipeline")),
       s"capfeed/cloudtak format named in $formats, only CapEtl may; " +
         s"filterActive called in $expiry, only CapPipeline may")
+  }
+
+  test("no query builder reads parquet itself; sf tables come only through Tables") {
+    val readers = mainCallSites(parquetRead).keySet.filter { p =>
+      Seq("queries", "multimodal").exists(d => p.startsWith(Paths.get(s"src/main/scala/graft/$d")))
+    }
+    assert(readers.isEmpty, s"parquet read outside graft.sources.Tables: $readers")
+    assert(mainCallSites(parquetRead).contains(mainFile("sources/Tables")),
+      "the scan found no parquet read in Tables; wrong working directory?")
   }
 }

@@ -92,7 +92,7 @@ class PlanGateSpec extends AnyFunSuite with GraftTestSession {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(String, String, Long)] =
       df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     val kernel = rows(TextStats.t1LangId(spark, sf))
-    val window = rows(TextStats.t1LangIdWindowForm(spark, sf))
+    val window = rows(T1WindowForm(spark, sf))
     assert(kernel == window,
       s"t1 kernel/window divergence: ${(kernel diff window).take(3)} vs ${(window diff kernel).take(3)}")
     SharedRelation.releaseAll(spark)

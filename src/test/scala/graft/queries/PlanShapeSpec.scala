@@ -483,4 +483,32 @@ class PlanShapeSpec extends AnyFunSuite with GraftTestSession {
       }
     }
   }
+
+  /** The final AQE plan of `name` at sf0.01, after one collect (the
+    * initial plan printed below it left out). */
+  private def finalPlan(name: String): String = {
+    val df = graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
+    df.collect()
+    SharedRelation.releaseAll(spark)
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+  }
+
+  test("b2/b3/b11: a small final sort reads one single-partition exchange, no range sampling") {
+    for (q <- Seq("b2_hash_agg", "b3_multi_join", "b11_time_window")) {
+      val p = finalPlan(q)
+      val sort = p.linesIterator.indexWhere(_.contains("Sort ["))
+      val below = p.linesIterator.drop(sort + 1).find(_.contains("Exchange")).getOrElse("")
+      assert(sort >= 0 && below.contains("Exchange SinglePartition"),
+        s"$q: the final sort does not read a single-partition exchange:\n$p")
+      assert(!p.contains("rangepartitioning"), s"$q kept a range exchange:\n$p")
+    }
+  }
+
+  test("b2: above the advisory partition size the final sort keeps its range exchange") {
+    val p = withConfs("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64") {
+      finalPlan("b2_hash_agg")
+    }
+    assert(p.contains("Exchange rangepartitioning"),
+      s"a sort over more than the advisory size must stay a range sort:\n$p")
+  }
 }

@@ -51,7 +51,7 @@ class TextStatsSpec extends AnyFunSuite with GraftTestSession {
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val kernel = TextStats.t1LangId(spark, dir).collect().map(_.toSeq).toSeq
-    val window = TextStats.t1LangIdWindowForm(spark, dir).collect().map(_.toSeq).toSeq
+    val window = T1WindowForm(spark, dir).collect().map(_.toSeq).toSeq
     assert(kernel == window)
     // the two short docs dropped from both
     assert(kernel.map(_(2).asInstanceOf[Long]).sum == 6L)

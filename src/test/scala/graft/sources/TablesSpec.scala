@@ -109,4 +109,25 @@ class TablesSpec extends AnyFunSuite with GraftTestSession {
       assert(epochs(spark.table(sink)) == want)
     }
   }
+
+  test("the footer schema equals the inferred schema: sf0.001, sf0.01, the three fixtures, a compacted copy") {
+    spark.conf.unset(nanosKey)
+    val sfTables = for {
+      sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+      t <- Tables.all
+    } yield s"$sf/$t.parquet"
+    val fixtures = Seq(ntzDir, tzDir, nsDir).map(d => s"$d/events.parquet")
+    val root = tempDir("tables-spec-compact-").toString
+    val copy = withConfs("spark.graft.compact.minBytes" -> "1000",
+        "spark.graft.compact.dir" -> root) {
+      Tables.maybeCompact(spark, s"$ntzDir/events.parquet")
+    }
+    assert(new java.io.File(copy).isDirectory, s"the fixture was not compacted: $copy")
+    try for (p <- sfTables ++ fixtures :+ copy) {
+      // the footer read turns nanosAsLong on for the ns fixture, which
+      // inference then needs too
+      val footer = Tables.schema(spark, p)
+      assert(footer == spark.read.parquet(p).schema, s"$p: footer schema differs")
+    } finally spark.conf.unset(nanosKey)
+  }
 }
