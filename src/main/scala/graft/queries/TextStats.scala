@@ -779,8 +779,11 @@ object TextStats {
           s"transform(sequence(1, size(ws) - ${k - 1}), i -> array_join(slice(ws, i, $k), ' '))"))
           .as("shingle"))
       .distinct()
-    // The lazy localCheckpoint cuts the df relation's lineage so it
-    // enters the join as a plain scan: OptimizeSkewedJoin only matches
+    // The localCheckpoint cuts the df relation's lineage so it enters
+    // the join as a plain scan. It is not lazy even with eager = false:
+    // checkpointing takes the plan's RDD, and under AQE that executes
+    // the adaptive plan, so the builder starts one job while it is
+    // called (BuildersSpec allow-lists it). OptimizeSkewedJoin only matches
     // a sort-merge join whose BOTH children are bare shuffle stages,
     // and without the cut the final HashAggregate sits directly under
     // the join and silently blocks the split — a hot boilerplate

@@ -17,8 +17,9 @@ import graft.plans.AsOfJoinStrategy
   * in the engine starts in [[graft.streaming.StreamRunner.drain]];
   * that only the entry points read environment variables; that every
   * main ends in [[GraftSession.run]]; that each CAP step spelled as
-  * a literal has one home; and that query builders read sf tables only
-  * through [[graft.sources.Tables]].
+  * a literal has one home; that query builders read sf tables only
+  * through [[graft.sources.Tables]]; and that XML parsing has one home,
+  * [[graft.cap.CapXml]].
   */
 class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
 
@@ -34,6 +35,9 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
   private val connectorFormats = Seq("capfeed", "cloudtak").map(f => "format(\"" + f + "\")")
   private val expiryCall = "filter" + "Active("
   private val parquetRead = "read" + ".parquet("
+  private val fromXml = "from_" + "xml("
+  private val staxFactories = Seq("newInstance", "newFactory", "newDefaultFactory")
+    .map(m => "XMLInputFactory" + "." + m)
 
   private lazy val sources: Seq[(Path, String)] =
     Seq("src/main/scala", "src/test/scala").flatMap { root =>
@@ -132,5 +136,13 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
     assert(readers.isEmpty, s"parquet read outside graft.sources.Tables: $readers")
     assert(mainCallSites(parquetRead).contains(mainFile("sources/Tables")),
       "the scan found no parquet read in Tables; wrong working directory?")
+  }
+
+  test("in src/main nothing calls from_xml; only CapXml creates an XMLInputFactory") {
+    val fromXmlCalls = mainCallSites(fromXml).keySet
+    val factories = staxFactories.flatMap(f => callSites(f).keySet).toSet
+    assert(fromXmlCalls.isEmpty && factories == Set(mainFile("cap/CapXml")),
+      s"from_xml called in $fromXmlCalls, CapXml.decode is the one XML parse; " +
+        s"XMLInputFactory created in $factories, only CapXml may")
   }
 }

@@ -41,10 +41,10 @@ class CapPipelineSpec extends AnyFunSuite with GraftTestSession {
   }
 
   test("P6: an EMPTY <info/> element drops the alert (fast-xml-parser '' falsy parity)") {
-    // from_xml yields [{all-null struct}] for <info/> where the
-    // reference's parser yields '' (falsy → dropped, task.ts:427-430);
-    // without the to_json-based detection this alert would emit a
-    // spurious NZ-center feature.
+    // CapXml.decode reads <info/> as one info with every field absent,
+    // where the reference's parser yields '' (falsy → dropped,
+    // task.ts:427-430); without the empty-info check this alert would
+    // emit a spurious NZ-center feature.
     assert(!features.keySet.exists(_.contains("EMPTYINFO")))
   }
 

@@ -5,19 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftTestSession
 
-/** Fuzz the ingest path: arbitrary garbage through parseAlerts must
-  * never throw — malformed XML becomes zero rows (P6 drop semantics,
-  * matching the reference's per-alert error isolation), not a job
-  * failure.
-  */
-class ParseRobustnessSpec extends AnyFunSuite with GraftTestSession {
-
-  private def checkProp(p: Prop): Unit = {
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), p)
-    assert(res.passed, res.status.toString)
-  }
-
-  private val garbage: Gen[String] = Gen.oneOf(
+object ParseRobustnessSpec {
+  /** Arbitrary text and broken CAP fragments. */
+  val garbage: Gen[String] = Gen.oneOf(
     Gen.alphaNumStr,
     Gen.asciiPrintableStr,
     Gen.const(""),
@@ -26,6 +16,20 @@ class ParseRobustnessSpec extends AnyFunSuite with GraftTestSession {
     Gen.const("<?xml version=\"1.0\"?><alert><info><polygon>"),
     Gen.const("<alert><info><area><polygon>1,2 3,4</polygon></area></info></alert>"),
     Gen.listOfN(64, Gen.choose(Char.MinValue, '퟿')).map(_.mkString))
+}
+
+/** Fuzz the ingest path: arbitrary garbage through parseAlerts must
+  * never throw — malformed XML becomes zero rows (P6 drop semantics,
+  * matching the reference's per-alert error isolation), not a job
+  * failure.
+  */
+class ParseRobustnessSpec extends AnyFunSuite with GraftTestSession {
+  import ParseRobustnessSpec.garbage
+
+  private def checkProp(p: Prop): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), p)
+    assert(res.passed, res.status.toString)
+  }
 
   test("parseAlerts never throws on malformed input; invalid alerts drop to zero rows") {
     import spark.implicits._
