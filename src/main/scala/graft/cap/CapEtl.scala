@@ -63,11 +63,13 @@ object CapEtl {
       sinkOpts: Map[String, String], asOf: Instant): RunRecord =
     deliver(active(spark.read.format("capfeed").options(feedOpts).load(), asOf), sinkOpts)
 
-  /** One incremental run from `checkpoint`: the alerts the checkpoint
-    * has not seen, drained AvailableNow through [[StreamRunner.drain]],
-    * the body applied per micro-batch. A re-run with no new alert
-    * delivers nothing. The plan holds no state, so the checkpoint is
-    * also the path that sizes the (unused) state width. */
+  /** One incremental run from `checkpoint`: the alerts whose links the
+    * checkpoint's last feed poll did not hold (a link that left the
+    * feed and came back is new again), drained AvailableNow through
+    * [[StreamRunner.drain]], the body applied per micro-batch. A re-run
+    * with no new alert delivers nothing. The plan holds no state, so
+    * the checkpoint is also the path that sizes the (unused) state
+    * width. */
   def stream(spark: SparkSession, feedOpts: Map[String, String],
       sinkOpts: Map[String, String], asOf: Instant, checkpoint: String): RunRecord = {
     val batches = new ConcurrentLinkedQueue[RunRecord]()

@@ -9,27 +9,40 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `capfeed`, the DSv2 batch source for a CAP feed
+/** `capfeed`, the DSv2 batch and micro-batch source for a CAP feed
   * (S1-S3). Planning (driver): fetch the RSS/Atom feed once, extract
   * alert links (P1-P3). Execution (executors): each partition fetches
   * its slice of alert URLs with reference-parity retry/backoff, up to
   * [[CapFeedDataSource.FetchWindow]] (8) at a time, and yields
   * `(url, xml)` rows. The reference fetches the N alerts serially
-  * (task.ts:626) — here wall-clock ≈ ceil(N / (numPartitions × 8)) ×
+  * (task.ts:626) — here wall-clock ≈ ceil(N / (partitions × 8)) ×
   * fetch, the engine's headline scalability win for the ETL path.
   *
-  * Options: `url` (required), `headers` ("K=V;K=V"), `timeout` (ms,
-  * default 30000), `retries` (default 2), `numPartitions` (default 4) —
-  * timeout/retries defaults mirror the reference env schema
+  * Options are [[EtlConfig]]'s and nothing else: `url` (required),
+  * `headers` ("K=V;K=V"), `timeout` (ms, default 30000), `retries`
+  * (default 2) — defaults mirror the reference env schema
   * (task.ts:15-22). A failed alert fetch is logged and skipped like the
-  * reference's per-alert try/catch; that is the one failure path. A
-  * read sends up to numPartitions × 8 alert GETs to the feed host at
-  * once; lower `numPartitions` to send fewer.
+  * reference's per-alert try/catch; that is the one failure path.
+  *
+  * Two rules fix the source's shape, for the batch scan and for every
+  * micro-batch alike:
+  *  - width: the links of a read spread over
+  *    min([[CapFeedDataSource.MaxPartitions]], ceil(links / 8))
+  *    partitions ([[CapFeedDataSource.slice]]), so a read sends at most
+  *    4 × 8 = 32 alert GETs to the feed host at once, and a micro-batch
+  *    of up to 8 new links is one task and one sink POST, like the
+  *    reference's one `submit(fc)` per run (task.ts:882);
+  *  - offset: a stream's offset is the link set of the poll it came
+  *    from ([[CapFeedOffset]]), and a micro-batch emits the links of its
+  *    end offset that its start offset lacks. A link that leaves the
+  *    feed and comes back is emitted again, as the reference re-submits
+  *    it on every run; CloudTAK upserts by feature id.
   */
 class CapFeedDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "capfeed"
@@ -43,19 +56,24 @@ class CapFeedDataSource extends TableProvider with DataSourceRegister {
 }
 
 object CapFeedDataSource {
-  /** Alert fetches in flight per partition. 8 covers a 20-alert
-    * micro-batch over 4 partitions in one round trip each. */
+  /** Alert fetches in flight per partition, and the links per
+    * partition [[slice]] plans for: a micro-batch of up to 8 new links
+    * is one task that fetches them in one round trip. */
   val FetchWindow: Int = 8
 
   val schema: StructType = StructType(Seq(
     StructField("url", StringType, nullable = false),
     StructField("xml", StringType, nullable = false)))
 
-  /** Round-robin link slices → input partitions (shared by the batch
-    * scan and the micro-batch stream). */
-  def slice(links: Seq[String], numPartitions: Int, c: EtlConfig): Array[InputPartition] = {
-    if (links.isEmpty) return Array.empty
-    val n = math.max(1, math.min(numPartitions, links.size))
+  /** Most partitions one read plans: 4 × [[FetchWindow]] = 32 alert
+    * GETs in flight at once. */
+  val MaxPartitions: Int = 4
+
+  /** Round-robin link slices → input partitions, one per [[FetchWindow]]
+    * links and at most [[MaxPartitions]] (shared by the batch scan and
+    * the micro-batch stream). */
+  def slice(links: Seq[String], c: EtlConfig): Array[InputPartition] = {
+    val n = math.min(MaxPartitions, (links.size + FetchWindow - 1) / FetchWindow)
     links.zipWithIndex.groupBy(_._2 % n).toSeq.sortBy(_._1)
       .map { case (_, ls) => CapFeedPartition(ls.map(_._1), c): InputPartition }
       .toArray
@@ -78,18 +96,18 @@ private class CapFeedScan(options: CaseInsensitiveStringMap)
   override def readSchema(): StructType = CapFeedDataSource.schema
   override def toBatch: Batch = this
 
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new CapFeedMicroBatchStream(options)
+  private lazy val c = EtlConfig.fromOptions(options, "capfeed")
+
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+    new CapFeedMicroBatchStream(c)
 
   // planInputPartitions may be invoked more than once per query (e.g.
   // partition-count probes); the feed must be fetched exactly once.
   private lazy val partitions: Array[InputPartition] = {
-    val c = EtlConfig.fromOptions(options, "capfeed")
     // driver-side: one feed fetch + link extraction (mirrors control()'s
     // prologue, task.ts:606-612)
     val feed = Http.fetchWithRetry(c.url, c.headers, c.timeoutMs, c.retries)
-    CapFeedDataSource.slice(FeedLinks.extract(feed), options.getInt("numPartitions", 4), c)
+    CapFeedDataSource.slice(FeedLinks.extract(feed), c)
   }
 
   override def planInputPartitions(): Array[InputPartition] = partitions
@@ -185,17 +203,16 @@ private class CapFeedReader(p: CapFeedPartition)
   }
 }
 
-/** Streaming offset = the set of alert URLs already emitted, as a
-  * sorted JSON array of strings, so a restart from checkpoint resumes
-  * exactly where the last run stopped. Jackson writes it, so every
-  * control character in a link is escaped and the offset stays on the
-  * one line Spark's offset log gives it. CAP feeds are small (tens of
-  * entries), so the offset stays cheap; a high-churn feed would swap
-  * the URL set for a (bounded) rolling window + dedup downstream.
+/** Streaming offset = the alert links of one feed poll, as a sorted
+  * JSON array of strings. It is bounded by the feed: it holds the
+  * links of the poll it came from and no earlier ones, so a restart
+  * from checkpoint, like the next trigger, emits the links the feed
+  * gained since that poll. Jackson writes it, so every control
+  * character in a link is escaped and the offset stays on the one line
+  * Spark's offset log gives it.
   */
-private case class CapFeedOffset(seen: Seq[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = CapFeedOffset.mapper.writeValueAsString(seen.sorted.toArray)
+private case class CapFeedOffset(links: Seq[String]) extends Offset {
+  override def json(): String = CapFeedOffset.mapper.writeValueAsString(links.sorted.toArray)
 }
 
 private object CapFeedOffset {
@@ -206,68 +223,39 @@ private object CapFeedOffset {
 }
 
 /** `capfeed` as a stream source: the reference's scheduled
-  * whole-feed re-fetch (task.ts:66) as a real incremental source: each
-  * micro-batch polls the feed once, and only links not covered by the
-  * previous offset become input partitions. With Trigger.AvailableNow
-  * this is exactly one poll; with a processing-time trigger it is the
-  * Lambda schedule without the redundant re-emission of old alerts.
+  * whole-feed re-fetch (task.ts:66) as an incremental source that keeps
+  * no state of its own. Each trigger polls the feed once; the poll's
+  * links are the offset, and a micro-batch plans the links of its end
+  * offset that its start offset lacks. A link that leaves the feed and
+  * comes back is emitted again, as the reference re-submits it; the
+  * upserting sink makes that harmless. With Trigger.AvailableNow this
+  * is exactly one poll.
   */
-private class CapFeedMicroBatchStream(options: CaseInsensitiveStringMap)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
+private class CapFeedMicroBatchStream(c: EtlConfig) extends MicroBatchStream {
 
-  private val c = EtlConfig.fromOptions(options, "capfeed")
-  private val feedUrl = c.url
-  private val numPartitions = options.getInt("numPartitions", 4)
+  override def initialOffset(): Offset = CapFeedOffset(Seq.empty)
 
-  // Monotone accumulator of every URL known to any offset this stream
-  // has touched. Folding deserialized (checkpointed) offsets in is what
-  // keeps offsets GROWING across restarts and transiently-truncated
-  // feed reads — a URL that leaves the feed and later reappears must
-  // not be re-emitted as new.
-  @volatile private var known: Set[String] = Set.empty
-
-  private def absorb(o: CapFeedOffset): CapFeedOffset = {
-    known = known ++ o.seen
-    o
-  }
-
-  override def initialOffset():
-      org.apache.spark.sql.connector.read.streaming.Offset = CapFeedOffset(Seq.empty)
-
-  override def latestOffset():
-      org.apache.spark.sql.connector.read.streaming.Offset = {
-    val feed = try Http.fetchWithRetry(feedUrl, c.headers, c.timeoutMs, c.retries)
+  override def latestOffset(): Offset =
+    try CapFeedOffset(FeedLinks.extract(Http.fetchWithRetry(c.url, c.headers, c.timeoutMs, c.retries)))
     catch {
       // like a failed scheduled run of the reference (task.ts:66): no
       // new batch this trigger, the next trigger polls again. Null is
-      // Spark's "no new offset", which keeps the committed one; an
-      // offset built from `known` would not, because Spark polls
-      // before it deserializes the checkpoint, so after a restart
-      // `known` is still empty and the offset would move backwards.
+      // Spark's "no new offset", which keeps the committed one.
       case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[capfeed] feed poll failed, no new batch: $feedUrl: ${e.getMessage}")
-        return null
+        System.err.println(s"[capfeed] feed poll failed, no new batch: ${c.url}: ${e.getMessage}")
+        null
     }
-    absorb(CapFeedOffset((known ++ FeedLinks.extract(feed)).toSeq))
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val before = start.asInstanceOf[CapFeedOffset].links.toSet
+    CapFeedDataSource.slice(end.asInstanceOf[CapFeedOffset].links.filterNot(before).sorted, c)
   }
 
-  override def planInputPartitions(
-      start: org.apache.spark.sql.connector.read.streaming.Offset,
-      end: org.apache.spark.sql.connector.read.streaming.Offset): Array[InputPartition] = {
-    val seen = absorb(start.asInstanceOf[CapFeedOffset]).seen.toSet
-    val fresh = end.asInstanceOf[CapFeedOffset].seen.filterNot(seen).sorted
-    CapFeedDataSource.slice(fresh, numPartitions, c)
-  }
+  override def createReaderFactory(): PartitionReaderFactory = new CapFeedReaderFactory
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CapFeedReaderFactory
+  override def deserializeOffset(json: String): Offset = CapFeedOffset.fromJson(json)
 
-  override def deserializeOffset(json: String):
-      org.apache.spark.sql.connector.read.streaming.Offset =
-    absorb(CapFeedOffset.fromJson(json))
-
-  override def commit(end: org.apache.spark.sql.connector.read.streaming.Offset): Unit =
-    absorb(end.asInstanceOf[CapFeedOffset])
+  override def commit(end: Offset): Unit = ()
 
   override def stop(): Unit = ()
 }

@@ -56,15 +56,6 @@ object Http {
       throw new RuntimeException(s"HTTP ${res.statusCode()}")
     res.body()
   }
-
-  /** Parse the `headers` option ("K1=V1;K2=V2") of the connectors. */
-  def parseHeaders(opt: String): Map[String, String] =
-    opt.split(";").iterator.map(_.trim).filter(_.nonEmpty).flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => Some(k.trim -> v.trim)
-        case _ => None
-      }
-    }.toMap
 }
 
 /** P1-P3 link extraction (reference task.ts:555-581), the one

@@ -18,8 +18,9 @@ import graft.plans.AsOfJoinStrategy
   * that only the entry points read environment variables; that every
   * main ends in [[GraftSession.run]]; that each CAP step spelled as
   * a literal has one home; that query builders read sf tables only
-  * through [[graft.sources.Tables]]; and that XML parsing has one home,
-  * [[graft.cap.CapXml]].
+  * through [[graft.sources.Tables]]; that XML parsing has one home,
+  * [[graft.cap.CapXml]]; and that connector options with a default are
+  * read only in [[graft.sources.EtlConfig]].
   */
 class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
 
@@ -36,6 +37,8 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
   private val expiryCall = "filter" + "Active("
   private val parquetRead = "read" + ".parquet("
   private val fromXml = "from_" + "xml("
+  private val dsv2Options = Seq("CaseInsensitive" + "StringMap", ".options" + "()")
+  private val defaultedRead = "\\.(getInt|getLong|getBoolean|getDouble|getOrDefault)\\(\"".r
   private val staxFactories = Seq("newInstance", "newFactory", "newDefaultFactory")
     .map(m => "XMLInputFactory" + "." + m)
 
@@ -144,5 +147,17 @@ class GraftSessionSpec extends AnyFunSuite with GraftTestSession {
     assert(fromXmlCalls.isEmpty && factories == Set(mainFile("cap/CapXml")),
       s"from_xml called in $fromXmlCalls, CapXml.decode is the one XML parse; " +
         s"XMLInputFactory created in $factories, only CapXml may")
+  }
+
+  test("in src/main only EtlConfig reads a connector option with a default") {
+    // a file that handles DSv2 options and reads one with a default
+    // (getInt("k", d), getOrDefault("k", d), ...): a connector knob
+    val readers = sources.collect {
+      case (p, text) if p.startsWith(Paths.get("src/main/scala")) &&
+          dsv2Options.exists(text.contains) && defaultedRead.findFirstIn(text).nonEmpty => p
+    }.toSet
+    assert(readers == Set(mainFile("sources/EtlConfig")),
+      s"connector option read with a default in $readers; only EtlConfig.fromOptions may, " +
+        "next to its validation")
   }
 }

@@ -45,16 +45,14 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
   override def beforeAll(): Unit = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     base = s"http://127.0.0.1:${server.getAddress.getPort}"
-    val feed = alertFiles.zipWithIndex.map { case (f, i) =>
-      s"<item><link>$base/alerts/cap/$f</link></item>"
-    }.mkString("<rss><channel>", "", "</channel></rss>")
-    server.createContext("/feed", (ex: HttpExchange) => respond(ex, 200, feed))
+    // a feed of n distinct alert links at /feed/<n>
+    server.createContext("/feed/", (ex: HttpExchange) =>
+      respond(ex, 200, rss(distinctLinks(ex.getRequestURI.getPath.stripPrefix("/feed/").toInt))))
     // a feed over every file of fixtures/<dir>, at /fixture-feed/<dir>;
     // the alert paths contain "alert", so the link predicate keeps them
     server.createContext("/fixture-feed/", (ex: HttpExchange) => {
       val dir = ex.getRequestURI.getPath.stripPrefix("/fixture-feed/")
-      respond(ex, 200, fixtureFiles(dir).map(f => s"<item><link>$base/alerts/$dir/$f</link></item>")
-        .mkString("<rss><channel>", "", "</channel></rss>"))
+      respond(ex, 200, rss(fixtureFiles(dir).map(f => s"$base/alerts/$dir/$f")))
     })
     server.createContext("/alerts/", (ex: HttpExchange) => {
       val p = Paths.get("fixtures", ex.getRequestURI.getPath.stripPrefix("/alerts/"))
@@ -80,6 +78,15 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
   }
 
   override def afterAll(): Unit = if (server != null) server.stop(0)
+
+  /** An RSS feed with one `<link>` item per URL. */
+  private def rss(urls: Seq[String]): String =
+    urls.map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")
+
+  /** `n` distinct alert links: query-string variants of the fixtures/cap
+    * paths, which `/alerts/` routes by path only. */
+  private def distinctLinks(n: Int): Seq[String] =
+    (0 until n).map(i => s"$base/alerts/cap/${alertFiles(i % alertFiles.size)}?v=$i")
 
   private def fixtureFiles(dir: String): Seq[String] =
     new java.io.File("fixtures", dir).list().toSeq.sorted
@@ -114,17 +121,19 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       .get("features").elements().asScala.map(_.get("id").asText()).toSeq.sorted
 
   test("capfeed: plans one partition slice per link group and fetches all alerts") {
-    val df = spark.read.format("capfeed")
-      .option("url", s"$base/feed")
-      .option("numPartitions", 2)
-      .option("timeout", 5000)
-      .load()
-    assert(df.rdd.getNumPartitions == 2, "link slices must become input partitions")
-    val rows = df.collect()
-    assert(rows.length == alertFiles.length)
-    val urls = rows.map(_.getString(0)).toSet
-    assert(urls == alertFiles.map(f => s"$base/alerts/cap/$f").toSet)
-    rows.foreach(r => assert(r.getString(1).contains("<alert")))
+    // one partition per FetchWindow (8) links, at most 4
+    for ((links, partitions) <- Seq(5 -> 1, 9 -> 2, 40 -> 4)) {
+      val df = spark.read.format("capfeed")
+        .option("url", s"$base/feed/$links")
+        .option("timeout", 5000)
+        .load()
+      assert(df.rdd.getNumPartitions == partitions,
+        s"$links links must plan $partitions partitions, got ${df.rdd.getNumPartitions}")
+      val rows = df.collect()
+      assert(rows.map(_.getString(0)).sorted.toSeq == distinctLinks(links).sorted,
+        s"$links links must each yield one row")
+      rows.foreach(r => assert(r.getString(1).contains("<alert")))
+    }
   }
 
   test("capfeed: retries with backoff on 5xx and then succeeds (reference parity)") {
@@ -193,14 +202,11 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       } finally inFlight.decrementAndGet()
     })
     // filenames contain "alert" so the P2 link predicate keeps them
-    val links = ((1 to 6).map(i => s"alert-$i.xml") :+ "dead-alert.xml")
-      .map(f => s"<item><link>$base/slow/$f</link></item>").mkString
-    server.createContext("/slowfeed", (ex: HttpExchange) =>
-      respond(ex, 200, s"<rss><channel>$links</channel></rss>"))
+    val links = ((1 to 6).map(i => s"alert-$i.xml") :+ "dead-alert.xml").map(f => s"$base/slow/$f")
+    server.createContext("/slowfeed", (ex: HttpExchange) => respond(ex, 200, rss(links)))
 
     val rows = spark.read.format("capfeed")
       .option("url", s"$base/slowfeed")
-      .option("numPartitions", 1)
       .option("timeout", 5000)
       .option("retries", 0)
       .load().collect()
@@ -230,9 +236,8 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
   test("capfeed streaming: AvailableNow polls once; checkpoint restart emits only new links") {
     val streamAlerts = new java.util.concurrent.atomic.AtomicReference(
       Seq("metservice-polygon.xml", "geonet-circle.xml"))
-    server.createContext("/streamfeed", (ex: HttpExchange) => respond(ex, 200,
-      streamAlerts.get().map(f => s"<item><link>$base/alerts/cap/$f</link></item>")
-        .mkString("<rss><channel>", "", "</channel></rss>")))
+    server.createContext("/streamfeed", (ex: HttpExchange) =>
+      respond(ex, 200, rss(streamAlerts.get().map(f => s"$base/alerts/cap/$f"))))
     val ckpt = tempDir("capfeed-ckpt").toString
 
     val first = availableNow(s"$base/streamfeed", ckpt).toOption.get.toSet
@@ -246,6 +251,65 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       s"restart must emit only the new alert, got $second")
   }
 
+  /** A `capfeed` micro-batch stream over `feedUrl`, driven for
+    * `rounds` triggers the way Spark drives it: poll, plan from the last
+    * offset, commit. Each round's planned links and offset JSON. */
+  private def drive(feedUrl: String, rounds: Int): Seq[(Seq[String], String)] = {
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      Map("url" -> feedUrl, "timeout" -> "5000").asJava)
+    // the stream writes nothing under its checkpoint location
+    val stream = new CapFeedScan(opts).toMicroBatchStream("unused")
+    var start = stream.initialOffset()
+    try (1 to rounds).map { _ =>
+      val end = stream.latestOffset()
+      val planned = stream.planInputPartitions(start, end).toSeq
+        .flatMap(_.asInstanceOf[CapFeedPartition].urls)
+      stream.commit(end)
+      start = end
+      (planned.sorted, end.json())
+    } finally stream.stop()
+  }
+
+  test("capfeed streaming: a link that leaves the feed and comes back is emitted again") {
+    // the offset is the last poll's links, so a returning link is new
+    // again, as the reference re-submits every link on every run: the
+    // same across AvailableNow restarts and within one running stream
+    val Seq(a, b) = Seq("metservice-polygon.xml", "geonet-circle.xml").map(f => s"$base/alerts/cap/$f")
+    val feeds = Seq(Seq(a, b), Seq(b), Seq(a, b))
+    val expected = Seq(Seq(a, b).sorted, Nil, Seq(a))
+    val links = new java.util.concurrent.atomic.AtomicReference(Seq.empty[String])
+    server.createContext("/returnfeed", (ex: HttpExchange) => respond(ex, 200, rss(links.get())))
+    val ckpt = tempDir("capfeed-return-ckpt").toString
+    val restarts = feeds.map { l =>
+      links.set(l)
+      availableNow(s"$base/returnfeed", ckpt).map(_.sorted)
+    }
+    assert(restarts == expected.map(Right(_)),
+      s"restarts over feeds {A,B}, {B}, {A,B} must emit [A,B], [] and [A], got $restarts")
+    val polls = new AtomicInteger(0)
+    server.createContext("/returnfeed-polls", (ex: HttpExchange) =>
+      respond(ex, 200, rss(feeds(polls.getAndIncrement()))))
+    val oneStream = drive(s"$base/returnfeed-polls", feeds.size).map(_._1)
+    assert(oneStream == expected,
+      s"one stream over feeds {A,B}, {B}, {A,B} must plan [A,B], [] and [A], got $oneStream")
+  }
+
+  test("capfeed streaming: the offset stays one poll's links over 1,000 batches of a sliding feed") {
+    // a 20-link window that slides by one link per poll
+    val polls = new AtomicInteger(0)
+    def link(i: Int) = s"$base/alerts/slide/alert-$i.xml"
+    server.createContext("/slidingfeed", (ex: HttpExchange) => {
+      val k = polls.getAndIncrement()
+      respond(ex, 200, rss((k until k + 20).map(link)))
+    })
+    val rounds = drive(s"$base/slidingfeed", 1000)
+    assert(rounds.flatMap(_._1).sorted == (0 until 1019).map(link).sorted,
+      "every link must be planned exactly once")
+    val longest = rounds.map(_._2.length).max
+    val window = CapFeedOffset((999 until 1019).map(link)).json().length
+    assert(longest <= window, s"offset JSON grew to $longest chars, one 20-link window is $window")
+  }
+
   test("capfeed streaming: a micro-batch overlaps its alert fetches at the default window") {
     val inFlight = new AtomicInteger(0)
     val maxInFlight = new AtomicInteger(0)
@@ -257,11 +321,10 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
       } finally inFlight.decrementAndGet()
     })
     val urls = (1 to 5).map(i => s"$base/slowstream-alerts/a$i.xml")
-    server.createContext("/slowstreamfeed", (ex: HttpExchange) => respond(ex, 200,
-      urls.map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")))
+    server.createContext("/slowstreamfeed", (ex: HttpExchange) => respond(ex, 200, rss(urls)))
     val ckpt = tempDir("capfeed-overlap-ckpt").toString
 
-    val got = availableNow(s"$base/slowstreamfeed", ckpt, "numPartitions" -> "1")
+    val got = availableNow(s"$base/slowstreamfeed", ckpt)
     assert(got.map(_.sorted) == Right(urls.sorted), s"one micro-batch must emit every link once, got $got")
     assert(maxInFlight.get() > 1,
       s"micro-batch fetched one alert at a time: max in-flight ${maxInFlight.get()}")
@@ -274,8 +337,7 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     val feedLinks = new java.util.concurrent.atomic.AtomicReference(urls)
     server.createContext("/outagefeed", (ex: HttpExchange) =>
       if (!feedUp.get()) respond(ex, 500, "feed down")
-      else respond(ex, 200, feedLinks.get()
-        .map(u => s"<item><link>$u</link></item>").mkString("<rss><channel>", "", "</channel></rss>")))
+      else respond(ex, 200, rss(feedLinks.get())))
     val ckpt = tempDir("capfeed-outage-ckpt").toString
 
     // the feed is down for the whole first run: it ends cleanly, empty
@@ -406,5 +468,20 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     val e3 = intercept[IllegalArgumentException](
       EtlConfig.fromOptions(opts(Map("url" -> "u", "retries" -> "-1")), "cloudtak"))
     assert(e3.getMessage.contains("retries"))
+    // a header or url that java.net.http would refuse fails here, once,
+    // not inside every retried request; the error never shows a value
+    for ((bad, named) <- Seq(
+        Map("headers" -> "Authorization") -> "no '='",
+        Map("headers" -> "A=1; =2") -> "empty name",
+        Map("headers" -> "Host=example") -> "'Host'",
+        Map("headers" -> "A=1;Content-Length=3") -> "'Content-Length'",
+        Map("headers" -> "X-Key=s3cr3t\nvalue") -> "'X-Key'",
+        Map("url" -> "not a url") -> "'url'",
+        Map("url" -> "file:///feed.xml") -> "'url'")) {
+      val e = intercept[IllegalArgumentException](
+        EtlConfig.fromOptions(opts(Map("url" -> "http://example") ++ bad), "capfeed"))
+      assert(e.getMessage.startsWith("capfeed: ") && e.getMessage.contains(named) &&
+        !e.getMessage.contains("s3cr3t"), s"$bad: ${e.getMessage}")
+    }
   }
 }
