@@ -18,7 +18,10 @@ and change median [q1-q3], the pairs the change won, and the median move
 against the metric's bound (relative to the parent median). A metric whose
 parent IQR is wider than its bound reads "unresolved" (the spread of the
 unchanged code alone could hide a move of that size), unless every change
-run reads better than every parent run. With flagged runs the
+run reads better than every parent run. A metric reads "gain" when a
+claimed gain would hold: at least ten pairs, the change wins at least nine
+tenths of them (ties count for neither), and the gap between the medians
+is larger than the parent's IQR. With flagged runs the
 summary is printed twice: over every pair, then over the pairs in which
 neither run was flagged.
 """
@@ -87,12 +90,41 @@ def value(run, metric):
     return None if rec is None else rec["metrics"][metric]["value"]
 
 
+def verdict(pv, cv, bound, lower):
+    """The verdict on one metric from its paired parent and change values.
+
+    "gain" is the rule a claimed gain is judged by: at least ten pairs,
+    the change wins at least nine tenths of them (ties count for
+    neither), and the change median is better than the parent median by
+    more than the parent's IQR (q3 - q1).
+    """
+    pairs = list(zip(pv, cv))
+    wins = sum((b < a) if lower else (b > a) for a, b in pairs)
+    pq, cq = quartiles(pv), quartiles(cv)
+    gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
+    move = (cq[1] - pq[1]) / abs(pq[1]) if pq[1] else 0.0
+    worse = move > 0 if lower else move < 0
+    spread = (pq[2] - pq[0]) / abs(pq[1]) if pq[1] else 0.0
+    if len(pairs) >= 10 and 10 * wins >= 9 * len(pairs) and gap > pq[2] - pq[0]:
+        return f"gain (won {wins}/{len(pairs)}, median gap {gap:.4g} > parent IQR {pq[2] - pq[0]:.4g})"
+    if (max(cv) < min(pv)) if lower else (min(cv) > max(pv)):
+        return "every change run better than every parent run"
+    if spread > bound:
+        return f"unresolved (parent IQR {spread:.1%} > bound)"
+    if worse and abs(move) > bound:
+        return "WORSE beyond bound"
+    return "within bound"
+
+
 def summarize(runs, metrics, title):
+    """Prints one line per metric over the complete pairs of `runs`;
+    returns {metric: verdict}."""
     pairs = {}
     for r in runs:
         pairs.setdefault(r["seed"], {})[r["side"]] = r
     pairs = [p for _, p in sorted(pairs.items()) if len(p) == 2]
     print(f"\n== {title}: {len(pairs)} pairs")
+    verdicts = {}
     for m in metrics:
         name, bound, lower = m["name"], m["bound"], m["better"] == "lower"
         vals = [(value(p["parent"], name), value(p["change"], name)) for p in pairs]
@@ -104,19 +136,12 @@ def summarize(runs, metrics, title):
         pq, cq = quartiles(pv), quartiles(cv)
         wins = sum((b < a) if lower else (b > a) for a, b in vals)
         move = (cq[1] - pq[1]) / abs(pq[1]) if pq[1] else 0.0
-        worse = move > 0 if lower else move < 0
-        spread = (pq[2] - pq[0]) / abs(pq[1]) if pq[1] else 0.0
-        if (max(cv) < min(pv)) if lower else (min(cv) > max(pv)):
-            verdict = "every change run better than every parent run"
-        elif spread > bound:
-            verdict = f"unresolved (parent IQR {spread:.1%} > bound)"
-        elif worse and abs(move) > bound:
-            verdict = "WORSE beyond bound"
-        else:
-            verdict = "within bound"
+        verdicts[name] = verdict(pv, cv, bound, lower)
         print(f"{name:15s} parent {pq[1]:.4g} [{pq[0]:.4g}-{pq[2]:.4g}]  "
               f"change {cq[1]:.4g} [{cq[0]:.4g}-{cq[2]:.4g}]  "
-              f"change won {wins}/{len(vals)}  move {move:+.1%} vs bound {bound:.0%}: {verdict}")
+              f"change won {wins}/{len(vals)}  move {move:+.1%} vs bound {bound:.0%}: "
+              f"{verdicts[name]}")
+    return verdicts
 
 
 def main():

@@ -1,7 +1,6 @@
 package graft.cap
 
 import graft.functions.{Cert, Geo, JsCompat, Lookups}
-import Json._
 
 /** X2 fan-out + O1-O6 output assembly (reference `task.ts:644-875`).
   *
@@ -30,8 +29,17 @@ import Json._
   *
   * Any date-parse failure throws — callers isolate per alert (F2), which
   * reproduces the reference's per-alert try/catch drop.
+  *
+  * Builder contract: each Feature document is rendered into one
+  * pre-sized `java.lang.StringBuilder` through the [[Json]] writers. The
+  * fragments all of an alert's features share — the head props, the
+  * metadata (closed with or without `isCenter`), the escaped remarks,
+  * the polygon style and the links after their `uid` — are rendered
+  * once per alert and appended to each feature as they stand; a
+  * polygon's vertices go straight into its own feature's builder.
   */
 object Features {
+  import Json.{num, str}
 
   private def iso(s: String): String =
     JsCompat.jsDateParse(s) match {
@@ -45,19 +53,32 @@ object Features {
       case None    => throw new IllegalArgumentException(s"Invalid Date: $s")
     }
 
-  private def metadataJson(a: CapAlert, isCenter: Boolean): String = {
-    val base = Seq(
-      "sender" -> str(a.sender), "sent" -> str(a.sent),
-      "status" -> str(a.status), "msgType" -> str(a.msgType),
-      "scope" -> str(a.scope), "category" -> str(a.category),
-      "event" -> str(a.event), "urgency" -> str(a.urgency),
-      "severity" -> str(a.severity), "certainty" -> str(a.certainty),
-      "senderName" -> str(a.senderName), "headline" -> str(a.headline),
-      "description" -> str(a.description), "instruction" -> str(a.instruction),
-      "responseType" -> str(a.responseType), "onset" -> str(a.onset),
-      "expires" -> str(a.expires), "web" -> str(a.web),
-      "areaDesc" -> str(a.areaDesc))
-    obj(if (isCenter) base :+ ("isCenter" -> bool(true)) else base)
+  private def builder(capacity: Int) = new java.lang.StringBuilder(capacity)
+
+  /** `,"metadata":{` and the 19 alert fields, left open for [[Shared]]
+    * to close with or without `isCenter` (`task.ts:673-693`, `752-755`). */
+  private def metadataOpen(a: CapAlert): String = {
+    val sb = builder(512 + a.description.length + a.instruction.length)
+    str(sb.append(",\"metadata\":{\"sender\":"), a.sender)
+    str(sb.append(",\"sent\":"), a.sent)
+    str(sb.append(",\"status\":"), a.status)
+    str(sb.append(",\"msgType\":"), a.msgType)
+    str(sb.append(",\"scope\":"), a.scope)
+    str(sb.append(",\"category\":"), a.category)
+    str(sb.append(",\"event\":"), a.event)
+    str(sb.append(",\"urgency\":"), a.urgency)
+    str(sb.append(",\"severity\":"), a.severity)
+    str(sb.append(",\"certainty\":"), a.certainty)
+    str(sb.append(",\"senderName\":"), a.senderName)
+    str(sb.append(",\"headline\":"), a.headline)
+    str(sb.append(",\"description\":"), a.description)
+    str(sb.append(",\"instruction\":"), a.instruction)
+    str(sb.append(",\"responseType\":"), a.responseType)
+    str(sb.append(",\"onset\":"), a.onset)
+    str(sb.append(",\"expires\":"), a.expires)
+    str(sb.append(",\"web\":"), a.web)
+    str(sb.append(",\"areaDesc\":"), a.areaDesc)
+    sb.toString
   }
 
   private def remarksText(a: CapAlert, sig: Option[Cert.SignatureMeta]): String = {
@@ -86,78 +107,111 @@ object Features {
     lines.filter(_.trim.nonEmpty).mkString("\n")
   }
 
-  private def linksJson(a: CapAlert, uid: String): Option[(String, String)] =
-    if (a.web.nonEmpty)
-      Some("links" -> arr(Seq(obj(Seq(
-        "uid" -> str(uid), "relation" -> str("r-u"), "mime" -> str("text/html"),
-        "url" -> str(a.web), "remarks" -> str("CAP Alert Details"))))))
-    else None
+  /** One alert's shared fragments, rendered once; [[feature]] appends
+    * them to each of its features. */
+  private final class Shared(a: CapAlert) {
+    private val sig = if (a.cert.nonEmpty) Cert.signatureMeta(a.cert) else None
+    val callsign: String = if (a.headline.nonEmpty) a.headline else "CAP Alert"
 
-  private def featureJson(id: String, properties: String, geometry: String): String =
-    obj(Seq("id" -> str(id), "type" -> str("Feature"),
-      "properties" -> properties, "geometry" -> geometry))
+    /** `{"callsign":…,"type":"a-f-X-i","time":…,"start":…[,"stale":…]`;
+      * sent, onset and expires parse in this order, so an alert with
+      * several bad dates fails on the first. */
+    val head: String = {
+      val timeIso = iso(a.sent)
+      val sb = builder(160)
+      str(sb.append("{\"callsign\":"), callsign)
+      str(sb.append(",\"type\":\"a-f-X-i\",\"time\":"), timeIso)
+      str(sb.append(",\"start\":"), if (a.onset.nonEmpty) iso(a.onset) else timeIso)
+      if (a.expires.nonEmpty) str(sb.append(",\"stale\":"), iso(a.expires))
+      sb.toString
+    }
+    val remarks: String = remarksText(a, sig)
+    val icon: String = Lookups.eventIcon(a.event, a.category, a.severity, a.headline)
+    val iconField: String = str(builder(icon.length + 12).append(",\"icon\":"), icon).toString
+    val metadata: String = metadataOpen(a)
+    val remarksField: String =
+      str(builder(remarks.length + 16).append(",\"remarks\":"), remarks).toString
+    /** The link object after its `uid` (`task.ts:714-722`), or null without `web`. */
+    val linkTail: String =
+      if (a.web.isEmpty) null
+      else str(builder(a.web.length + 96).append(",\"relation\":\"r-u\",\"mime\":\"text/html\",\"url\":"),
+        a.web).append(",\"remarks\":\"CAP Alert Details\"}]").toString
+    /** The polygon branch's top-level style keys (`task.ts:723-730`), or "". */
+    val polygonStyle: String =
+      if (a.colorCode.isEmpty) ""
+      else {
+        val sb = builder(160)
+        str(sb.append(",\"stroke\":"), a.colorCode)
+          .append(",\"stroke-opacity\":0.5,\"stroke-width\":3,\"stroke-style\":\"solid\",\"fill-opacity\":0.4")
+        str(sb.append(",\"fill\":"), a.colorCode).toString
+      }
+    /** The point branch's nested style (`task.ts:799-806`); `style` is
+      * unconditional on this branch (`task.ts:868`). */
+    def pointStyle: String =
+      if (a.colorCode.isEmpty) ",\"style\":{}"
+      else {
+        val sb = builder(192)
+        str(sb.append(",\"style\":{\"stroke\":"), a.colorCode)
+          .append(",\"stroke-opacity\":0.5019607843137255,\"stroke-width\":3,\"stroke-style\":\"solid\"")
+          .append(",\"fill-opacity\":0.5019607843137255")
+        str(sb.append(",\"fill\":"), a.colorCode).append('}').toString
+      }
+    /** Characters every feature of the alert takes besides its id,
+      * style and geometry. */
+    val size: Int = head.length + iconField.length + metadata.length + remarksField.length +
+      (if (linkTail == null) 0 else linkTail.length) + 128
+  }
 
-  private def pointGeom(c: Array[Double]): String =
-    obj(Seq("type" -> str("Point"), "coordinates" -> arr(c.map(num).toSeq)))
+  /** One Feature document: `id`, the properties from the shared
+    * fragments, then `geometry` appends the geometry object. */
+  private def feature(sh: Shared, id: String, withIcon: Boolean, isCenter: Boolean,
+      style: String, geometrySize: Int)(geometry: java.lang.StringBuilder => Unit): String = {
+    val sb = builder(sh.size + 3 * id.length + style.length + geometrySize)
+    str(sb.append("{\"id\":"), id).append(",\"type\":\"Feature\",\"properties\":").append(sh.head)
+    if (withIcon) sb.append(sh.iconField)
+    sb.append(sh.metadata).append(if (isCenter) ",\"isCenter\":true}" else "}").append(sh.remarksField)
+    if (sh.linkTail != null) str(sb.append(",\"links\":[{\"uid\":"), id).append(sh.linkTail)
+    sb.append(style).append(",\"archived\":false},\"geometry\":")
+    geometry(sb)
+    sb.append('}').toString
+  }
 
-  private def polygonGeom(ring: Array[Array[Double]]): String =
-    obj(Seq("type" -> str("Polygon"),
-      "coordinates" -> arr(Seq(arr(ring.map(p => arr(p.map(num).toSeq)).toSeq)))))
+  private def pointGeom(sb: java.lang.StringBuilder, c: Array[Double]): Unit = {
+    num(sb.append("{\"type\":\"Point\",\"coordinates\":["), c(0)).append(',')
+    num(sb, c(1)).append("]}")
+  }
+
+  private def polygonGeom(sb: java.lang.StringBuilder, ring: Array[Array[Double]]): Unit = {
+    sb.append("{\"type\":\"Polygon\",\"coordinates\":[[")
+    var i = 0
+    while (i < ring.length) {
+      if (i > 0) sb.append(',')
+      num(num(sb.append('['), ring(i)(0)).append(','), ring(i)(1)).append(']')
+      i += 1
+    }
+    sb.append("]]}")
+  }
 
   /** The fan-out. Throws on unparseable sent/onset/expires — isolate per
     * alert at the caller (CapPipeline.toFeatures). */
   def alertToFeatures(a: CapAlert): Seq[CotFeature] = {
-    val sig = if (a.cert.nonEmpty) Cert.signatureMeta(a.cert) else None
-    val callsign = if (a.headline.nonEmpty) a.headline else "CAP Alert"
-    val timeIso = iso(a.sent)
-    val startIso = if (a.onset.nonEmpty) iso(a.onset) else timeIso
-    val staleIso = if (a.expires.nonEmpty) Some(iso(a.expires)) else None
-    val remarks = remarksText(a, sig)
-    val hasColor = a.colorCode.nonEmpty
-    val icon = Lookups.eventIcon(a.event, a.category, a.severity, a.headline)
+    val sh = new Shared(a)
 
-    def headProps(withIcon: Boolean): Seq[(String, String)] =
-      Seq("callsign" -> str(callsign), "type" -> str("a-f-X-i"),
-        "time" -> str(timeIso), "start" -> str(startIso)) ++
-        staleIso.map("stale" -> str(_)).toSeq ++
-        (if (withIcon) Seq("icon" -> str(icon)) else Nil)
-
-    def polygonFeature(polygonId: String, ring: Array[Array[Double]]): CotFeature = {
-      val styleFields =
-        if (hasColor) Seq(
-          "stroke" -> str(a.colorCode), "stroke-opacity" -> num(0.5),
-          "stroke-width" -> num(3), "stroke-style" -> str("solid"),
-          "fill-opacity" -> num(0.4), "fill" -> str(a.colorCode))
-        else Nil
-      val props = obj(headProps(withIcon = false) ++
-        Seq("metadata" -> metadataJson(a, isCenter = false), "remarks" -> str(remarks)) ++
-        linksJson(a, polygonId).toSeq ++ styleFields :+ ("archived" -> bool(false)))
-      CotFeature(polygonId, "Polygon", isCenter = false, callsign, None, remarks,
-        featureJson(polygonId, props, polygonGeom(ring)))
-    }
+    def polygonFeature(polygonId: String, ring: Array[Array[Double]]): CotFeature =
+      CotFeature(polygonId, "Polygon", isCenter = false, sh.callsign, None, sh.remarks,
+        feature(sh, polygonId, withIcon = false, isCenter = false, sh.polygonStyle,
+          40 + 32 * ring.length)(polygonGeom(_, ring)))
 
     def centerFeature(polygonId: String, centroid: Array[Double]): CotFeature = {
       val id = s"$polygonId-center"
-      val props = obj(headProps(withIcon = true) ++
-        Seq("metadata" -> metadataJson(a, isCenter = true), "remarks" -> str(remarks)) ++
-        linksJson(a, id).toSeq :+ ("archived" -> bool(false)))
-      CotFeature(id, "Point", isCenter = true, callsign, Some(icon), remarks,
-        featureJson(id, props, pointGeom(centroid)))
+      CotFeature(id, "Point", isCenter = true, sh.callsign, Some(sh.icon), sh.remarks,
+        feature(sh, id, withIcon = true, isCenter = true, "", 80)(pointGeom(_, centroid)))
     }
 
-    def pointFeature(coords: Array[Double]): CotFeature = {
-      val style =
-        if (hasColor) obj(Seq(
-          "stroke" -> str(a.colorCode), "stroke-opacity" -> num(0.5019607843137255),
-          "stroke-width" -> num(3), "stroke-style" -> str("solid"),
-          "fill-opacity" -> num(0.5019607843137255), "fill" -> str(a.colorCode)))
-        else "{}" // `style: baseStyle` is unconditional on this branch (task.ts:868)
-      val props = obj(headProps(withIcon = true) ++
-        Seq("metadata" -> metadataJson(a, isCenter = false), "remarks" -> str(remarks)) ++
-        linksJson(a, a.identifier).toSeq ++ Seq("style" -> style, "archived" -> bool(false)))
-      CotFeature(a.identifier, "Point", isCenter = false, callsign, Some(icon), remarks,
-        featureJson(a.identifier, props, pointGeom(coords)))
-    }
+    def pointFeature(coords: Array[Double]): CotFeature =
+      CotFeature(a.identifier, "Point", isCenter = false, sh.callsign, Some(sh.icon), sh.remarks,
+        feature(sh, a.identifier, withIcon = true, isCenter = false, sh.pointStyle, 80)(
+          pointGeom(_, coords)))
 
     // JS truthiness of `area.polygon`: '' (single empty) is falsy; a
     // non-empty array is truthy even if its elements are empty strings.
@@ -197,7 +251,11 @@ object Features {
 
   /** Sink envelope (`task.ts:615-623`): rendered Feature documents
     * (`CotFeature.json`) wrapped as a FeatureCollection, in the given
-    * order. One `mkString`, so a multi-MB sink body is built once. */
+    * order — [[EnvelopeOpen]], the documents joined by ',', then
+    * [[EnvelopeClose]]. The `cloudtak` sink writes the same bytes. */
   def featureCollectionJson(jsons: scala.collection.Seq[String]): String =
-    jsons.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+    jsons.mkString(EnvelopeOpen, ",", EnvelopeClose)
+
+  val EnvelopeOpen: String = """{"type":"FeatureCollection","features":["""
+  val EnvelopeClose: String = "]}"
 }

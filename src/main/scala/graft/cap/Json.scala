@@ -1,29 +1,50 @@
 package graft.cap
 
-/** Minimal JSON writer with JS `JSON.stringify` semantics — deterministic
-  * key order (caller-supplied), JS number rendering (integral doubles
-  * print without a decimal point), and stringify-compatible escaping.
-  * Used for golden-comparable CoT feature output; no external deps.
+/** Minimal JSON writer with JS `JSON.stringify` semantics — JS number
+  * rendering (integral doubles print without a decimal point) and
+  * stringify-compatible escaping. Used for golden-comparable CoT feature
+  * output; no external deps.
+  *
+  * Builder contract: every writer appends to the caller's
+  * `java.lang.StringBuilder` and returns it, so a document is rendered
+  * into one builder with no String per value. Key order is the
+  * caller's: keys and other constant text are pre-escaped literals
+  * appended as they stand (`"\"id\":"`).
   */
 object Json {
 
-  def esc(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"'  => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\b' => sb.append("\\b")
-      case '\f' => sb.append("\\f")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  private val Hex = "0123456789abcdef"
+
+  private def needsEscape(c: Char): Boolean = c < ' ' || c == '"' || c == '\\'
+
+  /** Appends `s` escaped as `JSON.stringify` escapes it, without the
+    * quotes. A string with nothing to escape is appended whole. */
+  def esc(sb: java.lang.StringBuilder, s: String): java.lang.StringBuilder = {
+    val n = s.length
+    var i = 0
+    while (i < n && !needsEscape(s.charAt(i))) i += 1
+    if (i == n) return sb.append(s)
+    sb.append(s, 0, i)
+    while (i < n) {
+      s.charAt(i) match {
+        case '"'  => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\b' => sb.append("\\b")
+        case '\f' => sb.append("\\f")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c if c < ' ' => sb.append("\\u00").append(Hex.charAt(c >> 4)).append(Hex.charAt(c & 0xf))
+        case c => sb.append(c)
+      }
+      i += 1
     }
-    sb.toString
+    sb
   }
 
-  def str(s: String): String = "\"" + esc(s) + "\""
+  /** Appends `s` as a JSON string literal. */
+  def str(sb: java.lang.StringBuilder, s: String): java.lang.StringBuilder =
+    esc(sb.append('"'), s).append('"')
 
   /** JS number rendering (`JSON.stringify` = `Number#toString`):
     * integral values print without a decimal point (`174`, not `174.0`);
@@ -44,51 +65,59 @@ object Json {
     * picks. The product's rounding error stays under 0.2, so round()
     * cannot miss that decimal at its scale. Everything else — 16–17-digit
     * values such as centroids, and the exponent forms — goes to
-    * [[jsDouble]]'s BigDecimal probe. */
-  def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" // JSON.stringify(NaN) → null
-    else if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
-    else {
-      val fast = fixedScale(d)
-      if (fast != null) fast else jsDouble(d)
-    }
+    * [[jsDouble]]'s BigDecimal probe. Integral values and the fast path
+    * append their digits straight into `sb`.
+    *
+    * A non-integral |d| in [1, 1e15) that the fast path misses has no
+    * round-tripping decimal of 15 or fewer digits (such a decimal has at
+    * most 14 decimals, so its scale is one the fast path tries), and the
+    * probe starts at 16 digits. */
+  def num(sb: java.lang.StringBuilder, d: Double): java.lang.StringBuilder =
+    if (d.isNaN || d.isInfinite) sb.append("null") // JSON.stringify(NaN) → null
+    else if (d == math.rint(d) && math.abs(d) < 1e15) sb.append(d.toLong)
+    else if (fixedScale(sb, d)) sb
+    else sb.append(jsDouble(d, if (math.abs(d) >= 1 && math.abs(d) < 1e15) 16 else 1))
+
+  /** [[num]] as a String. */
+  def num(d: Double): String = num(new java.lang.StringBuilder(24), d).toString
 
   private val Pow10: Array[Double] = Array.tabulate(16)(i => math.pow(10, i))
+  private val LongPow10: Array[Long] = Array.tabulate(16)(i => math.pow(10, i).toLong)
 
-  /** [[num]]'s fast path: `d` with the fewest decimals (1..15) that
-    * round-trip, or null when there is none with m < 10^15. */
-  private def fixedScale(d: Double): String = {
+  /** [[num]]'s fast path: appends `d` with the fewest decimals (1..15)
+    * that round-trip and returns true, or appends nothing and returns
+    * false when there is none with m < 10^15. */
+  private def fixedScale(sb: java.lang.StringBuilder, d: Double): Boolean = {
     val a = math.abs(d)
-    if (a < 1e-6 || a >= 1e15) return null
+    if (a < 1e-6 || a >= 1e15) return false
     var s = 1
     while (s <= 15) {
       val m = math.rint(a * Pow10(s))
-      if (m >= 1e15) return null
-      if (m / Pow10(s) == a) return plainDecimal(d < 0, m.toLong, s)
+      if (m >= 1e15) return false
+      if (m / Pow10(s) == a) {
+        plainDecimal(sb, d < 0, m.toLong, s)
+        return true
+      }
       s += 1
     }
-    null
+    false
   }
 
-  /** `[-]m·10^-s` in plain notation with exactly `s` decimals. */
-  private def plainDecimal(neg: Boolean, m: Long, s: Int): String = {
-    val digits = java.lang.Long.toString(m)
-    val intLen = digits.length - s
-    val sb = new java.lang.StringBuilder(digits.length + s + 3)
+  /** Appends `[-]m·10^-s` in plain notation with exactly `s` decimals:
+    * the integer part, '.', then the fraction zero-padded to `s` digits. */
+  private def plainDecimal(sb: java.lang.StringBuilder, neg: Boolean, m: Long, s: Int): Unit = {
+    val frac = m % LongPow10(s)
     if (neg) sb.append('-')
-    if (intLen <= 0) {
-      sb.append("0.")
-      var z = -intLen
-      while (z > 0) { sb.append('0'); z -= 1 }
-      sb.append(digits)
-    } else sb.append(digits, 0, intLen).append('.').append(digits, intLen, digits.length)
-    sb.toString
+    sb.append(m / LongPow10(s)).append('.')
+    var z = s - 1
+    while (z > 0 && frac < LongPow10(z)) { sb.append('0'); z -= 1 }
+    sb.append(frac)
   }
 
-  /** Shortest round-trip digits by probing 1..17 significant digits —
-    * [[num]]'s general path, and the oracle its fast path is tested
-    * against. */
-  private[cap] def jsDouble(d: Double): String = {
+  /** Shortest round-trip digits by probing `fromDigits`..17 significant
+    * digits — [[num]]'s general path, and, from 1 digit, the oracle its
+    * fast path is tested against. */
+  private[cap] def jsDouble(d: Double, fromDigits: Int = 1): String = {
     val neg = d < 0
     val a = math.abs(d)
     // Shortest digit string that round-trips. BigDecimal(a) is the
@@ -97,12 +126,12 @@ object Json {
     // exact ties toward even — precisely ECMA-262 Number::toString's
     // choice. (java.util.Formatter's %e is HALF_UP and would diverge
     // on exact ties.)
-    var k = 1
+    val exact = new java.math.BigDecimal(a)
+    var k = fromDigits
     var rounded = java.math.BigDecimal.ZERO
     var done = false
     while (!done && k <= 17) {
-      rounded = new java.math.BigDecimal(a)
-        .round(new java.math.MathContext(k, java.math.RoundingMode.HALF_EVEN))
+      rounded = exact.round(new java.math.MathContext(k, java.math.RoundingMode.HALF_EVEN))
       if (rounded.doubleValue() == a) done = true else k += 1
     }
     val unscaled = rounded.unscaledValue.toString
@@ -127,13 +156,4 @@ object Json {
       }
     if (neg) "-" + out else out
   }
-
-  /** JSON boolean — used for the `archived`/`isCenter` constants. */
-  def bool(b: Boolean): String = if (b) "true" else "false"
-
-  /** Object from pre-rendered (key → json-value) pairs, in order. */
-  def obj(fields: Seq[(String, String)]): String =
-    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
-
-  def arr(items: Seq[String]): String = items.mkString("[", ",", "]")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import JsCompat.{jsParseFloat, jsTrim, jsWsSplit}
+import JsCompat.{foreachJsWsPiece, jsParseFloat, jsTrim}
 
 /** Geometry scalar functions (SURVEY.md §2.4, reference `task.ts:255-378`).
   * Pure Scala — used directly in the typed fan-out and registrable as UDFs.
@@ -14,39 +14,42 @@ object Geo {
     * (`task.ts:255-317`). Left(error) reproduces the reference's throw:
     * any invalid pair rejects the whole polygon; <3 valid points rejects;
     * first≠last auto-closes.
+    *
+    * One scan: the pairs are the JS `split(/\s+/)` pieces of the trimmed
+    * string ([[JsCompat.foreachJsWsPiece]]), each cut at its comma and
+    * parsed in place by the range form of `JsCompat.jsParseFloat`;
+    * only an invalid pair becomes a String, for the error message. A
+    * piece holds no JS whitespace, so a side is blank exactly when it is
+    * empty. The ring holds doubles only: `Features` appends them straight
+    * into the polygon feature's builder, and no vertex text is kept.
     */
   def parsePolygon(polygonStr: String): Either[String, Array[Array[Double]]] = {
     if (polygonStr == null) return Left("Empty or invalid polygon string")
-    val trimmed = jsTrim(polygonStr)
-    if (trimmed.isEmpty) return Left("Empty polygon string after trimming")
+    val s = jsTrim(polygonStr)
+    if (s.isEmpty) return Left("Empty polygon string after trimming")
 
-    val coordPairs = jsWsSplit(trimmed)
-    val points = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-    val invalid = scala.collection.mutable.ArrayBuffer.empty[String]
-
-    for (pair <- coordPairs) {
-      if (pair.isEmpty || !pair.contains(",")) {
-        if (pair.nonEmpty) invalid += pair
-      } else {
-        // JS ``"a,b,c".split(',')`` keeps every part incl. trailing empties
-        val parts = pair.split(",", -1)
-        if (parts.length != 2) invalid += pair
-        else {
-          val (latStr, lonStr) = (parts(0), parts(1))
-          if (jsTrim(latStr).isEmpty || jsTrim(lonStr).isEmpty) invalid += pair
-          else {
-            val lat = jsParseFloat(latStr)
-            val lon = jsParseFloat(lonStr)
-            if (lat.isNaN || lon.isNaN) invalid += pair
-            else if (lat < -90 || lat > 90 || lon < -180 || lon > 180) invalid += pair
-            else points += Array(lon, lat) // GeoJSON is [lon, lat]
-          }
-        }
+    val points = new scala.collection.mutable.ArrayBuffer[Array[Double]](s.length / 16 + 4)
+    val invalid = scala.collection.mutable.ArrayBuffer.empty[String] // the first 3
+    var invalidCount = 0
+    foreachJsWsPiece(s) { (from, to) =>
+      // JS `"a,b,c".split(',')` keeps every part incl. empties: a valid
+      // pair has exactly one comma and a non-empty side on each of it
+      val comma = commaIn(s, from, to)
+      val ok = from < comma && comma < to - 1 && commaIn(s, comma + 1, to) == to && {
+        val lat = jsParseFloat(s, from, comma)
+        val lon = jsParseFloat(s, comma + 1, to)
+        val inRange = lat >= -90 && lat <= 90 && lon >= -180 && lon <= 180 // false on NaN
+        if (inRange) points += Array(lon, lat) // GeoJSON is [lon, lat]
+        inRange
+      }
+      if (!ok && from < to) {
+        if (invalidCount < 3) invalid += s.substring(from, to)
+        invalidCount += 1
       }
     }
 
-    if (invalid.nonEmpty)
-      Left(s"Invalid coordinate pairs: ${invalid.take(3).mkString(", ")}${if (invalid.length > 3) "..." else ""}")
+    if (invalidCount > 0)
+      Left(s"Invalid coordinate pairs: ${invalid.mkString(", ")}${if (invalidCount > 3) "..." else ""}")
     else if (points.length < 3)
       Left(s"Insufficient valid points: ${points.length} (minimum 3 required)")
     else {
@@ -54,6 +57,15 @@ object Geo {
         points += points.head.clone()
       Right(points.toArray)
     }
+  }
+
+  /** The first ',' in `s` between `from` and `to`, or `to`: the search
+    * stays inside one piece, so a long polygon without commas is still
+    * one scan. */
+  private def commaIn(s: String, from: Int, to: Int): Int = {
+    var i = from
+    while (i < to && s.charAt(i) != ',') i += 1
+    i
   }
 
   /** G2 — parse `"lat,lon radius"`; None (not an error) on any invalid

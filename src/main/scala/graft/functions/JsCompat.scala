@@ -19,14 +19,16 @@ object JsCompat {
   val JsWsChars: String =
     "\\t\\n\\x0B\\f\\r \\u00a0\\u1680\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000\\ufeff"
 
-  private val jsWsRun = java.util.regex.Pattern.compile(s"[$JsWsChars]+")
-
   /** `JsWsChars` as a lookup table over every UTF-16 code unit, built
-    * once from the same class so the set keeps a single definition. */
-  private val isJsWs: Array[Boolean] = {
+    * once from the same class so the set keeps a single definition.
+    * Every JS-whitespace scan below is a loop over this table. */
+  private val jsWsTable: Array[Boolean] = {
     val one = java.util.regex.Pattern.compile(s"[$JsWsChars]")
     Array.tabulate(65536)(c => one.matcher(String.valueOf(c.toChar)).matches())
   }
+
+  /** `c` is in `JsWsChars` (every member is one UTF-16 code unit). */
+  def isJsWs(c: Char): Boolean = jsWsTable(c)
 
   /** JS `String#trim` (Unicode whitespace + BOM, unlike Java trim). */
   def jsTrim(s: String): String = {
@@ -37,20 +39,60 @@ object JsCompat {
     s.substring(b, e)
   }
 
-  /** JS `split(/\s+/)` — Unicode whitespace runs, precompiled. */
-  def jsWsSplit(s: String): Array[String] = jsWsRun.split(s, -1)
+  /** Calls `f(from, to)` for each piece of JS `s.split(/\s+/)` in order:
+    * the ranges between whitespace runs, with an empty piece before a
+    * leading run and after a trailing one, and one empty piece for "".
+    * [[jsWsSplit]] cuts these ranges out; `Geo.parsePolygon` reads them
+    * in place. */
+  def foreachJsWsPiece(s: String)(f: (Int, Int) => Unit): Unit = {
+    val n = s.length
+    var from = 0
+    var i = 0
+    while (i < n) {
+      if (isJsWs(s.charAt(i))) {
+        f(from, i)
+        i += 1
+        while (i < n && isJsWs(s.charAt(i))) i += 1
+        from = i
+      } else i += 1
+    }
+    f(from, n)
+  }
+
+  /** JS `split(/\s+/)` — Unicode whitespace runs. */
+  def jsWsSplit(s: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    foreachJsWsPiece(s)((from, to) => out += s.substring(from, to))
+    out.result()
+  }
 
   /** JS `replace(/\s/g, '')` / `replaceAll(re, "")` over JS-\s. */
-  def jsWsRemove(s: String): String = jsWsRun.matcher(s).replaceAll("")
+  def jsWsRemove(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (!isJsWs(c)) sb.append(c)
+      i += 1
+    }
+    sb.toString
+  }
 
   private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
 
-  /** End of the run of ASCII digits in `t` starting at `i`. */
-  private def digitsEnd(t: String, i: Int): Int = {
+  /** End of the run of ASCII digits in `t` starting at `i`, before `to`. */
+  private def digitsEnd(t: String, i: Int, to: Int): Int = {
     var j = i
-    while (j < t.length && isDigit(t.charAt(j))) j += 1
+    while (j < to && isDigit(t.charAt(j))) j += 1
     j
   }
+
+  /** `t` holds `word` at `i`, ending at or before `to`. */
+  private def holds(t: String, i: Int, to: Int, word: String): Boolean =
+    i + word.length <= to && t.startsWith(word, i)
+
+  /** 10^0 .. 10^22, every one an exact double. */
+  private val Pow10: Array[Double] = Array.tabulate(23)(i => math.pow(10, i))
 
   /** JS `parseFloat`: longest valid numeric prefix, NaN if none.
     * (`task.ts:287-288`, `327-330` rely on this — "1.5abc" parses to 1.5.)
@@ -58,29 +100,60 @@ object JsCompat {
     * reference accepts a circle radius of Infinity (`task.ts:327-336`).
     * The prefix is the longest match of
     * `[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?` (ASCII digits), found by
-    * one forward scan and handed to `Double.parseDouble`. */
-  def jsParseFloat(s: String): Double = {
-    val t = jsTrim(s)
-    if (t.startsWith("Infinity") || t.startsWith("+Infinity")) Double.PositiveInfinity
-    else if (t.startsWith("-Infinity")) Double.NegativeInfinity
+    * one forward scan. */
+  def jsParseFloat(s: String): Double = jsParseFloat(s, 0, s.length)
+
+  /** [[jsParseFloat]] of `s.substring(from, to)`, read in place. A
+    * prefix without an exponent whose digits hold at most 15 significant
+    * digits and at most 22 decimals is `m / 10^k` with `m` and `10^k`
+    * exact doubles, so one correctly rounded division gives the same
+    * double as `Double.parseDouble` (Clinger's fast path); every other
+    * prefix goes to `Double.parseDouble`. */
+  def jsParseFloat(s: String, from: Int, to: Int): Double = {
+    var b = from
+    var e = to
+    while (b < e && isJsWs(s.charAt(b))) b += 1
+    while (e > b && isJsWs(s.charAt(e - 1))) e -= 1
+    if (holds(s, b, e, "Infinity") || holds(s, b, e, "+Infinity")) Double.PositiveInfinity
+    else if (holds(s, b, e, "-Infinity")) Double.NegativeInfinity
     else {
-      val n = t.length
-      val start = if (n > 0 && (t.charAt(0) == '+' || t.charAt(0) == '-')) 1 else 0
-      val intEnd = digitsEnd(t, start)
+      val start = if (b < e && (s.charAt(b) == '+' || s.charAt(b) == '-')) b + 1 else b
+      val intEnd = digitsEnd(s, start, e)
       var end = intEnd
-      if (end < n && t.charAt(end) == '.') {
-        val fracEnd = digitsEnd(t, end + 1)
-        if (intEnd > start || fracEnd > end + 1) end = fracEnd
+      var decimals = 0
+      if (end < e && s.charAt(end) == '.') {
+        val fracEnd = digitsEnd(s, end + 1, e)
+        if (intEnd > start || fracEnd > end + 1) {
+          decimals = fracEnd - end - 1
+          end = fracEnd
+        }
       }
       if (end == start) Double.NaN // no mantissa digits
       else {
-        if (end < n && (t.charAt(end) == 'e' || t.charAt(end) == 'E')) {
-          val signed = end + 1 < n && (t.charAt(end + 1) == '+' || t.charAt(end + 1) == '-')
+        var exponent = false
+        if (end < e && (s.charAt(end) == 'e' || s.charAt(end) == 'E')) {
+          val signed = end + 1 < e && (s.charAt(end + 1) == '+' || s.charAt(end + 1) == '-')
           val expStart = if (signed) end + 2 else end + 1
-          val expEnd = digitsEnd(t, expStart)
-          if (expEnd > expStart) end = expEnd
+          val expEnd = digitsEnd(s, expStart, e)
+          if (expEnd > expStart) { end = expEnd; exponent = true }
         }
-        java.lang.Double.parseDouble(t.substring(0, end))
+        var m = 0L
+        var significant = 0
+        var i = start
+        while (i < end && significant <= 15 && !exponent) {
+          val c = s.charAt(i)
+          if (c != '.') {
+            if (m != 0 || c != '0') significant += 1
+            m = m * 10 + (c - '0')
+          }
+          i += 1
+        }
+        if (exponent || significant > 15 || decimals > 22)
+          java.lang.Double.parseDouble(s.substring(b, end))
+        else {
+          val v = m / Pow10(decimals)
+          if (s.charAt(b) == '-') -v else v
+        }
       }
     }
   }

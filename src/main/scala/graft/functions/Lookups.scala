@@ -142,12 +142,9 @@ object Lookups {
   // take the documented fallback path instead. This is a deliberate
   // sanitization, not an oversight.
   // JS `.toLowerCase().replace(/[\s-]+/g, '')` (task.ts:203-204):
-  // locale-independent lowercase + Unicode-\s removal, precompiled
-  // (replaceAll would recompile the pattern on every row).
-  private val normRe =
-    java.util.regex.Pattern.compile(s"[${JsCompat.JsWsChars}-]+")
-  private def normalize(s: String): String =
-    normRe.matcher(s.toLowerCase(java.util.Locale.ROOT)).replaceAll("")
+  // locale-independent lowercase, then drop every JS-\s and '-'.
+  private[functions] def normalize(s: String): String =
+    JsCompat.jsWsRemove(s.toLowerCase(java.util.Locale.ROOT)).replace("-", "")
 
   def eventIcon(eventType: String, category: String, severity: String, headline: String): String = {
     if (category == "Health")

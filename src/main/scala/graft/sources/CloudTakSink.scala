@@ -1,8 +1,8 @@
 package graft.sources
 
+import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets
 import java.util
-
-import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -16,10 +16,11 @@ import graft.cap.Features
 
 /** `cloudtak`, the DSv2 batch sink (S4). Input: one
   * STRING column of GeoJSON Feature documents (`CotFeature.json`). Each
-  * partition buffers its features and POSTs ONE FeatureCollection
-  * envelope on task commit, with reference-parity retry/backoff — the
+  * partition copies its features' UTF-8 bytes into one envelope buffer
+  * as they arrive and POSTs that ONE FeatureCollection on task commit,
+  * with reference-parity retry/backoff — the
   * distributed analog of the reference's single `submit(fc)`
-  * (task.ts:615-623, 882): the same envelope, built by
+  * (task.ts:615-623, 882): the same envelope bytes as
   * [[graft.cap.Features.featureCollectionJson]], one request per
   * partition instead of per run, identity/upsert by feature id making
   * the partitioned submission idempotent downstream.
@@ -83,22 +84,35 @@ private case class CloudTakCommit(nFeatures: Int) extends WriterCommitMessage
 
 private class CloudTakWriter(conf: EtlConfig)
     extends DataWriter[InternalRow] {
-  private val features = ArrayBuffer.empty[String]
+  import CloudTakWriter._
 
-  override def write(record: InternalRow): Unit =
-    features += record.getUTF8String(0).toString
+  // the envelope's bytes, each record's UTF-8 bytes copied in as it
+  // arrives; the envelope is only materialized at the sink, and empty
+  // partitions submit nothing
+  private val body = new ByteArrayOutputStream(1 << 16)
+  private var features = 0
 
-  override def commit(): WriterCommitMessage = {
-    if (features.nonEmpty) {
-      // the envelope is only materialized at the sink; empty
-      // partitions submit nothing
-      val fc = Features.featureCollectionJson(features)
-      Http.fetchWithRetry(conf.url, conf.headers ++ Map("Content-Type" -> "application/json"),
-        conf.timeoutMs, conf.retries, method = "POST", body = Some(fc))
-    }
-    CloudTakCommit(features.size)
+  override def write(record: InternalRow): Unit = {
+    body.write(if (features == 0) Open else Comma)
+    record.getUTF8String(0).writeTo(body)
+    features += 1
   }
 
-  override def abort(): Unit = features.clear()
+  override def commit(): WriterCommitMessage = {
+    if (features > 0) {
+      body.write(Close)
+      Http.fetchWithRetry(conf.url, conf.headers ++ Map("Content-Type" -> "application/json"),
+        conf.timeoutMs, conf.retries, method = "POST", body = Some(body.toByteArray))
+    }
+    CloudTakCommit(features)
+  }
+
+  override def abort(): Unit = { body.reset(); features = 0 }
   override def close(): Unit = ()
+}
+
+private object CloudTakWriter {
+  private val Open = Features.EnvelopeOpen.getBytes(StandardCharsets.UTF_8)
+  private val Comma = Array[Byte](',')
+  private val Close = Features.EnvelopeClose.getBytes(StandardCharsets.UTF_8)
 }

@@ -23,7 +23,7 @@ object Http {
 
   def fetchWithRetry(url: String, headers: Map[String, String],
       timeoutMs: Long, retries: Int,
-      method: String = "GET", body: Option[String] = None,
+      method: String = "GET", body: Option[Array[Byte]] = None,
       sleep: Long => Unit = Thread.sleep): String = {
     val maxRetries = math.max(0, retries) // negative would loop forever
     var attempt = 0
@@ -43,12 +43,12 @@ object Http {
   }
 
   private def fetchOnce(url: String, headers: Map[String, String],
-      timeoutMs: Long, method: String, body: Option[String]): String = {
+      timeoutMs: Long, method: String, body: Option[Array[Byte]]): String = {
     val b = HttpRequest.newBuilder(URI.create(url))
       .timeout(Duration.ofMillis(timeoutMs))
     headers.foreach { case (k, v) => b.header(k, v) }
     val req = (method match {
-      case "POST" => b.POST(HttpRequest.BodyPublishers.ofString(body.getOrElse("")))
+      case "POST" => b.POST(HttpRequest.BodyPublishers.ofByteArray(body.getOrElse(Array.emptyByteArray)))
       case _ => b.GET()
     }).build()
     val res = client.send(req, HttpResponse.BodyHandlers.ofString())

@@ -28,12 +28,13 @@ class JsonPropSpec extends AnyFunSuite {
     Gen.chooseNum(Long.MinValue, Long.MaxValue).map(java.lang.Double.longBitsToDouble)
       .suchThat(d => !d.isNaN && !d.isInfinite))
 
-  /** ±m·10^-s with m of 1–15 significant digits and s = 1..15: the
+  /** ±m·10^-s with m of 1–15 significant digits and s = 1..21: the
     * values the fast path exists for (the wide generators above almost
-    * always draw 16–17-digit doubles). */
+    * always draw 16–17-digit doubles), and, past scale 15, small values
+    * of at most 15 digits that the fast path leaves to the probe. */
   private val shortDecimals: Gen[java.math.BigDecimal] = for {
     k <- Gen.choose(1, 15)
-    s <- Gen.choose(1, 15)
+    s <- Gen.choose(1, 21)
     m <- Gen.choose(math.pow(10, k - 1).toLong, math.pow(10, k).toLong - 1)
     neg <- Gen.oneOf(false, true)
   } yield java.math.BigDecimal.valueOf(if (neg) -m else m, s)

@@ -46,7 +46,36 @@ class JsCompatSpec extends AnyFunSuite {
   }
 
   test("jsParseFloat agrees with its regex definition on random strings") {
-    checkProp(Prop.forAll(jsyStrings)(s => same(jsParseFloat(s), regexParseFloat(s))))
+    checkProp(Prop.forAll(jsyStrings) { s =>
+      val want = regexParseFloat(s)
+      same(jsParseFloat(s), want) &&
+        same(jsParseFloat("1" + s + "1", 1, s.length + 1), want) // the range form reads in place
+    })
+  }
+
+  private val wsRunRe = java.util.regex.Pattern.compile(s"[$JsWsChars]+")
+  private val normalizeRe = java.util.regex.Pattern.compile(s"[$JsWsChars-]+")
+
+  /** Strings over every JsWsChars member, '-', ',', digits and letters
+    * (İ lowercases to two chars). */
+  private val wsyStrings: Gen[String] = Gen.listOf(Gen.frequency(
+    3 -> Gen.oneOf(jsWhitespace),
+    1 -> Gen.oneOf("-", ","),
+    2 -> Gen.numChar.map(_.toString),
+    2 -> Gen.oneOf("a", "Z", "x", "\u00c9", "\u0130"))).map(_.mkString)
+
+  test("jsWsSplit and jsWsRemove agree with their regex definitions on random strings") {
+    checkProp(Prop.forAll(wsyStrings) { s =>
+      jsWsSplit(s).toSeq == wsRunRe.split(s, -1).toSeq &&
+        jsWsRemove(s) == wsRunRe.matcher(s).replaceAll("")
+    })
+  }
+
+  test("Lookups.normalize agrees with its regex definition on random strings") {
+    checkProp(Prop.forAll(wsyStrings) { s =>
+      Lookups.normalize(s) ==
+        normalizeRe.matcher(s.toLowerCase(java.util.Locale.ROOT)).replaceAll("")
+    })
   }
 
   test("jsParseFloat / jsTrim: prefix edge cases") {

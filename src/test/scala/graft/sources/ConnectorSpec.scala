@@ -408,6 +408,19 @@ class ConnectorSpec extends AnyFunSuite with GraftTestSession with BeforeAndAfte
     assert(posts.asScala.exists(_.contains("ow-1")))
   }
 
+  test("cloudtak: the POST body is the UTF-8 FeatureCollection of the partition's documents") {
+    posts.clear()
+    import spark.implicits._
+    // a macron, U+2028, an astral character and JSON escapes
+    val docs = Seq("{\"id\":\"b-1\",\"r\":\"M\u0101ori \u2028 \uD83C\uDF0A\"}",
+      "{\"id\":\"b-2\",\"r\":\"\\\"\\\\\"}", "{\"id\":\"b-3\"}")
+    docs.toDF("json").coalesce(1).write.format("cloudtak")
+      .option("url", s"$base/ingest").option("timeout", 5000)
+      .mode("append")
+      .save()
+    assert(posts.asScala.toSeq == Seq(graft.cap.Features.featureCollectionJson(docs)))
+  }
+
   test("streaming end-to-end: capfeed stream → parse → fan-out → cloudtak per batch") {
     val ckpt = tempDir("capfeed-etl-ckpt").toString
     val (record, bodies, gets) =
